@@ -143,6 +143,17 @@ object IndexBuilder {
     }
   }
 
+  /** Reject layout params no build can use, before any file is touched or
+    * job runs (a zero block size would otherwise fail mid-stage, a zero
+    * shard count in a modulo).
+    */
+  private def requireValid(params: Params): Unit = {
+    require(params.nShards > 0, s"nShards must be positive, got ${params.nShards}")
+    require(params.blockSize > 0, s"blockSize must be positive, got ${params.blockSize}")
+    require(params.maxPostingsPerChunk > 0,
+      s"maxPostingsPerChunk must be positive, got ${params.maxPostingsPerChunk}")
+  }
+
   /** Reconstruct build params from a manifest (for append/compact). */
   def paramsOf(meta: IndexMeta): Params = Params(
     nShards = meta.nShards, blockSize = meta.blockSize,
@@ -318,18 +329,48 @@ object IndexBuilder {
     * exactly one per doc by construction): a narrow filter + shard-pure
     * repartition of ndocs rows, no corpus-sized aggregation.
     */
-  private def docsFromExploded(exploded: DataFrame, nShards: Int): DataFrame =
+  private[graft] def docsFromExploded(exploded: DataFrame, params: Params): DataFrame =
     shardPure(exploded.where(col("uniq") >= 0)
-      .select("shard", "docId", "len", "addon", "uniq"), nShards)
+      .select("shard", "docId", "len", "addon", "uniq"), params)
 
-  /** Route rows into exactly one partition per shard (preimage table, see
-    * [[hashPreimages]]) so a partitionBy("shard") write emits ONE file per
+  /** Route docs rows so each shard lands in exactly one task (see
+    * [[shardRouting]]): a partitionBy("shard") write emits ONE file per
     * shard instead of one per (task, shard) pair.
     */
-  private def shardPure(df: DataFrame, nShards: Int): DataFrame = {
-    val pre = hashPreimages(nShards)
-    df.repartition(nShards,
-      element_at(typedlit(pre.toSeq), col("shard").cast("int") + 1))
+  private def shardPure(df: DataFrame, params: Params): DataFrame = {
+    val (nPart, pid) = shardRouting(df.sparkSession, params, byTerm = false)
+    df.repartition(nPart, pid)
+  }
+
+  /** Partition count and routing column shared by every shard-partitioned
+    * write (docs, and stage B of [[packDataset]] for postings and alt).
+    *
+    * The task width follows the shuffle width `p` (`params.numPartitions`,
+    * else `spark.sql.shuffle.partitions`), not the shard count: with
+    * `sub = max(1, p / nShards)` term sub-buckets per shard (`byTerm`; the
+    * docs write uses `sub = 1`) and `nPart = min(p, nShards·sub)`, the
+    * target `pmod(shard·sub + termBucket, nPart)` is routed exactly through
+    * the murmur3 preimage table ([[hashPreimages]]). Every (shard,
+    * term-bucket) slice lands in exactly ONE task, so partitionBy("shard")
+    * writes one file per slice whatever the width. When nShards > p a task
+    * writes ⌈nShards/p⌉ whole shards, so a shard count above the slot
+    * count adds no task waves (the per-task and per-wave overhead, not the
+    * pack work, dominates small builds); when nShards ≤ p each task holds
+    * one slice. The on-disk layout (nShards shard directories, the
+    * checkpoint units) never depends on p.
+    */
+  private def shardRouting(spark: SparkSession, params: Params,
+                           byTerm: Boolean): (Int, Column) = {
+    val p = if (params.numPartitions > 0) params.numPartitions
+            else spark.sessionState.conf.numShufflePartitions
+    val sub = if (byTerm) math.max(1, p / params.nShards) else 1
+    val nPart = math.min(p, params.nShards * sub)
+    val target =
+      if (sub == 1) col("shard")
+      else col("shard") * lit(sub) +
+        pmod(xxhash64(col("term")), lit(sub)).cast("int")
+    (nPart, element_at(typedlit(hashPreimages(nPart).toSeq),
+      pmod(target, lit(nPart)).cast("int") + 1))
   }
 
   /** Run independent write jobs concurrently from a small driver pool
@@ -337,17 +378,37 @@ object IndexBuilder {
     * get-or-compute serializes any racing partition materialization, and
     * Spark's FIFO scheduler back-fills one job's task tail with the next
     * job's tasks — build wall time becomes the max of the writes, not
-    * their sum). Exceptions propagate to the caller.
+    * their sum).
+    *
+    * Each job runs in its own Spark job group. The first failure cancels
+    * the other groups (running and future jobs, interrupting their tasks),
+    * interrupts the pool and waits for it to drain before it is rethrown —
+    * a failed write leaves no sibling job still writing files behind it.
     */
-  private def runConcurrently(jobs: Seq[() => Unit]): Unit = {
+  private[graft] def runConcurrently(spark: SparkSession, jobs: Seq[() => Unit]): Unit = {
     if (jobs.length <= 1) { jobs.foreach(_()); return }
+    val sc = spark.sparkContext
+    val groups = jobs.indices.map(i => s"graft-build-${java.util.UUID.randomUUID()}-$i")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.length)
+    val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
     try {
-      jobs.map(j => pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = j()
-      })).foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      jobs.zip(groups).foreach { case (j, g) =>
+        done.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = {
+            sc.setJobGroup(g, "graft build write", interruptOnCancel = true)
+            j()
+          }
+        })
+      }
+      jobs.indices.foreach { _ =>
+        try done.take().get()
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            groups.foreach(sc.cancelJobGroupAndFutureJobs)
+            pool.shutdownNow()
+            pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+            throw e.getCause
+        }
       }
     } finally pool.shutdown()
   }
@@ -416,8 +477,6 @@ object IndexBuilder {
     import spark.implicits._
     val blockSize = params.blockSize
     val maxChunk = params.maxPostingsPerChunk
-    val p = if (params.numPartitions > 0) params.numPartitions
-            else spark.sessionState.conf.numShufflePartitions
 
     // alt layout: the block key slot holds the addon (non-decreasing, ties
     // = equal addons) and the addon slot holds the docId — the same
@@ -482,22 +541,15 @@ object IndexBuilder {
       }
 
     // ---- stage B: shuffle packed runs, merge each (shard, term) cell ----
-    // SHARD-PURE partitioning: target partition = shard·sub + termBucket,
-    // routed exactly via the murmur3 preimage table — every task holds one
-    // (shard, termBucket) slice, so the partitionBy(shard) write emits
-    // exactly nShards·sub well-sized files (instead of one file per
-    // (task, shard) pair), merge parallelism stays ≥ p via the term
-    // sub-bucket when nShards < p, and shards are uniform by construction
-    // (shard = hash(docId)) so the slices balance. The per-partition sort
-    // stays Spark's external sort (memory-bounded spill).
-    val sub = math.max(1, p / params.nShards)
-    val nPart = params.nShards * sub
-    val preimages = hashPreimages(nPart)
-    val target =
-      if (sub == 1) col("shard")
-      else col("shard") * lit(sub) +
-        pmod(xxhash64(col("term")), lit(sub)).cast("int")
-    val pid = element_at(typedlit(preimages.toSeq), target.cast("int") + 1)
+    // SHARD-PURE partitioning (see shardRouting): every (shard, termBucket)
+    // slice lands in exactly one task — a task holds one slice when
+    // nShards ≤ p and ⌈nShards/p⌉ whole shards otherwise — so the
+    // partitionBy(shard) write emits exactly one well-sized file per slice
+    // (instead of one per (task, shard) pair), merge parallelism stays ≥ p
+    // via the term sub-bucket when nShards < p, and shards are uniform by
+    // construction (shard = hash(docId)) so the tasks balance. The
+    // per-partition sort stays Spark's external sort (memory-bounded spill).
+    val (nPart, pid) = shardRouting(spark, params, byTerm = true)
     runs
       .repartition(nPart, pid)
       .sortWithinPartitions("shard", "term", "firstDoc")
@@ -641,7 +693,7 @@ object IndexBuilder {
     var shardsMeta: List[ShardMeta] = Nil
     var numDocs = 0L
     var totalTokens = 0L
-    runConcurrently(Seq(
+    runConcurrently(spark, Seq(
       () => allPostings.groupBy("term")
         .agg(sum("ndocs").as("df"), max("maxTf").as("maxTf"))
         .write.mode("append").parquet(statsDirPath),
@@ -699,6 +751,7 @@ object IndexBuilder {
     */
   def build(spark: SparkSession, corpus: DataFrame, docIdCol: String, textCol: String,
             indexDir: String, params: Params = Params(), resume: Boolean = false): IndexMeta = {
+    requireValid(params)
     val t0 = System.currentTimeMillis()
     val prior: Option[IndexMeta] =
       if (resume) SegmentCatalog.load(indexDir).map { m =>
@@ -759,12 +812,12 @@ object IndexBuilder {
         }
         // docs table: the exploded tuples' first-entry rows — no second
         // corpus read; see docsFromExploded
-        val docsDF = docsFromExploded(exploded, params.nShards).persist()
+        val docsDF = docsFromExploded(exploded, params).persist()
         docsOpt = Some(docsDF)
         // the three writes are independent jobs over the shared tuple
         // cache (different output directories) — run them concurrently so
         // the build pays max(write), not sum(write)
-        runConcurrently(Seq(
+        runConcurrently(spark, Seq(
           () => packDataset(spark, exploded, params, packAcc = Some(packAcc))
             .write.mode("append").partitionBy("shard")
             .parquet(SegmentCatalog.postingsDir(indexDir))) ++
@@ -824,6 +877,7 @@ object IndexBuilder {
                   fields: Seq[(String, String)], indexDir: String,
                   params: Params = Params()): IndexMeta = {
     require(fields.nonEmpty, "need at least one (field, column)")
+    requireValid(params)
     val t0 = System.currentTimeMillis()
     deleteRecursively(SegmentCatalog.postingsDir(indexDir))
     deleteRecursively(SegmentCatalog.altDir(indexDir))
@@ -849,10 +903,10 @@ object IndexBuilder {
         .agg(sum("len").cast("int").as("len"), max("addon").as("addon"),
           sum("uniq").cast("int").as("uniq"))
         .select("shard", "docId", "len", "addon", "uniq")
-        .transform(shardPure(_, params.nShards))
+        .transform(shardPure(_, params))
         .persist()
       docsOpt = Some(docsDF)
-      runConcurrently(Seq(
+      runConcurrently(spark, Seq(
         () => packDataset(spark, exploded, params, packAcc = Some(packAcc))
           .write.mode("append").partitionBy("shard")
           .parquet(SegmentCatalog.postingsDir(indexDir))) ++
@@ -972,7 +1026,7 @@ object IndexBuilder {
     // (appends on alt-order indexes would otherwise tokenize twice)
     val shared = if (params.altOrder) exploded.persist() else exploded
     try {
-      runConcurrently(Seq(
+      runConcurrently(spark, Seq(
         () => packDataset(spark, shared, params, packAcc = Some(packAcc))
           .write.mode("append").partitionBy("shard")
           .parquet(SegmentCatalog.postingsDir(indexDir))) ++
@@ -982,7 +1036,7 @@ object IndexBuilder {
             .write.mode("append").partitionBy("shard")
             .parquet(SegmentCatalog.altDir(indexDir)))
         else Nil) ++
-        Seq(() => shardPure(docsDF, params.nShards).write.mode("append")
+        Seq(() => shardPure(docsDF, params).write.mode("append")
           .partitionBy("shard").parquet(SegmentCatalog.docsDir(indexDir))))
     } finally if (params.altOrder) shared.unpersist(blocking = false)
 
@@ -1226,8 +1280,7 @@ object IndexBuilder {
       case Some(ids) => docs.join(ids, Seq("docId"), "left_anti")
       case None => docs
     }).select("shard", "docId", "len", "addon", "uniq").persist()
-    shardPure(keptDocs.select("docId", "len", "addon", "uniq", "shard"),
-        params.nShards)
+    shardPure(keptDocs.select("docId", "len", "addon", "uniq", "shard"), params)
       .write.mode("append").partitionBy("shard")
       .parquet(SegmentCatalog.docsDir(indexDir))
 

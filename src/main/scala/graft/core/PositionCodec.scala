@@ -75,6 +75,16 @@ object PositionCodec {
     * PG does — it clamps to MaxPos; we clamp likewise but must keep strict
     * monotonicity for the delta codec, so clamped tails collapse to a
     * single occurrence at MaxPos. Truncate to MaxNumPos entries.
+    *
+    * Contract:
+    *  - `positions` must be strictly increasing (tokenizer output is). The
+    *    fast path checks only the last entry against the caps.
+    *  - When nothing exceeds the caps the inputs are returned as-is
+    *    (aliased, no copy), so callers must not mutate the returned arrays
+    *    or the inputs afterwards.
+    *  - Out-of-contract (non-increasing) input under the caps is not
+    *    repaired here: it fails in [[encode]]'s strictly-increasing
+    *    `require`.
     */
   def cap(positions: Array[Int], wclasses: Array[Byte]): (Array[Int], Array[Byte]) = {
     // fast path — nothing to cap (positions are strictly increasing, so

@@ -55,6 +55,7 @@ object PostingBlock {
   */
 final class PostingListBuilder(blockSize: Int = PostingBlock.DefaultSize,
                                allowTies: Boolean = false) {
+  require(blockSize > 0, s"blockSize must be positive, got $blockSize")
   private val blocks = ArrayBuffer.empty[PostingBlock]
   // primitive hot-path buffers — add() runs once per posting across every
   // build/merge/repack, so the per-add boxing of generic ArrayBuffers is

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.build.{IndexBuilder, SegmentCatalog}
 import graft.core.{PositionCodec, PostingBlock, PostingCursor, PostingListBuilder, VarByte}
 
 import scala.util.Random
@@ -88,6 +89,28 @@ class CodecSpec extends AnyFunSuite {
     val over = pos :+ (PositionCodec.MaxPos + 5)
     val (co, _) = PositionCodec.cap(over, new Array[Byte](over.length))
     assert(!(co eq over) && co.last == PositionCodec.MaxPos)
+  }
+
+  test("zero block size fails with IllegalArgumentException before any job runs") {
+    intercept[IllegalArgumentException](new PostingListBuilder(0))
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("codecspec").toString
+    // a fresh build wipes the postings directory before its first job, so
+    // this file survives only if validation ran first
+    val marker = java.nio.file.Paths.get(SegmentCatalog.postingsDir(dir), "marker")
+    java.nio.file.Files.createDirectories(marker.getParent)
+    java.nio.file.Files.createFile(marker)
+    val corpus = Seq((1L, "alpha beta")).toDF("doc_id", "text")
+    for (bad <- Seq(IndexBuilder.Params(blockSize = 0), IndexBuilder.Params(nShards = 0),
+                    IndexBuilder.Params(maxPostingsPerChunk = 0))) {
+      intercept[IllegalArgumentException](
+        IndexBuilder.build(spark, corpus, "doc_id", "text", dir, bad))
+      intercept[IllegalArgumentException](
+        IndexBuilder.buildFields(spark, corpus, "doc_id", Seq("t" -> "text"), dir, bad))
+    }
+    assert(java.nio.file.Files.exists(marker))
+    assert(SegmentCatalog.load(dir).isEmpty)
   }
 
   test("posting builder + cursor round-trip with seek") {
