@@ -363,14 +363,6 @@ object SparkEntry {
     * `prewarm_build` key; in production these are ingest-time tables.
     */
   def prewarm(s: SparkSession, dir: String): Unit = {
-    // each step isolated: one broken family must not silently lose warm-up
-    // for the rest (its first query would re-absorb the one-time cost the
-    // prewarm_build key exists to attribute)
-    def safely(what: String)(f: => Unit): Unit =
-      try f catch {
-        case t: Throwable =>
-          System.err.println(s"[prewarm] $what failed: ${t.getMessage}")
-      }
     // a trivial absent-term query per variant AND layout materializes the
     // Searcher's lazy file listings + parquet footers (ingest-time work,
     // not the query): count touches postings, topKAddon touches the
@@ -420,11 +412,24 @@ object SparkEntry {
     // enough to fill task tails without thrashing executor memory with
     // concurrent index builds
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    try {
-      chains.map { case (what, f) =>
-        pool.submit(new Runnable { def run(): Unit = safely(what)(f()) })
-      }.foreach(_.get())
-    } finally pool.shutdown()
+    // every chain runs to its end even when a sibling fails (one broken
+    // family must not lose warm-up for the rest); then the first failure
+    // is thrown with the others attached as suppressed
+    val failures =
+      try {
+        chains.map { case (what, f) =>
+          what -> pool.submit(new Runnable { def run(): Unit = f() })
+        }.flatMap { case (what, fut) =>
+          try { fut.get(); None } catch {
+            case e: java.util.concurrent.ExecutionException =>
+              Some(new IllegalStateException(s"prewarm $what failed", e.getCause))
+          }
+        }
+      } finally pool.shutdown()
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 
   // ------------------------------------------------------------------

@@ -601,14 +601,9 @@ object AltKernel extends Serializable {
     * candidate stream arrives in addon order, so each bucket's count
     * closes when the stream crosses its boundary — at most one output
     * row per (shard, non-empty bucket), no map needed. Exact Long math:
-    * addon-lo ≥ 0 in range, so truncating division IS floor.
+    * addon-lo ≥ 0 in range, so truncating division IS floor. The
+    * [[ShardCells]] are shared by every slot of the batch.
     */
-  def facetShard(cq: CompiledQuery, keys: Array[SearchKernel.KeySpec],
-                 rows: Iterator[PostingRow], width: Long, lo: Long,
-                 hi: Long): Iterator[(Long, Long)] =
-    facetShard(cq, keys, new ShardCells(rows), width, lo, hi)
-
-  /** [[facetShard]] over a shared [[ShardCells]] (fused batches). */
   def facetShard(cq: CompiledQuery, keys: Array[SearchKernel.KeySpec],
                  shardCells: ShardCells, width: Long, lo: Long,
                  hi: Long): Iterator[(Long, Long)] = {

@@ -695,14 +695,9 @@ object SearchKernel extends Serializable {
     * frontier sorted by current docId, advance only when the upper-bound
     * sum can beat the threshold). Upper bounds from per-term maxTf; block
     * seeks skip compressed blocks via first/last metadata.
-    * Emits the shard-local top-k.
+    * Emits the shard-local top-k from a [[ShardView]] shared by every
+    * slot of the batch.
     */
-  def wandShard(terms: Array[String], dfs: Array[Long], ubs: Array[Double],
-                numDocs: Long, avgLen: Double, k: Int,
-                rows: Iterator[PostingRow]): Iterator[(Long, Double)] =
-    wandShard(terms, dfs, ubs, numDocs, avgLen, k, new ShardView(rows))
-
-  /** [[wandShard]] over a shared [[ShardView]] (fused msearch batches). */
   def wandShard(terms: Array[String], dfs: Array[Long], ubs: Array[Double],
                 numDocs: Long, avgLen: Double, k: Int,
                 view: ShardView): Iterator[(Long, Double)] = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.build.{DocRow, IndexMeta, PostingRow, SegmentCatalog}
-import graft.core.{PositionCodec, PostingBlock, PostingCursor}
+import graft.core.PostingCursor
 import graft.query._
 
 /** Query execution over a built index.
@@ -21,7 +21,11 @@ import graft.query._
   *      Only the query terms' postings move in the shuffle.
   *   3. scores computed inside the kernel from payloads (positions) —
   *      index-side ordering, the defining RUM capability (README.md:80-136)
-  *   4. per-shard top-k heap → global TakeOrderedAndProject.
+  *   4. per-shard top-k heap → global top-k. Match, BM25, cover and facet
+  *      queries have ONE serving path, [[msearchPlan]]: a solo query is a
+  *      one-slot plan projected to its own schema. A plan with one bounded
+  *      (top-k) slot ends in TakeOrderedAndProject; with several, a
+  *      row_number window per slot keeps each slot's k best.
   */
 final class Searcher(spark: SparkSession, indexDir: String,
                      maxCachedPlans: Int = Searcher.MaxCachedPlans) {
@@ -156,29 +160,22 @@ final class Searcher(spark: SparkSession, indexDir: String,
 
   def matchingDocsMulti(fieldQueries: Seq[(String, String)]): DataFrame =
     cached("matchM" + Searcher.key(fieldQueries.flatMap(p => Seq(p._1, p._2)): _*)) {
-      matchingDocsC(compileMulti(fieldQueries))
+      msearchPlan(Seq(Searcher.MsearchSpec.MatchFields(fieldQueries))).select("docId")
     }
 
   /** docIds matching the query (the bitmap-scan sink, rumgetbitmap —
     * src/rumget.c:2105-2145). Unordered.
     */
   def matchingDocs(queryStr: String): DataFrame =
-    cached("match" + Searcher.key(queryStr))(matchingDocsC(compile(queryStr)))
-
-  private def matchingDocsC(cq: CompiledQuery): DataFrame = {
-    if (SearchKernel.isVoid(cq)) // empty tsquery: no scan at all (isVoidRes)
-      spark.range(0).select(col("id").as("docId"))
-    else if (SearchKernel.needsFullScan(cq))
-      fullScan(cq, score = false, matchOnly = true, k = 0).select(col("docId"))
-    else {
-      val keys = SearchKernel.keySpecs(cq)
-      postings.where(termPredicate(cq))
-        .groupByKey(_.shard)
-        .flatMapGroups((shard: Int, it: Iterator[PostingRow]) =>
-          SearchKernel.matchShard(cq, keys, it, score = false, k = 0))
-        .map(_._1).toDF("docId")
+    cached("match" + Searcher.key(queryStr)) {
+      msearchPlan(Seq(Searcher.MsearchSpec.Match(queryStr))).select("docId")
     }
-  }
+
+  /** Match set of a query the postings alone cannot drive (pure negation,
+    * empty-doc matchers): the docs table supplies the candidates.
+    */
+  private def fullScanMatches(cq: CompiledQuery): DataFrame =
+    fullScan(cq, score = false, matchOnly = true, k = 0).select(col("docId"))
 
   def count(queryStr: String): Long =
     runCount("count" + Searcher.key(queryStr), matchingDocs(queryStr))
@@ -200,21 +197,16 @@ final class Searcher(spark: SparkSession, indexDir: String,
     */
   def matchingDocsSampled(queryStr: String, limit: Long): DataFrame =
     cached("sampled" + Searcher.key(queryStr, limit.toString)) {
-      matchingDocsSampledU(queryStr, limit)
+      val full = matchingDocs(queryStr)
+      val predicted = predictResults(compile(queryStr))
+      if (predicted <= limit) full
+      else {
+        val keep = limit.toDouble / predicted
+        val h = conv(substring(md5(col("docId").cast("string")), 1, 15), 16, 10)
+          .cast("long")
+        full.where(pmod(h, lit(1000000L)) < math.floor(keep * 1e6).toLong)
+      }
     }
-
-  private def matchingDocsSampledU(queryStr: String, limit: Long): DataFrame = {
-    val cq = compile(queryStr)
-    val full = matchingDocsC(cq)
-    val predicted = predictResults(cq)
-    if (predicted <= limit) full
-    else {
-      val keep = limit.toDouble / predicted
-      val h = conv(substring(md5(col("docId").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-      full.where(pmod(h, lit(1000000L)) < math.floor(keep * 1e6).toLong)
-    }
-  }
 
   /** df-based result-size prediction (predictNumberResult,
     * src/rumdatapage.c:450): AND-ish queries bound by the rarest required
@@ -258,15 +250,6 @@ final class Searcher(spark: SparkSession, indexDir: String,
     }
   }
 
-  /** `WHERE t @@ q ORDER BY addon <op> c LIMIT k` — the reference's
-    * addon ordered scan (sql/orderby.sql): op "both" = `<=>` (|a-c|),
-    * "left" = `<=|` (only a<=c finite), "right" = `|=>` (only a>=c).
-    * Distance is in raw addon units; ties break on docId like RUM's TID
-    * tie-break. One-sided misses sort last with infinite distance.
-    * Addons and `c` may be ANY signed long (negative scalars, epoch-
-    * spanning timestamps — reference sql/int4.sql:7-19); distances beyond
-    * Long.MaxValue saturate identically on both execution paths.
-    */
   /** True when the alt-order layout can serve this query: layout present
     * and candidates index-drivable — conjunctive queries leapfrog their
     * required keys; disjunctive queries (no required key, e.g. `a | b`)
@@ -278,6 +261,15 @@ final class Searcher(spark: SparkSession, indexDir: String,
   private def altServes(cq: CompiledQuery): Boolean =
     meta.altOrder && !SearchKernel.needsFullScan(cq)
 
+  /** `WHERE t @@ q ORDER BY addon <op> c LIMIT k` — the reference's
+    * addon ordered scan (sql/orderby.sql): op "both" = `<=>` (|a-c|),
+    * "left" = `<=|` (only a<=c finite), "right" = `|=>` (only a>=c).
+    * Distance is in raw addon units; ties break on docId like RUM's TID
+    * tie-break. One-sided misses sort last with infinite distance.
+    * Addons and `c` may be ANY signed long (negative scalars, epoch-
+    * spanning timestamps — reference sql/int4.sql:7-19); distances beyond
+    * Long.MaxValue saturate identically on both execution paths.
+    */
   def topKAddon(queryStr: String, c: Long, op: String, k: Int): DataFrame =
     cached("topKA" + Searcher.key(queryStr, c.toString, op, k.toString)) {
       topKAddonC(compile(queryStr), c, op, k)
@@ -317,13 +309,11 @@ final class Searcher(spark: SparkSession, indexDir: String,
                               k: Int): DataFrame = {
     require(Set("both", "left", "right").contains(op), s"op: $op")
     val cBits = graft.build.AddonUnits.floatOrderedBits(c)
-    val decode = udf((bits: Long) =>
-      graft.build.AddonUnits.floatFromOrderedBits(bits))
+    val decode = Searcher.orderedBitsToDouble
     if (altServes(cq)) {
       val keys = SearchKernel.keySpecs(cq)
       // rank/limit on the long bit-image distance (exact), decode the k
       // survivors only; the decode UDF touches ≤ k·nShards rows
-      val bitsToDouble = udf((bits: Long) => java.lang.Double.longBitsToDouble(bits))
       altPostings.where(termPredicate(cq))
         .groupByKey(_.shard)
         .flatMapGroups((shard: Int, it: Iterator[PostingRow]) =>
@@ -333,7 +323,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
         .orderBy(col("dist").asc, col("docId").asc)
         .limit(k)
         .select(col("docId"), decode(col("addon")).as("value"),
-          bitsToDouble(col("dist")).as("distance"))
+          Searcher.longBitsToDouble(col("dist")).as("distance"))
     } else {
       // one-sided predicates in BITS space (well-defined for NaN, matching
       // the kernel: NaN > +Inf > finite); distance in decoded value space
@@ -366,12 +356,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
     cached("rangeAF" + Searcher.key(queryStr,
         java.lang.Double.doubleToLongBits(lo).toString,
         java.lang.Double.doubleToLongBits(hi).toString)) {
-      val decode = udf((bits: Long) =>
-        graft.build.AddonUnits.floatFromOrderedBits(bits))
       rangeAddonC(compile(queryStr),
           graft.build.AddonUnits.floatOrderedBits(lo),
           graft.build.AddonUnits.floatOrderedBits(hi))
-        .select(col("docId"), decode(col("addon")).as("value"))
+        .select(col("docId"), Searcher.orderedBitsToDouble(col("addon")).as("value"))
     }
 
   private def topKAddonC(cq: CompiledQuery, c: Long, op: String, k: Int): DataFrame = {
@@ -535,7 +523,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
                          hi: Long): DataFrame =
     cached("facetA" + Searcher.key(queryStr, width.toString, lo.toString,
       hi.toString)) {
-      countByAddonBucketC(compile(queryStr), width, lo, hi)
+      facetSlot(Searcher.MsearchSpec.Facet(queryStr, width, lo, hi), col("docId"))
     }
 
   /** Multicolumn variant of [[countByAddonBucket]]. */
@@ -544,28 +532,24 @@ final class Searcher(spark: SparkSession, indexDir: String,
     cached("facetAM" + Searcher.key(
       fieldQueries.flatMap(p => Seq(p._1, p._2)) ++
         Seq(width.toString, lo.toString, hi.toString): _*)) {
-      countByAddonBucketC(compileMulti(fieldQueries), width, lo, hi)
+      facetSlot(Searcher.MsearchSpec.FacetFields(fieldQueries, width, lo, hi),
+        col("docId"))
     }
 
+  /** A one-slot facet plan as (bucket, cnt); `bucket` decodes the slot's
+    * docId column.
+    */
+  private def facetSlot(spec: Searcher.MsearchSpec, bucket: Column): DataFrame =
+    msearchPlan(Seq(spec))
+      .select(bucket.as("bucket"), col("score").cast("long").as("cnt"))
+
+  /** Facet of an alt-unservable query: groups the match+addon stream. */
   private def countByAddonBucketC(cq: CompiledQuery, width: Long, lo: Long,
-                                  hi: Long): DataFrame = {
-    Searcher.requireFacet(width, lo, hi)
-    if (SearchKernel.isVoid(cq))
-      spark.range(0).select(col("id").as("bucket"), col("id").as("cnt"))
-    else if (altServes(cq)) {
-      val keys = SearchKernel.keySpecs(cq)
-      altPostings.where(termPredicate(cq))
-        .groupByKey(_.shard)
-        .flatMapGroups((shard: Int, it: Iterator[PostingRow]) =>
-          AltKernel.facetShard(cq, keys, it, width, lo, hi))
-        .toDF("bucket", "partial")
-        .groupBy("bucket").agg(sum("partial").as("cnt"))
-    } else
-      matchingWithAddonC(cq)
-        .where(col("addon") >= lo && col("addon") <= hi)
-        .groupBy(Searcher.bucketCol(col("addon"), width, lo).as("bucket"))
-        .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt"))
-  }
+                                  hi: Long): DataFrame =
+    matchingWithAddonC(cq)
+      .where(col("addon") >= lo && col("addon") <= hi)
+      .groupBy(Searcher.bucketCol(col("addon"), width, lo).as("bucket"))
+      .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt"))
 
   /** [[countByAddonBucket]] in float VALUE units over a
     * [[graft.build.AddonUnits.floatOrderedBits]]-encoded attach: matches
@@ -583,45 +567,27 @@ final class Searcher(spark: SparkSession, indexDir: String,
         java.lang.Double.doubleToLongBits(width).toString,
         java.lang.Double.doubleToLongBits(lo).toString,
         java.lang.Double.doubleToLongBits(hi).toString)) {
-      countByAddonBucketFloatC(compile(queryStr), width, lo, hi)
+      // the slot's docId is the bucket start's raw bit image
+      facetSlot(Searcher.MsearchSpec.FacetFloat(queryStr, width, lo, hi),
+        Searcher.longBitsToDouble(col("docId")))
     }
 
+  /** Float facet of an alt-unservable query: groups the match+addon
+    * stream in value space.
+    */
   private def countByAddonBucketFloatC(cq: CompiledQuery, width: Double,
                                        lo: Double, hi: Double): DataFrame = {
-    Searcher.requireFacetFloat(width, lo, hi)
     val loBits = graft.build.AddonUnits.floatOrderedBits(lo)
     val hiBits = graft.build.AddonUnits.floatOrderedBits(hi)
-    if (SearchKernel.isVoid(cq))
-      spark.range(0).select(col("id").cast("double").as("bucket"),
-        col("id").as("cnt"))
-    else if (altServes(cq)) {
-      val keys = SearchKernel.keySpecs(cq)
-      val (w, l) = (width, lo)
-      val decodeBits = udf((bits: Long) => java.lang.Double.longBitsToDouble(bits))
-      // value-ordered bounded stream → buckets close at their boundary,
-      // ≤ one partial row per (shard, non-empty bucket); partials carry
-      // the bucket start's raw bit image, decoded after the final sum
-      altPostings.where(termPredicate(cq))
-        .groupByKey(_.shard)
-        .flatMapGroups((shard: Int, it: Iterator[PostingRow]) =>
-          AltKernel.facetShardFloat(cq, keys, new AltKernel.ShardCells(it),
-            w, l, loBits, hiBits))
-        .toDF("bits", "partial")
-        .groupBy("bits").agg(sum("partial").as("cnt"))
-        .select(decodeBits(col("bits")).as("bucket"), col("cnt"))
-    } else {
-      val decode = udf((bits: Long) =>
-        graft.build.AddonUnits.floatFromOrderedBits(bits))
-      val v = decode(col("addon"))
-      // Spark floor(double) yields Long; the product k·width is IEEE-equal
-      // to the kernel's math.floor path while k < 2^53 (guarded above)
-      val bucket = lit(lo) + floor((v - lit(lo)) / lit(width)) * lit(width) +
-        lit(0.0)
-      matchingWithAddonC(cq)
-        .where(col("addon") >= loBits && col("addon") <= hiBits)
-        .groupBy(bucket.as("bucket"))
-        .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt"))
-    }
+    val v = Searcher.orderedBitsToDouble(col("addon"))
+    // Spark floor(double) yields Long; the product k·width is IEEE-equal
+    // to the kernel's math.floor path while k < 2^53 (requireFacetFloat)
+    val bucket = lit(lo) + floor((v - lit(lo)) / lit(width)) * lit(width) +
+      lit(0.0)
+    matchingWithAddonC(cq)
+      .where(col("addon") >= loBits && col("addon") <= hiBits)
+      .groupBy(bucket.as("bucket"))
+      .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt"))
   }
 
   /** Ranked search: WHERE t @@ q ORDER BY t <=> q LIMIT k — the
@@ -629,8 +595,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * docId ascending (reference tie-break on TID, src/rumsort.c:4003-4021).
     * With matchOnly=false behaves like order-only scan over all docs
     * (EVERYTHING mode): non-matching docs carry infinite distance.
-    */
-  /** `method` = rank-normalization flags (CoverRank.Norm*). UNIQ flags
+    * `method` = rank-normalization flags (CoverRank.Norm*). UNIQ flags
     * divide by the doc's distinct-lexeme count, which lives in the docs
     * table (the "heap" — exactly where the reference's rum_ts_distance
     * reads txt->size from), so those queries route through the full scan.
@@ -639,8 +604,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
                 method: Int = 0): DataFrame =
     cached("topKC" + Searcher.key(queryStr, k.toString, matchOnly.toString,
       method.toString)) {
-      topKCoverC(compile(queryStr), k, matchOnly, method, null, null)
+      if (matchOnly) coverSlot(Searcher.MsearchSpec.Cover(queryStr, k, method))
+      else topKCoverC(compile(queryStr), k, matchOnly = false, method, null, null)
     }
+
+  /** A one-slot cover plan as (docId, distance). */
+  private def coverSlot(spec: Searcher.MsearchSpec): DataFrame =
+    msearchPlan(Seq(spec)).select(col("docId"), col("score").as("distance"))
 
   /** Multicolumn ranked scan: match `rankQuery` on `rankField` AND every
     * `filters` predicate on its field — one kernel pass over field-prefixed
@@ -656,7 +626,12 @@ final class Searcher(spark: SparkSession, indexDir: String,
     cached("topKCM" + Searcher.key(
       Seq(rankField, rankQuery) ++ filters.flatMap(p => Seq(p._1, p._2)) ++
         Seq(k.toString, matchOnly.toString, method.toString): _*)) {
-      topKCoverMultiU(rankField, rankQuery, filters, k, matchOnly, method)
+      if (matchOnly)
+        coverSlot(Searcher.MsearchSpec.CoverFields(rankField, rankQuery, filters, k, method))
+      else {
+        val (fullCq, scoreCq, scoreMap) = compileCoverMulti(rankField, rankQuery, filters)
+        topKCoverC(fullCq, k, matchOnly = false, method, scoreCq, scoreMap)
+      }
     }
 
   /** (fullCq, scoreCq, scoreMap) for a multicolumn ranked scan: match the
@@ -684,41 +659,18 @@ final class Searcher(spark: SparkSession, indexDir: String,
     (fullCq, scoreCq, scoreMap)
   }
 
-  private def topKCoverMultiU(rankField: String, rankQuery: String,
-                     filters: Seq[(String, String)], k: Int,
-                     matchOnly: Boolean, method: Int): DataFrame = {
-    val (fullCq, scoreCq, scoreMap) = compileCoverMulti(rankField, rankQuery, filters)
-    topKCoverC(fullCq, k, matchOnly, method, scoreCq, scoreMap)
-  }
-
+  /** Full-scan cover top-k: UNIQ norms (they read the docs table),
+    * queries the postings alone cannot drive, and order-only scans
+    * (matchOnly = false).
+    */
   private def topKCoverC(cq: CompiledQuery, k: Int, matchOnly: Boolean,
                          method: Int, scoreCq: CompiledQuery,
-                         scoreMap: Array[Int]): DataFrame = {
-    if (SearchKernel.isVoid(cq) && matchOnly)
-      return spark.range(0)
-        .select(col("id").as("docId"), col("id").cast("double").as("distance"))
-    val needsHeap = (method & (CoverRank.NormUniq | CoverRank.NormLogUniq)) != 0
-    val base =
-      if (!matchOnly || needsHeap || SearchKernel.needsFullScan(cq))
-        fullScan(cq, score = true, matchOnly = matchOnly, k = k, method = method,
-          scoreCq = scoreCq, scoreMap = scoreMap)
-      else {
-        val keys = SearchKernel.keySpecs(cq)
-        postings.where(termPredicate(cq))
-          .groupByKey(_.shard)
-          .flatMapGroups((shard: Int, it: Iterator[PostingRow]) =>
-            SearchKernel.matchShard(cq, keys, it, score = true, k = k, method = method,
-              scoreCq = scoreCq, scoreMap = scoreMap))
-          .toDF("docId", "distance", "addon").select("docId", "distance")
-      }
-    base.select("docId", "distance")
+                         scoreMap: Array[Int]): DataFrame =
+    fullScan(cq, score = true, matchOnly = matchOnly, k = k, method = method,
+        scoreCq = scoreCq, scoreMap = scoreMap)
+      .select("docId", "distance")
       .orderBy(col("distance").asc, col("docId").asc).limit(k)
-  }
 
-  /** Classic BM25 disjunctive top-k over bag-of-terms with WAND pruning
-    * (the fast-scan analogue, src/rumget.c:1900-2017). Scores use true tf
-    * and doc length carried in the posting payload (addon-column pattern).
-    */
   /** Field-scoped BM25 over a multicolumn index: terms resolve to the
     * field's prefixed key space, so df/maxTf stats and doc lengths are the
     * field's own (posting payloads carry per-field token counts);
@@ -731,8 +683,14 @@ final class Searcher(spark: SparkSession, indexDir: String,
     topKBm25(terms.map(t => graft.build.IndexBuilder.fieldKey(field, t)), k)
   }
 
+  /** Classic BM25 disjunctive top-k over bag-of-terms with WAND pruning
+    * (the fast-scan analogue, src/rumget.c:1900-2017). Scores use true tf
+    * and doc length carried in the posting payload (addon-column pattern).
+    */
   def topKBm25(terms: Seq[String], k: Int): DataFrame =
-    cached("bm25" + Searcher.key(terms :+ k.toString: _*))(topKBm25U(terms, k))
+    cached("bm25" + Searcher.key(terms :+ k.toString: _*)) {
+      msearchPlan(Seq(Searcher.MsearchSpec.Bm25(terms, k))).select("docId", "score")
+    }
 
   /** Per-searcher term-stats memo: (df, maxTf) per key, absent terms cached
     * as (0, 0). A Searcher is pinned to one immutable snapshot, so stats
@@ -755,27 +713,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
     keys.map(t => t -> termStatsCache.get(t)).toMap.filter(_._2._1 > 0L)
   }
 
-  private def topKBm25U(terms: Seq[String], k: Int): DataFrame = {
-    val distinct = terms.distinct.map(keyOf)
-    val stats = statsFor(distinct)
-    val present = distinct.filter(stats.contains)
-    if (present.isEmpty) return spark.emptyDataFrame
-      .select(lit(0L).as("docId"), lit(0.0).as("score")).limit(0)
-    val n = meta.numDocs
-    val avgLen = meta.avgLen
-    val termsArr = present.toArray
-    val dfArr = termsArr.map(t => stats(t)._1)
-    val ubArr = termsArr.indices.map(i =>
-      Bm25.maxTermScore(stats(termsArr(i))._2, dfArr(i), avgLen, n)).toArray
-
-    postings.where(col("term").isin(termsArr.toSeq: _*))
-      .groupByKey(_.shard)
-      .flatMapGroups((shard: Int, it: Iterator[PostingRow]) =>
-        SearchKernel.wandShard(termsArr, dfArr, ubArr, n, avgLen, k, it))
-      .toDF("docId", "score")
-      .orderBy(col("score").desc, col("docId").asc)
-      .limit(k)
-  }
+  /** Zero-row frame with (qi, cols...) — the empty-msearch schema shared
+    * by every batch API's empty-input guard.
+    */
+  private def emptyBatch(cols: (String, String)*): DataFrame =
+    spark.range(0).select(
+      col("id").cast("int").as("qi") +: cols.map { case (n, t) =>
+        col("id").cast(t).as(n) }: _*)
 
   /** Execute several prepared query DataFrames as ONE Spark job (the
     * msearch/multi-query pattern): each result collapses to its row count
@@ -786,14 +730,6 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * (branch index, row count) per input. The union plan is cached under
     * `key` (caller owns key uniqueness per Searcher instance).
     */
-  /** Zero-row frame with (qi, cols...) — the empty-msearch schema shared
-    * by every batch API's empty-input guard.
-    */
-  private def emptyBatch(cols: (String, String)*): DataFrame =
-    spark.range(0).select(
-      col("id").cast("int").as("qi") +: cols.map { case (n, t) =>
-        col("id").cast(t).as(n) }: _*)
-
   def batchRowCounts(key: String, dfs: => Seq[DataFrame]): Array[(Int, Long)] =
     cached("batch" + Searcher.key(key)) {
       val branches = dfs
@@ -805,41 +741,32 @@ final class Searcher(spark: SparkSession, indexDir: String,
       }.reduce(_.union(_))
     }.collect().map(r => (r.getInt(0), r.getLong(1)))
 
-  /** Match counts for a batch of tsquery strings in one Spark job. */
+  /** Match counts for a batch of tsquery strings in one fused scan
+    * ([[msearchCounts]]).
+    */
   def countBatch(queryStrs: Seq[String]): Map[String, Long] = {
     val distinct = queryStrs.distinct
-    batchRowCounts("counts" + Searcher.key(distinct: _*),
-      distinct.map(matchingDocs))
-      .map { case (i, n) => distinct(i) -> n }.toMap
+    msearchCounts(distinct).collect()
+      .map(r => distinct(r.getInt(0)) -> r.getLong(1)).toMap
   }
 
-  /** Batched ranked retrieval (msearch for BM25 top-k): every (terms, k)
-    * query's cached plan unions with a query-index tag into ONE job.
-    * Returns (qi, docId, score) — qi indexes into the input batch. The
-    * outer key joins per-query keys on a second separator so batch
-    * boundaries cannot alias.
+  /** Batched ranked retrieval: a batch of BM25 (terms, k) queries as ONE
+    * fused [[msearch]]. Returns (qi, docId, score) — qi indexes into the
+    * input batch.
     */
   def topKBm25Batch(queries: Seq[(Seq[String], Int)]): DataFrame =
-    cached("bm25B\u0001" + queries.map { case (ts, k) =>
-      (ts :+ k.toString).mkString("\u0001") }.mkString("\u0002")) {
-      if (queries.isEmpty) emptyBatch("docId" -> "long", "score" -> "double")
-      else queries.zipWithIndex.map { case ((ts, k), i) =>
-        topKBm25(ts, k).select(lit(i).as("qi"), col("docId"), col("score"))
-      }.reduce(_.union(_))
-    }
+    msearch(queries.map { case (ts, k) => Searcher.MsearchSpec.Bm25(ts, k) })
 
-  /** Batched cover-density ranked retrieval: the msearch twin of
+  /** Batched cover-density ranked retrieval: the twin of
     * [[topKBm25Batch]] for the reference's flagship `<=>` ordering.
     * Returns (qi, docId, distance).
     */
-  def topKCoverBatch(queries: Seq[(String, Int)]): DataFrame =
-    cached("coverB\u0001" + queries.map { case (q, k) =>
-      q + "\u0001" + k }.mkString("\u0002")) {
-      if (queries.isEmpty) emptyBatch("docId" -> "long", "distance" -> "double")
-      else queries.zipWithIndex.map { case ((q, k), i) =>
-        topKCover(q, k).select(lit(i).as("qi"), col("docId"), col("distance"))
-      }.reduce(_.union(_))
+  def topKCoverBatch(queries: Seq[(String, Int)]): DataFrame = {
+    val specs = queries.map { case (q, k) => Searcher.MsearchSpec.Cover(q, k) }
+    cached("coverB" + specs.map(Searcher.specKey).mkString("")) {
+      msearchPlan(specs).select(col("qi"), col("docId"), col("score").as("distance"))
     }
+  }
 
   /** FUSED multi-search: evaluate a heterogeneous batch of queries in ONE
     * scan + ONE shuffle (the shared-scan msearch a serving tier runs when
@@ -850,9 +777,12 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * extra terms from sibling specs are invisible to a kernel because
     * cursor construction matches exactly its own keys. Global per-spec
     * top-k then runs over ONLY the shard-pruned rows of bounded specs
-    * (≤ k·nShards rows each): a shared repartition barrier lets both the
-    * bounded and unbounded branches reuse one kernel execution, and match
-    * specs never pass through a sort. Per-batch driver cost is one plan
+    * (≤ k·nShards rows each): one bounded slot takes an ordered limit
+    * (TakeOrderedAndProject), several share a row_number window per qi. A
+    * shared repartition barrier lets both the bounded and unbounded
+    * branches reuse one kernel execution, and match specs never pass
+    * through a sort. Every solo match, BM25, cover and facet query is a
+    * one-slot batch of this plan. Per-batch driver cost is one plan
     * over one subtree instead of N — the serial component that would
     * otherwise bound msearch throughput at any cluster size.
     * Returns (qi, docId, score): score = 0.0 for Match and AddonRange,
@@ -860,10 +790,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * (top-k, lower better), exact saturating addon distance for Addon
     * (top-k, lower better), exact double value-units distance for
     * AddonFloat. Ordered-scan slots (Addon/AddonRange and their float
-    * value-units twins) run over the alt-order layout's OWN shared scan — a heterogeneous batch costs
-    * one scan per layout it touches. Void specs contribute no rows;
-    * full-scan-only and alt-unservable specs fall back to their solo
-    * plans, unioned in.
+    * value-units twins) run over the alt-order layout's OWN shared scan —
+    * a heterogeneous batch costs one scan per layout it touches. Void
+    * specs contribute no rows; full-scan-only and alt-unservable specs
+    * fall back to their own plans, unioned in.
     */
   def msearch(specs: Seq[Searcher.MsearchSpec]): DataFrame =
     cached("msearch" + specs.map(Searcher.specKey).mkString(""))(msearchPlan(specs))
@@ -877,14 +807,14 @@ final class Searcher(spark: SparkSession, indexDir: String,
     val altFused = scala.collection.mutable.ArrayBuffer.empty[Searcher.AltFusedSpec]
     val fallback = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // count slots: every qi here gets a spine row (even void/zero-match);
-    // full-scan-only count queries aggregate their solo plan into the
+    // full-scan-only count queries aggregate their full-scan plan into the
     // same (qi, partial) union
     val countQis = scala.collection.mutable.ArrayBuffer.empty[Int]
     val countFallback = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def addMatch(qi: Int, cq: CompiledQuery): Unit = {
       if (SearchKernel.isVoid(cq)) ()
       else if (SearchKernel.needsFullScan(cq))
-        fallback += matchingDocsC(cq)
+        fallback += fullScanMatches(cq)
           .select(lit(qi).as("qi"), col("docId"), lit(0.0).as("score"))
       else fused += Searcher.FusedSpec(qi, 0, cq, SearchKernel.keySpecs(cq),
         null, null, null, 0)
@@ -916,7 +846,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
       countQis += qi
       if (SearchKernel.isVoid(cq)) () // 0 via the spine
       else if (SearchKernel.needsFullScan(cq))
-        countFallback += matchingDocsC(cq)
+        countFallback += fullScanMatches(cq)
           .agg(org.apache.spark.sql.functions.count(lit(1)).as("partial"))
           .select(lit(qi).as("qi"), col("partial"))
       else fused += Searcher.FusedSpec(qi, 3, cq, SearchKernel.keySpecs(cq),
@@ -974,12 +904,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
           graft.build.AddonUnits.floatOrderedBits(w), "", 0,
           graft.build.AddonUnits.floatOrderedBits(lo),
           graft.build.AddonUnits.floatOrderedBits(hi), floatUnits = true)
-      else {
-        val bitsOf = udf((v: Double) => java.lang.Double.doubleToRawLongBits(v))
+      else
         fallback += countByAddonBucketFloatC(cq, w, lo, hi)
-          .select(lit(qi).as("qi"), bitsOf(col("bucket")).as("docId"),
+          .select(lit(qi).as("qi"), Searcher.doubleToRawLongBits(col("bucket")).as("docId"),
             col("cnt").cast("double").as("score"))
-      }
     }
     def addBm25(qi: Int, keys: Seq[String], k: Int): Unit = {
       val distinct = keys.distinct
@@ -1004,9 +932,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
         // field-scoped variants over a multi-column index: the same fused
         // pass — field-prefixed keys are just keys to the kernel
         case MatchFields(fq) => addMatch(qi, compileMulti(fq))
-        case CoverFields(rf, rq, filters, k) =>
+        case CoverFields(rf, rq, filters, k, method) =>
           val (fullCq, scoreCq, scoreMap) = compileCoverMulti(rf, rq, filters)
-          addCover(qi, fullCq, k, 0, scoreCq, scoreMap)
+          addCover(qi, fullCq, k, method, scoreCq, scoreMap)
         case Bm25Fields(field, terms, k) =>
           require(meta.fields.split(",").contains(field),
             s"unknown field '$field' (have ${meta.fields})")
@@ -1094,15 +1022,20 @@ final class Searcher(spark: SparkSession, indexDir: String,
         val unbounded = fs.filter(_.mode == 0)
         val counts = fs.filter(_.mode == 3)
         // bounded specs: per-shard heaps already pruned to ≤ k·nShards rows
-        // each, so the global top-k window's exchange+sort touch only those;
-        // match specs stream through their own branch, never sorted
+        // each, so the global top-k touches only those; match specs stream
+        // through their own branch, never sorted. One bounded slot (every
+        // solo top-k) takes an ordered limit, which Spark runs as
+        // TakeOrderedAndProject without the window's extra exchange
+        val order = Seq(col("sort").asc, col("sort2").asc, col("docId").asc)
         val boundedPart =
           if (bounded.isEmpty) None
+          else if (bounded.length == 1)
+            Some(kernel(bounded).orderBy(order: _*).limit(bounded.head.k)
+              .select("qi", "docId", "score"))
           else {
             val kPairs = bounded.flatMap(f => Seq(lit(f.qi), lit(f.k))).toSeq
             val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("qi")
-              .orderBy(col("sort").asc, col("sort2").asc, col("docId").asc)
+              .partitionBy("qi").orderBy(order: _*)
             Some(kernel(bounded)
               .withColumn("rank", row_number().over(w))
               .where(col("rank") <= element_at(map(kPairs: _*), col("qi")))
@@ -1180,12 +1113,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
             val floatQis = bounded.filter(_.floatUnits).map(_.qi).toSeq
             val score =
               if (floatQis.isEmpty) col("dist").cast("double")
-              else {
-                val bitsToDouble =
-                  udf((bits: Long) => java.lang.Double.longBitsToDouble(bits))
-                when(col("qi").isInCollection(floatQis), bitsToDouble(col("dist")))
-                  .otherwise(col("dist").cast("double"))
-              }
+              else when(col("qi").isInCollection(floatQis),
+                  Searcher.longBitsToDouble(col("dist")))
+                .otherwise(col("dist").cast("double"))
             Some(altKernel(bounded)
               .withColumn("rank", row_number().over(w))
               .where(col("rank") <= element_at(map(kPairs: _*), col("qi")))
@@ -1219,7 +1149,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * which is what keeps count-heavy serving scaling when individual
     * matches number in the millions. Void queries count 0 (the qi spine
     * guarantees a row per slot); full-scan-only queries fall back to their
-    * solo plans, union-aggregated in. Returns (qi, cnt).
+    * full-scan plans, union-aggregated in. Returns (qi, cnt).
     */
   def msearchCounts(queryStrs: Seq[String]): DataFrame =
     cached("msearchC" + Searcher.key(queryStrs: _*))(msearchCountsPlan(queryStrs))
@@ -1264,18 +1194,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
   private def emptyCompiled(field: Option[String]): CompiledQuery =
     compileTree(TsQuery.Lexeme(emptyKeyRaw(field)))
 
-  def matchingEmpty(field: Option[String] = None): DataFrame = {
-    val raw = emptyKeyRaw(field)
-    cached("matchEmpty" + Searcher.key(raw)) {
-      postings.where(col("term") === keyOf(raw))
-        .flatMap { row =>
-          val cur = new PostingCursor(Iterator(row.blocks))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-          while (!cur.done) { out += cur.docId; cur.next() }
-          out.iterator
-        }.toDF("docId")
+  def matchingEmpty(field: Option[String] = None): DataFrame =
+    cached("matchEmpty" + Searcher.key(emptyKeyRaw(field))) {
+      msearchPlan(Seq(Searcher.MsearchSpec.MatchEmpty(field))).select("docId")
     }
-  }
 
   def countEmpty(field: Option[String] = None): Long =
     runCount("countEmpty" + Searcher.key(field.getOrElse("")), matchingEmpty(field))
@@ -1338,7 +1260,7 @@ object Searcher {
     final case class Bm25(terms: Seq[String], k: Int) extends MsearchSpec
     /** cover-density ranked top-k (score = distance, lower better);
       * `method` = CoverRank normalization flags (UNIQ norms route the slot
-      * through its solo full-scan fallback — they read the docs table)
+      * through its full-scan fallback — they read the docs table)
       */
     final case class Cover(query: String, k: Int, method: Int = 0) extends MsearchSpec
     /** composite-ordered top-k riding the fused batch:
@@ -1349,7 +1271,7 @@ object Searcher {
       * distance (lower better); the addon key decides membership and
       * tie-breaks but is not re-emitted (the batch schema is
       * (qi, docId, score)). UNIQ norms / full-scan-only queries ride as
-      * their solo fallback plans.
+      * their full-scan fallback plans.
       */
     final case class Order2(query: String, c: Long, op: String, k: Int,
         method: Int = 0) extends MsearchSpec
@@ -1368,9 +1290,11 @@ object Searcher {
       extends MsearchSpec
     /** multicolumn match: one tsquery per field, ANDed (compileMulti) */
     final case class MatchFields(fieldQueries: Seq[(String, String)]) extends MsearchSpec
-    /** multicolumn ranked top-k: rank one field's query, siblings filter */
+    /** multicolumn ranked top-k: rank one field's query, siblings filter;
+      * `method` as in [[Cover]]
+      */
     final case class CoverFields(rankField: String, rankQuery: String,
-        filters: Seq[(String, String)], k: Int) extends MsearchSpec
+        filters: Seq[(String, String)], k: Int, method: Int = 0) extends MsearchSpec
     /** field-scoped BM25 over a multicolumn index */
     final case class Bm25Fields(field: String, terms: Seq[String], k: Int)
       extends MsearchSpec
@@ -1411,7 +1335,7 @@ object Searcher {
       * are all that ship — ≤ buckets × shards rows per slot regardless of
       * match count. Result rows are (qi, docId = bucket start,
       * score = count as double); only non-empty buckets emit.
-      * Alt-unservable queries aggregate their solo fallback plan into the
+      * Alt-unservable queries aggregate their fallback plan into the
       * batch union.
       */
     final case class Facet(query: String, width: Long, lo: Long, hi: Long)
@@ -1425,7 +1349,7 @@ object Searcher {
       * are (qi, docId = the bucket start's RAW IEEE bits — decode with
       * `java.lang.Double.longBitsToDouble` — , score = count). Rides the
       * batch's shared alt scan; alt-unservable queries aggregate their
-      * solo fallback plan with the same bit-image bucket column.
+      * fallback plan with the same bit-image bucket column.
       */
     final case class FacetFloat(query: String, width: Double, lo: Double,
         hi: Double) extends MsearchSpec
@@ -1487,6 +1411,16 @@ object Searcher {
       scoreCq: CompiledQuery = null, scoreMap: Array[Int] = null,
       method: Int = 0, c: Long = 0L, op: String = "")
 
+  /** [[graft.build.AddonUnits.floatOrderedBits]] image → its double. */
+  private val orderedBitsToDouble =
+    udf((bits: Long) => graft.build.AddonUnits.floatFromOrderedBits(bits))
+  /** raw IEEE-754 bits → double */
+  private val longBitsToDouble =
+    udf((bits: Long) => java.lang.Double.longBitsToDouble(bits))
+  /** double → raw IEEE-754 bits */
+  private val doubleToRawLongBits =
+    udf((v: Double) => java.lang.Double.doubleToRawLongBits(v))
+
   /** One ORDER BY key of a [[Searcher.topKMulti]] scan. */
   sealed trait OrderKey
   object OrderKey {
@@ -1524,8 +1458,8 @@ object Searcher {
       case Count(q) => key("K", q)
       case CountFields(fq) => key("KF" +: fq.flatMap(p => Seq(p._1, p._2)): _*)
       case MatchFields(fq) => key("MF" +: fq.flatMap(p => Seq(p._1, p._2)): _*)
-      case CoverFields(rf, rq, fl, k) =>
-        key(Seq("CF", rf, rq, k.toString) ++ fl.flatMap(p => Seq(p._1, p._2)): _*)
+      case CoverFields(rf, rq, fl, k, m) =>
+        key(Seq("CF", rf, rq, k.toString, m.toString) ++ fl.flatMap(p => Seq(p._1, p._2)): _*)
       case Bm25Fields(f, ts, k) => key(Seq("BF", f, k.toString) ++ ts: _*)
       case Addon(q, c, op, k) => key("A", q, c.toString, op, k.toString)
       case AddonRange(q, lo, hi) => key("R", q, lo.toString, hi.toString)

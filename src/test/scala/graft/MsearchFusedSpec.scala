@@ -9,7 +9,11 @@ import graft.search.Searcher
   * batch): every slot must return exactly its solo query's rows/scores,
   * including prefix expansion, void slots, and full-scan fallbacks riding
   * the same batch; the fused kernel subtree must execute once (shared
-  * exchange), not once per output branch.
+  * exchange), not once per output branch. Solo match, BM25, cover and
+  * facet queries are themselves one-slot batches, so for those shapes the
+  * "slot equals its solo query" checks prove only that sibling slots do
+  * not interfere; the independent references are brute force in
+  * FastScanSpec (match), Bm25WandSpec (BM25) and CoverTopKSpec (cover).
   */
 class MsearchFusedSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
@@ -418,6 +422,22 @@ class MsearchFusedSpec extends AnyFunSuite {
     assert(got(0).map(t => (t._2, t._3)).toSet == solo && solo.nonEmpty)
     val soloR = s.rangeAddonMulti(fq, -300L, 0L).collect().map(_.getLong(0)).toSet
     assert(got(1).map(_._2).toSet == soloR && soloR.nonEmpty)
+  }
+
+  test("one bounded slot ends in TakeOrderedAndProject; several share a window") {
+    import Searcher.MsearchSpec._
+    def plan(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString
+    val bm25 = plan(searcher.topKBm25(Seq("rare7", "veryrare", "tail3"), 7))
+    val cover = plan(searcher.topKCover("common & rare7", 5))
+    for (p <- Seq(bm25, cover)) {
+      assert(p.contains("TakeOrderedAndProject"), p)
+      assert(!p.contains("Window"), p)
+    }
+    assert("PushedFilters: \\[[^\\]]*In\\(term, \\[".r.findFirstIn(bm25).isDefined, bm25)
+    val batch = plan(searcher.msearchPlan(Seq(
+      Bm25(Seq("rare7", "veryrare"), 3), Cover("common & rare7", 4))))
+    assert(batch.contains("Window"), batch)
   }
 
   test("fused kernel executes once: shared exchange reused across branches") {
