@@ -226,18 +226,6 @@ object IndexBuilder {
     case other => throw new IllegalArgumentException(s"unknown tokenizer: $other")
   }
 
-  private def tokenCountFn(name: String): String => Int = name match {
-    case "simple" | "simple_title8" => (t: String) => Tokenizer.simpleCount(if (t == null) "" else t)
-    case "code" => (t: String) => Tokenizer.codeCount(if (t == null) "" else t)
-    case other => throw new IllegalArgumentException(s"unknown tokenizer: $other")
-  }
-
-  private def uniqueCountFn(name: String): String => Int = name match {
-    case "simple" | "simple_title8" => (t: String) => Tokenizer.simpleUniqueCount(if (t == null) "" else t)
-    case "code" => (t: String) => Tokenizer.codeUniqueCount(if (t == null) "" else t)
-    case other => throw new IllegalArgumentException(s"unknown tokenizer: $other")
-  }
-
   /** docId, guarded: ids are the index's primary key, so a null (or
     * uncastable) id is a data error surfaced with its column name rather
     * than an encoder assertion deep in a build stage.
@@ -317,21 +305,35 @@ object IndexBuilder {
         col("e.uniq").as("uniq"))
   }
 
-  /** Docs table derived from exploded posting tuples — equivalent to the
-    * per-doc count/uniq tokenize pass by construction: every entry of a doc
-    * carries the doc's total token count (`len`) and addon; `uniq`
-    * (distinct-lexeme count, the tsvector size UNIQ norms divide by) is the
-    * number of real-term entries, since the tokenizer emits exactly one
-    * entry per distinct raw term and the empty-doc placeholder entry is the
-    * only one with tf = 0.
+  /** Posting tuples of every (keyPrefix, column) field of `corpus`: one
+    * tokenize pass per field, unioned.
     */
-  /** The docs table is the exploded tuples' first-entry rows (uniq >= 0 —
-    * exactly one per doc by construction): a narrow filter + shard-pure
-    * repartition of ndocs rows, no corpus-sized aggregation.
+  private def tuplesOf(corpus: DataFrame, docIdCol: String, fields: Seq[(String, String)],
+                       params: Params): DataFrame =
+    fields.map { case (prefix, c) =>
+      explodedOf(normalize(corpus, docIdCol, c, params), params, keyPrefix = prefix)
+    }.reduce(_ unionAll _)
+
+  /** Docs table derived from the posting tuples, shard-routed for the
+    * write. Every entry of a doc carries the doc's token count (`len`) and
+    * addon, and its first entry alone carries `uniq` >= 0 (the distinct-key
+    * count UNIQ norms divide by), so the first-entry rows are exactly one
+    * per doc and field. With one field they ARE the docs table: a narrow
+    * filter + shard-pure repartition of ndocs rows, no corpus-sized
+    * aggregation. With several fields they are summed per (shard, docId):
+    * total tokens and total distinct keys — a term in two fields is two
+    * distinct keys, so the per-field counts sum by construction.
     */
-  private[graft] def docsFromExploded(exploded: DataFrame, params: Params): DataFrame =
-    shardPure(exploded.where(col("uniq") >= 0)
-      .select("shard", "docId", "len", "addon", "uniq"), params)
+  private[graft] def docsFromExploded(exploded: DataFrame, params: Params,
+                                      nFields: Int): DataFrame = {
+    val firsts = exploded.where(col("uniq") >= 0)
+    val rows =
+      if (nFields == 1) firsts
+      else firsts.groupBy(col("shard"), col("docId"))
+        .agg(sum("len").cast("int").as("len"), max("addon").as("addon"),
+          sum("uniq").cast("int").as("uniq"))
+    shardPure(rows.select("shard", "docId", "len", "addon", "uniq"), params)
+  }
 
   /** Route docs rows so each shard lands in exactly one task (see
     * [[shardRouting]]): a partitionBy("shard") write emits ONE file per
@@ -413,23 +415,6 @@ object IndexBuilder {
     } finally pool.shutdown()
   }
 
-  /** pack posting tuples into canonical chunk rows — two stages:
-    *
-    *   A. narrow per-input-partition external sort (Spark's
-    *      UnsafeExternalSorter supplies the memory-bounded spill RUM gets
-    *      from maintenance_work_mem flushes, src/ruminsert.c:569-589) +
-    *      streaming run pack: one delta+varbyte [[RunRow]] per
-    *      (input partition, shard, term). The SHUFFLE then moves packed
-    *      blocks, not (term, doc) rows.
-    *   B. hash shuffle on (shard, term) + k-way merge of each cell's runs
-    *      (the posting merge of src/rumdatapage.c:367-408) into final
-    *      chunk rows, deduping equal docIds (first run in (firstDoc, seq)
-    *      order wins). Single-run cells — every rare term — pass through
-    *      without a decode/re-encode round-trip.
-    *
-    * Output is canonical: independent of the input partitioning, the same
-    * corpus packs byte-identical chunks (rebuild/resume determinism).
-    */
   /** Per-shard pack/merge wall time (nanos) harvested from stage-B tasks —
     * makes ShardMeta.buildMs a real per-shard metric instead of the job
     * wall stamped onto every shard. Task retries could double-count; the
@@ -471,6 +456,23 @@ object IndexBuilder {
     out
   }
 
+  /** pack posting tuples into canonical chunk rows — two stages:
+    *
+    *   A. narrow per-input-partition external sort (Spark's
+    *      UnsafeExternalSorter supplies the memory-bounded spill RUM gets
+    *      from maintenance_work_mem flushes, src/ruminsert.c:569-589) +
+    *      streaming run pack: one delta+varbyte [[RunRow]] per
+    *      (input partition, shard, term). The SHUFFLE then moves packed
+    *      blocks, not (term, doc) rows.
+    *   B. hash shuffle on (shard, term) + k-way merge of each cell's runs
+    *      (the posting merge of src/rumdatapage.c:367-408) into final
+    *      chunk rows, deduping equal docIds (first run in (firstDoc, seq)
+    *      order wins). Single-run cells — every rare term — pass through
+    *      without a decode/re-encode round-trip.
+    *
+    * Output is canonical: independent of the input partitioning, the same
+    * corpus packs byte-identical chunks (rebuild/resume determinism).
+    */
   private[graft] def packDataset(spark: SparkSession, exploded: DataFrame,
                           params: Params, alt: Boolean = false,
                           packAcc: Option[org.apache.spark.util.CollectionAccumulator[(Int, Long)]] = None): Dataset[PostingRow] = {
@@ -646,18 +648,47 @@ object IndexBuilder {
     }
   }
 
-  /** Recompute global stats + per-shard metrics + manifest over all shards
-    * on disk — ONE heavy pass over the postings (grouped to (shard, term)
-    * cells, then two micro re-aggregations), not one per output.
+  /** The one generation writer: build, resume, append and compact all hand
+    * their posting tuples and shard-routed docs rows here, as RUM's bulk
+    * build, insert and vacuum all write through one entry-insert routine
+    * (src/ruminsert.c:410-475). The postings pack, the alt pack (alt-order
+    * layouts) and the docs write are independent jobs over different
+    * directories, run concurrently so a write pays max(job), not
+    * sum(job). A caller whose tuples feed two or more of these jobs
+    * persists them (and releases them in `finally`), so each pack reads one
+    * materialized copy instead of re-running tokenize or decode.
+    *
+    * Files are APPENDED next to whatever the directories already hold;
+    * returns the parquet files each dataset gained — the caller's commit
+    * rule decides what the manifest lists — and the per-shard pack/merge
+    * wall ms.
     */
-  /** `shardMs`: real per-shard pack/merge wall ms (from the stage-B
+  private def writeGeneration(spark: SparkSession, indexDir: String, params: Params,
+                              tuples: DataFrame, docs: DataFrame)
+      : (Map[String, List[String]], Map[Int, Long]) = {
+    val kinds = Seq("postings") ++ (if (params.altOrder) Seq("alt") else Nil) :+ "docs"
+    val before = kinds.map(k => k -> listParquet(datasetDir(indexDir, k)).toSet).toMap
+    val packAcc = newPackAcc(spark)
+    def rows(kind: String): DataFrame =
+      if (kind == "docs") docs
+      else packDataset(spark, tuples, params, alt = kind == "alt", packAcc = Some(packAcc)).toDF()
+    runConcurrently(spark, kinds.map(k => () =>
+      rows(k).write.mode("append").partitionBy("shard").parquet(datasetDir(indexDir, k))))
+    (kinds.map(k => k -> listParquet(datasetDir(indexDir, k)).filterNot(before(k))).toMap,
+      packAccMs(packAcc))
+  }
+
+  /** Recompute global stats + per-shard metrics + manifest over the files
+    * in `dataFiles` — ONE heavy pass over the postings (grouped to (shard,
+    * term) cells, then two micro re-aggregations), not one per output.
+    *
+    * `shardMs`: real per-shard pack/merge wall ms (from the stage-B
     * accumulator); shards without a measurement fall back to the job wall.
-    */
-  /** `docsDS`: when the caller just WROTE the docs dataset and still holds
-    * it persisted (fresh build / compact), the totals aggregate the
+    * `docsDS`: when the caller just WROTE the whole docs dataset and still
+    * holds it persisted (fresh build / compact), the totals aggregate the
     * in-memory copy instead of re-reading the files it just wrote — the
     * committed listing covers exactly those rows by construction. Appends
-    * pass None (their totals span old + new files).
+    * and resumes pass None (their totals span old + new files).
     */
   private def refresh(spark: SparkSession, indexDir: String, params: Params,
                       buildMs: Long, lineage: String,
@@ -750,7 +781,40 @@ object IndexBuilder {
     * in doubt.
     */
   def build(spark: SparkSession, corpus: DataFrame, docIdCol: String, textCol: String,
-            indexDir: String, params: Params = Params(), resume: Boolean = false): IndexMeta = {
+            indexDir: String, params: Params = Params(), resume: Boolean = false): IndexMeta =
+    buildImpl(spark, corpus, docIdCol, Seq("" -> textCol), "", indexDir, params, resume,
+      corpus.queryExecution.logical.toString.linesIterator.take(1).mkString)
+
+  /** Multi-column build — one index over several text columns with
+    * field-prefixed keys (the attnum key prefix of the reference's
+    * multicolumn support, src/rumutil.c:266-288; tests
+    * sql/orderby.sql:89-106). Queries go through
+    * [[graft.search.Searcher.compileMulti]], which ANDs per-field tsqueries
+    * into one kernel pass. Doc length = total tokens across fields.
+    * [[appendFields]] inserts incrementally; delete/compact work
+    * transparently since the field prefix rides inside the key.
+    */
+  def buildFields(spark: SparkSession, corpus: DataFrame, docIdCol: String,
+                  fields: Seq[(String, String)], indexDir: String,
+                  params: Params = Params()): IndexMeta = {
+    require(fields.nonEmpty, "need at least one (field, column)")
+    val names = fields.map(_._1).mkString(",")
+    buildImpl(spark, corpus, docIdCol, prefixed(fields), names, indexDir, params,
+      resume = false, s"multicol($names)")
+  }
+
+  /** (field, column) pairs → (key prefix, column) pairs. */
+  private def prefixed(fields: Seq[(String, String)]): Seq[(String, String)] =
+    fields.map { case (f, c) => fieldKey(f, "") -> c }
+
+  /** [[build]] and [[buildFields]]: `fields` are (key prefix, column)
+    * pairs, `fieldNames` the manifest's field list ("" = single-column).
+    * Commit rule: everything on disk after the wipe.
+    */
+  private def buildImpl(spark: SparkSession, corpus: DataFrame, docIdCol: String,
+                        fields: Seq[(String, String)], fieldNames: String,
+                        indexDir: String, params: Params, resume: Boolean,
+                        lineage: String): IndexMeta = {
     requireValid(params)
     val t0 = System.currentTimeMillis()
     val prior: Option[IndexMeta] =
@@ -762,99 +826,47 @@ object IndexBuilder {
     val committed: Set[Int] = prior.map(_.committedShards).getOrElse(Set.empty)
     val remaining = (0 until params.nShards).filterNot(committed)
 
-    val base = normalize(corpus, docIdCol, textCol, params)
-    val todo =
-      if (committed.isEmpty) base
-      else base.where(col("shard").isin(remaining: _*))
-
     // Idempotent restart: data files of shards NOT in the manifest are
     // leftovers of an interrupted run — remove before (re)writing so the
     // shard write is exactly-once (manifest commit is the visibility point,
     // Iceberg-snapshot style).
-    if (!resume) {
-      deleteRecursively(SegmentCatalog.postingsDir(indexDir))
-      deleteRecursively(SegmentCatalog.altDir(indexDir))
-      deleteRecursively(SegmentCatalog.docsDir(indexDir))
-      deleteRecursively(SegmentCatalog.statsDir(indexDir))
-    } else {
-      remaining.foreach { s =>
-        deleteRecursively(s"${SegmentCatalog.postingsDir(indexDir)}/shard=$s")
-        deleteRecursively(s"${SegmentCatalog.altDir(indexDir)}/shard=$s")
-        deleteRecursively(s"${SegmentCatalog.docsDir(indexDir)}/shard=$s")
-      }
-    }
+    if (!resume) Seq("postings", "alt", "docs", "stats").foreach(k =>
+      deleteRecursively(datasetDir(indexDir, k)))
+    else for (k <- Seq("postings", "alt", "docs"); s <- remaining)
+      deleteRecursively(s"${datasetDir(indexDir, k)}/shard=$s")
 
-    // env-gated phase timing (diagnostics only): SPARK_GRAFT_BUILD_PHASES=1
-    // prints per-phase wall seconds to stderr
-    val tPhase = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
-    def phase(name: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_BUILD_PHASES")) {
-        val now = System.nanoTime()
-        val prev = tPhase.getAndSet(now)
-        System.err.println(f"[build-phase] $name: ${(now - prev) / 1e9}%.3fs")
-      }
-    val packAcc = newPackAcc(spark)
-    // tokenize ONCE: the exploded posting tuples are materialized and all
-    // downstream consumers (primary pack, alt-order pack, docs table) read
-    // the materialized copy instead of re-running corpus read + tokenizer
-    // per pass — at scale this is the ingest pipeline's "write the
-    // tokenized table once" materialization (spills to disk under memory
-    // pressure via the default MEMORY_AND_DISK level)
-    var docsOpt: Option[DataFrame] = None
-    val exploded = explodedOf(todo, params).persist()
+    // tokenize ONCE: the posting tuples are materialized and all downstream
+    // consumers (primary pack, alt-order pack, docs table) read the
+    // materialized copy instead of re-running corpus read + tokenizer per
+    // pass (spills to disk under memory pressure via the default
+    // MEMORY_AND_DISK level). A resume's shard filter is pushed below the
+    // tokenizer by the optimizer.
+    val all = tuplesOf(corpus, docIdCol, fields, params)
+    val tuples = if (committed.isEmpty) all else all.where(col("shard").isin(remaining: _*))
+    val docs = docsFromExploded(tuples, params, fields.length)
     try {
-      if (remaining.nonEmpty) {
-        phase("setup")
-        // diagnostics only: isolate tokenize+cache-materialization cost
-        if (sys.env.contains("SPARK_GRAFT_BUILD_PHASES")) {
-          exploded.count()
-          phase("tokenize+cache materialization")
-        }
-        // docs table: the exploded tuples' first-entry rows — no second
-        // corpus read; see docsFromExploded
-        val docsDF = docsFromExploded(exploded, params).persist()
-        docsOpt = Some(docsDF)
-        // the three writes are independent jobs over the shared tuple
-        // cache (different output directories) — run them concurrently so
-        // the build pays max(write), not sum(write)
-        runConcurrently(spark, Seq(
-          () => packDataset(spark, exploded, params, packAcc = Some(packAcc))
-            .write.mode("append").partitionBy("shard")
-            .parquet(SegmentCatalog.postingsDir(indexDir))) ++
-          (if (params.altOrder)
-            Seq(() => packDataset(spark, exploded, params, alt = true,
-                packAcc = Some(packAcc))
-              .write.mode("append").partitionBy("shard")
-              .parquet(SegmentCatalog.altDir(indexDir)))
-          else Nil) ++
-          Seq(() => docsDF.write.mode("append").partitionBy("shard")
-            .parquet(SegmentCatalog.docsDir(indexDir))))
-        phase("layout+docs writes (concurrent)")
-      }
-
-      val buildMs = System.currentTimeMillis() - t0
-      val lineage = corpus.queryExecution.logical.toString.linesIterator.take(1).mkString
+      tuples.persist()
+      val packMs =
+        if (remaining.isEmpty) Map.empty[Int, Long]
+        else writeGeneration(spark, indexDir, params, tuples, docs.persist())._2
       // committed (resumed-over) shards keep their prior per-shard timing
       val priorMs = prior.map(_.shards.map(s => s.shard -> s.buildMs).toMap)
         .getOrElse(Map.empty[Int, Long])
-      // the in-memory copies stand in for the committed files only when this
+      // the in-memory docs stand in for the committed files only when this
       // build wrote EVERYTHING (fresh build); resumed builds span prior +
       // new files and read through the listing
-      val fullWrite = committed.isEmpty && remaining.nonEmpty
-      val committedMeta = refresh(spark, indexDir, params, buildMs, lineage,
-        dataFiles = currentListing(indexDir, params),
-        shardMs = priorMs ++ packAccMs(packAcc),
-        docsDS = if (fullWrite) docsOpt else None)
-      phase("refresh (stats+manifest)")
-      committedMeta
+      refresh(spark, indexDir, params, System.currentTimeMillis() - t0, lineage,
+        fields = fieldNames, dataFiles = currentListing(indexDir, params),
+        shardMs = priorMs ++ packMs,
+        docsDS = if (committed.isEmpty) Some(docs) else None)
     } finally {
-      exploded.unpersist(blocking = false)
-      docsOpt.foreach(_.unpersist(blocking = false))
+      tuples.unpersist(blocking = false)
+      docs.unpersist(blocking = false)
     }
   }
 
   /** Full on-disk listing — valid when the writer owns the directories
-    * (fresh build / resume with uncommitted shards wiped / post-compact).
+    * (fresh build / resume with uncommitted shards wiped).
     */
   private def currentListing(indexDir: String, params: Params): Map[String, List[String]] =
     Map(
@@ -862,74 +874,6 @@ object IndexBuilder {
       "docs" -> listParquet(SegmentCatalog.docsDir(indexDir))) ++
       (if (params.altOrder) Map("alt" -> listParquet(SegmentCatalog.altDir(indexDir)))
        else Map.empty)
-
-  /** Multi-column build — one index over several text columns with
-    * field-prefixed keys (the attnum key prefix of the reference's
-    * multicolumn support, src/rumutil.c:266-288; tests
-    * sql/orderby.sql:89-106). Queries go through
-    * [[graft.search.Searcher.compileMulti]], which ANDs per-field tsqueries
-    * into one kernel pass. Doc length = total tokens across fields.
-    * Incremental append is not supported on multi-column indexes (rebuild
-    * or compact instead); delete/compact work transparently since the
-    * field prefix rides inside the key.
-    */
-  def buildFields(spark: SparkSession, corpus: DataFrame, docIdCol: String,
-                  fields: Seq[(String, String)], indexDir: String,
-                  params: Params = Params()): IndexMeta = {
-    require(fields.nonEmpty, "need at least one (field, column)")
-    requireValid(params)
-    val t0 = System.currentTimeMillis()
-    deleteRecursively(SegmentCatalog.postingsDir(indexDir))
-    deleteRecursively(SegmentCatalog.altDir(indexDir))
-    deleteRecursively(SegmentCatalog.docsDir(indexDir))
-    deleteRecursively(SegmentCatalog.statsDir(indexDir))
-
-    // tokenize each field ONCE (persisted): primary pack, alt pack and the
-    // docs table all read the materialized tuples — without this an
-    // alt-order multicolumn build tokenizes every field three times
-    val exploded = fields.map { case (fname, colName) =>
-      explodedOf(normalize(corpus, docIdCol, colName, params), params,
-        keyPrefix = fname + FieldSep)
-    }.reduce(_ unionAll _).persist()
-    val packAcc = newPackAcc(spark)
-    var docsOpt: Option[DataFrame] = None
-    try {
-      // docs table from the tuples' first-entry rows (one per doc PER
-      // FIELD, each carrying its field's len/uniq): summing over fields
-      // gives total tokens and total distinct keys — a term in two fields
-      // is two distinct keys, so the per-field counts sum by construction
-      val docsDF = exploded.where(col("uniq") >= 0)
-        .groupBy(col("shard"), col("docId"))
-        .agg(sum("len").cast("int").as("len"), max("addon").as("addon"),
-          sum("uniq").cast("int").as("uniq"))
-        .select("shard", "docId", "len", "addon", "uniq")
-        .transform(shardPure(_, params))
-        .persist()
-      docsOpt = Some(docsDF)
-      runConcurrently(spark, Seq(
-        () => packDataset(spark, exploded, params, packAcc = Some(packAcc))
-          .write.mode("append").partitionBy("shard")
-          .parquet(SegmentCatalog.postingsDir(indexDir))) ++
-        (if (params.altOrder)
-          Seq(() => packDataset(spark, exploded, params, alt = true,
-              packAcc = Some(packAcc))
-            .write.mode("append").partitionBy("shard")
-            .parquet(SegmentCatalog.altDir(indexDir)))
-        else Nil) ++
-        Seq(() => docsDF.write.mode("append").partitionBy("shard")
-          .parquet(SegmentCatalog.docsDir(indexDir))))
-
-      val buildMs = System.currentTimeMillis() - t0
-      val lineage = s"multicol(${fields.map(_._1).mkString(",")})"
-      refresh(spark, indexDir, params, buildMs, lineage,
-        fields = fields.map(_._1).mkString(","),
-        dataFiles = currentListing(indexDir, params),
-        shardMs = packAccMs(packAcc), docsDS = docsOpt)
-    } finally {
-      exploded.unpersist(blocking = false)
-      docsOpt.foreach(_.unpersist(blocking = false))
-    }
-  }
 
   /** Default auto-compaction threshold: once this many micro-segment
     * appends have accumulated since the last full-layout rewrite, the next
@@ -955,22 +899,10 @@ object IndexBuilder {
     */
   def append(spark: SparkSession, newCorpus: DataFrame, docIdCol: String,
              textCol: String, indexDir: String, batchId: Long = -1L,
-             autoCompactRuns: Int = AutoCompactRuns): IndexMeta = {
-    val meta = SegmentCatalog.load(indexDir)
-      .getOrElse(throw new IllegalStateException(s"no manifest in $indexDir"))
-    requireFormat(meta)
-    require(meta.fields.isEmpty,
-      s"multi-column index (fields=${meta.fields}): use appendFields")
-    val params = paramsOf(meta)
-    val todo = normalize(newCorpus, docIdCol, textCol, params)
-    val cntUdf = udf(tokenCountFn(params.tokenizer))
-    val uniqUdf = udf(uniqueCountFn(params.tokenizer))
-    val docsDF = todo.select(col("shard"), col("docId"), cntUdf(col("text")).as("len"),
-      col("addon"), uniqUdf(col("text")).as("uniq"))
-    commitAppend(spark, indexDir, meta, params, explodedOf(todo, params), docsDF,
-      s"append(${newCorpus.queryExecution.logical.toString.linesIterator.take(1).mkString})",
-      batchId, autoCompactRuns)
-  }
+             autoCompactRuns: Int = AutoCompactRuns): IndexMeta =
+    appendImpl(spark, newCorpus, docIdCol, Seq("" -> textCol), "", indexDir, batchId,
+      autoCompactRuns,
+      s"append(${newCorpus.queryExecution.logical.toString.linesIterator.take(1).mkString})")
 
   /** Incremental insert into a multi-column index — same micro-segment
     * append with field-prefixed keys; the (field, column) mapping must
@@ -980,82 +912,44 @@ object IndexBuilder {
                    fields: Seq[(String, String)], indexDir: String,
                    batchId: Long = -1L,
                    autoCompactRuns: Int = AutoCompactRuns): IndexMeta = {
+    val names = fields.map(_._1).mkString(",")
+    appendImpl(spark, newCorpus, docIdCol, prefixed(fields), names, indexDir, batchId,
+      autoCompactRuns, s"appendFields($names)")
+  }
+
+  /** [[append]] and [[appendFields]] (arguments as in [[buildImpl]]).
+    * Commit rule: the prior listing plus exactly this write's new files — a
+    * crashed earlier append's orphan part files (written but never
+    * manifested) stay invisible forever.
+    */
+  private def appendImpl(spark: SparkSession, newCorpus: DataFrame, docIdCol: String,
+                         fields: Seq[(String, String)], fieldNames: String,
+                         indexDir: String, batchId: Long, autoCompactRuns: Int,
+                         lineage: String): IndexMeta = {
     val meta = SegmentCatalog.load(indexDir)
       .getOrElse(throw new IllegalStateException(s"no manifest in $indexDir"))
     requireFormat(meta)
-    require(meta.fields == fields.map(_._1).mkString(","),
-      s"field mismatch: index has '${meta.fields}', got ${fields.map(_._1)}")
+    require(meta.fields == fieldNames,
+      s"field mismatch: index has '${meta.fields}', got '$fieldNames' " +
+        "(single-column indexes take append, multi-column ones appendFields)")
     val params = paramsOf(meta)
-    val exploded = fields.map { case (fname, colName) =>
-      explodedOf(normalize(newCorpus, docIdCol, colName, params), params,
-        keyPrefix = fname + FieldSep)
-    }.reduce(_ unionAll _)
-    val cntUdf = udf(tokenCountFn(params.tokenizer))
-    val uniqUdf = udf(uniqueCountFn(params.tokenizer))
-    val addonCol = addonColOf(params.attach, col(docIdCol).cast("long"))
-    val docsDF = newCorpus
-      .select(docIdColOf(docIdCol),
-        fields.map { case (_, c) => cntUdf(col(c)) }.reduce(_ + _).as("len"), addonCol,
-        fields.map { case (_, c) => uniqUdf(col(c)) }.reduce(_ + _).as("uniq"))
-      .withColumn("shard", pmod(xxhash64(col("docId")), lit(params.nShards)).cast("int"))
-      .select("shard", "docId", "len", "addon", "uniq")
-    commitAppend(spark, indexDir, meta, params, exploded, docsDF,
-      s"appendFields(${fields.map(_._1).mkString(",")})", batchId, autoCompactRuns)
-  }
-
-  /** Shared micro-segment commit: pack+write postings (and alt copy),
-    * write docs, and commit the prior listing + exactly this write's new
-    * files — a crashed earlier append's orphan part files (written but
-    * never manifested) stay invisible forever.
-    */
-  private def commitAppend(spark: SparkSession, indexDir: String, meta: IndexMeta,
-                           params: Params, exploded: DataFrame, docsDF: DataFrame,
-                           lineage: String, batchId: Long,
-                           autoCompactRuns: Int): IndexMeta = {
     val t0 = System.currentTimeMillis()
-    def before(kind: String): (Set[String], List[String]) = {
-      val disk = listParquet(datasetDir(indexDir, kind)).toSet
-      (disk, meta.dataFiles.getOrElse(kind, disk.toList))
+    // the micro-batch is tokenized once: both layout packs and the docs
+    // rows read the persisted tuples
+    val tuples = tuplesOf(newCorpus, docIdCol, fields, params)
+    val (added, packMs) =
+      try writeGeneration(spark, indexDir, params, tuples.persist(),
+        docsFromExploded(tuples, params, fields.length))
+      finally tuples.unpersist(blocking = false)
+    // a legacy manifest without a listing committed everything on disk
+    val dataFiles = added.map { case (k, fs) =>
+      k -> (meta.dataFiles.getOrElse(k,
+        listParquet(datasetDir(indexDir, k)).filterNot(fs.toSet)) ++ fs)
     }
-    val (postDisk, postCommitted) = before("postings")
-    val (altDisk, altCommitted) = before("alt")
-    val (docsDisk, docsCommitted) = before("docs")
-
-    val packAcc = newPackAcc(spark)
-    // micro-batch tuples are tokenized once and shared by both layout packs
-    // (appends on alt-order indexes would otherwise tokenize twice)
-    val shared = if (params.altOrder) exploded.persist() else exploded
-    try {
-      runConcurrently(spark, Seq(
-        () => packDataset(spark, shared, params, packAcc = Some(packAcc))
-          .write.mode("append").partitionBy("shard")
-          .parquet(SegmentCatalog.postingsDir(indexDir))) ++
-        (if (params.altOrder)
-          Seq(() => packDataset(spark, shared, params, alt = true,
-              packAcc = Some(packAcc))
-            .write.mode("append").partitionBy("shard")
-            .parquet(SegmentCatalog.altDir(indexDir)))
-        else Nil) ++
-        Seq(() => shardPure(docsDF, params).write.mode("append")
-          .partitionBy("shard").parquet(SegmentCatalog.docsDir(indexDir))))
-    } finally if (params.altOrder) shared.unpersist(blocking = false)
-
-    val dataFiles = Map(
-      "postings" -> (postCommitted ++
-        listParquet(SegmentCatalog.postingsDir(indexDir)).filterNot(postDisk)),
-      "docs" -> (docsCommitted ++
-        listParquet(SegmentCatalog.docsDir(indexDir)).filterNot(docsDisk))) ++
-      (if (params.altOrder)
-        Map("alt" -> (altCommitted ++
-          listParquet(SegmentCatalog.altDir(indexDir)).filterNot(altDisk)))
-       else Map.empty)
-
-    val buildMs = System.currentTimeMillis() - t0
     // per-shard timing accumulates across appends (prior + this delta)
     val priorMs = meta.shards.map(s => s.shard -> s.buildMs).toMap
-    val delta = packAccMs(packAcc)
-    val combined = priorMs ++ delta.map { case (s, ms) => s -> (priorMs.getOrElse(s, 0L) + ms) }
-    val committed = refresh(spark, indexDir, params, buildMs, lineage,
+    val combined = priorMs ++ packMs.map { case (s, ms) => s -> (priorMs.getOrElse(s, 0L) + ms) }
+    val committed = refresh(spark, indexDir, params, System.currentTimeMillis() - t0, lineage,
       lastBatchId = math.max(meta.lastBatchId, batchId), fields = meta.fields,
       dataFiles = dataFiles, shardMs = combined, appendRuns = meta.appendRuns + 1)
     // size-tiered auto-compaction: the append itself is already durable via
@@ -1251,60 +1145,39 @@ object IndexBuilder {
       }.toDF("shard", "term", "docId", "tf", "len", "pos", "addon")
 
     val excludeIds = exclude.map(df => df.select(col(df.columns.head).cast("long").as("docId")))
-    val kept0 = excludeIds match {
-      case Some(ids) => decoded.join(ids, Seq("docId"), "left_anti")
-      case None => decoded
-    }
+    def keep(df: DataFrame): DataFrame =
+      excludeIds.fold(df)(ids => df.join(ids, Seq("docId"), "left_anti"))
+    val kept = keep(decoded)
+    val keptDocs = keep(readDataset(spark, indexDir, meta, "docs"))
+      .select("shard", "docId", "len", "addon", "uniq")
     // alt-order compacts consume the decoded stream twice (one pack per
     // layout): materialize the decode once instead of re-reading + re-
-    // decoding the whole old generation for the second pack
-    val kept = if (params.altOrder) kept0.persist() else kept0
+    // decoding the whole old generation for the second pack. The kept docs
+    // stay persisted through the commit, whose totals aggregate them.
+    val cached = (if (params.altOrder) Seq(kept) else Nil) :+ keptDocs
+    try {
+      cached.foreach(_.persist())
+      // new generation is APPENDED next to the old files (unique part
+      // names); reads go through the pre-compact manifest listing, so the
+      // concurrent append is invisible to them
+      val (newFiles, packMs) =
+        writeGeneration(spark, indexDir, params, kept, shardPure(keptDocs, params))
 
-    val packAcc = newPackAcc(spark)
-    // new generation is APPENDED next to the old files (unique part names);
-    // reads go through the pre-compact manifest listing, so the concurrent
-    // append is invisible to them
-    val kinds = Seq("postings", "docs") ++ (if (params.altOrder) Seq("alt") else Nil)
-    val before: Map[String, Set[String]] =
-      kinds.map(k => k -> listParquet(datasetDir(indexDir, k)).toSet).toMap
+      // COMMIT: manifest lists exactly the new generation (atomic move)
+      val committed = refresh(spark, indexDir, params, System.currentTimeMillis() - t0,
+        s"compact(exclude=${exclude.isDefined})",
+        lastBatchId = meta.lastBatchId, fields = meta.fields,
+        dataFiles = newFiles, shardMs = packMs, keepOld = retainOld,
+        docsDS = Some(keptDocs))
 
-    packDataset(spark, kept, params, packAcc = Some(packAcc))
-      .write.mode("append").partitionBy("shard")
-      .parquet(SegmentCatalog.postingsDir(indexDir))
-    if (params.altOrder)
-      packDataset(spark, kept, params, alt = true, packAcc = Some(packAcc))
-        .write.mode("append").partitionBy("shard")
-        .parquet(SegmentCatalog.altDir(indexDir))
-    val docs = readDataset(spark, indexDir, meta, "docs")
-    val keptDocs = (excludeIds match {
-      case Some(ids) => docs.join(ids, Seq("docId"), "left_anti")
-      case None => docs
-    }).select("shard", "docId", "len", "addon", "uniq").persist()
-    shardPure(keptDocs.select("docId", "len", "addon", "uniq", "shard"), params)
-      .write.mode("append").partitionBy("shard")
-      .parquet(SegmentCatalog.docsDir(indexDir))
-
-    if (params.altOrder) kept.unpersist(blocking = false)
-    val newFiles: Map[String, List[String]] = kinds.map(k =>
-      k -> listParquet(datasetDir(indexDir, k)).filterNot(before(k))).toMap
-
-    // COMMIT: manifest lists exactly the new generation (atomic move); the
-    // docs totals aggregate the still-persisted kept-docs copy
-    val buildMs = System.currentTimeMillis() - t0
-    val committed = refresh(spark, indexDir, params, buildMs,
-      s"compact(exclude=${exclude.isDefined})",
-      lastBatchId = meta.lastBatchId, fields = meta.fields,
-      dataFiles = newFiles, shardMs = packAccMs(packAcc), keepOld = retainOld,
-      docsDS = Some(keptDocs))
-    keptDocs.unpersist(blocking = false)
-
-    // only after the commit is durable does the old generation go away
-    if (!retainOld)
-      kinds.foreach { k =>
-        val dir = datasetDir(indexDir, k)
-        before(k).foreach(f =>
-          java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, f)))
-      }
-    committed
+      // only after the commit is durable does the old generation go away
+      if (!retainOld)
+        newFiles.foreach { case (k, fs) =>
+          val dir = datasetDir(indexDir, k)
+          listParquet(dir).filterNot(fs.toSet).foreach(f =>
+            java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, f)))
+        }
+      committed
+    } finally cached.foreach(_.unpersist(blocking = false))
   }
 }

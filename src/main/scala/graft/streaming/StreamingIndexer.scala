@@ -35,24 +35,10 @@ object StreamingIndexer {
     */
   def start(spark: SparkSession, stream: DataFrame, docIdCol: String,
             textCol: String, indexDir: String, checkpointDir: String,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    require(SegmentCatalog.load(indexDir).nonEmpty,
-      s"no index manifest in $indexDir — run IndexBuilder.build first")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val applied = SegmentCatalog.load(indexDir).map(_.lastBatchId).getOrElse(-1L)
-        if (batchId <= applied) {
-          // at-least-once redelivery of an already-committed batch — skip
-          ()
-        } else if (!batch.isEmpty) {
-          IndexBuilder.append(spark, batch, docIdCol, textCol, indexDir, batchId = batchId)
-          ()
-        }
-      }
-      .start()
-  }
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    run(stream, indexDir, checkpointDir, trigger) { (batch, batchId) =>
+      IndexBuilder.append(spark, batch, docIdCol, textCol, indexDir, batchId = batchId)
+    }
 
   /** Multi-column variant: stream into an index built by
     * [[IndexBuilder.buildFields]] — same exactly-once micro-segment commit,
@@ -61,20 +47,24 @@ object StreamingIndexer {
   def startFields(spark: SparkSession, stream: DataFrame, docIdCol: String,
                   fields: Seq[(String, String)], indexDir: String,
                   checkpointDir: String,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    run(stream, indexDir, checkpointDir, trigger) { (batch, batchId) =>
+      IndexBuilder.appendFields(spark, batch, docIdCol, fields, indexDir, batchId = batchId)
+    }
+
+  /** The foreachBatch exactly-once guard around one append per micro-batch. */
+  private def run(stream: DataFrame, indexDir: String, checkpointDir: String,
+                  trigger: Trigger)(append: (DataFrame, Long) => Unit): StreamingQuery = {
     require(SegmentCatalog.load(indexDir).nonEmpty,
-      s"no index manifest in $indexDir — run IndexBuilder.buildFields first")
+      s"no index manifest in $indexDir — run IndexBuilder.build or buildFields first")
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val applied = SegmentCatalog.load(indexDir).map(_.lastBatchId).getOrElse(-1L)
-        if (batchId <= applied) ()
-        else if (!batch.isEmpty) {
-          IndexBuilder.appendFields(spark, batch, docIdCol, fields, indexDir,
-            batchId = batchId)
-          ()
-        }
+        // a batchId at or below the committed one is an at-least-once
+        // redelivery of an already-applied batch — skip it
+        if (batchId > applied && !batch.isEmpty) append(batch, batchId)
       }
       .start()
   }

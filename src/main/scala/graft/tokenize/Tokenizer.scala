@@ -88,10 +88,6 @@ object Tokenizer {
     out.toArray
   }
 
-  /** Group a token stream into per-term sorted positions (1-based), the
-    * (key, payload) shape of rumExtractEntries output. Weight class fixed
-    * at D (0) unless `wclassOf` overrides per token.
-    */
   /** Growable primitive (positions, wclasses) pair — the per-term payload
     * accumulator. occurrences() runs once per document across every build
     * and text-profile pass, so the per-token boxing of generic ArrayBuffers
@@ -110,6 +106,10 @@ object Tokenizer {
     }
   }
 
+  /** Group a token stream into per-term sorted positions (1-based), the
+    * (key, payload) shape of rumExtractEntries output. Weight class fixed
+    * at D (0) unless `wclassOf` overrides per token.
+    */
   def occurrences(tokens: Array[String],
                   wclassOf: (String, Int) => Byte = (_, _) => 0.toByte): Array[TermOccs] = {
     val m = new java.util.HashMap[String, Occ]()
@@ -156,66 +156,4 @@ object Tokenizer {
     */
   def simpleTitle(text: String, titleLen: Int): Array[TermOccs] =
     occurrences(simpleTokens(text), (_, pos) => if (pos <= titleLen) 3 else 0)
-
-  /** Token count without allocating token strings — used by the doc-length
-    * pass of the index build (GC-friendly at scale).
-    */
-  def simpleCount(text: String): Int = {
-    var n = 0
-    var in = false
-    var i = 0
-    val len = text.length
-    while (i < len) {
-      val c = Character.toLowerCase(text.charAt(i))
-      val isTok = (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
-      if (isTok && !in) n += 1
-      in = isTok
-      i += 1
-    }
-    n
-  }
-
-  /** Distinct-term count (tsvector `size` — the heap-side statistic the
-    * UNIQ rank norms divide by, reference src/rum_ts_utils.c:1393-1397).
-    */
-  def simpleUniqueCount(text: String): Int = {
-    val seen = mutable.HashSet.empty[String]
-    simpleTokens(text).foreach(seen += _)
-    seen.size
-  }
-
-  def codeUniqueCount(text: String): Int = {
-    val seen = mutable.HashSet.empty[String]
-    codeTokens(text).foreach(seen += _)
-    seen.size
-  }
-
-  /** Token count matching [[codeTokens]] boundaries, allocation-free. */
-  def codeCount(text: String): Int = {
-    var n = 0
-    var in = false
-    var prevLower = false
-    var prevUpper = false
-    var i = 0
-    val len = text.length
-    while (i < len) {
-      val c = text.charAt(i)
-      val isLower = (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
-      val isUpper = c >= 'A' && c <= 'Z'
-      if (isLower || isUpper) {
-        var boundary = !in
-        if (isUpper && prevLower) boundary = true
-        else if (isUpper && prevUpper && i + 1 < len) {
-          val next = text.charAt(i + 1)
-          if (next >= 'a' && next <= 'z') boundary = true
-        }
-        if (boundary) n += 1
-        in = true
-      } else in = false
-      prevLower = isLower
-      prevUpper = isUpper
-      i += 1
-    }
-    n
-  }
 }

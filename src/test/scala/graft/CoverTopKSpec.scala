@@ -54,7 +54,7 @@ class CoverTopKSpec extends AnyFunSuite {
       }
       if (!TsEval.matches(cq, provider)) None
       else Some(i.toLong -> CoverRank.distance(cq, kp, kw, method,
-        docLen = Tokenizer.simpleCount(text(i))).toDouble)
+        docLen = Tokenizer.simpleTokens(text(i)).length).toDouble)
     }.sortBy { case (id, d) => (d, id) }
   }
 

@@ -60,7 +60,7 @@ class ShardRoutingSpec extends AnyFunSuite {
     val exploded = IndexBuilder.explodedOf(
       IndexBuilder.normalize(corpus(spark), "doc_id", "text", p), p)
     (IndexBuilder.packDataset(spark, exploded, p).rdd.getNumPartitions,
-      IndexBuilder.docsFromExploded(exploded, p).rdd.getNumPartitions)
+      IndexBuilder.docsFromExploded(exploded, p, nFields = 1).rdd.getNumPartitions)
   }
 
   test("nShards > shuffle partitions: one task per partition, one file per shard") {

@@ -3,18 +3,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.tokenize.Tokenizer
 import scala.util.Random
 class TokenizerCountSpec extends AnyFunSuite {
-  test("count-only tokenizers agree with full tokenizers (seeded property)") {
-    val rnd = new Random(5)
-    val alphabet = "abcXYZ019 _-(){}.\n\tΩ"
-    for (_ <- 1 to 500) {
-      val s = Seq.fill(rnd.nextInt(200))(alphabet(rnd.nextInt(alphabet.length))).mkString
-      assert(Tokenizer.simpleCount(s) == Tokenizer.simpleTokens(s).length, s)
-      assert(Tokenizer.codeCount(s) == Tokenizer.codeTokens(s).length, s)
-    }
-    assert(Tokenizer.codeCount("parseHTTPResponse getFoo2Bar") ==
-      Tokenizer.codeTokens("parseHTTPResponse getFoo2Bar").length)
-  }
-
   test("occurrences groups per term, term-sorted, positions ascending (seeded property)") {
     // pins the primitive-array grouper's contract: output sorted by term,
     // positions 1-based ascending per term, weight classes aligned, and
