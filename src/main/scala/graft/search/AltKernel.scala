@@ -477,14 +477,8 @@ object AltKernel extends Serializable {
     * layout: ordered stream(s) from c with early termination once the
     * next candidate's distance can no longer improve the k best.
     * Only finite-distance matches are emitted. `visited` counts candidate
-    * consistency checks — the early-termination evidence.
-    */
-  def topKAddonShard(cq: CompiledQuery, keys: Array[SearchKernel.KeySpec],
-                     rows: Iterator[PostingRow], c: Long, op: String,
-                     k: Int, floatUnits: Boolean = false): AltResult =
-    topKAddonShard(cq, keys, new ShardCells(rows), c, op, k, floatUnits)
-
-  /** [[topKAddonShard]] over a shared [[ShardCells]] (fused batches).
+    * consistency checks — the early-termination evidence. Reads the
+    * [[ShardCells]] shared by every slot of the batch.
     *
     * `floatUnits = true` serves VALUE-space float distance over addons
     * encoded with [[graft.build.AddonUnits.floatOrderedBits]]: the
@@ -553,14 +547,8 @@ object AltKernel extends Serializable {
 
   /** match AND lo <= addon <= hi, streamed from lo and stopped at hi —
     * cost tracks the in-range match count, not the total match count.
-    */
-  def rangeAddonShard(cq: CompiledQuery, keys: Array[SearchKernel.KeySpec],
-                      rows: Iterator[PostingRow], lo: Long,
-                      hi: Long): Iterator[(Long, Long)] =
-    rangeAddonShard(cq, keys, new ShardCells(rows), lo, hi)
-
-  /** [[rangeAddonShard]] over a shared [[ShardCells]] (fused batches).
-    * LAZY: in-range matches stream straight off the bounded ordered scan —
+    * Emits (docId, addon) from the [[ShardCells]] shared by every slot of
+    * the batch. LAZY: in-range matches stream straight off the bounded ordered scan —
     * a wide range never materializes its per-shard match set on the task
     * heap (the facet collapse consumes this stream bucket by bucket).
     */

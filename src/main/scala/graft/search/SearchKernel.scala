@@ -464,19 +464,14 @@ object SearchKernel extends Serializable {
   /** Regular scan driver (scanGetItemRegular, src/rumget.c:1426-1568):
     * candidates = min over positive-key streams; all key cursors seek to
     * the candidate; full consistency + optional cover-density scoring.
-    * Returns (docId, distance) — distance 0.0 when score=false.
+    * Reads a [[ShardView]] shared by every slot of the batch. Returns
+    * (docId, distance, addon) — distance 0.0 when score=false; k > 0 with
+    * score keeps the shard's k best, else every match streams out.
     */
-  def matchShard(cq: CompiledQuery, keys: Array[KeySpec], rows: Iterator[PostingRow],
-                 score: Boolean, k: Int,
-                 method: Int = 0, scoreCq: CompiledQuery = null,
-                 scoreMap: Array[Int] = null): Iterator[(Long, Double, Long)] =
-    matchShard(cq, keys, new ShardView(rows), score, k, method, scoreCq, scoreMap)
-
-  /** [[matchShard]] over a shared [[ShardView]] (fused msearch batches). */
   def matchShard(cq: CompiledQuery, keys: Array[KeySpec], view: ShardView,
                  score: Boolean, k: Int,
-                 method: Int, scoreCq: CompiledQuery,
-                 scoreMap: Array[Int]): Iterator[(Long, Double, Long)] = {
+                 method: Int = 0, scoreCq: CompiledQuery = null,
+                 scoreMap: Array[Int] = null): Iterator[(Long, Double, Long)] = {
     val cursors = buildCursors(keys, view)
     // fast scan: when some keys are required in every match, candidates
     // come from their seek-join intersection (far fewer consistency checks

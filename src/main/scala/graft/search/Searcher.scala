@@ -21,11 +21,12 @@ import graft.query._
   *      Only the query terms' postings move in the shuffle.
   *   3. scores computed inside the kernel from payloads (positions) —
   *      index-side ordering, the defining RUM capability (README.md:80-136)
-  *   4. per-shard top-k heap → global top-k. Match, BM25, cover and facet
-  *      queries have ONE serving path, [[msearchPlan]]: a solo query is a
-  *      one-slot plan projected to its own schema. A plan with one bounded
-  *      (top-k) slot ends in TakeOrderedAndProject; with several, a
-  *      row_number window per slot keeps each slot's k best.
+  *   4. per-shard top-k heap → global top-k. Every solo query, ordered
+  *      scans included, has ONE serving path, [[msearchPlan]]: a one-slot
+  *      plan projected to its own schema (the slot rows carry the payload
+  *      addon up to that projection). Per layout, one bounded (top-k) slot
+  *      ends in TakeOrderedAndProject; several share a row_number window
+  *      per slot that keeps each slot's k best.
   */
 final class Searcher(spark: SparkSession, indexDir: String,
                      maxCachedPlans: Int = Searcher.MaxCachedPlans) {
@@ -160,7 +161,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
 
   def matchingDocsMulti(fieldQueries: Seq[(String, String)]): DataFrame =
     cached("matchM" + Searcher.key(fieldQueries.flatMap(p => Seq(p._1, p._2)): _*)) {
-      msearchPlan(Seq(Searcher.MsearchSpec.MatchFields(fieldQueries))).select("docId")
+      oneSlot(Searcher.MsearchSpec.MatchFields(fieldQueries), col("docId"))
     }
 
   /** docIds matching the query (the bitmap-scan sink, rumgetbitmap —
@@ -168,14 +169,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     */
   def matchingDocs(queryStr: String): DataFrame =
     cached("match" + Searcher.key(queryStr)) {
-      msearchPlan(Seq(Searcher.MsearchSpec.Match(queryStr))).select("docId")
+      oneSlot(Searcher.MsearchSpec.Match(queryStr), col("docId"))
     }
-
-  /** Match set of a query the postings alone cannot drive (pure negation,
-    * empty-doc matchers): the docs table supplies the candidates.
-    */
-  private def fullScanMatches(cq: CompiledQuery): DataFrame =
-    fullScan(cq, score = false, matchOnly = true, k = 0).select(col("docId"))
 
   def count(queryStr: String): Long =
     runCount("count" + Searcher.key(queryStr), matchingDocs(queryStr))
@@ -234,21 +229,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
   def matchingWithAddon(queryStr: String): DataFrame =
     cached("addon" + Searcher.key(queryStr))(matchingWithAddonC(compile(queryStr)))
 
-  private def matchingWithAddonC(cq: CompiledQuery): DataFrame = {
-    if (SearchKernel.isVoid(cq))
-      spark.range(0).select(col("id").as("docId"), col("id").as("addon"))
-    else if (SearchKernel.needsFullScan(cq))
-      fullScan(cq, score = false, matchOnly = true, k = 0)
-        .select(col("docId"), col("addon"))
-    else {
-      val keys = SearchKernel.keySpecs(cq)
-      postings.where(termPredicate(cq))
-        .groupByKey(_.shard)
-        .flatMapGroups((shard: Int, it: Iterator[PostingRow]) =>
-          SearchKernel.matchShard(cq, keys, it, score = false, k = 0))
-        .toDF("docId", "distance", "addon").select("docId", "addon")
-    }
-  }
+  /** The one-slot Match plan of a compiled query as (docId, addon). */
+  private def matchingWithAddonC(cq: CompiledQuery): DataFrame =
+    matchSlot(cq, rank = false, method = 0).select("docId", "addon")
 
   /** True when the alt-order layout can serve this query: layout present
     * and candidates index-drivable — conjunctive queries leapfrog their
@@ -265,14 +248,14 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * addon ordered scan (sql/orderby.sql): op "both" = `<=>` (|a-c|),
     * "left" = `<=|` (only a<=c finite), "right" = `|=>` (only a>=c).
     * Distance is in raw addon units; ties break on docId like RUM's TID
-    * tie-break. One-sided misses sort last with infinite distance.
+    * tie-break. One-sided misses are not returned.
     * Addons and `c` may be ANY signed long (negative scalars, epoch-
     * spanning timestamps — reference sql/int4.sql:7-19); distances beyond
     * Long.MaxValue saturate identically on both execution paths.
     */
   def topKAddon(queryStr: String, c: Long, op: String, k: Int): DataFrame =
     cached("topKA" + Searcher.key(queryStr, c.toString, op, k.toString)) {
-      topKAddonC(compile(queryStr), c, op, k)
+      addonSlot(Searcher.MsearchSpec.Addon(queryStr, c, op, k))
     }
 
   /** Multicolumn ordered scan: `WHERE f1 @@ q1 AND f2 @@ q2 ORDER BY
@@ -285,8 +268,12 @@ final class Searcher(spark: SparkSession, indexDir: String,
                      k: Int): DataFrame =
     cached("topKAM" + Searcher.key(
       fieldQueries.flatMap(p => Seq(p._1, p._2)) ++ Seq(c.toString, op, k.toString): _*)) {
-      topKAddonC(compileMulti(fieldQueries), c, op, k)
+      addonSlot(Searcher.MsearchSpec.AddonFields(fieldQueries, c, op, k))
     }
+
+  /** A one-slot addon top-k plan as (docId, addon, distance). */
+  private def addonSlot(spec: Searcher.MsearchSpec): DataFrame =
+    oneSlot(spec, col("docId"), col("addon"), col("score").as("distance"))
 
   /** Float-typed ordered scan in VALUE units: `WHERE t @@ q ORDER BY
     * f <op> c LIMIT k` with distance = |f - c| as an exact double, over an
@@ -302,49 +289,34 @@ final class Searcher(spark: SparkSession, indexDir: String,
   def topKAddonFloat(queryStr: String, c: Double, op: String, k: Int): DataFrame =
     cached("topKAF" + Searcher.key(queryStr,
         java.lang.Double.doubleToLongBits(c).toString, op, k.toString)) {
-      topKAddonFloatC(compile(queryStr), c, op, k)
+      oneSlot(Searcher.MsearchSpec.AddonFloat(queryStr, c, op, k), col("docId"),
+        Searcher.orderedBitsToDouble(col("addon")).as("value"),
+        col("score").as("distance"))
     }
 
+  /** Float addon top-k of an alt-unservable query as (docId, addon,
+    * distance). One-sided predicates compare BITS (well-defined for NaN,
+    * matching the kernel: NaN > +Inf > finite); the distance is in
+    * decoded VALUE space.
+    */
   private def topKAddonFloatC(cq: CompiledQuery, c: Double, op: String,
                               k: Int): DataFrame = {
-    require(Set("both", "left", "right").contains(op), s"op: $op")
     val cBits = graft.build.AddonUnits.floatOrderedBits(c)
-    val decode = Searcher.orderedBitsToDouble
-    if (altServes(cq)) {
-      val keys = SearchKernel.keySpecs(cq)
-      // rank/limit on the long bit-image distance (exact), decode the k
-      // survivors only; the decode UDF touches ≤ k·nShards rows
-      altPostings.where(termPredicate(cq))
-        .groupByKey(_.shard)
-        .flatMapGroups((shard: Int, it: Iterator[PostingRow]) =>
-          AltKernel.topKAddonShard(cq, keys, it, cBits, op, k,
-            floatUnits = true).rows.iterator)
-        .toDF("docId", "dist", "addon")
-        .orderBy(col("dist").asc, col("docId").asc)
-        .limit(k)
-        .select(col("docId"), decode(col("addon")).as("value"),
-          Searcher.longBitsToDouble(col("dist")).as("distance"))
-    } else {
-      // one-sided predicates in BITS space (well-defined for NaN, matching
-      // the kernel: NaN > +Inf > finite); distance in decoded value space
-      val v = decode(col("addon"))
-      val keep = op match {
-        case "both" => lit(true)
-        case "left" => col("addon") <= cBits
-        case "right" => col("addon") >= cBits
-      }
-      val dist = op match {
-        case "both" => abs(v - lit(c))
-        case "left" => lit(c) - v
-        case "right" => v - lit(c)
-      }
-      matchingWithAddonC(cq).where(keep)
-        .withColumn("value", v)
-        .withColumn("distance", dist)
-        .orderBy(col("distance").asc, col("docId").asc)
-        .limit(k)
-        .select("docId", "value", "distance")
+    val v = Searcher.orderedBitsToDouble(col("addon"))
+    val keep = op match {
+      case "both" => lit(true)
+      case "left" => col("addon") <= cBits
+      case "right" => col("addon") >= cBits
     }
+    val dist = op match {
+      case "both" => abs(v - lit(c))
+      case "left" => lit(c) - v
+      case "right" => v - lit(c)
+    }
+    matchingWithAddonC(cq).where(keep)
+      .withColumn("distance", dist)
+      .orderBy(col("distance").asc, col("docId").asc)
+      .limit(k)
   }
 
   /** Float-typed range filter in VALUE units over a
@@ -356,55 +328,21 @@ final class Searcher(spark: SparkSession, indexDir: String,
     cached("rangeAF" + Searcher.key(queryStr,
         java.lang.Double.doubleToLongBits(lo).toString,
         java.lang.Double.doubleToLongBits(hi).toString)) {
-      rangeAddonC(compile(queryStr),
-          graft.build.AddonUnits.floatOrderedBits(lo),
-          graft.build.AddonUnits.floatOrderedBits(hi))
-        .select(col("docId"), Searcher.orderedBitsToDouble(col("addon")).as("value"))
+      oneSlot(Searcher.MsearchSpec.AddonRangeFloat(queryStr, lo, hi), col("docId"),
+        Searcher.orderedBitsToDouble(col("addon")).as("value"))
     }
 
-  private def topKAddonC(cq: CompiledQuery, c: Long, op: String, k: Int): DataFrame = {
-    if (altServes(cq) && Set("both", "left", "right").contains(op)) {
-      // index-ordered stream with early termination (order_by_attach scan,
-      // src/rumget.c:2303-2327): per-shard cost tracks k, not match count;
-      // only finite-distance matches are emitted
-      val keys = SearchKernel.keySpecs(cq)
-      // kernel distances are exact saturating Longs; ordering/limit run on
-      // the long column (bit-exact at any magnitude), then the public
-      // schema's double distance is produced for the k survivors only
-      altPostings.where(termPredicate(cq))
-        .groupByKey(_.shard)
-        .flatMapGroups((shard: Int, it: Iterator[PostingRow]) =>
-          AltKernel.topKAddonShard(cq, keys, it, c, op, k).rows.iterator)
-        .toDF("docId", "distance", "addon")
-        .select(col("docId"), col("addon"), col("distance"))
-        .orderBy(col("distance").asc, col("docId").asc)
-        .limit(k)
-        .withColumn("distance", col("distance").cast("double"))
-    } else {
-      val base = matchingWithAddonC(cq)
-      // exact decimal distance (long subtraction overflows for extreme
-      // constants; double loses sub-256 resolution past 2^53); one-sided
-      // misses are null and filtered, matching the alt path's finite-only.
-      // Saturated at Long.MaxValue like the alt kernel's satSub, so both
-      // paths tie-break identically beyond the representable range.
-      val a = col("addon").cast("decimal(20,0)")
-      val cc = lit(c).cast("decimal(20,0)")
-      val raw = op match {
-        case "both" => abs(a - cc)
-        case "left" => when(col("addon") <= c, cc - a).otherwise(lit(null))
-        case "right" => when(col("addon") >= c, a - cc).otherwise(lit(null))
-        case other => throw new IllegalArgumentException(s"op: $other")
-      }
-      // least() ignores nulls — keep the one-sided-miss null sentinel
-      val dist = when(raw.isNull, lit(null))
-        .otherwise(least(raw, lit(Long.MaxValue).cast("decimal(20,0)")))
-      base.withColumn("distance", dist)
-        .where(col("distance").isNotNull)
-        .orderBy(col("distance").asc, col("docId").asc)
-        .limit(k)
-        .withColumn("distance", col("distance").cast("double"))
-    }
-  }
+  /** Addon top-k of an alt-unservable query as (docId, addon, distance):
+    * the exact [[Searcher.addonDistance]] over its match+addon plan,
+    * one-sided misses dropped like the alt kernel's finite-only stream.
+    */
+  private def topKAddonC(cq: CompiledQuery, c: Long, op: String, k: Int): DataFrame =
+    matchingWithAddonC(cq)
+      .withColumn("distance", Searcher.addonDistance(c, op))
+      .where(col("distance").isNotNull)
+      .orderBy(col("distance").asc, col("docId").asc)
+      .limit(k)
+      .withColumn("distance", col("distance").cast("double"))
 
   /** Multi-key ordered scan: `WHERE t @@ q ORDER BY key1, key2, ... LIMIT k`
     * with LEXICOGRAPHIC (dist1, dist2, ..., docId) ordering — the reference
@@ -413,12 +351,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * comparetup_rum), e.g. `ORDER BY t <=> q, d <=> c LIMIT k` in ONE index
     * scan. Order keys: [[Searcher.OrderKey.Rank]] = cover-density distance
     * of the match query (`t <=> q`), [[Searcher.OrderKey.Addon]] = attached-
-    * column distance (`addon <op> c`). The kernel emits (docId, rank
-    * distance, addon) in one pass; per-key distance columns are derived and
-    * the composite top-k runs as TakeOrderedAndProject — per-partition k-
-    * pruning on the FULL composite key, so no shard can drop a row that a
-    * later tie-break would promote. Addon keys follow the engine's finite-
-    * only contract (one-sided misses are excluded, like [[topKAddon]]).
+    * column distance (`addon <op> c`). A one-slot Match plan emits every
+    * match with its rank distance and addon in one pass; per-key distance
+    * columns are derived and the composite top-k runs as
+    * TakeOrderedAndProject — per-partition k-pruning on the FULL composite
+    * key, so no shard can drop a row that a later tie-break would promote.
+    * Addon keys follow the engine's finite-only contract (one-sided misses
+    * are excluded, like [[topKAddon]]).
     * Output: (docId, d0, d1, ...) distances as doubles in key order.
     */
   def topKMulti(queryStr: String, orderKeys: Seq[Searcher.OrderKey], k: Int): DataFrame =
@@ -431,45 +370,18 @@ final class Searcher(spark: SparkSession, indexDir: String,
                          k: Int): DataFrame = {
     import Searcher.OrderKey
     require(orderKeys.nonEmpty, "at least one order key")
+    Searcher.requireK(k)
     val methods = orderKeys.collect { case OrderKey.Rank(m) => m }
     require(methods.distinct.size <= 1,
       "all Rank keys must share one normalization method")
-    val needRank = methods.nonEmpty
-    val method = methods.headOption.getOrElse(0)
-    if (SearchKernel.isVoid(cq))
-      return spark.range(0).select(col("id").as("docId") +:
-        orderKeys.indices.map(i => col("id").cast("double").as(s"d$i")): _*)
-    val needsHeap = (method & (CoverRank.NormUniq | CoverRank.NormLogUniq)) != 0
-    val base =
-      if (needsHeap || SearchKernel.needsFullScan(cq))
-        fullScan(cq, score = needRank, matchOnly = true, k = 0, method = method)
-      else {
-        val keys = SearchKernel.keySpecs(cq)
-        // k = 0: the kernel's own heap orders by (rank, docId) only, which
-        // is NOT a prefix of the composite order when addon keys follow —
-        // pruning belongs to the composite TakeOrderedAndProject below
-        postings.where(termPredicate(cq))
-          .groupByKey(_.shard)
-          .flatMapGroups((shard: Int, it: Iterator[PostingRow]) =>
-            SearchKernel.matchShard(cq, keys, it, score = needRank, k = 0,
-              method = method))
-          .toDF("docId", "distance", "addon")
-      }
+    // the Match slot is unbounded: a per-shard heap on (rank, docId) is NOT
+    // a prefix of the composite order when addon keys follow — pruning
+    // belongs to the composite TakeOrderedAndProject below
+    val base = matchSlot(cq, rank = methods.nonEmpty,
+      method = methods.headOption.getOrElse(0))
     val distCols = orderKeys.zipWithIndex.map {
-      case (OrderKey.Rank(_), i) => col("distance").as(s"d$i")
-      case (OrderKey.Addon(c, op), i) =>
-        // exact decimal distance — same saturating arithmetic as topKAddon
-        val a = col("addon").cast("decimal(20,0)")
-        val cc = lit(c).cast("decimal(20,0)")
-        val raw = op match {
-          case "both" => abs(a - cc)
-          case "left" => when(col("addon") <= c, cc - a).otherwise(lit(null))
-          case "right" => when(col("addon") >= c, a - cc).otherwise(lit(null))
-          case other => throw new IllegalArgumentException(s"op: $other")
-        }
-        when(raw.isNull, lit(null))
-          .otherwise(least(raw, lit(Long.MaxValue).cast("decimal(20,0)")))
-          .as(s"d$i")
+      case (OrderKey.Rank(_), i) => col("score").as(s"d$i")
+      case (OrderKey.Addon(c, op), i) => Searcher.addonDistance(c, op).as(s"d$i")
     }
     val named = base.select(col("docId") +: distCols: _*)
     val finite = orderKeys.indices.map(i => col(s"d$i").isNotNull).reduce(_ && _)
@@ -486,27 +398,16 @@ final class Searcher(spark: SparkSession, indexDir: String,
     */
   def rangeAddon(queryStr: String, lo: Long, hi: Long): DataFrame =
     cached("rangeA" + Searcher.key(queryStr, lo.toString, hi.toString)) {
-      rangeAddonC(compile(queryStr), lo, hi)
+      oneSlot(Searcher.MsearchSpec.AddonRange(queryStr, lo, hi), col("docId"), col("addon"))
     }
 
   /** Multicolumn variant of [[rangeAddon]]. */
   def rangeAddonMulti(fieldQueries: Seq[(String, String)], lo: Long, hi: Long): DataFrame =
     cached("rangeAM" + Searcher.key(
       fieldQueries.flatMap(p => Seq(p._1, p._2)) ++ Seq(lo.toString, hi.toString): _*)) {
-      rangeAddonC(compileMulti(fieldQueries), lo, hi)
+      oneSlot(Searcher.MsearchSpec.AddonRangeFields(fieldQueries, lo, hi),
+        col("docId"), col("addon"))
     }
-
-  private def rangeAddonC(cq: CompiledQuery, lo: Long, hi: Long): DataFrame = {
-    if (altServes(cq)) {
-      val keys = SearchKernel.keySpecs(cq)
-      altPostings.where(termPredicate(cq))
-        .groupByKey(_.shard)
-        .flatMapGroups((shard: Int, it: Iterator[PostingRow]) =>
-          AltKernel.rangeAddonShard(cq, keys, it, lo, hi))
-        .toDF("docId", "addon")
-    } else
-      matchingWithAddonC(cq).where(col("addon") >= lo && col("addon") <= hi)
-  }
 
   /** Facet histogram over the attached column (the date-histogram /
     * numeric-facet serving shape): `WHERE t @@ q AND lo <= addon <= hi
@@ -540,8 +441,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * docId column.
     */
   private def facetSlot(spec: Searcher.MsearchSpec, bucket: Column): DataFrame =
-    msearchPlan(Seq(spec))
-      .select(bucket.as("bucket"), col("score").cast("long").as("cnt"))
+    oneSlot(spec, bucket.as("bucket"), col("score").cast("long").as("cnt"))
 
   /** Facet of an alt-unservable query: groups the match+addon stream. */
   private def countByAddonBucketC(cq: CompiledQuery, width: Long, lo: Long,
@@ -610,7 +510,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
 
   /** A one-slot cover plan as (docId, distance). */
   private def coverSlot(spec: Searcher.MsearchSpec): DataFrame =
-    msearchPlan(Seq(spec)).select(col("docId"), col("score").as("distance"))
+    oneSlot(spec, col("docId"), col("score").as("distance"))
 
   /** Multicolumn ranked scan: match `rankQuery` on `rankField` AND every
     * `filters` predicate on its field — one kernel pass over field-prefixed
@@ -665,11 +565,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
     */
   private def topKCoverC(cq: CompiledQuery, k: Int, matchOnly: Boolean,
                          method: Int, scoreCq: CompiledQuery,
-                         scoreMap: Array[Int]): DataFrame =
+                         scoreMap: Array[Int]): DataFrame = {
+    Searcher.requireK(k)
     fullScan(cq, score = true, matchOnly = matchOnly, k = k, method = method,
         scoreCq = scoreCq, scoreMap = scoreMap)
       .select("docId", "distance")
       .orderBy(col("distance").asc, col("docId").asc).limit(k)
+  }
 
   /** Field-scoped BM25 over a multicolumn index: terms resolve to the
     * field's prefixed key space, so df/maxTf stats and doc lengths are the
@@ -689,7 +591,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
     */
   def topKBm25(terms: Seq[String], k: Int): DataFrame =
     cached("bm25" + Searcher.key(terms :+ k.toString: _*)) {
-      msearchPlan(Seq(Searcher.MsearchSpec.Bm25(terms, k))).select("docId", "score")
+      oneSlot(Searcher.MsearchSpec.Bm25(terms, k), col("docId"), col("score"))
     }
 
   /** Per-searcher term-stats memo: (df, maxTf) per key, absent terms cached
@@ -777,14 +679,15 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * extra terms from sibling specs are invisible to a kernel because
     * cursor construction matches exactly its own keys. Global per-spec
     * top-k then runs over ONLY the shard-pruned rows of bounded specs
-    * (≤ k·nShards rows each): one bounded slot takes an ordered limit
-    * (TakeOrderedAndProject), several share a row_number window per qi. A
-    * shared repartition barrier lets both the bounded and unbounded
-    * branches reuse one kernel execution, and match specs never pass
-    * through a sort. Every solo match, BM25, cover and facet query is a
-    * one-slot batch of this plan. Per-batch driver cost is one plan
-    * over one subtree instead of N — the serial component that would
-    * otherwise bound msearch throughput at any cluster size.
+    * (≤ k·nShards rows each): per layout, one bounded slot takes an
+    * ordered limit (TakeOrderedAndProject), several share a row_number
+    * window per qi. A shared repartition barrier lets both the bounded and
+    * unbounded branches reuse one kernel execution, and match specs never
+    * pass through a sort. Every solo query, ordered scans included, is a
+    * one-slot batch of this plan ([[topKMulti]] orders the rows of a
+    * one-slot Match plan). Per-batch driver cost is one plan over one
+    * subtree instead of N — the serial component that would otherwise
+    * bound msearch throughput at any cluster size.
     * Returns (qi, docId, score): score = 0.0 for Match and AddonRange,
     * BM25 score for Bm25 (top-k, higher better), cover distance for Cover
     * (top-k, lower better), exact saturating addon distance for Addon
@@ -796,74 +699,113 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * fall back to their own plans, unioned in.
     */
   def msearch(specs: Seq[Searcher.MsearchSpec]): DataFrame =
-    cached("msearch" + specs.map(Searcher.specKey).mkString(""))(msearchPlan(specs))
+    cached("msearch" + specs.map(Searcher.specKey).mkString(""))(msearchPlan(specs))
 
   /** Uncached twin of [[msearch]] — ad-hoc paths that must pay fresh
     * planning (and benchmarks that must measure it) build a new plan here.
     */
-  def msearchPlan(specs: Seq[Searcher.MsearchSpec]): DataFrame = {
-    import Searcher.MsearchSpec._
-    val fused = scala.collection.mutable.ArrayBuffer.empty[Searcher.FusedSpec]
-    val altFused = scala.collection.mutable.ArrayBuffer.empty[Searcher.AltFusedSpec]
-    val fallback = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  def msearchPlan(specs: Seq[Searcher.MsearchSpec]): DataFrame =
+    slotPlan(specs).select("qi", "docId", "score")
+
+  /** [[msearchPlan]] with the slot rows' payload addon kept:
+    * (qi, docId, score, addon). Solo queries project their own schema
+    * from it; only the public batch schema drops the addon.
+    */
+  private def slotPlan(specs: Seq[Searcher.MsearchSpec]): DataFrame = {
+    // every bound is checked before any slot plans: a BM25 slot's stats
+    // lookup is a job
+    specs.foreach(Searcher.requireBound)
+    val batch = new SlotBatch
+    specs.zipWithIndex.foreach { case (spec, qi) => batch.add(qi, spec) }
+    batch.plan()
+  }
+
+  /** A one-slot plan projected to a solo query's schema. */
+  private def oneSlot(spec: Searcher.MsearchSpec, cols: Column*): DataFrame =
+    slotPlan(Seq(spec)).select(cols: _*)
+
+  /** The one-slot Match plan of a compiled query, (qi, docId, score,
+    * addon): score = the cover distance under `method` when `rank`, else
+    * 0.0.
+    */
+  private def matchSlot(cq: CompiledQuery, rank: Boolean, method: Int): DataFrame = {
+    val batch = new SlotBatch
+    batch.addMatch(0, cq, rank, method)
+    batch.plan()
+  }
+
+  /** The compiled slots of one plan: kernel slots per layout, plus the
+    * fallback plans of slots neither kernel serves.
+    */
+  private final class SlotBatch {
+    private val fused = scala.collection.mutable.ArrayBuffer.empty[Searcher.FusedSpec]
+    private val altFused = scala.collection.mutable.ArrayBuffer.empty[Searcher.AltFusedSpec]
+    private val fallback = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // count slots: every qi here gets a spine row (even void/zero-match);
     // full-scan-only count queries aggregate their full-scan plan into the
     // same (qi, partial) union
-    val countQis = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val countFallback = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def addMatch(qi: Int, cq: CompiledQuery): Unit = {
+    private val countQis = scala.collection.mutable.ArrayBuffer.empty[Int]
+    private val countFallback = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    /** A fallback plan's rows in the slot schema. */
+    private def addFallback(qi: Int, df: DataFrame, docId: Column, score: Column,
+                            addon: Column = lit(0L)): Unit =
+      fallback += df.select(lit(qi).as("qi"), docId.as("docId"), score.as("score"),
+        addon.as("addon"))
+
+    def addMatch(qi: Int, cq: CompiledQuery, rank: Boolean, method: Int): Unit = {
+      val needsHeap = rank && (method & (CoverRank.NormUniq | CoverRank.NormLogUniq)) != 0
       if (SearchKernel.isVoid(cq)) ()
-      else if (SearchKernel.needsFullScan(cq))
-        fallback += fullScanMatches(cq)
-          .select(lit(qi).as("qi"), col("docId"), lit(0.0).as("score"))
+      else if (needsHeap || SearchKernel.needsFullScan(cq))
+        addFallback(qi, fullScan(cq, score = rank, matchOnly = true, k = 0, method = method),
+          col("docId"), col("distance"), col("addon"))
       else fused += Searcher.FusedSpec(qi, 0, cq, SearchKernel.keySpecs(cq),
-        null, null, null, 0)
+        null, null, null, 0, method = method, rank = rank)
     }
-    def addCover(qi: Int, cq: CompiledQuery, k: Int, method: Int,
-                 scoreCq: CompiledQuery, scoreMap: Array[Int]): Unit = {
+    private def addCover(qi: Int, cq: CompiledQuery, k: Int, method: Int,
+                         scoreCq: CompiledQuery, scoreMap: Array[Int]): Unit = {
       val needsHeap = (method & (CoverRank.NormUniq | CoverRank.NormLogUniq)) != 0
       if (SearchKernel.isVoid(cq)) ()
       else if (needsHeap || SearchKernel.needsFullScan(cq))
-        fallback += topKCoverC(cq, k, matchOnly = true, method, scoreCq, scoreMap)
-          .select(lit(qi).as("qi"), col("docId"), col("distance").as("score"))
+        addFallback(qi, topKCoverC(cq, k, matchOnly = true, method, scoreCq, scoreMap),
+          col("docId"), col("distance"))
       else fused += Searcher.FusedSpec(qi, 1, cq, SearchKernel.keySpecs(cq),
-        null, null, null, k, scoreCq, scoreMap, method)
+        null, null, null, k, scoreCq, scoreMap, method, rank = true)
     }
-    def addOrder2(qi: Int, cq: CompiledQuery, c: Long, op: String, k: Int,
-                  method: Int): Unit = {
+    private def addOrder2(qi: Int, cq: CompiledQuery, c: Long, op: String, k: Int,
+                          method: Int): Unit = {
       require(Set("both", "left", "right").contains(op), s"op: $op")
-      require(k > 0, s"k: $k")
       val needsHeap = (method & (CoverRank.NormUniq | CoverRank.NormLogUniq)) != 0
       if (SearchKernel.isVoid(cq)) ()
       else if (needsHeap || SearchKernel.needsFullScan(cq))
-        fallback += topKMultiC(cq,
-            Seq(Searcher.OrderKey.Rank(method), Searcher.OrderKey.Addon(c, op)), k)
-          .select(lit(qi).as("qi"), col("docId"), col("d0").as("score"))
+        addFallback(qi, topKMultiC(cq,
+            Seq(Searcher.OrderKey.Rank(method), Searcher.OrderKey.Addon(c, op)), k),
+          col("docId"), col("d0"))
       else fused += Searcher.FusedSpec(qi, 4, cq, SearchKernel.keySpecs(cq),
         null, null, null, k, null, null, method, c, op)
     }
-    def addCount(qi: Int, cq: CompiledQuery): Unit = {
+    private def addCount(qi: Int, cq: CompiledQuery): Unit = {
       countQis += qi
       if (SearchKernel.isVoid(cq)) () // 0 via the spine
       else if (SearchKernel.needsFullScan(cq))
-        countFallback += fullScanMatches(cq)
+        countFallback += fullScan(cq, score = false, matchOnly = true, k = 0)
           .agg(org.apache.spark.sql.functions.count(lit(1)).as("partial"))
           .select(lit(qi).as("qi"), col("partial"))
       else fused += Searcher.FusedSpec(qi, 3, cq, SearchKernel.keySpecs(cq),
         null, null, null, 0)
     }
-    def addAddon(qi: Int, cq: CompiledQuery, c: Long, op: String, k: Int): Unit = {
+    private def addAddon(qi: Int, cq: CompiledQuery, c: Long, op: String, k: Int): Unit = {
       require(Set("both", "left", "right").contains(op), s"op: $op")
       if (SearchKernel.isVoid(cq)) ()
       else if (altServes(cq))
         altFused += Searcher.AltFusedSpec(qi, 0, cq, SearchKernel.keySpecs(cq),
           c, op, k, 0L, 0L)
       else
-        fallback += topKAddonC(cq, c, op, k)
-          .select(lit(qi).as("qi"), col("docId"), col("distance").as("score"))
+        addFallback(qi, topKAddonC(cq, c, op, k), col("docId"), col("distance"),
+          col("addon"))
     }
-    def addAddonFloat(qi: Int, cq: CompiledQuery, c: Double, op: String,
-                      k: Int): Unit = {
+    private def addAddonFloat(qi: Int, cq: CompiledQuery, c: Double, op: String,
+                              k: Int): Unit = {
       require(Set("both", "left", "right").contains(op), s"op: $op")
       if (SearchKernel.isVoid(cq)) ()
       else if (altServes(cq))
@@ -871,32 +813,32 @@ final class Searcher(spark: SparkSession, indexDir: String,
           graft.build.AddonUnits.floatOrderedBits(c), op, k, 0L, 0L,
           floatUnits = true)
       else
-        fallback += topKAddonFloatC(cq, c, op, k)
-          .select(lit(qi).as("qi"), col("docId"), col("distance").as("score"))
+        addFallback(qi, topKAddonFloatC(cq, c, op, k), col("docId"), col("distance"),
+          col("addon"))
     }
-    def addRange(qi: Int, cq: CompiledQuery, lo: Long, hi: Long): Unit = {
+    private def addRange(qi: Int, cq: CompiledQuery, lo: Long, hi: Long): Unit = {
       if (SearchKernel.isVoid(cq)) ()
       else if (altServes(cq))
         altFused += Searcher.AltFusedSpec(qi, 1, cq, SearchKernel.keySpecs(cq),
           0L, "", 0, lo, hi)
       else
-        fallback += rangeAddonC(cq, lo, hi)
-          .select(lit(qi).as("qi"), col("docId"), lit(0.0).as("score"))
+        addFallback(qi,
+          matchingWithAddonC(cq).where(col("addon") >= lo && col("addon") <= hi),
+          col("docId"), lit(0.0), col("addon"))
     }
-    def addFacet(qi: Int, cq: CompiledQuery, w: Long, lo: Long,
-                 hi: Long): Unit = {
+    private def addFacet(qi: Int, cq: CompiledQuery, w: Long, lo: Long,
+                         hi: Long): Unit = {
       Searcher.requireFacet(w, lo, hi)
       if (SearchKernel.isVoid(cq)) () // facet of nothing = no buckets
       else if (altServes(cq))
         altFused += Searcher.AltFusedSpec(qi, 2, cq, SearchKernel.keySpecs(cq),
           w, "", 0, lo, hi)
       else // fallback plan carries its own final agg; union it in directly
-        fallback += countByAddonBucketC(cq, w, lo, hi)
-          .select(lit(qi).as("qi"), col("bucket").as("docId"),
-            col("cnt").cast("double").as("score"))
+        addFallback(qi, countByAddonBucketC(cq, w, lo, hi), col("bucket"),
+          col("cnt").cast("double"))
     }
-    def addFacetFloat(qi: Int, cq: CompiledQuery, w: Double, lo: Double,
-                      hi: Double): Unit = {
+    private def addFacetFloat(qi: Int, cq: CompiledQuery, w: Double, lo: Double,
+                              hi: Double): Unit = {
       Searcher.requireFacetFloat(w, lo, hi)
       if (SearchKernel.isVoid(cq)) ()
       else if (altServes(cq)) // c slot carries the width's ordered bits
@@ -905,11 +847,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
           graft.build.AddonUnits.floatOrderedBits(lo),
           graft.build.AddonUnits.floatOrderedBits(hi), floatUnits = true)
       else
-        fallback += countByAddonBucketFloatC(cq, w, lo, hi)
-          .select(lit(qi).as("qi"), Searcher.doubleToRawLongBits(col("bucket")).as("docId"),
-            col("cnt").cast("double").as("score"))
+        addFallback(qi, countByAddonBucketFloatC(cq, w, lo, hi),
+          Searcher.doubleToRawLongBits(col("bucket")), col("cnt").cast("double"))
     }
-    def addBm25(qi: Int, keys: Seq[String], k: Int): Unit = {
+    private def addBm25(qi: Int, keys: Seq[String], k: Int): Unit = {
       val distinct = keys.distinct
       val stats = statsFor(distinct)
       val present = distinct.filter(stats.contains).toArray
@@ -921,9 +862,11 @@ final class Searcher(spark: SparkSession, indexDir: String,
         fused += Searcher.FusedSpec(qi, 2, null, null, present, dfArr, ubArr, k)
       }
     }
-    specs.zipWithIndex.foreach { case (spec, qi) =>
+
+    def add(qi: Int, spec: Searcher.MsearchSpec): Unit = {
+      import Searcher.MsearchSpec._
       spec match {
-        case Match(q) => addMatch(qi, compile(q))
+        case Match(q) => addMatch(qi, compile(q), rank = false, method = 0)
         case Cover(q, k, method) => addCover(qi, compile(q), k, method, null, null)
         case Order2(q, c, op, k, method) => addOrder2(qi, compile(q), c, op, k, method)
         case Count(q) => addCount(qi, compile(q))
@@ -931,7 +874,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
         case Bm25(terms, k) => addBm25(qi, terms.map(keyOf), k)
         // field-scoped variants over a multi-column index: the same fused
         // pass — field-prefixed keys are just keys to the kernel
-        case MatchFields(fq) => addMatch(qi, compileMulti(fq))
+        case MatchFields(fq) => addMatch(qi, compileMulti(fq), rank = false, method = 0)
         case CoverFields(rf, rq, filters, k, method) =>
           val (fullCq, scoreCq, scoreMap) = compileCoverMulti(rf, rq, filters)
           addCover(qi, fullCq, k, method, scoreCq, scoreMap)
@@ -941,8 +884,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
           addBm25(qi,
             terms.map(t => keyOf(graft.build.IndexBuilder.fieldKey(field, t))), k)
         // ordered-scan slots ride the batch over the alt-order layout's
-        // OWN shared scan (one per layout per batch), or their solo
-        // fallback plans when the layout can't serve them
+        // OWN shared scan (one per layout per batch), or their fallback
+        // plans when the layout can't serve them
         case Addon(q, c, op, k) => addAddon(qi, compile(q), c, op, k)
         case AddonRange(q, lo, hi) => addRange(qi, compile(q), lo, hi)
         case AddonFields(fq, c, op, k) => addAddon(qi, compileMulti(fq), c, op, k)
@@ -960,185 +903,171 @@ final class Searcher(spark: SparkSession, indexDir: String,
         case FacetFloat(q, w, lo, hi) => addFacetFloat(qi, compile(q), w, lo, hi)
         // the placeholder key is an ordinary key to the kernel: these
         // slots ride the shared scan like any single-term query
-        case MatchEmpty(f) => addMatch(qi, emptyCompiled(f))
+        case MatchEmpty(f) => addMatch(qi, emptyCompiled(f), rank = false, method = 0)
         case CountEmpty(f) => addCount(qi, emptyCompiled(f))
       }
     }
 
-    val (fusedParts, countKernelPart): (Seq[DataFrame], Option[DataFrame]) =
-      if (fused.isEmpty) (Nil, None)
-      else {
-        val fs = fused.toArray
-        // ONE predicate over the union of every spec's terms: both kernel
-        // branches below share an IDENTICAL scan+shuffle subtree, which
-        // Spark's exchange reuse executes once (MsearchFusedSpec asserts
-        // the ReusedExchange). Each branch's kernel then evaluates only its
-        // own specs over the buffered shard rows — no duplicated kernel
-        // work, and sibling specs' terms are invisible to a kernel because
-        // cursor construction matches exactly its own keys.
-        val pred = fs.map { f =>
-          if (f.mode == 2) col("term").isin(f.terms.toSeq: _*)
-          else termPredicate(f.cq)
-        }.reduce(_ || _)
-        val nDocs = meta.numDocs
-        val avgLen = meta.avgLen
-        val base = postings.where(pred).groupByKey(_.shard)
-        def kernel(specsArr: Array[Searcher.FusedSpec]): DataFrame =
-          base.flatMapGroups { (shard: Int, it: Iterator[PostingRow]) =>
-            // group the shard's rows by term ONCE; every spec's cursor
-            // construction then touches only its own terms' entries —
-            // per-spec setup is O(spec terms), not O(specs × union rows)
-            val view = new SearchKernel.ShardView(it)
-            specsArr.iterator.flatMap { f =>
-              f.mode match {
-                case 0 => SearchKernel.matchShard(f.cq, f.keys, view,
-                    score = false, k = 0, method = 0, scoreCq = null, scoreMap = null)
-                  .map(t => (f.qi, t._1, 0.0, 0.0, 0L))
-                case 1 => SearchKernel.matchShard(f.cq, f.keys, view,
-                    score = true, k = f.k, method = f.method,
-                    scoreCq = f.scoreCq, scoreMap = f.scoreMap)
-                  .map(t => (f.qi, t._1, t._2, t._2, 0L))
-                case 2 => SearchKernel.wandShard(f.terms, f.dfs, f.ubs, nDocs,
-                    avgLen, f.k, view)
-                  .map { case (id, s) => (f.qi, id, s, -s, 0L) } // sort asc = score desc
-                // per-shard PARTIAL count: one row per (slot, shard); the
-                // match set never leaves the shard
-                case 3 =>
-                  var n = 0L
-                  val m = SearchKernel.matchShard(f.cq, f.keys, view,
-                    score = false, k = 0, method = 0, scoreCq = null, scoreMap = null)
-                  while (m.hasNext) { m.next(); n += 1 }
-                  Iterator.single((f.qi, n, 0.0, 0.0, 0L))
-                // composite (rank, addonDist, docId): per-shard heap pruned
-                // on the FULL tuple; sort2 carries the EXACT long addon
-                // distance so the global window tie-breaks losslessly
-                case _ => SearchKernel.order2Shard(f.cq, f.keys, view, f.c,
-                    f.op, f.k, f.method)
-                  .map { case (id, r, d2) => (f.qi, id, r, r, d2) }
+    /** The batch's plan: (qi, docId, score, addon). */
+    def plan(): DataFrame = {
+      val (fusedParts, countKernelPart): (Seq[DataFrame], Option[DataFrame]) =
+        if (fused.isEmpty) (Nil, None)
+        else {
+          val fs = fused.toArray
+          // ONE predicate over the union of every spec's terms: both kernel
+          // branches below share an IDENTICAL scan+shuffle subtree, which
+          // Spark's exchange reuse executes once (MsearchFusedSpec asserts
+          // the ReusedExchange). Each branch's kernel then evaluates only its
+          // own specs over the buffered shard rows — no duplicated kernel
+          // work, and sibling specs' terms are invisible to a kernel because
+          // cursor construction matches exactly its own keys.
+          val pred = fs.map { f =>
+            if (f.mode == 2) col("term").isin(f.terms.toSeq: _*)
+            else termPredicate(f.cq)
+          }.reduce(_ || _)
+          val nDocs = meta.numDocs
+          val avgLen = meta.avgLen
+          val base = postings.where(pred).groupByKey(_.shard)
+          def kernel(specsArr: Array[Searcher.FusedSpec]): DataFrame =
+            base.flatMapGroups { (shard: Int, it: Iterator[PostingRow]) =>
+              // group the shard's rows by term ONCE; every spec's cursor
+              // construction then touches only its own terms' entries —
+              // per-spec setup is O(spec terms), not O(specs × union rows)
+              val view = new SearchKernel.ShardView(it)
+              specsArr.iterator.flatMap { f =>
+                f.mode match {
+                  // match (k = 0: every match) and cover top-k; the row
+                  // carries the payload addon of the matched posting
+                  case 0 | 1 => SearchKernel.matchShard(f.cq, f.keys, view,
+                      score = f.rank, k = f.k, method = f.method,
+                      scoreCq = f.scoreCq, scoreMap = f.scoreMap)
+                    .map(t => (f.qi, t._1, t._2, t._2, 0L, t._3))
+                  case 2 => SearchKernel.wandShard(f.terms, f.dfs, f.ubs, nDocs,
+                      avgLen, f.k, view)
+                    .map { case (id, s) => (f.qi, id, s, -s, 0L, 0L) } // sort asc = score desc
+                  // per-shard PARTIAL count: one row per (slot, shard); the
+                  // match set never leaves the shard
+                  case 3 =>
+                    var n = 0L
+                    val m = SearchKernel.matchShard(f.cq, f.keys, view,
+                      score = false, k = 0)
+                    while (m.hasNext) { m.next(); n += 1 }
+                    Iterator.single((f.qi, n, 0.0, 0.0, 0L, 0L))
+                  // composite (rank, addonDist, docId): per-shard heap pruned
+                  // on the FULL tuple; sort2 carries the EXACT long addon
+                  // distance so the global window tie-breaks losslessly
+                  case _ => SearchKernel.order2Shard(f.cq, f.keys, view, f.c,
+                      f.op, f.k, f.method)
+                    .map { case (id, r, d2) => (f.qi, id, r, r, d2, 0L) }
+                }
               }
+            }.toDF("qi", "docId", "score", "sort", "sort2", "addon")
+          val bounded = fs.filter(f => f.mode != 0 && f.mode != 3)
+          val unbounded = fs.filter(_.mode == 0)
+          val counts = fs.filter(_.mode == 3)
+          // bounded specs: per-shard heaps already pruned to ≤ k·nShards rows
+          // each, so the global top-k touches only those; match specs stream
+          // through their own branch, never sorted. No caller reads a
+          // bounded slot's addon, so it stays out of the top-k's rows
+          val boundedPart =
+            if (bounded.isEmpty) None
+            else Some(Searcher.topKTail(kernel(bounded).drop("addon"),
+              bounded.map(f => (f.qi, f.k)).toSeq,
+              Seq(col("sort").asc, col("sort2").asc, col("docId").asc),
+              Seq(col("qi"), col("docId"), col("score"), lit(0L).as("addon"))))
+          val unboundedPart =
+            if (unbounded.isEmpty) None
+            else Some(kernel(unbounded).select("qi", "docId", "score", "addon"))
+          // count slots share the same scan+shuffle subtree (reused
+          // exchange); their per-shard partials are aggregated below with
+          // the spine and any full-scan fallbacks
+          val countPart =
+            if (counts.isEmpty) None
+            else Some(kernel(counts).select(col("qi"), col("docId").as("partial")))
+          ((boundedPart ++ unboundedPart).toSeq, countPart)
+        }
+      val countsPart: Option[DataFrame] =
+        if (countQis.isEmpty) None
+        else {
+          val spine = countQis.toSeq.toDF("qi").select(col("qi"), lit(0L).as("partial"))
+          val union = (Seq(spine) ++ countKernelPart.toSeq ++ countFallback.toSeq)
+            .reduce(_ union _)
+          Some(union.groupBy("qi").agg(sum("partial").as("cnt"))
+            .select(col("qi"), col("cnt").as("docId"),
+              col("cnt").cast("double").as("score"), lit(0L).as("addon")))
+        }
+      // ordered-scan slots: ONE alt-layout scan + shuffle for the whole
+      // batch, mirroring the primary fused pass — bounded (top-k) and range
+      // branches share the exchange; per-shard ShardCells merges each term's
+      // runs once across every spec that touches it
+      val altParts: Seq[DataFrame] =
+        if (altFused.isEmpty) Nil
+        else {
+          val afs = altFused.toArray
+          val pred = afs.map(f => termPredicate(f.cq)).reduce(_ || _)
+          val altBase = altPostings.where(pred).groupByKey(_.shard)
+          def altKernel(specsArr: Array[Searcher.AltFusedSpec]): DataFrame =
+            altBase.flatMapGroups { (shard: Int, it: Iterator[PostingRow]) =>
+              val cells = new AltKernel.ShardCells(it)
+              specsArr.iterator.flatMap { f =>
+                if (f.mode == 0)
+                  AltKernel.topKAddonShard(f.cq, f.keys, cells, f.c, f.op, f.k,
+                      f.floatUnits)
+                    .rows.iterator.map(t => (f.qi, t._1, t._2, t._3))
+                else if (f.mode == 1)
+                  AltKernel.rangeAddonShard(f.cq, f.keys, cells, f.lo, f.hi)
+                    .map { case (d, a) => (f.qi, d, 0L, a) }
+                // mode 2: per-shard facet partials (c = bucket width; float
+                // slots bucket in VALUE space and emit the start's bit image)
+                else if (!f.floatUnits)
+                  AltKernel.facetShard(f.cq, f.keys, cells, f.c, f.lo, f.hi)
+                    .map { case (b, n) => (f.qi, b, n, 0L) }
+                else
+                  AltKernel.facetShardFloat(f.cq, f.keys, cells,
+                      graft.build.AddonUnits.floatFromOrderedBits(f.c),
+                      graft.build.AddonUnits.floatFromOrderedBits(f.lo),
+                      f.lo, f.hi)
+                    .map { case (b, n) => (f.qi, b, n, 0L) }
+              }
+            }.toDF("qi", "docId", "dist", "addon")
+          val bounded = afs.filter(_.mode == 0)
+          val unbounded = afs.filter(_.mode == 1)
+          val facets = afs.filter(_.mode == 2)
+          val boundedPart =
+            if (bounded.isEmpty) None
+            else {
+              // ordering/limit on the exact long distance; float-units slots
+              // rank on the double distance's bit image (order-preserving)
+              // and decode only the surviving rows back to the exact double
+              val floatQis = bounded.filter(_.floatUnits).map(_.qi).toSeq
+              val score =
+                if (floatQis.isEmpty) col("dist").cast("double")
+                else when(col("qi").isInCollection(floatQis),
+                    Searcher.longBitsToDouble(col("dist")))
+                  .otherwise(col("dist").cast("double"))
+              Some(Searcher.topKTail(altKernel(bounded), bounded.map(f => (f.qi, f.k)).toSeq,
+                Seq(col("dist").asc, col("docId").asc),
+                Seq(col("qi"), col("docId"), score.as("score"), col("addon"))))
             }
-          }.toDF("qi", "docId", "score", "sort", "sort2")
-        val bounded = fs.filter(f => f.mode != 0 && f.mode != 3)
-        val unbounded = fs.filter(_.mode == 0)
-        val counts = fs.filter(_.mode == 3)
-        // bounded specs: per-shard heaps already pruned to ≤ k·nShards rows
-        // each, so the global top-k touches only those; match specs stream
-        // through their own branch, never sorted. One bounded slot (every
-        // solo top-k) takes an ordered limit, which Spark runs as
-        // TakeOrderedAndProject without the window's extra exchange
-        val order = Seq(col("sort").asc, col("sort2").asc, col("docId").asc)
-        val boundedPart =
-          if (bounded.isEmpty) None
-          else if (bounded.length == 1)
-            Some(kernel(bounded).orderBy(order: _*).limit(bounded.head.k)
-              .select("qi", "docId", "score"))
-          else {
-            val kPairs = bounded.flatMap(f => Seq(lit(f.qi), lit(f.k))).toSeq
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("qi").orderBy(order: _*)
-            Some(kernel(bounded)
-              .withColumn("rank", row_number().over(w))
-              .where(col("rank") <= element_at(map(kPairs: _*), col("qi")))
-              .select("qi", "docId", "score"))
-          }
-        val unboundedPart =
-          if (unbounded.isEmpty) None
-          else Some(kernel(unbounded).select("qi", "docId", "score"))
-        // count slots share the same scan+shuffle subtree (reused
-        // exchange); their per-shard partials are aggregated below with
-        // the spine and any full-scan fallbacks
-        val countPart =
-          if (counts.isEmpty) None
-          else Some(kernel(counts).select(col("qi"), col("docId").as("partial")))
-        ((boundedPart ++ unboundedPart).toSeq, countPart)
-      }
-    val countsPart: Option[DataFrame] =
-      if (countQis.isEmpty) None
-      else {
-        val spine = countQis.toSeq.toDF("qi").select(col("qi"), lit(0L).as("partial"))
-        val union = (Seq(spine) ++ countKernelPart.toSeq ++ countFallback.toSeq)
-          .reduce(_ union _)
-        Some(union.groupBy("qi").agg(sum("partial").as("cnt"))
-          .select(col("qi"), col("cnt").as("docId"),
-            col("cnt").cast("double").as("score")))
-      }
-    // ordered-scan slots: ONE alt-layout scan + shuffle for the whole
-    // batch, mirroring the primary fused pass — bounded (top-k) and range
-    // branches share the exchange; per-shard ShardCells merges each term's
-    // runs once across every spec that touches it
-    val altParts: Seq[DataFrame] =
-      if (altFused.isEmpty) Nil
-      else {
-        val afs = altFused.toArray
-        val pred = afs.map(f => termPredicate(f.cq)).reduce(_ || _)
-        val altBase = altPostings.where(pred).groupByKey(_.shard)
-        def altKernel(specsArr: Array[Searcher.AltFusedSpec]): DataFrame =
-          altBase.flatMapGroups { (shard: Int, it: Iterator[PostingRow]) =>
-            val cells = new AltKernel.ShardCells(it)
-            specsArr.iterator.flatMap { f =>
-              if (f.mode == 0)
-                AltKernel.topKAddonShard(f.cq, f.keys, cells, f.c, f.op, f.k,
-                    f.floatUnits)
-                  .rows.iterator.map(t => (f.qi, t._1, t._2))
-              else if (f.mode == 1)
-                AltKernel.rangeAddonShard(f.cq, f.keys, cells, f.lo, f.hi)
-                  .map { case (d, _) => (f.qi, d, 0L) }
-              // mode 2: per-shard facet partials (c = bucket width; float
-              // slots bucket in VALUE space and emit the start's bit image)
-              else if (!f.floatUnits)
-                AltKernel.facetShard(f.cq, f.keys, cells, f.c, f.lo, f.hi)
-                  .map { case (b, n) => (f.qi, b, n) }
-              else
-                AltKernel.facetShardFloat(f.cq, f.keys, cells,
-                    graft.build.AddonUnits.floatFromOrderedBits(f.c),
-                    graft.build.AddonUnits.floatFromOrderedBits(f.lo),
-                    f.lo, f.hi)
-                  .map { case (b, n) => (f.qi, b, n) }
-            }
-          }.toDF("qi", "docId", "dist")
-        val bounded = afs.filter(_.mode == 0)
-        val unbounded = afs.filter(_.mode == 1)
-        val facets = afs.filter(_.mode == 2)
-        val boundedPart =
-          if (bounded.isEmpty) None
-          else {
-            // global top-k over per-shard-pruned rows; ordering/limit on
-            // the exact long distance, double only for the k survivors
-            val kPairs = bounded.flatMap(f => Seq(lit(f.qi), lit(f.k))).toSeq
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("qi").orderBy(col("dist").asc, col("docId").asc)
-            // float-units slots ranked on the double distance's bit image
-            // (same window — order-preserving); decode only the ≤ k·nShards
-            // survivor rows back to the exact double for the score column
-            val floatQis = bounded.filter(_.floatUnits).map(_.qi).toSeq
-            val score =
-              if (floatQis.isEmpty) col("dist").cast("double")
-              else when(col("qi").isInCollection(floatQis),
-                  Searcher.longBitsToDouble(col("dist")))
-                .otherwise(col("dist").cast("double"))
-            Some(altKernel(bounded)
-              .withColumn("rank", row_number().over(w))
-              .where(col("rank") <= element_at(map(kPairs: _*), col("qi")))
-              .select(col("qi"), col("docId"), score.as("score")))
-          }
-        val unboundedPart =
-          if (unbounded.isEmpty) None
-          else Some(altKernel(unbounded)
-            .select(col("qi"), col("docId"), lit(0.0).as("score")))
-        // facet slots: final sum over the per-shard bucket partials (rows
-        // shuffled here = buckets × shards per slot, never the matches);
-        // shares the batch's alt scan via exchange reuse like the others
-        val facetPart =
-          if (facets.isEmpty) None
-          else Some(altKernel(facets)
-            .groupBy("qi", "docId").agg(sum("dist").as("cnt"))
-            .select(col("qi"), col("docId"),
-              col("cnt").cast("double").as("score")))
-        (boundedPart ++ unboundedPart ++ facetPart).toSeq
-      }
-    (fusedParts ++ countsPart.toSeq ++ altParts ++ fallback.toSeq)
-      .reduceOption(_ union _)
-      .getOrElse(emptyBatch("docId" -> "long", "score" -> "double"))
+          val unboundedPart =
+            if (unbounded.isEmpty) None
+            else Some(altKernel(unbounded)
+              .select(col("qi"), col("docId"), lit(0.0).as("score"), col("addon")))
+          // facet slots: final sum over the per-shard bucket partials (rows
+          // shuffled here = buckets × shards per slot, never the matches);
+          // shares the batch's alt scan via exchange reuse like the others
+          val facetPart =
+            if (facets.isEmpty) None
+            else Some(altKernel(facets)
+              .groupBy("qi", "docId").agg(sum("dist").as("cnt"))
+              .select(col("qi"), col("docId"),
+                col("cnt").cast("double").as("score"), lit(0L).as("addon")))
+          (boundedPart ++ unboundedPart ++ facetPart).toSeq
+        }
+      (fusedParts ++ countsPart.toSeq ++ altParts ++ fallback.toSeq)
+        .reduceOption(_ union _)
+        .getOrElse(emptyBatch("docId" -> "long", "score" -> "double", "addon" -> "long"))
+    }
   }
 
   /** Fused count-serving: match counts for a batch of tsquery strings in
@@ -1196,7 +1125,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
 
   def matchingEmpty(field: Option[String] = None): DataFrame =
     cached("matchEmpty" + Searcher.key(emptyKeyRaw(field))) {
-      msearchPlan(Seq(Searcher.MsearchSpec.MatchEmpty(field))).select("docId")
+      oneSlot(Searcher.MsearchSpec.MatchEmpty(field), col("docId"))
     }
 
   def countEmpty(field: Option[String] = None): Long =
@@ -1391,6 +1320,62 @@ object Searcher {
     lit(lo) + (off - pmod(off, lit(width)))
   }
 
+  /** Rejects a non-positive top-k bound at plan time, before any job. */
+  private[search] def requireK(k: Int): Unit = require(k > 0, s"k must be positive: $k")
+
+  /** [[requireK]] for a bounded spec's k. */
+  private[search] def requireBound(sp: MsearchSpec): Unit = {
+    import MsearchSpec._
+    sp match {
+      case Bm25(_, k) => requireK(k)
+      case Bm25Fields(_, _, k) => requireK(k)
+      case Cover(_, k, _) => requireK(k)
+      case CoverFields(_, _, _, k, _) => requireK(k)
+      case Order2(_, _, _, k, _) => requireK(k)
+      case Addon(_, _, _, k) => requireK(k)
+      case AddonFields(_, _, _, k) => requireK(k)
+      case AddonFloat(_, _, _, k) => requireK(k)
+      case _ => ()
+    }
+  }
+
+  /** Exact addon distance `addon <op> c` as decimal(20,0): long
+    * subtraction overflows for extreme constants, double loses sub-256
+    * resolution past 2^53. Saturated at Long.MaxValue like the alt
+    * kernel's satSub, so both paths tie-break identically beyond the
+    * representable range. One-sided misses are null; callers drop them
+    * (the finite-only contract).
+    */
+  private[search] def addonDistance(c: Long, op: String): Column = {
+    val a = col("addon").cast("decimal(20,0)")
+    val cc = lit(c).cast("decimal(20,0)")
+    val raw = op match {
+      case "both" => abs(a - cc)
+      case "left" => when(col("addon") <= c, cc - a).otherwise(lit(null))
+      case "right" => when(col("addon") >= c, a - cc).otherwise(lit(null))
+      case other => throw new IllegalArgumentException(s"op: $other")
+    }
+    // least() ignores nulls — keep the one-sided-miss null sentinel
+    when(raw.isNull, lit(null))
+      .otherwise(least(raw, lit(Long.MaxValue).cast("decimal(20,0)")))
+  }
+
+  /** Global top-k over shard-pruned bounded slot rows, `ks` = (qi, k) per
+    * slot: one slot ends in an ordered limit, which Spark runs as
+    * TakeOrderedAndProject; two or more keep each slot's k best with a
+    * row_number window per qi.
+    */
+  private[search] def topKTail(rows: DataFrame, ks: Seq[(Int, Int)], order: Seq[Column],
+                           out: Seq[Column]): DataFrame =
+    if (ks.length == 1) rows.orderBy(order: _*).limit(ks.head._2).select(out: _*)
+    else {
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("qi").orderBy(order: _*)
+      val kOf = map(ks.flatMap { case (qi, k) => Seq(lit(qi), lit(k)) }: _*)
+      rows.withColumn("rank", row_number().over(w))
+        .where(col("rank") <= element_at(kOf, col("qi")))
+        .select(out: _*)
+    }
+
   /** Compiled alt-layout fused-batch slot (ordered scans). mode 0 =
     * addon top-k, 1 = addon range, 2 = facet bucket partials (`c` carries
     * the bucket width).
@@ -1403,13 +1388,13 @@ object Searcher {
   /** Compiled fused-batch slot (task-closure payload: no session refs).
     * mode 0 = match, 1 = cover top-k, 2 = BM25 WAND top-k, 3 = count
     * (per-shard partial), 4 = Order2 composite top-k (c/op = the addon
-    * key).
+    * key). `rank`: modes 0 and 1 score their matches by cover distance.
     */
   private[search] final case class FusedSpec(
       qi: Int, mode: Int, cq: CompiledQuery, keys: Array[SearchKernel.KeySpec],
       terms: Array[String], dfs: Array[Long], ubs: Array[Double], k: Int,
       scoreCq: CompiledQuery = null, scoreMap: Array[Int] = null,
-      method: Int = 0, c: Long = 0L, op: String = "")
+      method: Int = 0, c: Long = 0L, op: String = "", rank: Boolean = false)
 
   /** [[graft.build.AddonUnits.floatOrderedBits]] image → its double. */
   private val orderedBitsToDouble =

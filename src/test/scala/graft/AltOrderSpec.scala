@@ -98,7 +98,8 @@ class AltOrderSpec extends AnyFunSuite {
       .parquet(graft.build.SegmentCatalog.altDir(altDirPath))
       .as[graft.build.PostingRow].collect()
     val oneShard = altRows.filter(_.shard == 0)
-    val res = AltKernel.topKAddonShard(cq, keys, oneShard.iterator, 17770L, "both", 5)
+    val res = AltKernel.topKAddonShard(cq, keys,
+      new AltKernel.ShardCells(oneShard.iterator), 17770L, "both", 5, floatUnits = false)
     assert(res.rows.length == 5)
     assert(res.visited <= 30, s"visited=${res.visited} for k=5")
   }
@@ -179,7 +180,8 @@ class AltOrderSpec extends AnyFunSuite {
     val oneShard = altRows.filter(_.shard == 0)
     val matchesInShard = plainIdx.matchingDocs("every & half")
       .as[Long].collect().count(_ % 4 == 0) // shard = hash(docId) % 4 — approx
-    val res = AltKernel.topKAddonShard(cq, keys, oneShard.iterator, 17770L, "both", 5)
+    val res = AltKernel.topKAddonShard(cq, keys,
+      new AltKernel.ShardCells(oneShard.iterator), 17770L, "both", 5, floatUnits = false)
     assert(res.rows.length == 5)
     assert(res.visited <= 30, s"visited=${res.visited} for k=5 (matches in shard ≈ $matchesInShard)")
   }

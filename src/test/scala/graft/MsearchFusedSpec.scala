@@ -438,6 +438,72 @@ class MsearchFusedSpec extends AnyFunSuite {
     val batch = plan(searcher.msearchPlan(Seq(
       Bm25(Seq("rare7", "veryrare"), 3), Cover("common & rare7", 4))))
     assert(batch.contains("Window"), batch)
+    // the alt layout's ordered scans share the same tail
+    val addon = plan(altSearcher.topKAddon("even & triple", -700L, "both", 7))
+    val addonF = plan(floatSearcher.topKAddonFloat("even & triple", 3.75, "both", 7))
+    for (p <- Seq(addon, addonF)) {
+      assert(p.contains("TakeOrderedAndProject"), p)
+      assert(!p.contains("Window"), p)
+      assert("PushedFilters: \\[[^\\]]*In\\(term, \\[".r.findFirstIn(p).isDefined, p)
+    }
+    val altBatch = plan(altSearcher.msearchPlan(Seq(
+      Addon("even & triple", -700L, "both", 7), Addon("common & rare7", 500L, "left", 5))))
+    assert("Window \\[".r.findAllIn(altBatch).size == 1, altBatch)
+    assert(!altBatch.contains("TakeOrderedAndProject"), altBatch)
+  }
+
+  test("k <= 0 is rejected at plan time on both layouts, before any job runs") {
+    import Searcher.MsearchSpec._
+    import Searcher.OrderKey
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.put(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    // jobs started while `body` ran: the listener bus delivers in order, so
+    // every job before the marker job has been seen once the marker has
+    def jobsDuring(body: => Unit): Int = {
+      started.clear()
+      body
+      sc.setJobGroup("k-marker", "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      var n = 0
+      var g = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (g != null && g != "k-marker") {
+        n += 1; g = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(g == "k-marker", "marker job not seen")
+      n
+    }
+    val layouts = Seq("plain" -> searcher, "altOrder" -> altSearcher)
+    layouts.foreach(_._2.meta)
+    sc.addSparkListener(listener)
+    try {
+      for ((name, s) <- layouts; k <- Seq(0, -1)) {
+        val calls: Seq[(String, () => Any)] = Seq(
+          "topKAddon" -> (() => s.topKAddon("even & triple", -700L, "both", k)),
+          "topKAddonFloat" -> (() => s.topKAddonFloat("even & triple", 1.5, "left", k)),
+          "topKMulti" -> (() => s.topKMulti("even & triple",
+            Seq(OrderKey.Rank(), OrderKey.Addon(0L, "both")), k)),
+          "topKBm25" -> (() => s.topKBm25(Seq("rare7", "veryrare"), k)),
+          "topKCover" -> (() => s.topKCover("common & rare7", k)),
+          "topKCover order-only" ->
+            (() => s.topKCover("common & rare7", k, matchOnly = false)),
+          "msearch" -> (() => s.msearch(Seq(Match("even"), Bm25(Seq("rare7"), 3),
+            Cover("common & rare7", k)))),
+          "Addon slot" -> (() => s.msearch(Seq(Addon("even", 0L, "right", k)))),
+          "AddonFloat slot" -> (() => s.msearch(Seq(AddonFloat("even", 0.5, "both", k)))),
+          "Order2 slot" -> (() => s.msearch(Seq(Order2("even & triple", 0L, "both", k)))),
+          "Bm25 slot" -> (() => s.msearch(Seq(Bm25(Seq("rare7", "tail3"), k)))),
+          "void Cover slot" -> (() => s.msearch(Seq(Cover("", k)))))
+        for ((what, call) <- calls) {
+          val jobs = jobsDuring(intercept[IllegalArgumentException](call()))
+          assert(jobs == 0, s"$name $what k=$k")
+        }
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   test("fused kernel executes once: shared exchange reused across branches") {
