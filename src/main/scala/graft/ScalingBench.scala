@@ -87,9 +87,9 @@ object ScalingBench {
       // cross-execution AQE stage reuse can serve cached shuffle outputs
       // (repeated actions on ONE cached Dataset reuse its materialized
       // query stages — milliseconds — which measures the cache, not the
-      // dataflow; QueryProbe demonstrates both regimes). Branch plans and
-      // the term-stats memo are warm prepared-statement state (one-time
-      // per level, identical at both levels, outside the timed trials);
+      // dataflow). Branch plans and the term-stats memo are warm
+      // prepared-statement state (one-time per level, identical at both
+      // levels, outside the timed trials);
       // what each batch pays fresh is batch planning + the FULL executor
       // dataflow — the part added executors parallelize.
       //
@@ -262,9 +262,9 @@ object ScalingBench {
          |Each client fresh-plans its batch per dispatch and executes it in
          |full: a new Dataset per batch makes cross-execution stage reuse
          |impossible, so every batch pays fresh planning and FULL executor
-         |work (verified with graft.QueryProbe: a repeated action on a cached
-         |Dataset takes ~20 ms at either core count — measuring the cache —
-         |while a fresh-planned batch re-runs the whole dataflow). Branch
+         |work. (A repeated action on one cached Dataset reuses its
+         |materialized AQE query stages and re-runs only the final stage:
+         |it would measure the cache, not the dataflow.) Branch
          |plans + the term-stats memo are warm prepared-statement state,
          |one-time per level and identical at both levels. Client count
          |scales WITH cores (constant offered concurrency per core: ${r8.cores}

@@ -219,7 +219,7 @@ object IndexBuilder {
     }
   }
 
-  def tokenizerFn(name: String): String => Array[Tokenizer.TermOccs] = name match {
+  private def tokenizerFn(name: String): String => Array[Tokenizer.TermOccs] = name match {
     case "simple" => (t: String) => Tokenizer.simple(if (t == null) "" else t)
     case "code" => (t: String) => Tokenizer.code(if (t == null) "" else t)
     case "simple_title8" => (t: String) => Tokenizer.simpleTitle(if (t == null) "" else t, 8)
@@ -1042,45 +1042,14 @@ object IndexBuilder {
       issues += s"totalTokens ${meta.totalTokens} vs docs table ${dr.getLong(1)}"
 
     // structural block invariants (full pass over headers, no payload decode)
-    val bad = readDataset(spark, indexDir, readable, "postings").as[PostingRow]
-      .flatMap { r =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        if (r.blocks.isEmpty) out += s"term ${r.term}: empty chunk"
-        r.blocks.foreach { b =>
-          if (b.n <= 0 || b.firstDoc > b.lastDoc)
-            out += s"term ${r.term}: bad block header (n=${b.n}, ${b.firstDoc}..${b.lastDoc})"
-        }
-        var i = 1
-        while (i < r.blocks.length) {
-          if (r.blocks(i).firstDoc <= r.blocks(i - 1).lastDoc)
-            out += s"term ${r.term}: non-ascending blocks at $i"
-          i += 1
-        }
-        out.iterator
-      }.take(20)
-    issues ++= bad
+    issues ++= readDataset(spark, indexDir, readable, "postings").as[PostingRow]
+      .flatMap(headerIssues(_, alt = false)).take(20)
 
-    // alt-order layout: same header invariants with ties allowed (the key
-    // slot holds addons — equal addons are legal), and the two layouts
-    // must carry the SAME posting multiset size per term
+    // alt-order layout: same header invariants, and the two layouts must
+    // carry the SAME posting multiset size per term
     if (meta.altOrder) {
-      val badAlt = readDataset(spark, indexDir, readable, "alt").as[PostingRow]
-        .flatMap { r =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[String]
-          if (r.blocks.isEmpty) out += s"alt ${r.term}: empty chunk"
-          r.blocks.foreach { b =>
-            if (b.n <= 0 || b.firstDoc > b.lastDoc)
-              out += s"alt ${r.term}: bad block header (n=${b.n}, ${b.firstDoc}..${b.lastDoc})"
-          }
-          var i = 1
-          while (i < r.blocks.length) {
-            if (r.blocks(i).firstDoc < r.blocks(i - 1).lastDoc)
-              out += s"alt ${r.term}: decreasing blocks at $i"
-            i += 1
-          }
-          out.iterator
-        }.take(20)
-      issues ++= badAlt
+      issues ++= readDataset(spark, indexDir, readable, "alt").as[PostingRow]
+        .flatMap(headerIssues(_, alt = true)).take(20)
       val primTotals = readDataset(spark, indexDir, readable, "postings")
         .groupBy("term").agg(sum("ndocs").as("n"))
       val altTotals = readDataset(spark, indexDir, readable, "alt")
@@ -1092,6 +1061,30 @@ object IndexBuilder {
       mismatched.foreach(t => issues += s"alt/primary posting count mismatch: term $t")
     }
     issues.toList
+  }
+
+  /** Block-header violations of one chunk row: an empty row, a block with
+    * n <= 0 or firstDoc > lastDoc, or blocks out of key order. The alt
+    * layout's key slot holds addons, so there a block may start at its
+    * predecessor's last key (equal addons are legal); docIds may not.
+    */
+  private def headerIssues(r: PostingRow, alt: Boolean): Iterator[String] = {
+    val label = if (alt) "alt" else "term"
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    if (r.blocks.isEmpty) out += s"$label ${r.term}: empty chunk"
+    r.blocks.foreach { b =>
+      if (b.n <= 0 || b.firstDoc > b.lastDoc)
+        out += s"$label ${r.term}: bad block header (n=${b.n}, ${b.firstDoc}..${b.lastDoc})"
+    }
+    var i = 1
+    while (i < r.blocks.length) {
+      val first = r.blocks(i).firstDoc
+      val prevLast = r.blocks(i - 1).lastDoc
+      if (alt && first < prevLast) out += s"alt ${r.term}: decreasing blocks at $i"
+      if (!alt && first <= prevLast) out += s"term ${r.term}: non-ascending blocks at $i"
+      i += 1
+    }
+    out.iterator
   }
 
   /** Delete docs by id — the vacuum/bulkdelete path (src/rumvacuum.c):

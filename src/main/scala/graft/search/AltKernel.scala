@@ -127,13 +127,10 @@ object AltKernel extends Serializable {
 
     def cellFor(k: SearchKernel.KeySpec): Array[PostingBlock] =
       cellCache.getOrElseUpdate((k.term, k.prefix), {
-        if (!k.prefix)
-          byTerm.get(k.term).map(merged).getOrElse(Array.empty[PostingBlock])
-        else {
-          val rs = byTerm.keysIterator.filter(_.startsWith(k.term))
-            .flatMap(byTerm(_)).toSeq
-          if (rs.isEmpty) Array.empty[PostingBlock] else mergedUnion(rs)
-        }
+        val rs =
+          if (k.prefix) byTerm.keysIterator.filter(_.startsWith(k.term)).flatMap(byTerm(_)).toSeq
+          else byTerm.get(k.term).map(_.toSeq).getOrElse(Nil)
+        if (rs.isEmpty) Array.empty[PostingBlock] else mergedUnion(rs)
       })
 
     /** Group chunk rows into maximal strictly-ascending runs in
@@ -153,60 +150,29 @@ object AltKernel extends Serializable {
       runs.map(_.toArray).toArray
     }
 
-    private def merged(rs: mutable.ArrayBuffer[PostingRow]): Array[PostingBlock] = {
-      val runs = runsOf(rs.toSeq)
-      // single ascending run (the compacted/bulk-built layout): concatenate
-      if (runs.length == 1) return runs(0).flatMap(_.blocks)
-      // overlapping runs → STREAMING k-way merge of run cursors into the
-      // repack builder: O(runs) decoded blocks live at a time instead of
-      // every posting of every run materialized and sorted (a skewed hot
-      // term between compactions would otherwise hold millions of decoded
-      // tuples on one task). Ties keep the LOWEST run index — run order is
-      // (firstDoc, chunk) arrival order, reproducing the old stable-sort
-      // keep-first dedup.
-      val cursors = runs.map(new RunCur(_))
-      val builder = new PostingListBuilder(allowTies = true)
-      var hasLast = false
-      var lastK = Long.MinValue
-      var lastS = Long.MinValue
-      var live = cursors.count(!_.done)
-      while (live > 0) {
-        var best = -1
-        var i = 0
-        while (i < cursors.length) {
-          val c = cursors(i)
-          if (!c.done && (best < 0 || c.key < cursors(best).key ||
-              (c.key == cursors(best).key && c.sub < cursors(best).sub)))
-            best = i
-          i += 1
-        }
-        val c = cursors(best)
-        if (!(hasLast && c.key == lastK && c.sub == lastS)) {
-          builder.add(c.key, c.tf, c.len, c.rawPos, c.sub)
-          hasLast = true; lastK = c.key; lastS = c.sub
-        }
-        c.step()
-        if (c.done) live -= 1
-      }
-      builder.result()
-    }
-
-    /** Prefix expansion: union ALL matching terms' entries; equal
-      * (addon, docId) composites merge their payloads — tf sums, position
-      * lists interleave — exactly the primary path's UnionCursor semantics
-      * (rum_ts_join_pos, src/rum_ts_utils.c:1564-1645). Streaming k-way
-      * merge over per-(term, run) cursors ordered by (term, run): at a tie
-      * composite the first cursor of each term wins (keep-first per term —
-      * overlapping micro-segments re-ship the same entry and must not
-      * inflate tf), and terms contribute in ascending-term order exactly
-      * like the old (key, sub, term) sort.
+    /** One key's cell: the union of ALL its terms' entries (one term for
+      * an exact key, every expansion for a prefix); equal (addon, docId)
+      * composites merge their payloads — tf sums, position lists
+      * interleave — exactly the primary path's UnionCursor semantics
+      * (rum_ts_join_pos, src/rum_ts_utils.c:1564-1645).
+      *
+      * A single ascending run (the compacted/bulk-built layout of one term)
+      * is its blocks concatenated. Otherwise: STREAMING k-way merge over
+      * per-(term, run) cursors ordered by (term, run) into the repack
+      * builder — O(runs) decoded blocks live at a time, so a skewed hot
+      * term between compactions never materializes all its postings on one
+      * task. At a tie composite the first cursor of each term wins (keep-
+      * first per term: overlapping micro-segments re-ship the same entry
+      * and must not inflate tf; run order is (firstDoc, chunk) arrival
+      * order), and terms contribute in ascending-term order.
       */
     private def mergedUnion(rs: Seq[PostingRow]): Array[PostingBlock] = {
-      val byT = rs.groupBy(_.term).toSeq.sortBy(_._1)
+      val runs = rs.groupBy(_.term).toSeq.sortBy(_._1).map(t => runsOf(t._2))
+      if (runs.length == 1 && runs(0).length == 1) return runs(0)(0).flatMap(_.blocks)
       val cursors = mutable.ArrayBuffer.empty[RunCur]
       val termIdx = mutable.ArrayBuffer.empty[Int]
-      byT.zipWithIndex.foreach { case ((_, rows), ti) =>
-        runsOf(rows).foreach { run =>
+      runs.zipWithIndex.foreach { case (termRuns, ti) =>
+        termRuns.foreach { run =>
           cursors += new RunCur(run)
           termIdx += ti
         }
@@ -233,8 +199,9 @@ object AltKernel extends Serializable {
             at += i
           i += 1
         }
-        if (at.length == 1) {
-          val c = cursors(at(0))
+        if (termIdx(at.head) == termIdx(at.last)) {
+          // one term at this composite: its first run's entry, as stored
+          val c = cursors(at.head)
           builder.add(k, c.tf, c.len, c.rawPos, s)
         } else {
           // union the tie composite: sum tf over DISTINCT terms (first run

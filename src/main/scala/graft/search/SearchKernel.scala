@@ -377,15 +377,10 @@ object SearchKernel extends Serializable {
       termRuns(t).map(run => new PostingCursor(run.iterator))
   }
 
-  /** Build one cursor per query key from the shard's posting rows.
+  /** Build one cursor per query key over a pre-grouped [[ShardView]] — the
+    * fused-msearch path shares one view across every spec in the batch.
     * Chunk rows of one term are ordered by their first docId (disjoint
     * ranges by construction — the builder splits long terms by docId range).
-    */
-  def buildCursors(keys: Array[KeySpec], rows: Iterator[PostingRow]): Array[KeyCursor] =
-    buildCursors(keys, new ShardView(rows))
-
-  /** [[buildCursors]] over a pre-grouped [[ShardView]] — the fused-msearch
-    * path shares one view across every spec in the batch.
     */
   def buildCursors(keys: Array[KeySpec], view: ShardView): Array[KeyCursor] = {
     def termCursor(t: String): KeyCursor = {
@@ -525,7 +520,7 @@ object SearchKernel extends Serializable {
                     rows: Iterator[PostingRow], score: Boolean, matchOnly: Boolean,
                     k: Int, method: Int = 0, scoreCq: CompiledQuery = null,
                     scoreMap: Array[Int] = null): Iterator[(Long, Double, Long)] = {
-    val cursors = buildCursors(keys, rows)
+    val cursors = buildCursors(keys, new ShardView(rows))
     val addons = mutable.LongMap.empty[Long] // populated lazily per candidate
     val lens = mutable.LongMap.empty[Int]
     val uniqs = mutable.LongMap.empty[Int]

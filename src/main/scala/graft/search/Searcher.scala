@@ -1427,7 +1427,7 @@ object Searcher {
   val MaxCachedPlans = 4096
 
   /** Collision-safe cache key for one msearch spec: a variant tag + the
-    * structured constructor fields joined on \u0001, terminated by \u0002.
+    * structured constructor fields as one self-delimiting [[key]].
     * (Keying on case-class toString would render Bm25(Seq("a, b"), k) and
     * Bm25(Seq("a", "b"), k) identically -- two different batches could then
     * share a cache slot and return the wrong cached plan.)
@@ -1471,11 +1471,13 @@ object Searcher {
           java.lang.Double.doubleToRawLongBits(hi).toString)
       case MatchEmpty(f) => key("ME", f.getOrElse(""))
       case CountEmpty(f) => key("KE", f.getOrElse(""))
-    }) + "\u0002"
+    })
   }
 
-  /** Collision-free cache key: args joined on \u0001 (cannot appear in
-    * tsquery strings, terms, or rendered numbers).
+  /** Collision-free cache key: each arg length-prefixed after a \u0001 tag
+    * boundary. No separator alone would do: terms may hold any character,
+    * and every multi-column term holds \u0001 (`IndexBuilder.FieldSep`).
     */
-  private def key(parts: String*): String = parts.mkString("\u0001", "\u0001", "")
+  private def key(parts: String*): String =
+    parts.map(p => s"${p.length}:$p").mkString("\u0001", "", "")
 }

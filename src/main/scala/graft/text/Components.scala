@@ -22,11 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  // env-gated diagnostics (stderr): per-phase wall + iteration count
-  private def dbg(msg: => String): Unit =
-    if (sys.env.contains("SPARK_GRAFT_COMPONENTS_DEBUG"))
-      System.err.println(s"[components] $msg")
-
   /** `edges`: undirected pair list (aCol, bCol). `allDocs`/`docCol`:
     * the full vertex universe — docs without any pair are emitted with
     * rep = self. Returns (doc_id, rep).
@@ -34,7 +29,6 @@ object Components {
   def components(edges: DataFrame, aCol: String, bCol: String,
                  allDocs: DataFrame, docCol: String,
                  maxIters: Int = 50): DataFrame = {
-    val tEntry = System.nanoTime()
     // truncate the INPUT's logical plan first (lazy checkpoint, guide §7.3):
     // the edge list is typically the tail of a deep candidate→verify chain,
     // and persist() alone does NOT truncate logical plans — without this,
@@ -71,14 +65,10 @@ object Components {
       val v = df.agg(sum(col("rep").cast("decimal(38,0)"))).head().getDecimal(0)
       if (v == null) java.math.BigDecimal.ZERO else v
     }
-    val tInit = System.nanoTime()
-    dbg(f"entry→init (plan construction): ${(tInit - tEntry) / 1e9}%.3fs")
     var prevSum = repSum(labels)
-    dbg(f"init labels+sum: ${(System.nanoTime() - tInit) / 1e9}%.3fs")
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
-      val tIter = System.nanoTime()
       // neighbor minimum per vertex, then take min(self, neighbors),
       // then pointer-jump through the current rep (path halving: the
       // rep's own rep is in the same component, so the label chain
@@ -100,7 +90,6 @@ object Components {
       prevSum = s
       labels = next
       iter += 1
-      dbg(f"iter $iter: ${(System.nanoTime() - tIter) / 1e9}%.3fs converged=$converged")
     }
     sym.unpersist()
     // exhausting maxIters without reaching the fixpoint would mean emitting
@@ -141,20 +130,15 @@ object Components {
   def componentsStar(edges: DataFrame, aCol: String, bCol: String,
                      allDocs: DataFrame, docCol: String,
                      maxIters: Int = 50): DataFrame = {
-    val tEntry = System.nanoTime()
     val e0 = edges.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .where(col("u") =!= col("v"))
     // lazy checkpoint: the isEmpty probe below materializes it in one job
     var cur = e0.select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
       .distinct().localCheckpoint(false)
-    val tInit = System.nanoTime()
-    dbg(f"star entry→init (plan construction): ${(tInit - tEntry) / 1e9}%.3fs")
     var converged = cur.isEmpty
-    dbg(f"star init edges: ${(System.nanoTime() - tInit) / 1e9}%.3fs")
     var iter = 0
     while (!converged && iter < maxIters) {
-      val tIter = System.nanoTime()
       // large-star over the symmetrized neighborhood of u
       val sym = cur.union(cur.select(col("v").as("u"), col("u").as("v")))
       val mLarge = sym.groupBy("u")
@@ -186,7 +170,6 @@ object Components {
         .isEmpty
       cur = next
       iter += 1
-      dbg(f"star iter $iter: ${(System.nanoTime() - tIter) / 1e9}%.3fs converged=$converged")
     }
     require(converged,
       s"componentsStar did not converge within $maxIters iterations; " +

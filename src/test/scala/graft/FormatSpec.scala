@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.build.{IndexBuilder, SegmentCatalog}
+import graft.build.{IndexBuilder, PostingRow, SegmentCatalog}
 import graft.search.Searcher
 
 /** On-disk format discipline: down-versioned manifests are refused with a
@@ -130,6 +130,51 @@ class FormatSpec extends AnyFunSuite {
       IndexBuilder.Params(nShards = 2, attach = Some("w"), altOrder = true))
     assert(IndexBuilder.validate(spark, dirty)
       .exists(_.contains("alt/primary posting count mismatch")))
+  }
+
+  test("validate checks block headers: alt ties pass, reordered blocks are flagged") {
+    val dir = java.nio.file.Files.createTempDirectory("fmthdr").toString
+    // addon i / 25 under 8-posting blocks: inside a tie group an alt block
+    // starts at its predecessor's last addon, which is legal there only
+    val docs = (0 until 200).map(i => (i.toLong, s"common w${i % 3}", (i / 25).toLong))
+    IndexBuilder.build(spark, docs.toDF("id", "t", "w"), "id", "t", dir,
+      IndexBuilder.Params(nShards = 2, blockSize = 8, attach = Some("w"), altOrder = true))
+    assert(IndexBuilder.validate(spark, dir) === Nil)
+
+    // rewrite the first listed file of a layout with `fix` applied per row
+    val meta = SegmentCatalog.load(dir).get
+    def rewrite(kind: String, base: String)(fix: PostingRow => PostingRow): Unit = {
+      val file = java.nio.file.Paths.get(base, meta.dataFiles(kind).head)
+      val onDisk = spark.read.parquet(file.toString).columns
+      val rows = spark.read.option("basePath", base)
+        .schema(org.apache.spark.sql.Encoders.product[PostingRow].schema)
+        .parquet(file.toString).as[PostingRow].collect().map(fix)
+      val tmp = java.nio.file.Files.createTempDirectory("fmthdrw").resolve("out").toString
+      rows.toSeq.toDS().select(onDisk.toSeq.map(org.apache.spark.sql.functions.col): _*)
+        .coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath, file,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      // the old checksum no longer matches: drop it so the read skips it
+      java.nio.file.Files.deleteIfExists(file.resolveSibling(s".${file.getFileName}.crc"))
+    }
+    def reversed(r: PostingRow): PostingRow =
+      if (r.term == "common") r.copy(blocks = r.blocks.reverse) else r
+    rewrite("postings", SegmentCatalog.postingsDir(dir)) { r =>
+      // w0's second block starts at the first one's last docId: a tie the
+      // primary layout must flag
+      if (r.term == "w0")
+        r.copy(blocks = r.blocks.updated(1, r.blocks(1).copy(firstDoc = r.blocks(0).lastDoc)))
+      else reversed(r)
+    }
+    rewrite("alt", SegmentCatalog.altDir(dir))(reversed)
+
+    val issues = IndexBuilder.validate(spark, dir)
+    assert(issues.contains("term w0: non-ascending blocks at 1"), issues)
+    assert(issues.exists(_.startsWith("term common: non-ascending blocks at ")), issues)
+    assert(issues.exists(_.startsWith("alt common: decreasing blocks at ")), issues)
+    assert(issues.forall(i => i.contains("non-ascending blocks") || i.contains("decreasing blocks")),
+      issues)
   }
 
   test("duplicate docId with differing addon in one partition: keep-first, no crash") {

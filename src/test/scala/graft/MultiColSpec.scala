@@ -86,6 +86,11 @@ class MultiColSpec extends AnyFunSuite {
     // bare terms on the term-based APIs would silently miss prefixed keys
     assert(intercept[IllegalArgumentException](
       searcher.topKBm25(Seq("alpha"), 3).collect()).getMessage.contains("fieldKey"))
+    // fieldKey joins field and term on \u0001: a cached field-scoped plan
+    // must not answer for its split parts, which stay bare terms
+    searcher.topKBm25(Seq(IndexBuilder.fieldKey("body", "alpha")), 3)
+    assert(intercept[IllegalArgumentException](
+      searcher.topKBm25(Seq("body", "alpha"), 3).collect()).getMessage.contains("fieldKey"))
   }
 
   /** multicol index with attach + alt-order layout for ordered scans, and

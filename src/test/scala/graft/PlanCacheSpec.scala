@@ -40,6 +40,16 @@ class PlanCacheSpec extends AnyFunSuite {
     val s = new Searcher(spark, idxDir)
     // ("ab","c") vs ("a","bc") — same chars, different splits
     assert(!(s.topKBm25(Seq("ab", "c"), 5) eq s.topKBm25(Seq("a", "bc"), 5)))
+    // a term may hold any character, the multi-column separator included:
+    // ("alpha\u0001merge") vs ("alpha", "merge") must not share a slot
+    val joined = s.topKBm25(Seq("alpha\u0001merge"), 5)
+    val split = s.topKBm25(Seq("alpha", "merge"), 5)
+    assert(!(joined eq split))
+    assert(joined.count() === 0L)
+    assert(split.count() === 5L)
+    import Searcher.MsearchSpec.Bm25
+    assert(!(s.msearch(Seq(Bm25(Seq("alpha\u0001merge"), 5))) eq
+      s.msearch(Seq(Bm25(Seq("alpha", "merge"), 5)))))
   }
 
   test("repeat executions of a cached plan return correct, stable results") {
