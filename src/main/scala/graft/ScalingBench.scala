@@ -242,9 +242,11 @@ object ScalingBench {
          |
          |## Prepared-query serving path (plan cache + materialized-stage reuse)
          |
-         |Repeated queries hit the Searcher plan cache AND Spark's AQE
+         |Repeated queries hit the Searcher plan cache, and plans with an
+         |exchange (counts, multi-branch batches) also hit Spark's AQE
          |materialized-stage reuse (re-collecting a cached Dataset re-runs
-         |only its final stage over existing shuffle output), so these
+         |only its final stage over existing shuffle output); one-slot top-k
+         |and match plans have no exchange and re-read their shards. These
          |numbers describe the HOT serving path — latency, not dataflow
          |scaling. No efficiency claim is made on them: their bottleneck is
          |driver dispatch + reuse bookkeeping, both fixed-size components

@@ -200,6 +200,16 @@ object IndexBuilder {
                   kind: String): DataFrame =
     readFiles(spark, datasetDir(indexDir, kind), meta.dataFiles.get(kind), schemaOf(kind))
 
+  /** A dataset's committed parquet files as (directory, paths relative to
+    * it): the manifest listing, or the directory's files for a legacy
+    * manifest.
+    */
+  private[graft] def dataFiles(indexDir: String, meta: IndexMeta,
+                               kind: String): (String, List[String]) = {
+    val dir = datasetDir(indexDir, kind)
+    (dir, meta.dataFiles.getOrElse(kind, listParquet(dir)))
+  }
+
   private def readFiles(spark: SparkSession, dir: String, files: Option[List[String]],
                         schema: org.apache.spark.sql.types.StructType): DataFrame =
     files match {

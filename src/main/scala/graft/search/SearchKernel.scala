@@ -7,7 +7,7 @@ import graft.core.{PostingBlock, PostingCursor}
 import graft.query._
 
 /** Per-shard merge/score kernels. Pure Scala over compressed posting
-  * blocks; runs inside mapGroups/cogroup tasks.
+  * blocks; runs in the task that read the shard ([[ShardScan]]).
   */
 object SearchKernel extends Serializable {
 

@@ -14,11 +14,12 @@ import graft.query._
   *      the entry-tree descent (reference: src/rumget.c:536-696
   *      startScanEntry); partition/row-group pruning stands in for the
   *      B-tree.
-  *   2. groupByKey(shard) → per-shard typed merge kernel — the k-way
-  *      posting merge + consistency check (src/rumget.c:1426-1568
-  *      scanGetItemRegular) with prefix expansion as positional union
-  *      (src/rumget.c:1124-1296 entryGetItem + rum_ts_join_pos).
-  *      Only the query terms' postings move in the shuffle.
+  *   2. per-shard typed merge kernel, run in place by the task that read
+  *      the shard ([[ShardScan]]: whole shards per task, no Exchange
+  *      below the kernel) — the k-way posting merge + consistency check
+  *      (src/rumget.c:1426-1568 scanGetItemRegular) with prefix expansion
+  *      as positional union (src/rumget.c:1124-1296 entryGetItem +
+  *      rum_ts_join_pos). Only kernel output leaves the task.
   *   3. scores computed inside the kernel from payloads (positions) —
   *      index-side ordering, the defining RUM capability (README.md:80-136)
   *   4. per-shard top-k heap → global top-k. Every solo query, ordered
@@ -46,10 +47,6 @@ final class Searcher(spark: SparkSession, indexDir: String,
   // zero-file layouts (buildempty) stay readable.
   private lazy val postings: Dataset[PostingRow] =
     graft.build.IndexBuilder.readDataset(spark, indexDir, meta, "postings").as[PostingRow]
-
-  /** (addon, docId)-ordered posting copy (order_by_attach layout). */
-  private lazy val altPostings: Dataset[PostingRow] =
-    graft.build.IndexBuilder.readDataset(spark, indexDir, meta, "alt").as[PostingRow]
 
   private lazy val docs: Dataset[DocRow] =
     graft.build.IndexBuilder.readDataset(spark, indexDir, meta, "docs")
@@ -95,19 +92,52 @@ final class Searcher(spark: SparkSession, indexDir: String,
     }
   }
 
-  /** term predicate for the parquet scan — exact terms via IN (dictionary/
-    * stats pruning), prefixes via range [p, p+MAXCHAR).
+  /** One dataset's committed files by shard, statted once per Searcher
+    * (the snapshot is immutable).
     */
-  private def termPredicate(cq: CompiledQuery): Column = {
-    val exact = cq.keys.filter(!_.prefix).map(_.term).distinct
-    val prefixes = cq.keys.filter(_.prefix).map(_.term).distinct
-    val preds = scala.collection.mutable.ArrayBuffer.empty[Column]
-    if (exact.nonEmpty) preds += col("term").isin(exact: _*)
-    prefixes.foreach { p =>
-      preds += (col("term") >= p && col("term") < (p + "￿"))
-    }
-    preds.reduceOption(_ || _).getOrElse(lit(false))
+  private def shardFiles(kind: String): (String, Map[Int, Seq[ShardScan.File]]) = {
+    val (dir, rel) = graft.build.IndexBuilder.dataFiles(indexDir, meta, kind)
+    val conf = spark.sessionState.newHadoopConf()
+    val byShard = rel.map { f =>
+      val shard = Searcher.ShardDir.findFirstMatchIn(f).map(_.group(1).toInt)
+        .getOrElse(throw new IllegalStateException(s"$dir/$f: not under a shard=N directory"))
+      require(shard < meta.nShards, s"$dir/$f: shard $shard of ${meta.nShards}")
+      val path = new org.apache.hadoop.fs.Path(s"$dir/$f")
+      val st = path.getFileSystem(conf).getFileStatus(path)
+      shard -> ShardScan.File(st.getPath.toString, st.getLen, st.getModificationTime)
+    }.groupBy(_._1).map { case (s, fs) => s -> fs.map(_._2).sortBy(_.path) }
+    (dir, byShard)
   }
+  private lazy val postingFiles = shardFiles("postings")
+  /** (addon, docId)-ordered posting copy (order_by_attach layout). */
+  private lazy val altFiles = shardFiles("alt")
+  private lazy val docFiles = shardFiles("docs")
+
+  /** `kernel` run shard-locally over its layout: whole shards packed into
+    * min(p, nShards) tasks, p = the shuffle width (the build's
+    * `IndexBuilder.shardRouting` rule).
+    */
+  private def shardScan(kernel: ShardKernel): DataFrame = {
+    val (dir, files) = if (kernel.layout == "alt") altFiles else postingFiles
+    val docs = if (kernel.readsDocs) Some(docFiles) else None
+    val nPart = math.min(spark.sessionState.conf.numShufflePartitions, meta.nShards)
+    val groups = (0 until nPart).map(i => (i until meta.nShards by nPart).map(s =>
+      ShardScan.Shard(s, files.getOrElse(s, Nil),
+        docs.fold(Seq.empty[ShardScan.File])(_._2.getOrElse(s, Nil)))))
+    ShardScan.frame(spark, kernel, ShardScan.Read(dir, docs.map(_._1), groups))
+  }
+
+  /** Each branch's rows of one kernel scan, `branches` = the slots of each
+    * branch. One live branch reads the scan itself. Several select their
+    * slots behind ONE shared exchange of kernel output, which Spark runs
+    * once and reuses, so a batch reads each layout once.
+    */
+  private def branchRows(scan: DataFrame, branches: Seq[Seq[Int]]): Seq[DataFrame] =
+    if (branches.count(_.nonEmpty) <= 1) branches.map(_ => scan)
+    else {
+      val shared = scan.repartition(col("qi"))
+      branches.map(qis => ShardScan.slotRows(shared, qis))
+    }
 
   /** identity for text keys; FNV-1a hex for hash-keyed indexes
     * (rum_extract_tsquery_hash, src/rum_ts_utils.c:757-787). On a
@@ -413,8 +443,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * numeric-facet serving shape): `WHERE t @@ q AND lo <= addon <= hi
     * GROUP BY bucket`, bucket = lo + floor((addon-lo)/width)·width.
     * Served from the alt-order layout as a BOUNDED ordered scan whose
-    * kernel collapses each shard to at most one row per bucket — shuffle
-    * volume is buckets × shards regardless of match count, the same
+    * kernel collapses each shard to at most one row per bucket — the rows
+    * shipped are buckets × shards regardless of match count, the same
     * partial-shipping shape as fused counts. The fallback groups the
     * match+addon stream (addons ride the posting payload, no corpus
     * join), which Spark partial-aggregates map-side. Only non-empty
@@ -671,19 +701,21 @@ final class Searcher(spark: SparkSession, indexDir: String,
   }
 
   /** FUSED multi-search: evaluate a heterogeneous batch of queries in ONE
-    * scan + ONE shuffle (the shared-scan msearch a serving tier runs when
-    * individual queries are millisecond-scale). The union of all specs'
-    * term predicates is pushed to a single postings scan; each shard's rows
-    * buffer once and every spec's kernel (boolean match / WAND BM25 /
-    * cover-rank, all with their usual per-shard pruning) replays them —
-    * extra terms from sibling specs are invisible to a kernel because
-    * cursor construction matches exactly its own keys. Global per-spec
-    * top-k then runs over ONLY the shard-pruned rows of bounded specs
-    * (≤ k·nShards rows each): per layout, one bounded slot takes an
-    * ordered limit (TakeOrderedAndProject), several share a row_number
-    * window per qi. A shared repartition barrier lets both the bounded and
-    * unbounded branches reuse one kernel execution, and match specs never
-    * pass through a sort. Every solo query, ordered scans included, is a
+    * shard-local read per layout (the shared-scan msearch a serving tier
+    * runs when individual queries are millisecond-scale). The union of all
+    * specs' term predicates is pushed to the read; each task reads whole
+    * shards ([[ShardScan]]), buffers one shard's rows at a time, and every
+    * spec's kernel (boolean match / WAND BM25 / cover-rank, all with their
+    * usual per-shard pruning) replays them in place — no Exchange below
+    * the kernel, and extra terms from sibling specs are invisible to a
+    * kernel because cursor construction matches exactly its own keys.
+    * Global per-spec top-k then runs over ONLY the shard-pruned rows of
+    * bounded specs (≤ k·nShards rows each): per layout, one bounded slot
+    * takes an ordered limit (TakeOrderedAndProject, no shuffle), several
+    * share a row_number window per qi. When bounded, match and count
+    * branches read one layout, they share ONE exchange of kernel output
+    * that Spark executes once, and match specs never pass through a sort.
+    * Every solo query, ordered scans included, is a
     * one-slot batch of this plan ([[topKMulti]] orders the rows of a
     * one-slot Match plan). Per-batch driver cost is one plan over one
     * subtree instead of N — the serial component that would otherwise
@@ -693,8 +725,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * (top-k, lower better), exact saturating addon distance for Addon
     * (top-k, lower better), exact double value-units distance for
     * AddonFloat. Ordered-scan slots (Addon/AddonRange and their float
-    * value-units twins) run over the alt-order layout's OWN shared scan —
-    * a heterogeneous batch costs one scan per layout it touches. Void
+    * value-units twins) run over the alt-order layout's OWN shared read —
+    * a heterogeneous batch costs one read per layout it touches. Void
     * specs contribute no rows; full-scan-only and alt-unservable specs
     * fall back to their own plans, unioned in.
     */
@@ -914,76 +946,35 @@ final class Searcher(spark: SparkSession, indexDir: String,
         if (fused.isEmpty) (Nil, None)
         else {
           val fs = fused.toArray
-          // ONE predicate over the union of every spec's terms: both kernel
-          // branches below share an IDENTICAL scan+shuffle subtree, which
-          // Spark's exchange reuse executes once (MsearchFusedSpec asserts
-          // the ReusedExchange). Each branch's kernel then evaluates only its
-          // own specs over the buffered shard rows — no duplicated kernel
-          // work, and sibling specs' terms are invisible to a kernel because
-          // cursor construction matches exactly its own keys.
-          val pred = fs.map { f =>
-            if (f.mode == 2) col("term").isin(f.terms.toSeq: _*)
-            else termPredicate(f.cq)
-          }.reduce(_ || _)
-          val nDocs = meta.numDocs
-          val avgLen = meta.avgLen
-          val base = postings.where(pred).groupByKey(_.shard)
-          def kernel(specsArr: Array[Searcher.FusedSpec]): DataFrame =
-            base.flatMapGroups { (shard: Int, it: Iterator[PostingRow]) =>
-              // group the shard's rows by term ONCE; every spec's cursor
-              // construction then touches only its own terms' entries —
-              // per-spec setup is O(spec terms), not O(specs × union rows)
-              val view = new SearchKernel.ShardView(it)
-              specsArr.iterator.flatMap { f =>
-                f.mode match {
-                  // match (k = 0: every match) and cover top-k; the row
-                  // carries the payload addon of the matched posting
-                  case 0 | 1 => SearchKernel.matchShard(f.cq, f.keys, view,
-                      score = f.rank, k = f.k, method = f.method,
-                      scoreCq = f.scoreCq, scoreMap = f.scoreMap)
-                    .map(t => (f.qi, t._1, t._2, t._2, 0L, t._3))
-                  case 2 => SearchKernel.wandShard(f.terms, f.dfs, f.ubs, nDocs,
-                      avgLen, f.k, view)
-                    .map { case (id, s) => (f.qi, id, s, -s, 0L, 0L) } // sort asc = score desc
-                  // per-shard PARTIAL count: one row per (slot, shard); the
-                  // match set never leaves the shard
-                  case 3 =>
-                    var n = 0L
-                    val m = SearchKernel.matchShard(f.cq, f.keys, view,
-                      score = false, k = 0)
-                    while (m.hasNext) { m.next(); n += 1 }
-                    Iterator.single((f.qi, n, 0.0, 0.0, 0L, 0L))
-                  // composite (rank, addonDist, docId): per-shard heap pruned
-                  // on the FULL tuple; sort2 carries the EXACT long addon
-                  // distance so the global window tie-breaks losslessly
-                  case _ => SearchKernel.order2Shard(f.cq, f.keys, view, f.c,
-                      f.op, f.k, f.method)
-                    .map { case (id, r, d2) => (f.qi, id, r, r, d2, 0L) }
-                }
-              }
-            }.toDF("qi", "docId", "score", "sort", "sort2", "addon")
+          // ONE read for every slot: the pushed predicate is the union of
+          // the slots' terms, and each slot's kernel matches exactly its
+          // own keys, so sibling slots' terms are invisible to it
+          val terms = fs.map(f =>
+            if (f.mode == 2) TermSet(f.terms.toSeq, Nil) else TermSet.of(f.cq)).reduce(_ ++ _)
           val bounded = fs.filter(f => f.mode != 0 && f.mode != 3)
           val unbounded = fs.filter(_.mode == 0)
           val counts = fs.filter(_.mode == 3)
+          val Seq(boundedRows, unboundedRows, countRows) = branchRows(
+            shardScan(ShardKernel.Primary(fs, meta.numDocs, meta.avgLen, terms)),
+            Seq(bounded, unbounded, counts).map(_.map(_.qi).toSeq))
           // bounded specs: per-shard heaps already pruned to ≤ k·nShards rows
           // each, so the global top-k touches only those; match specs stream
           // through their own branch, never sorted. No caller reads a
           // bounded slot's addon, so it stays out of the top-k's rows
           val boundedPart =
             if (bounded.isEmpty) None
-            else Some(Searcher.topKTail(kernel(bounded).drop("addon"),
+            else Some(Searcher.topKTail(boundedRows.drop("addon"),
               bounded.map(f => (f.qi, f.k)).toSeq,
               Seq(col("sort").asc, col("sort2").asc, col("docId").asc),
               Seq(col("qi"), col("docId"), col("score"), lit(0L).as("addon"))))
           val unboundedPart =
             if (unbounded.isEmpty) None
-            else Some(kernel(unbounded).select("qi", "docId", "score", "addon"))
-          // count slots share the same scan+shuffle subtree (reused
-          // exchange); their per-shard partials are aggregated below with
-          // the spine and any full-scan fallbacks
+            else Some(unboundedRows.select("qi", "docId", "score", "addon"))
+          // count slots: per-shard partials, aggregated below with the
+          // spine and any full-scan fallbacks
           val countPart =
             if (counts.isEmpty) None
-            else Some(kernel(counts).select(col("qi"), col("docId").as("partial")))
+            else Some(countRows.select(col("qi"), col("docId").as("partial")))
           ((boundedPart ++ unboundedPart).toSeq, countPart)
         }
       val countsPart: Option[DataFrame] =
@@ -996,70 +987,46 @@ final class Searcher(spark: SparkSession, indexDir: String,
             .select(col("qi"), col("cnt").as("docId"),
               col("cnt").cast("double").as("score"), lit(0L).as("addon")))
         }
-      // ordered-scan slots: ONE alt-layout scan + shuffle for the whole
-      // batch, mirroring the primary fused pass — bounded (top-k) and range
-      // branches share the exchange; per-shard ShardCells merges each term's
-      // runs once across every spec that touches it
+      // ordered-scan slots: ONE alt-layout read for the whole batch,
+      // mirroring the primary pass; per-shard ShardCells merges each term's
+      // runs once across every slot that touches it
       val altParts: Seq[DataFrame] =
         if (altFused.isEmpty) Nil
         else {
           val afs = altFused.toArray
-          val pred = afs.map(f => termPredicate(f.cq)).reduce(_ || _)
-          val altBase = altPostings.where(pred).groupByKey(_.shard)
-          def altKernel(specsArr: Array[Searcher.AltFusedSpec]): DataFrame =
-            altBase.flatMapGroups { (shard: Int, it: Iterator[PostingRow]) =>
-              val cells = new AltKernel.ShardCells(it)
-              specsArr.iterator.flatMap { f =>
-                if (f.mode == 0)
-                  AltKernel.topKAddonShard(f.cq, f.keys, cells, f.c, f.op, f.k,
-                      f.floatUnits)
-                    .rows.iterator.map(t => (f.qi, t._1, t._2, t._3))
-                else if (f.mode == 1)
-                  AltKernel.rangeAddonShard(f.cq, f.keys, cells, f.lo, f.hi)
-                    .map { case (d, a) => (f.qi, d, 0L, a) }
-                // mode 2: per-shard facet partials (c = bucket width; float
-                // slots bucket in VALUE space and emit the start's bit image)
-                else if (!f.floatUnits)
-                  AltKernel.facetShard(f.cq, f.keys, cells, f.c, f.lo, f.hi)
-                    .map { case (b, n) => (f.qi, b, n, 0L) }
-                else
-                  AltKernel.facetShardFloat(f.cq, f.keys, cells,
-                      graft.build.AddonUnits.floatFromOrderedBits(f.c),
-                      graft.build.AddonUnits.floatFromOrderedBits(f.lo),
-                      f.lo, f.hi)
-                    .map { case (b, n) => (f.qi, b, n, 0L) }
-              }
-            }.toDF("qi", "docId", "dist", "addon")
           val bounded = afs.filter(_.mode == 0)
           val unbounded = afs.filter(_.mode == 1)
           val facets = afs.filter(_.mode == 2)
+          val Seq(boundedRows, unboundedRows, facetRows) = branchRows(
+            shardScan(ShardKernel.Alt(afs, afs.map(f => TermSet.of(f.cq)).reduce(_ ++ _))),
+            Seq(bounded, unbounded, facets).map(_.map(_.qi).toSeq))
           val boundedPart =
             if (bounded.isEmpty) None
             else {
-              // ordering/limit on the exact long distance; float-units slots
-              // rank on the double distance's bit image (order-preserving)
-              // and decode only the surviving rows back to the exact double
+              // ordering/limit on the exact long distance (sort2); float-
+              // units slots rank on the double distance's bit image
+              // (order-preserving) and decode only the surviving rows back
+              // to the exact double
               val floatQis = bounded.filter(_.floatUnits).map(_.qi).toSeq
               val score =
-                if (floatQis.isEmpty) col("dist").cast("double")
+                if (floatQis.isEmpty) col("sort2").cast("double")
                 else when(col("qi").isInCollection(floatQis),
-                    Searcher.longBitsToDouble(col("dist")))
-                  .otherwise(col("dist").cast("double"))
-              Some(Searcher.topKTail(altKernel(bounded), bounded.map(f => (f.qi, f.k)).toSeq,
-                Seq(col("dist").asc, col("docId").asc),
+                    Searcher.longBitsToDouble(col("sort2")))
+                  .otherwise(col("sort2").cast("double"))
+              Some(Searcher.topKTail(boundedRows, bounded.map(f => (f.qi, f.k)).toSeq,
+                Seq(col("sort2").asc, col("docId").asc),
                 Seq(col("qi"), col("docId"), score.as("score"), col("addon"))))
             }
           val unboundedPart =
             if (unbounded.isEmpty) None
-            else Some(altKernel(unbounded)
+            else Some(unboundedRows
               .select(col("qi"), col("docId"), lit(0.0).as("score"), col("addon")))
           // facet slots: final sum over the per-shard bucket partials (rows
-          // shuffled here = buckets × shards per slot, never the matches);
-          // shares the batch's alt scan via exchange reuse like the others
+          // shipped = buckets × shards per slot, never the matches)
           val facetPart =
             if (facets.isEmpty) None
-            else Some(altKernel(facets)
-              .groupBy("qi", "docId").agg(sum("dist").as("cnt"))
+            else Some(facetRows
+              .groupBy("qi", "docId").agg(sum("sort2").as("cnt"))
               .select(col("qi"), col("docId"),
                 col("cnt").cast("double").as("score"), lit(0L).as("addon")))
           (boundedPart ++ unboundedPart ++ facetPart).toSeq
@@ -1071,10 +1038,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
   }
 
   /** Fused count-serving: match counts for a batch of tsquery strings in
-    * ONE scan + ONE shuffle of per-shard PARTIAL counts — the full match
-    * sets never leave their shard (map-side aggregation taken to its
-    * limit: the kernel itself collapses each (spec, shard) to one long).
-    * Shuffled rows = nShards × batch size regardless of match counts,
+    * ONE shard-local read whose kernel collapses each (spec, shard) to one
+    * PARTIAL count — the full match sets never leave their task (map-side
+    * aggregation taken to its limit). Only the per-task partial sums of
+    * those partials cross the one Exchange, regardless of match counts,
     * which is what keeps count-heavy serving scaling when individual
     * matches number in the millions. Void queries count 0 (the qi spine
     * guarantees a row per slot); full-scan-only queries fall back to their
@@ -1087,8 +1054,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * sugar over a batch of [[Searcher.MsearchSpec.Count]] slots through
     * the unified fused planner: Count slots emit (qi, docId = cnt), so
     * counts-only batches keep the exact shape this method always had
-    * (one scan + one shuffle of per-shard partials, a spine row per
-    * slot), and mixed match+count batches share ONE scan.
+    * (one read, one Exchange of partial counts, a spine row per slot), and
+    * mixed match+count batches share ONE read.
     */
   def msearchCountsPlan(queryStrs: Seq[String]): DataFrame =
     msearchPlan(queryStrs.map(Searcher.MsearchSpec.Count(_)))
@@ -1162,21 +1129,15 @@ final class Searcher(spark: SparkSession, indexDir: String,
     docs.select(col("docId").as("doc_id"), col("len"))
 
   /** Full-corpus scan joined with order-key postings (scanGetItemFull,
-    * src/rumget.c:2024-2083): candidate stream = docs table per shard,
-    * sorted by docId; posting cursors pulled along for scoring.
+    * src/rumget.c:2024-2083): each task reads its shards' docs rows and
+    * the query keys' postings; the candidate stream is a shard's docs in
+    * docId order, posting cursors pulled along for scoring.
     */
   private def fullScan(cq: CompiledQuery, score: Boolean, matchOnly: Boolean, k: Int,
                        method: Int = 0, scoreCq: CompiledQuery = null,
-                       scoreMap: Array[Int] = null): DataFrame = {
-    val keys = SearchKernel.keySpecs(cq)
-    val docsG = docs.groupByKey(_.shard)
-    val postG = postings.where(termPredicate(cq)).groupByKey(_.shard)
-    docsG.cogroupSorted(postG)(col("docId").asc)(col("term").asc)(
-      (shard: Int, docIt: Iterator[DocRow], postIt: Iterator[PostingRow]) =>
-        SearchKernel.fullScanShard(cq, keys, docIt, postIt, score, matchOnly, k, method,
-          scoreCq, scoreMap))
-      .toDF("docId", "distance", "addon")
-  }
+                       scoreMap: Array[Int] = null): DataFrame =
+    shardScan(ShardKernel.FullScan(cq, score, matchOnly, k, method, scoreCq, scoreMap))
+      .select(col("docId"), col("score").as("distance"), col("addon"))
 }
 
 object Searcher {
@@ -1204,9 +1165,9 @@ object Searcher {
       */
     final case class Order2(query: String, c: Long, op: String, k: Int,
         method: Int = 0) extends MsearchSpec
-    /** match COUNT riding the fused batch: ships only the per-shard
-      * PARTIAL count (the match set never leaves its shard — shuffle
-      * volume for the slot is nShards rows regardless of match count).
+    /** match COUNT riding the fused batch: the kernel emits only the
+      * per-shard PARTIAL count (the match set never leaves its task — the
+      * slot ships at most nShards rows regardless of match count).
       * Emits exactly ONE row per slot even for void/zero-match queries:
       * (qi, docId = the count, score = the count as double).
       * [[Searcher.msearchCounts]] is sugar over a batch of these; mixing
@@ -1291,6 +1252,9 @@ object Searcher {
     /** count of empty/NULL values as a per-shard-partial [[Count]] slot */
     final case class CountEmpty(field: Option[String] = None) extends MsearchSpec
   }
+
+  /** The shard directory of a dataset file's relative path. */
+  private val ShardDir = "(?:^|/)shard=(\\d+)/".r
 
   private[search] def requireFacet(width: Long, lo: Long, hi: Long): Unit = {
     require(width > 0, s"facet width must be positive: $width")

@@ -5,11 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.build.IndexBuilder
 import graft.search.Searcher
 
-/** Fused multi-search (one scan + one shuffle for a heterogeneous query
-  * batch): every slot must return exactly its solo query's rows/scores,
-  * including prefix expansion, void slots, and full-scan fallbacks riding
-  * the same batch; the fused kernel subtree must execute once (shared
-  * exchange), not once per output branch. Solo match, BM25, cover and
+/** Fused multi-search (one shard-local read per layout for a
+  * heterogeneous query batch): every slot must return exactly its solo
+  * query's rows/scores, including prefix expansion, void slots, and
+  * full-scan fallbacks riding the same batch; the kernel read must execute
+  * once (one shared exchange of kernel output), not once per output
+  * branch, and no Exchange may sit below a kernel. Solo match, BM25, cover and
   * facet queries are themselves one-slot batches, so for those shapes the
   * "slot equals its solo query" checks prove only that sibling slots do
   * not interfere; the independent references are brute force in
@@ -31,6 +32,20 @@ class MsearchFusedSpec extends AnyFunSuite {
     sb.append(s"tail${i % 13}")
     sb.toString
   }
+
+  /** The executed plan of a collected frame: AQE's final plan, without
+    * the initial plan it prints below it.
+    */
+  private def finalPlan(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+
+  /** Kernel reads of one layout directory ("postings", "postings_alt") in
+    * a plan string; full scans, which also read docs, are not counted.
+    */
+  private def kernelReads(plan: String, layout: String): Int =
+    s"ShardScan \\S+/$layout \\[".r.findAllIn(plan).size
+  private def fullScans(plan: String): Int =
+    "ShardScan \\S+/postings, Docs: ".r.findAllIn(plan).size
 
   private lazy val searcher: Searcher = {
     val d = java.nio.file.Files.createTempDirectory("msearchidx").toString
@@ -123,10 +138,12 @@ class MsearchFusedSpec extends AnyFunSuite {
     val soloBm25 = searcher.topKBm25(Seq("rare7", "veryrare"), 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(got(6).map(t => (t._2, t._3)).toSet == soloBm25)
-    // the count branch must REUSE the match/bm25 branches' exchange, not
-    // rescan: one scan for the whole mixed batch
-    val plan = df.queryExecution.executedPlan.toString
+    // the count branch must REUSE the match/bm25 branches' exchange of
+    // kernel output, not rescan: one postings read for the whole mixed
+    // batch, plus the full-scan fallback's own read
+    val plan = finalPlan(df)
     assert(plan.contains("Reused"), plan.take(3000))
+    assert(kernelReads(plan, "postings") == 1 && fullScans(plan) == 1, plan.take(3000))
   }
 
   test("CountFields: field-scoped count slots over a multicolumn index") {
@@ -226,8 +243,9 @@ class MsearchFusedSpec extends AnyFunSuite {
       Addon("prefixed:* & even", -200L, "both", 6),
       AddonRange("prefixed:* & even", -2000L, 2000L)))
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = finalPlan(df)
     assert(plan.contains("Reused"), plan.take(3000))
+    assert(kernelReads(plan, "postings_alt") == 1, plan.take(3000))
     // slot correctness under prefix expansion
     val got = altSearcher.msearch(Seq(
       Addon("prefixed:* & even", -200L, "both", 6),
@@ -269,7 +287,9 @@ class MsearchFusedSpec extends AnyFunSuite {
       Addon("even & triple", 0L, "both", 5),
       Facet("even & triple", 500L, -3000L, 3000L)))
     df.collect()
-    assert(df.queryExecution.executedPlan.toString.contains("Reused"))
+    val plan = finalPlan(df)
+    assert(plan.contains("Reused"), plan.take(3000))
+    assert(kernelReads(plan, "postings_alt") == 1, plan.take(3000))
   }
 
   private lazy val floatSearcher: Searcher = {
@@ -452,6 +472,34 @@ class MsearchFusedSpec extends AnyFunSuite {
     assert(!altBatch.contains("TakeOrderedAndProject"), altBatch)
   }
 
+  test("no Exchange below the kernel: each task reads its shards and runs the kernel") {
+    def plan(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString
+    def exchanges(p: String): Int = p.linesIterator.count(_.contains("Exchange "))
+    val bm25 = plan(searcher.topKBm25(Seq("rare7", "veryrare", "tail3"), 7))
+    val cover = plan(searcher.topKCover("common & rare7", 5))
+    val matches = plan(searcher.matchingDocs("even & rare7"))
+    val count = plan(searcher.msearchCounts(Seq("even & triple")))
+    val addon = plan(altSearcher.topKAddon("even & triple", -700L, "both", 7))
+    for ((p, layout) <- Seq(bm25, cover, matches, count).map(_ -> "postings") :+
+         (addon -> "postings_alt")) {
+      // the read and the kernel are one node: no parquet scan, shuffle or
+      // grouping operator feeds a kernel
+      assert(kernelReads(p, layout) == 1, p)
+      assert(!Seq("Scan parquet", "MapGroups", "CoGroup", "AppendColumns").exists(p.contains), p)
+      assert("PushedFilters: \\[[^\\]]*In\\(term, \\[".r.findFirstIn(p).isDefined, p)
+    }
+    // one-slot top-k and match plans move nothing; a count ships only the
+    // per-task partial aggregate of its per-shard partials
+    for (p <- Seq(bm25, cover, matches, addon)) assert(exchanges(p) == 0, p)
+    assert(exchanges(count) == 1, count)
+    val below = count.linesIterator.dropWhile(!_.contains("Exchange ")).drop(1).next()
+    assert(below.contains("HashAggregate") && below.contains("partial_sum"), count)
+    // the order-only cover full scan reads docs and postings in the same task
+    val full = plan(searcher.topKCover("common & rare7", 5, matchOnly = false))
+    assert(fullScans(full) == 1 && exchanges(full) == 0, full)
+  }
+
   test("k <= 0 is rejected at plan time on both layouts, before any job runs") {
     import Searcher.MsearchSpec._
     import Searcher.OrderKey
@@ -512,8 +560,26 @@ class MsearchFusedSpec extends AnyFunSuite {
       Match("even & triple"), Bm25(Seq("rare7", "veryrare"), 3),
       Cover("common & rare7", 4)))
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    println("[msearch plan]\n" + plan)
+    val plan = finalPlan(df)
     assert(plan.contains("Reused"), plan.take(4000))
+    assert(kernelReads(plan, "postings") == 1, plan.take(4000))
+  }
+
+  test("a known batch shape with its slots in new places compiles no new code") {
+    import Searcher.MsearchSpec._
+    // both batches: two top-k slots and two count slots, in other places
+    val a = Seq(Bm25(Seq("rare7", "veryrare"), 3), Count("even & triple"),
+      Cover("common & rare7", 4), Count("tail3 | rare7"))
+    val b = Seq(Count("even & triple"), Bm25(Seq("rare7", "veryrare"), 3),
+      Count("tail3 | rare7"), Cover("common & rare7", 4))
+    val first = searcher.msearchPlan(a).collect()
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val second = searcher.msearchPlan(b).collect()
+    assert(compiles.getCount == before)
+    // the same answers, slot for slot
+    def bySlot(rows: Array[org.apache.spark.sql.Row], qis: Seq[Int]) =
+      qis.map(qi => rows.filter(_.getInt(0) == qi).map(r => (r.getLong(1), r.getDouble(2))).toSet)
+    assert(bySlot(first, Seq(0, 1, 2, 3)) == bySlot(second, Seq(1, 0, 3, 2)))
   }
 }

@@ -153,6 +153,33 @@ class MultiColSpec extends AnyFunSuite {
     assert(gotRange == matches.filter(i => i * 10 >= 1000 && i * 10 <= 1500).map(_.toLong))
   }
 
+  test("countByAddonBucketMulti and FacetFields slots equal brute-force buckets") {
+    // (field queries, matching docs): index-served AND and OR, and a query
+    // only a full scan can answer (its facet falls back to the match plan)
+    val cases = Seq(
+      Seq("title" -> "alpha", "body" -> "common") -> ((i: Int) => i % 3 == 0),
+      Seq("title" -> "beta", "body" -> "gamma | word3") ->
+        ((i: Int) => i % 3 != 0 && (i % 5 == 0 || i % 7 == 3)),
+      Seq("title" -> "!alpha") -> ((i: Int) => i % 3 != 0))
+    def brute(m: Int => Boolean, w: Long, lo: Long, hi: Long): Set[(Long, Long)] =
+      (0 until n).filter(m).map(_.toLong * 10).filter(a => a >= lo && a <= hi)
+        .groupBy(a => lo + (a - lo) / w * w).map { case (b, as) => (b, as.size.toLong) }.toSet
+    for (((fq, m), ci) <- cases.zipWithIndex; (w, lo, hi) <- Seq((500L, 0L, 7990L),
+         (1000L, -2500L, 3333L), (1L, 700L, 760L))) {
+      val want = brute(m, w, lo, hi)
+      assert(want.nonEmpty, s"case $ci [$lo, $hi] / $w")
+      val solo = searcherO.countByAddonBucketMulti(fq, w, lo, hi).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(solo == want, s"case $ci [$lo, $hi] / $w")
+      // the same facet as a FacetFields slot beside an ordered-scan slot
+      val got = searcherO.msearch(Seq(
+          Searcher.MsearchSpec.AddonFields(fq, 0L, "right", 3),
+          Searcher.MsearchSpec.FacetFields(fq, w, lo, hi)))
+        .collect().filter(_.getInt(0) == 1).map(r => (r.getLong(1), r.getDouble(2).toLong)).toSet
+      assert(got == want, s"slot, case $ci [$lo, $hi] / $w")
+    }
+  }
+
   test("topKBm25Fields: field-scoped stats match a brute-force BM25") {
     import graft.query.Bm25
     val meta = searcherO.meta
