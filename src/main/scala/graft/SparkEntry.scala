@@ -156,33 +156,35 @@ object SparkEntry {
     * the file listings/footers so repeated queries re-plan, not re-list.
     */
   private object IndexCache {
-    // numPartitions = 8 on every variant: the build's pack/merge partition
-    // count should track the INPUT size (these sandbox corpora are ≤ a few
-    // thousand docs), not the session's shuffle-partition count sized for
-    // the whole suite — 8 merge tasks write ~8 well-sized files per shard
-    // dir instead of spraying hundreds of KB-sized files that every query
-    // then pays footer reads for. Production builds derive the same knob
-    // from input bytes / target partition size (see IndexBuilder.Params).
     private val cache = new java.util.concurrent.ConcurrentHashMap[String, Searcher]()
-    private def of(s: SparkSession, sfDir: String, tokenizer: String,
-                   keyKind: String = "text"): Searcher =
-      cache.computeIfAbsent(s"$sfDir#$tokenizer#$keyKind", _ => {
+
+    /** The searcher cached under `key`; the first call builds its index
+      * into a fresh temp dir with `build`.
+      */
+    private def of(s: SparkSession, key: String)(build: String => Unit): Searcher =
+      cache.computeIfAbsent(key, _ => {
         val dir = java.nio.file.Files.createTempDirectory("graftidx").toString
-        IndexBuilder.build(s, documents(s, sfDir), "doc_id", "text", dir,
-          IndexBuilder.Params(nShards = 8, numPartitions = 8, tokenizer = tokenizer,
-            attach = Some("n_chars"), keyKind = keyKind,
-            altOrder = tokenizer == "simple" && keyKind == "text"))
+        build(dir)
         new Searcher(s, dir)
       })
-    def searcher(s: SparkSession, sfDir: String): Searcher = of(s, sfDir, "simple")
+
+    /** 8 shards, `attach` stamped into every posting, alt-order layout. */
+    private def params(attach: String): IndexBuilder.Params =
+      IndexBuilder.Params(nShards = 8, attach = Some(attach), altOrder = true)
+
+    private def documentsIndex(s: SparkSession, sfDir: String, tokenizer: String,
+                               keyKind: String = "text"): Searcher =
+      of(s, s"$sfDir#$tokenizer#$keyKind")(dir =>
+        IndexBuilder.build(s, documents(s, sfDir), "doc_id", "text", dir,
+          params("n_chars").copy(tokenizer = tokenizer, keyKind = keyKind,
+            altOrder = tokenizer == "simple" && keyKind == "text")))
+    def searcher(s: SparkSession, sfDir: String): Searcher = documentsIndex(s, sfDir, "simple")
     /** title-weighted variant: first 8 tokens carry class A. */
-    def searcherW(s: SparkSession, sfDir: String): Searcher = of(s, sfDir, "simple_title8")
+    def searcherW(s: SparkSession, sfDir: String): Searcher =
+      documentsIndex(s, sfDir, "simple_title8")
     /** hash-keyed variant (rum_tsvector_hash_ops). */
-    def searcherH(s: SparkSession, sfDir: String): Searcher = of(s, sfDir, "simple", "hash")
-    /** multi-column variant: fields (text, lang) with field-prefixed keys;
-      * n_chars attached + alt-order layout so ranked/ordered scans
-      * (topKCoverMulti / topKAddonMulti) are served too.
-      */
+    def searcherH(s: SparkSession, sfDir: String): Searcher =
+      documentsIndex(s, sfDir, "simple", "hash")
     /** signed-addon + empty-doc variant: every (n_chars %% 7 == 0) doc's
       * text is nulled (deterministic; indexes as an empty doc), attach =
       * n_chars - 600 so roughly half the addon values are NEGATIVE — the
@@ -190,17 +192,13 @@ object SparkEntry {
       * by `<=> 0`) through the alt-order layout.
       */
     def searcherS(s: SparkSession, sfDir: String): Searcher =
-      cache.computeIfAbsent(s"$sfDir#signed", _ => {
-        val dir = java.nio.file.Files.createTempDirectory("graftidx").toString
+      of(s, s"$sfDir#signed") { dir =>
         val corpus = documents(s, sfDir)
           .withColumn("text_n",
             when(pmod(col("n_chars"), lit(7)) === 0, lit(null)).otherwise(col("text")))
           .withColumn("n_signed", col("n_chars") - 600)
-        IndexBuilder.build(s, corpus, "doc_id", "text_n", dir,
-          IndexBuilder.Params(nShards = 8, numPartitions = 8,
-            attach = Some("n_signed"), altOrder = true))
-        new Searcher(s, dir)
-      })
+        IndexBuilder.build(s, corpus, "doc_id", "text_n", dir, params("n_signed"))
+      }
     /** events variant: docId = event_id, text = props (JSON payload),
       * attach = epoch-µs(ts) via [[graft.build.AddonUnits.timestampMicros]]
       * — timestamp-typed ordered scans (the reference's timestamp distance
@@ -208,39 +206,30 @@ object SparkEntry {
       * values order correctly).
       */
     def searcherT(s: SparkSession, sfDir: String): Searcher =
-      cache.computeIfAbsent(s"$sfDir#events", _ => {
-        val dir = java.nio.file.Files.createTempDirectory("graftidx").toString
+      of(s, s"$sfDir#events") { dir =>
         val ev = s.read.parquet(s"$sfDir/events.parquet")
           .withColumn("ts_us", graft.build.AddonUnits.timestampMicros(col("ts")))
-        IndexBuilder.build(s, ev, "event_id", "props", dir,
-          IndexBuilder.Params(nShards = 8, numPartitions = 8,
-            attach = Some("ts_us"), altOrder = true))
-        new Searcher(s, dir)
-      })
+        IndexBuilder.build(s, ev, "event_id", "props", dir, params("ts_us"))
+      }
     /** float-addon variant: attach = order-preserving IEEE bits of
       * n_chars/7.0 ([[graft.build.AddonUnits.floatOrderedBits]]) — float
       * distance scans in VALUE units (the reference's float distance
       * opclasses, btree_rum.c:249-323) through the alt-order layout.
       */
     def searcherF(s: SparkSession, sfDir: String): Searcher =
-      cache.computeIfAbsent(s"$sfDir#float", _ => {
-        val dir = java.nio.file.Files.createTempDirectory("graftidx").toString
+      of(s, s"$sfDir#float") { dir =>
         val corpus = documents(s, sfDir).withColumn("fbits",
           graft.build.AddonUnits.floatOrderedBits(col("n_chars") / lit(7.0)))
-        IndexBuilder.build(s, corpus, "doc_id", "text", dir,
-          IndexBuilder.Params(nShards = 8, numPartitions = 8,
-            attach = Some("fbits"), altOrder = true))
-        new Searcher(s, dir)
-      })
+        IndexBuilder.build(s, corpus, "doc_id", "text", dir, params("fbits"))
+      }
+    /** multi-column variant: fields (text, lang) with field-prefixed keys;
+      * n_chars attached + alt-order layout so ranked/ordered scans
+      * (topKCoverMulti / topKAddonMulti) are served too.
+      */
     def searcherM(s: SparkSession, sfDir: String): Searcher =
-      cache.computeIfAbsent(s"$sfDir#multi", _ => {
-        val dir = java.nio.file.Files.createTempDirectory("graftidx").toString
+      of(s, s"$sfDir#multi")(dir =>
         IndexBuilder.buildFields(s, documents(s, sfDir), "doc_id",
-          Seq("text" -> "text", "lang" -> "lang"), dir,
-          IndexBuilder.Params(nShards = 8, numPartitions = 8,
-            attach = Some("n_chars"), altOrder = true))
-        new Searcher(s, dir)
-      })
+          Seq("text" -> "text", "lang" -> "lang"), dir, params("n_chars")))
   }
 
   /** Banded LSH signatures per corpus, computed ONCE per JVM and cached

@@ -115,7 +115,6 @@ object IndexBuilder {
       blockSize: Int = PostingBlock.DefaultSize,
       maxPostingsPerChunk: Int = 1 << 17,
       tokenizer: String = "simple",
-      numPartitions: Int = 0,
       /** column stamped into every posting as addon payload — RUM's
         * `WITH (attach='d', to='t')` (src/ruminsert.c:505-515); must be
         * castable to long (timestamps: pass epoch micros)
@@ -193,33 +192,31 @@ object IndexBuilder {
 
   /** Read a dataset through its manifest file listing: exactly the files
     * the atomic commit covers — data from a crashed or replayed write is
-    * invisible. Legacy manifests (no listing) fall back to a directory
-    * read; an empty listing yields an empty frame.
+    * invisible. An empty listing yields an empty frame.
     */
   def readDataset(spark: SparkSession, indexDir: String, meta: IndexMeta,
                   kind: String): DataFrame =
-    readFiles(spark, datasetDir(indexDir, kind), meta.dataFiles.get(kind), schemaOf(kind))
+    readFiles(spark, datasetDir(indexDir, kind), listed(meta.dataFiles, kind), schemaOf(kind))
 
   /** A dataset's committed parquet files as (directory, paths relative to
-    * it): the manifest listing, or the directory's files for a legacy
-    * manifest.
+    * it).
     */
   private[graft] def dataFiles(indexDir: String, meta: IndexMeta,
-                               kind: String): (String, List[String]) = {
-    val dir = datasetDir(indexDir, kind)
-    (dir, meta.dataFiles.getOrElse(kind, listParquet(dir)))
-  }
+                               kind: String): (String, List[String]) =
+    (datasetDir(indexDir, kind), listed(meta.dataFiles, kind))
 
-  private def readFiles(spark: SparkSession, dir: String, files: Option[List[String]],
+  /** One dataset's entry of a file listing. Every writer lists each
+    * dataset it writes, so a missing entry is a broken manifest.
+    */
+  private def listed(dataFiles: Map[String, List[String]], kind: String): List[String] =
+    dataFiles.getOrElse(kind,
+      throw new IllegalStateException(s"the manifest lists no $kind files"))
+
+  private def readFiles(spark: SparkSession, dir: String, files: List[String],
                         schema: org.apache.spark.sql.types.StructType): DataFrame =
-    files match {
-      case Some(Nil) =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      case Some(fs) =>
-        spark.read.option("basePath", dir).schema(schema)
-          .parquet(fs.map(f => s"$dir/$f"): _*)
-      case None => spark.read.schema(schema).parquet(dir)
-    }
+    if (files.isEmpty)
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+    else spark.read.option("basePath", dir).schema(schema).parquet(files.map(f => s"$dir/$f"): _*)
 
   private def deleteRecursively(path: String): Unit = {
     val f = new java.io.File(path)
@@ -357,8 +354,8 @@ object IndexBuilder {
   /** Partition count and routing column shared by every shard-partitioned
     * write (docs, and stage B of [[packDataset]] for postings and alt).
     *
-    * The task width follows the shuffle width `p` (`params.numPartitions`,
-    * else `spark.sql.shuffle.partitions`), not the shard count: with
+    * The task width follows the shuffle width `p`
+    * (`spark.sql.shuffle.partitions`), not the shard count: with
     * `sub = max(1, p / nShards)` term sub-buckets per shard (`byTerm`; the
     * docs write uses `sub = 1`) and `nPart = min(p, nShards·sub)`, the
     * target `pmod(shard·sub + termBucket, nPart)` is routed exactly through
@@ -373,8 +370,7 @@ object IndexBuilder {
     */
   private def shardRouting(spark: SparkSession, params: Params,
                            byTerm: Boolean): (Int, Column) = {
-    val p = if (params.numPartitions > 0) params.numPartitions
-            else spark.sessionState.conf.numShufflePartitions
+    val p = spark.sessionState.conf.numShufflePartitions
     val sub = if (byTerm) math.max(1, p / params.nShards) else 1
     val nPart = math.min(p, params.nShards * sub)
     val target =
@@ -714,7 +710,7 @@ object IndexBuilder {
     // the zero-file case (buildempty) readable; reads go through the
     // file listing being committed, so orphans never enter the stats.
     val allPostings = readFiles(spark, SegmentCatalog.postingsDir(indexDir),
-        dataFiles.get("postings"), schemaOf("postings"))
+        listed(dataFiles, "postings"), schemaOf("postings"))
       .select("shard", "term", "ndocs", "maxTf")
     // stats are APPENDED next to the previous generation and only the new
     // files enter the manifest; the old generation is deleted AFTER the
@@ -748,7 +744,7 @@ object IndexBuilder {
       () => {
         val allDocs = docsDS.getOrElse(
           readFiles(spark, SegmentCatalog.docsDir(indexDir),
-            dataFiles.get("docs"), schemaOf("docs")))
+            listed(dataFiles, "docs"), schemaOf("docs")))
         val r = allDocs.agg(count(lit(1)), coalesce(sum("len"), lit(0L))).head()
         numDocs = r.getLong(0); totalTokens = r.getLong(1)
       }))
@@ -951,11 +947,7 @@ object IndexBuilder {
       try writeGeneration(spark, indexDir, params, tuples.persist(),
         docsFromExploded(tuples, params, fields.length))
       finally tuples.unpersist(blocking = false)
-    // a legacy manifest without a listing committed everything on disk
-    val dataFiles = added.map { case (k, fs) =>
-      k -> (meta.dataFiles.getOrElse(k,
-        listParquet(datasetDir(indexDir, k)).filterNot(fs.toSet)) ++ fs)
-    }
+    val dataFiles = added.map { case (k, fs) => k -> (listed(meta.dataFiles, k) ++ fs) }
     // per-shard timing accumulates across appends (prior + this delta)
     val priorMs = meta.shards.map(s => s.shard -> s.buildMs).toMap
     val combined = priorMs ++ packMs.map { case (s, ms) => s -> (priorMs.getOrElse(s, 0L) + ms) }
@@ -978,16 +970,16 @@ object IndexBuilder {
   def gcOrphans(indexDir: String): Map[String, List[String]] = {
     val meta = SegmentCatalog.load(indexDir)
       .getOrElse(throw new IllegalStateException(s"no manifest in $indexDir"))
+    // another format's manifest may not list its files: every file would
+    // look orphaned
+    requireFormat(meta)
     Seq("postings", "alt", "docs", "stats").map { kind =>
       val dir = datasetDir(indexDir, kind)
-      val listed = meta.dataFiles.getOrElse(kind, Nil).toSet
-      val removed =
-        if (!meta.dataFiles.contains(kind)) Nil // legacy manifest: no listing, keep all
-        else listParquet(dir).filterNot(listed).map { f =>
-          java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, f))
-          f
-        }
-      kind -> removed
+      val keep = meta.dataFiles.getOrElse(kind, Nil).toSet
+      kind -> listParquet(dir).filterNot(keep).map { f =>
+        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, f))
+        f
+      }
     }.toMap.filter(_._2.nonEmpty)
   }
 

@@ -61,8 +61,8 @@ final case class IndexMeta(
       * Readers scan exactly these files, so data written by a crashed or
       * replayed commit is invisible until the atomic manifest move that
       * covers it — this closes the at-least-once replay window entirely
-      * (orphaned part files are garbage, not duplicates). Empty map =
-      * legacy manifest → whole-directory reads.
+      * (orphaned part files are garbage, not duplicates). Every writer
+      * lists each dataset it writes.
       */
     dataFiles: Map[String, List[String]] = Map.empty) {
   def committedShards: Set[Int] = shards.map(_.shard).toSet
@@ -108,8 +108,8 @@ object SegmentCatalog {
       sb.append(s"shard=${s.shard},${s.terms},${s.chunkRows},${s.postings},${s.buildMs},${s.committedAtMs}\n")
     }
     // the set of LISTED kinds is persisted explicitly: an empty listing
-    // (e.g. buildempty) must round-trip as Some(Nil), not degrade into a
-    // legacy whole-directory scan that would see orphan files
+    // (e.g. buildempty) must round-trip as Some(Nil), not as a missing
+    // listing, which readers refuse
     if (meta.dataFiles.nonEmpty)
       sb.append(s"dkinds=${meta.dataFiles.keys.toSeq.sorted.mkString(",")}\n")
     meta.dataFiles.toSeq.sortBy(_._1).foreach { case (kind, files) =>

@@ -485,24 +485,22 @@ object SearchKernel extends Serializable {
     * `WHERE q ORDER BY rank(method), addon <op> c, docId LIMIT k`
     * lexicographic (the reference sorts the whole distances[norderbys]
     * vector then TID, src/rumget.c:2218-2301 / src/rumsort.c:3977-4022).
-    * [[matchShard]]'s own heap orders by (rank, docId) alone — NOT a prefix
-    * of the composite key when an addon key follows — so pruning happens
-    * here on the FULL (rank, addonDist, docId) tuple: no shard can drop a
-    * row a later tie-break would promote. One-sided addon misses are
-    * excluded (the engine's finite-only contract). Emits
-    * (docId, rankDist, addonDist), unordered — the global composite top-k
-    * re-sorts the ≤ k survivors per shard.
+    * `matches` is the slot's unbounded ranked match stream
+    * ([[matchShard]] or [[fullScanShard]] with k = 0): their own heaps
+    * order by (rank, docId) alone — NOT a prefix of the composite key when
+    * an addon key follows — so pruning happens here on the FULL (rank,
+    * addonDist, docId) tuple: no shard can drop a row a later tie-break
+    * would promote. One-sided addon misses are excluded (the engine's
+    * finite-only contract). Emits (docId, rankDist, addonDist), unordered —
+    * the global composite top-k re-sorts the ≤ k survivors per shard.
     */
-  def order2Shard(cq: CompiledQuery, keys: Array[KeySpec], view: ShardView,
-                  c: Long, op: String, k: Int,
-                  method: Int): Iterator[(Long, Double, Long)] = {
+  def order2Shard(matches: Iterator[(Long, Double, Long)], c: Long, op: String,
+                  k: Int): Iterator[(Long, Double, Long)] = {
     val ord = Ordering.Tuple3(Ordering.Double.TotalOrdering, Ordering.Long, Ordering.Long)
     // max-heap on the composite key: head = current worst of the k best
     val pq = mutable.PriorityQueue.empty[(Double, Long, Long)](ord)
-    val m = matchShard(cq, keys, view, score = true, k = 0, method = method,
-      scoreCq = null, scoreMap = null)
-    while (m.hasNext) {
-      val (id, rank, addon) = m.next()
+    while (matches.hasNext) {
+      val (id, rank, addon) = matches.next()
       val d2 = AltKernel.satDist(addon, c, op)
       if (d2 >= 0L) {
         val cand = (rank, d2, id)
@@ -514,25 +512,24 @@ object SearchKernel extends Serializable {
   }
 
   /** Full-corpus scan driver (scanGetItemFull, src/rumget.c:2024-2083):
-    * candidates = every doc in the shard.
+    * candidates = every doc of the shard (`docs`, ascending docId), with
+    * the query keys' cursors over the batch's shared [[ShardView]] pulled
+    * along. The doc row supplies the addon, length and distinct-lexeme
+    * count; `matchOnly = false` also emits non-matching docs (order-only
+    * scans).
     */
-  def fullScanShard(cq: CompiledQuery, keys: Array[KeySpec], docIt: Iterator[DocRow],
-                    rows: Iterator[PostingRow], score: Boolean, matchOnly: Boolean,
-                    k: Int, method: Int = 0, scoreCq: CompiledQuery = null,
+  def fullScanShard(cq: CompiledQuery, keys: Array[KeySpec],
+                    docs: scala.collection.IndexedSeq[DocRow], view: ShardView,
+                    score: Boolean, matchOnly: Boolean, k: Int, method: Int = 0,
+                    scoreCq: CompiledQuery = null,
                     scoreMap: Array[Int] = null): Iterator[(Long, Double, Long)] = {
-    val cursors = buildCursors(keys, new ShardView(rows))
-    val addons = mutable.LongMap.empty[Long] // populated lazily per candidate
-    val lens = mutable.LongMap.empty[Int]
-    val uniqs = mutable.LongMap.empty[Int]
-    driver(cq, cursors,
-      docIt.map { d =>
-        addons(d.docId) = d.addon; lens(d.docId) = d.len; uniqs(d.docId) = d.uniq
-        d.docId
-      },
-      score, matchOnly, k, addonOf = id => addons.remove(id).getOrElse(0L),
-      lenOf = id => lens.remove(id).getOrElse(0),
-      uniqOf = id => uniqs.remove(id).getOrElse(0), method = method,
-      scoreCq = scoreCq, scoreMap = scoreMap)
+    // the driver evaluates each candidate as soon as it is drawn, so the
+    // doc lookups below always ask for the current row
+    var cur: DocRow = null
+    driver(cq, buildCursors(keys, view),
+      docs.iterator.map { d => cur = d; d.docId },
+      score, matchOnly, k, addonOf = _ => cur.addon, lenOf = _ => cur.len,
+      uniqOf = _ => cur.uniq, method = method, scoreCq = scoreCq, scoreMap = scoreMap)
   }
 
   /** Candidate docIds = ascending union of the given key streams.

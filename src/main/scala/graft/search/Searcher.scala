@@ -528,19 +528,31 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * `method` = rank-normalization flags (CoverRank.Norm*). UNIQ flags
     * divide by the doc's distinct-lexeme count, which lives in the docs
     * table (the "heap" — exactly where the reference's rum_ts_distance
-    * reads txt->size from), so those queries route through the full scan.
+    * reads txt->size from), so those slots full-scan the docs rows. Every
+    * variant is a one-slot cover plan.
     */
   def topKCover(queryStr: String, k: Int, matchOnly: Boolean = true,
                 method: Int = 0): DataFrame =
     cached("topKC" + Searcher.key(queryStr, k.toString, matchOnly.toString,
       method.toString)) {
       if (matchOnly) coverSlot(Searcher.MsearchSpec.Cover(queryStr, k, method))
-      else topKCoverC(compile(queryStr), k, matchOnly = false, method, null, null)
+      else everyDocCover(compile(queryStr), k, method, null, null)
     }
 
   /** A one-slot cover plan as (docId, distance). */
   private def coverSlot(spec: Searcher.MsearchSpec): DataFrame =
     oneSlot(spec, col("docId"), col("score").as("distance"))
+
+  /** The one-slot order-only cover plan (matchOnly = false) as (docId,
+    * distance): every doc is a candidate, non-matching ones included.
+    */
+  private def everyDocCover(cq: CompiledQuery, k: Int, method: Int,
+                            scoreCq: CompiledQuery, scoreMap: Array[Int]): DataFrame = {
+    Searcher.requireK(k)
+    val batch = new SlotBatch
+    batch.addCover(0, cq, k, method, scoreCq, scoreMap, matchOnly = false)
+    batch.plan().select(col("docId"), col("score").as("distance"))
+  }
 
   /** Multicolumn ranked scan: match `rankQuery` on `rankField` AND every
     * `filters` predicate on its field — one kernel pass over field-prefixed
@@ -560,7 +572,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
         coverSlot(Searcher.MsearchSpec.CoverFields(rankField, rankQuery, filters, k, method))
       else {
         val (fullCq, scoreCq, scoreMap) = compileCoverMulti(rankField, rankQuery, filters)
-        topKCoverC(fullCq, k, matchOnly = false, method, scoreCq, scoreMap)
+        everyDocCover(fullCq, k, method, scoreCq, scoreMap)
       }
     }
 
@@ -587,20 +599,6 @@ final class Searcher(spark: SparkSession, indexDir: String,
       fullCq.keys.indexWhere(fk => fk.term == sk.term && fk.prefix == sk.prefix))
     require(scoreMap.forall(_ >= 0), "rank keys must appear in the full query")
     (fullCq, scoreCq, scoreMap)
-  }
-
-  /** Full-scan cover top-k: UNIQ norms (they read the docs table),
-    * queries the postings alone cannot drive, and order-only scans
-    * (matchOnly = false).
-    */
-  private def topKCoverC(cq: CompiledQuery, k: Int, matchOnly: Boolean,
-                         method: Int, scoreCq: CompiledQuery,
-                         scoreMap: Array[Int]): DataFrame = {
-    Searcher.requireK(k)
-    fullScan(cq, score = true, matchOnly = matchOnly, k = k, method = method,
-        scoreCq = scoreCq, scoreMap = scoreMap)
-      .select("docId", "distance")
-      .orderBy(col("distance").asc, col("docId").asc).limit(k)
   }
 
   /** Field-scoped BM25 over a multicolumn index: terms resolve to the
@@ -726,9 +724,12 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * (top-k, lower better), exact double value-units distance for
     * AddonFloat. Ordered-scan slots (Addon/AddonRange and their float
     * value-units twins) run over the alt-order layout's OWN shared read —
-    * a heterogeneous batch costs one read per layout it touches. Void
-    * specs contribute no rows; full-scan-only and alt-unservable specs
-    * fall back to their own plans, unioned in.
+    * a heterogeneous batch costs one read per layout it touches. A slot
+    * whose candidates are every doc (pure negations and other queries
+    * that match the empty doc, UNIQ/LOGUNIQ rank norms) is a full-scan
+    * slot of the same primary read, which then also reads each shard's
+    * docs rows. Void specs contribute no rows; alt-unservable ordered-scan
+    * specs fall back to their own one-slot Match plans, unioned in.
     */
   def msearch(specs: Seq[Searcher.MsearchSpec]): DataFrame =
     cached("msearch" + specs.map(Searcher.specKey).mkString(""))(msearchPlan(specs))
@@ -767,17 +768,14 @@ final class Searcher(spark: SparkSession, indexDir: String,
   }
 
   /** The compiled slots of one plan: kernel slots per layout, plus the
-    * fallback plans of slots neither kernel serves.
+    * fallback plans of alt-unservable ordered-scan slots.
     */
   private final class SlotBatch {
     private val fused = scala.collection.mutable.ArrayBuffer.empty[Searcher.FusedSpec]
     private val altFused = scala.collection.mutable.ArrayBuffer.empty[Searcher.AltFusedSpec]
     private val fallback = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // count slots: every qi here gets a spine row (even void/zero-match);
-    // full-scan-only count queries aggregate their full-scan plan into the
-    // same (qi, partial) union
+    // count slots: every qi here gets a spine row (even void/zero-match)
     private val countQis = scala.collection.mutable.ArrayBuffer.empty[Int]
-    private val countFallback = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
     /** A fallback plan's rows in the slot schema. */
     private def addFallback(qi: Int, df: DataFrame, docId: Column, score: Column,
@@ -785,46 +783,35 @@ final class Searcher(spark: SparkSession, indexDir: String,
       fallback += df.select(lit(qi).as("qi"), docId.as("docId"), score.as("score"),
         addon.as("addon"))
 
-    def addMatch(qi: Int, cq: CompiledQuery, rank: Boolean, method: Int): Unit = {
-      val needsHeap = rank && (method & (CoverRank.NormUniq | CoverRank.NormLogUniq)) != 0
-      if (SearchKernel.isVoid(cq)) ()
-      else if (needsHeap || SearchKernel.needsFullScan(cq))
-        addFallback(qi, fullScan(cq, score = rank, matchOnly = true, k = 0, method = method),
-          col("docId"), col("distance"), col("addon"))
-      else fused += Searcher.FusedSpec(qi, 0, cq, SearchKernel.keySpecs(cq),
-        null, null, null, 0, method = method, rank = rank)
-    }
-    private def addCover(qi: Int, cq: CompiledQuery, k: Int, method: Int,
-                         scoreCq: CompiledQuery, scoreMap: Array[Int]): Unit = {
-      val needsHeap = (method & (CoverRank.NormUniq | CoverRank.NormLogUniq)) != 0
-      if (SearchKernel.isVoid(cq)) ()
-      else if (needsHeap || SearchKernel.needsFullScan(cq))
-        addFallback(qi, topKCoverC(cq, k, matchOnly = true, method, scoreCq, scoreMap),
-          col("docId"), col("distance"))
-      else fused += Searcher.FusedSpec(qi, 1, cq, SearchKernel.keySpecs(cq),
-        null, null, null, k, scoreCq, scoreMap, method, rank = true)
-    }
+    /** A primary-layout slot over `cq`, unless a void query leaves it
+      * nothing to match. Its candidates are every doc of the shard when the
+      * postings alone cannot drive them, or when a UNIQ/LOGUNIQ rank norm
+      * needs the doc's distinct-lexeme count from the docs rows.
+      */
+    private def addPrimary(qi: Int, mode: Int, cq: CompiledQuery, k: Int = 0,
+                           rank: Boolean = false, method: Int = 0,
+                           scoreCq: CompiledQuery = null, scoreMap: Array[Int] = null,
+                           c: Long = 0L, op: String = "", matchOnly: Boolean = true): Unit =
+      if (!matchOnly || !SearchKernel.isVoid(cq)) {
+        val uniq = rank && (method & (CoverRank.NormUniq | CoverRank.NormLogUniq)) != 0
+        fused += Searcher.FusedSpec(qi, mode, cq, SearchKernel.keySpecs(cq), null, null, null,
+          k, scoreCq, scoreMap, method, c, op, rank,
+          fullScan = !matchOnly || uniq || SearchKernel.needsFullScan(cq), matchOnly)
+      }
+
+    def addMatch(qi: Int, cq: CompiledQuery, rank: Boolean, method: Int): Unit =
+      addPrimary(qi, 0, cq, rank = rank, method = method)
+    def addCover(qi: Int, cq: CompiledQuery, k: Int, method: Int, scoreCq: CompiledQuery,
+                 scoreMap: Array[Int], matchOnly: Boolean = true): Unit =
+      addPrimary(qi, 1, cq, k, rank = true, method, scoreCq, scoreMap, matchOnly = matchOnly)
     private def addOrder2(qi: Int, cq: CompiledQuery, c: Long, op: String, k: Int,
                           method: Int): Unit = {
       require(Set("both", "left", "right").contains(op), s"op: $op")
-      val needsHeap = (method & (CoverRank.NormUniq | CoverRank.NormLogUniq)) != 0
-      if (SearchKernel.isVoid(cq)) ()
-      else if (needsHeap || SearchKernel.needsFullScan(cq))
-        addFallback(qi, topKMultiC(cq,
-            Seq(Searcher.OrderKey.Rank(method), Searcher.OrderKey.Addon(c, op)), k),
-          col("docId"), col("d0"))
-      else fused += Searcher.FusedSpec(qi, 4, cq, SearchKernel.keySpecs(cq),
-        null, null, null, k, null, null, method, c, op)
+      addPrimary(qi, 4, cq, k, rank = true, method, c = c, op = op)
     }
     private def addCount(qi: Int, cq: CompiledQuery): Unit = {
-      countQis += qi
-      if (SearchKernel.isVoid(cq)) () // 0 via the spine
-      else if (SearchKernel.needsFullScan(cq))
-        countFallback += fullScan(cq, score = false, matchOnly = true, k = 0)
-          .agg(org.apache.spark.sql.functions.count(lit(1)).as("partial"))
-          .select(lit(qi).as("qi"), col("partial"))
-      else fused += Searcher.FusedSpec(qi, 3, cq, SearchKernel.keySpecs(cq),
-        null, null, null, 0)
+      countQis += qi // a void query counts 0 via the spine
+      addPrimary(qi, 3, cq)
     }
     private def addAddon(qi: Int, cq: CompiledQuery, c: Long, op: String, k: Int): Unit = {
       require(Set("both", "left", "right").contains(op), s"op: $op")
@@ -971,7 +958,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
             if (unbounded.isEmpty) None
             else Some(unboundedRows.select("qi", "docId", "score", "addon"))
           // count slots: per-shard partials, aggregated below with the
-          // spine and any full-scan fallbacks
+          // spine
           val countPart =
             if (counts.isEmpty) None
             else Some(countRows.select(col("qi"), col("docId").as("partial")))
@@ -981,8 +968,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
         if (countQis.isEmpty) None
         else {
           val spine = countQis.toSeq.toDF("qi").select(col("qi"), lit(0L).as("partial"))
-          val union = (Seq(spine) ++ countKernelPart.toSeq ++ countFallback.toSeq)
-            .reduce(_ union _)
+          val union = (Seq(spine) ++ countKernelPart.toSeq).reduce(_ union _)
           Some(union.groupBy("qi").agg(sum("partial").as("cnt"))
             .select(col("qi"), col("cnt").as("docId"),
               col("cnt").cast("double").as("score"), lit(0L).as("addon")))
@@ -1044,8 +1030,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * those partials cross the one Exchange, regardless of match counts,
     * which is what keeps count-heavy serving scaling when individual
     * matches number in the millions. Void queries count 0 (the qi spine
-    * guarantees a row per slot); full-scan-only queries fall back to their
-    * full-scan plans, union-aggregated in. Returns (qi, cnt).
+    * guarantees a row per slot); full-scan queries count their matches
+    * among the shard's docs rows in the same read. Returns (qi, cnt).
     */
   def msearchCounts(queryStrs: Seq[String]): DataFrame =
     cached("msearchC" + Searcher.key(queryStrs: _*))(msearchCountsPlan(queryStrs))
@@ -1128,16 +1114,6 @@ final class Searcher(spark: SparkSession, indexDir: String,
   def docLens: DataFrame =
     docs.select(col("docId").as("doc_id"), col("len"))
 
-  /** Full-corpus scan joined with order-key postings (scanGetItemFull,
-    * src/rumget.c:2024-2083): each task reads its shards' docs rows and
-    * the query keys' postings; the candidate stream is a shard's docs in
-    * docId order, posting cursors pulled along for scoring.
-    */
-  private def fullScan(cq: CompiledQuery, score: Boolean, matchOnly: Boolean, k: Int,
-                       method: Int = 0, scoreCq: CompiledQuery = null,
-                       scoreMap: Array[Int] = null): DataFrame =
-    shardScan(ShardKernel.FullScan(cq, score, matchOnly, k, method, scoreCq, scoreMap))
-      .select(col("docId"), col("score").as("distance"), col("addon"))
 }
 
 object Searcher {
@@ -1149,8 +1125,8 @@ object Searcher {
     /** BM25 disjunctive top-k over a bag of terms (higher score better) */
     final case class Bm25(terms: Seq[String], k: Int) extends MsearchSpec
     /** cover-density ranked top-k (score = distance, lower better);
-      * `method` = CoverRank normalization flags (UNIQ norms route the slot
-      * through its full-scan fallback — they read the docs table)
+      * `method` = CoverRank normalization flags (UNIQ norms make it a
+      * full-scan slot — they read the docs rows)
       */
     final case class Cover(query: String, k: Int, method: Int = 0) extends MsearchSpec
     /** composite-ordered top-k riding the fused batch:
@@ -1161,7 +1137,7 @@ object Searcher {
       * distance (lower better); the addon key decides membership and
       * tie-breaks but is not re-emitted (the batch schema is
       * (qi, docId, score)). UNIQ norms / full-scan-only queries ride as
-      * their full-scan fallback plans.
+      * full-scan slots of the same read.
       */
     final case class Order2(query: String, c: Long, op: String, k: Int,
         method: Int = 0) extends MsearchSpec
@@ -1353,12 +1329,16 @@ object Searcher {
     * mode 0 = match, 1 = cover top-k, 2 = BM25 WAND top-k, 3 = count
     * (per-shard partial), 4 = Order2 composite top-k (c/op = the addon
     * key). `rank`: modes 0 and 1 score their matches by cover distance.
+    * `fullScan`: the candidates are every doc of the shard, from its docs
+    * rows; `matchOnly = false` (order-only cover) also keeps the docs that
+    * do not match.
     */
   private[search] final case class FusedSpec(
       qi: Int, mode: Int, cq: CompiledQuery, keys: Array[SearchKernel.KeySpec],
       terms: Array[String], dfs: Array[Long], ubs: Array[Double], k: Int,
       scoreCq: CompiledQuery = null, scoreMap: Array[Int] = null,
-      method: Int = 0, c: Long = 0L, op: String = "", rank: Boolean = false)
+      method: Int = 0, c: Long = 0L, op: String = "", rank: Boolean = false,
+      fullScan: Boolean = false, matchOnly: Boolean = true)
 
   /** [[graft.build.AddonUnits.floatOrderedBits]] image → its double. */
   private val orderedBitsToDouble =

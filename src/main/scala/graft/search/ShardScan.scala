@@ -34,7 +34,8 @@ import graft.query.CompiledQuery
   * reads its shards' files with Spark's parquet reader — the term
   * predicate pushed down for row-group pruning, then re-checked per row —
   * and hands the kernel one shard at a time, so a task holds one shard's
-  * rows. Full scans also read the shard's docs files.
+  * rows. A primary read with a full-scan slot also reads the shard's docs
+  * files in the same task, and its full-scan slots walk them.
   *
   * [[ShardScan]] is the logical leaf, [[ShardScanExec]] its physical exec
   * and [[ShardScanStrategy]] the planner rule; every kernel emits rows of
@@ -67,8 +68,8 @@ private[search] object ShardScan {
   /** One committed parquet file. */
   final case class File(path: String, size: Long, mtime: Long)
 
-  /** One shard's files: its layout's postings and, for full scans, its
-    * docs rows.
+  /** One shard's files: its layout's postings and, when a slot full-scans,
+    * its docs rows.
     */
   final case class Shard(id: Int, postings: Seq[File], docs: Seq[File])
 
@@ -102,7 +103,8 @@ private[search] object ShardScan {
 
   /** Hands `rows` and `docs` (both in ascending shard order) to `kernel`
     * one shard at a time: a shard's rows are buffered, its docs sorted by
-    * docId, and its output drained before the next shard is read.
+    * docId into one indexed sequence every full-scan slot walks, and its
+    * output drained before the next shard is read.
     */
   private def perShard(kernel: ShardKernel, rows: Iterator[PostingRow],
                        docs: Iterator[DocRow]): Iterator[Out] = {
@@ -121,7 +123,7 @@ private[search] object ShardScan {
           if (ds.hasNext) ds.head.shard else Int.MaxValue)
         val shardRows = drain[PostingRow](rs, shard, _.shard)
         val shardDocs = drain[DocRow](ds, shard, _.shard).sortBy(_.docId)
-        kernel.run(shardRows.iterator, shardDocs.iterator)
+        kernel.run(shardRows.iterator, shardDocs)
       }
     }.flatten
   }
@@ -217,8 +219,9 @@ private[search] sealed trait ShardKernel extends Serializable {
   def layout: String
   def terms: TermSet
   def readsDocs: Boolean = false
-  /** One shard's output; `docs` (full scans only) ascends by docId. */
-  def run(rows: Iterator[PostingRow], docs: Iterator[DocRow]): Iterator[ShardScan.Out]
+  /** One shard's output; `docs` (read when [[readsDocs]]) ascends by docId. */
+  def run(rows: Iterator[PostingRow],
+          docs: scala.collection.IndexedSeq[DocRow]): Iterator[ShardScan.Out]
   /** the slots, for plan strings */
   def describe: String
 }
@@ -227,20 +230,30 @@ private[search] object ShardKernel {
 
   /** Every primary-layout slot of a batch. The shard's rows are grouped by
     * term once; each slot's cursors then touch only its own keys, so
-    * sibling slots' terms are invisible to it.
+    * sibling slots' terms are invisible to it. A full-scan slot's
+    * candidates are every doc of the shard (scanGetItemFull,
+    * src/rumget.c:2024-2083), the rest draw theirs from the postings; both
+    * kinds feed the same match, cover, count and Order2 code.
     */
   final case class Primary(specs: Array[Searcher.FusedSpec], nDocs: Long,
                            avgLen: Double, terms: TermSet) extends ShardKernel {
     def layout: String = "postings"
-    def run(rows: Iterator[PostingRow], docs: Iterator[DocRow]): Iterator[ShardScan.Out] = {
+    override def readsDocs: Boolean = specs.exists(_.fullScan)
+    def run(rows: Iterator[PostingRow],
+            docs: scala.collection.IndexedSeq[DocRow]): Iterator[ShardScan.Out] = {
       val view = new SearchKernel.ShardView(rows)
+      // (docId, distance, addon) of the slot's matches; k > 0 with score
+      // keeps the shard's k best
+      def matches(f: Searcher.FusedSpec, score: Boolean, k: Int) =
+        if (f.fullScan) SearchKernel.fullScanShard(f.cq, f.keys, docs, view, score,
+          f.matchOnly, k, f.method, f.scoreCq, f.scoreMap)
+        else SearchKernel.matchShard(f.cq, f.keys, view, score, k, f.method,
+          f.scoreCq, f.scoreMap)
       specs.iterator.flatMap { f =>
         f.mode match {
           // match (k = 0: every match) and cover top-k; the row carries
-          // the payload addon of the matched posting
-          case 0 | 1 => SearchKernel.matchShard(f.cq, f.keys, view,
-              score = f.rank, k = f.k, method = f.method,
-              scoreCq = f.scoreCq, scoreMap = f.scoreMap)
+          // the match's addon (its posting payload, or its doc row)
+          case 0 | 1 => matches(f, score = f.rank, k = f.k)
             .map(t => (f.qi, t._1, t._2, t._2, 0L, t._3))
           case 2 => SearchKernel.wandShard(f.terms, f.dfs, f.ubs, nDocs,
               avgLen, f.k, view)
@@ -249,20 +262,20 @@ private[search] object ShardKernel {
           // set never leaves the shard
           case 3 =>
             var n = 0L
-            val m = SearchKernel.matchShard(f.cq, f.keys, view, score = false, k = 0)
+            val m = matches(f, score = false, k = 0)
             while (m.hasNext) { m.next(); n += 1 }
             Iterator.single((f.qi, n, 0.0, 0.0, 0L, 0L))
           // composite (rank, addonDist, docId): per-shard heap pruned on
           // the FULL tuple; sort2 carries the EXACT long addon distance so
           // the global top-k tie-breaks losslessly
-          case _ => SearchKernel.order2Shard(f.cq, f.keys, view, f.c,
-              f.op, f.k, f.method)
+          case _ => SearchKernel.order2Shard(matches(f, score = true, k = 0), f.c, f.op, f.k)
             .map { case (id, r, d2) => (f.qi, id, r, r, d2, 0L) }
         }
       }
     }
     def describe: String = specs.map(f =>
-      Seq("match", "cover", "bm25", "count", "order2")(f.mode) + "#" + f.qi).mkString(", ")
+      Seq("match", "cover", "bm25", "count", "order2")(f.mode) + "#" + f.qi +
+        (if (f.fullScan) "(fullscan)" else "")).mkString(", ")
   }
 
   /** Every alt-layout (ordered-scan) slot of a batch; `sort2` carries the
@@ -272,7 +285,8 @@ private[search] object ShardKernel {
   final case class Alt(specs: Array[Searcher.AltFusedSpec], terms: TermSet)
       extends ShardKernel {
     def layout: String = "alt"
-    def run(rows: Iterator[PostingRow], docs: Iterator[DocRow]): Iterator[ShardScan.Out] = {
+    def run(rows: Iterator[PostingRow],
+            docs: scala.collection.IndexedSeq[DocRow]): Iterator[ShardScan.Out] = {
       val cells = new AltKernel.ShardCells(rows)
       specs.iterator.flatMap { f =>
         if (f.mode == 0)
@@ -297,24 +311,6 @@ private[search] object ShardKernel {
       Seq("addon", "range", "facet")(f.mode) + "#" + f.qi).mkString(", ")
   }
 
-  /** Full-corpus scan (scanGetItemFull, src/rumget.c:2024-2083): the
-    * candidate stream is the shard's docs rows in docId order, with the
-    * query keys' posting cursors pulled along for scoring. Emits
-    * (0, docId, distance, 0, 0, addon).
-    */
-  final case class FullScan(cq: CompiledQuery, score: Boolean, matchOnly: Boolean,
-                            k: Int, method: Int, scoreCq: CompiledQuery,
-                            scoreMap: Array[Int]) extends ShardKernel {
-    private val keys = SearchKernel.keySpecs(cq)
-    def layout: String = "postings"
-    def terms: TermSet = TermSet.of(cq)
-    override def readsDocs: Boolean = true
-    def run(rows: Iterator[PostingRow], docs: Iterator[DocRow]): Iterator[ShardScan.Out] =
-      SearchKernel.fullScanShard(cq, keys, docs, rows, score, matchOnly, k, method,
-          scoreCq, scoreMap)
-        .map { case (id, d, a) => (0, id, d, 0.0, 0L, a) }
-    def describe: String = s"fullscan(score=$score, matchOnly=$matchOnly, k=$k, method=$method)"
-  }
 }
 
 /** Logical leaf: `kernel` over `read`, shard-locally. One instance keeps

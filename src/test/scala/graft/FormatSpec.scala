@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.build.{IndexBuilder, PostingRow, SegmentCatalog}
@@ -9,8 +11,8 @@ import graft.search.Searcher
   * clean "rebuild required" error everywhere an index is opened for read or
   * incremental write (instead of a raw AnalysisException mid-query on the
   * missing `uniq` column), and empty data-file listings round-trip through
-  * the manifest (a buildempty index must not degrade into legacy
-  * whole-directory scans that would see orphan files).
+  * the manifest (a buildempty index keeps its empty listing; readers refuse
+  * a missing one rather than scan the directory and see orphan files).
   */
 class FormatSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -49,7 +51,15 @@ class FormatSpec extends AnyFunSuite {
   test("down-versioned manifest: searcher, append, compact refuse cleanly") {
     val dir = buildSmall()
     val meta = SegmentCatalog.load(dir).get
-    SegmentCatalog.save(dir, meta.copy(formatVersion = 3))
+    def parquetFiles(): Set[String] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+      finally walk.close()
+    }
+    val files = parquetFiles()
+    assert(files.nonEmpty)
+    // an older format, from before manifests listed their files
+    SegmentCatalog.save(dir, meta.copy(formatVersion = 3, dataFiles = Map.empty))
 
     val e1 = intercept[IllegalArgumentException](new Searcher(spark, dir))
     assert(e1.getMessage.contains("rebuild required"))
@@ -58,6 +68,10 @@ class FormatSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("rebuild required"))
     val e3 = intercept[IllegalArgumentException](IndexBuilder.compact(spark, dir))
     assert(e3.getMessage.contains("rebuild required"))
+    // with no listing every file would look orphaned: gc refuses, deleting none
+    val e4 = intercept[IllegalArgumentException](IndexBuilder.gcOrphans(dir))
+    assert(e4.getMessage.contains("rebuild required"))
+    assert(parquetFiles() == files)
     // validate reports instead of throwing
     assert(IndexBuilder.validate(spark, dir).exists(_.contains("rebuild required")))
 

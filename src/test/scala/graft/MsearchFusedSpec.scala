@@ -8,7 +8,7 @@ import graft.search.Searcher
 /** Fused multi-search (one shard-local read per layout for a
   * heterogeneous query batch): every slot must return exactly its solo
   * query's rows/scores, including prefix expansion, void slots, and
-  * full-scan fallbacks riding the same batch; the kernel read must execute
+  * full-scan slots riding the same read; the kernel read must execute
   * once (one shared exchange of kernel output), not once per output
   * branch, and no Exchange may sit below a kernel. Solo match, BM25, cover and
   * facet queries are themselves one-slot batches, so for those shapes the
@@ -40,11 +40,12 @@ class MsearchFusedSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
 
   /** Kernel reads of one layout directory ("postings", "postings_alt") in
-    * a plan string; full scans, which also read docs, are not counted.
+    * a plan string, whether or not the read also reads docs rows.
     */
   private def kernelReads(plan: String, layout: String): Int =
-    s"ShardScan \\S+/$layout \\[".r.findAllIn(plan).size
-  private def fullScans(plan: String): Int =
+    s"ShardScan \\S+/$layout(, Docs: \\S+)? \\[".r.findAllIn(plan).size
+  /** Postings reads that also read the docs rows (a full-scan slot). */
+  private def docsReads(plan: String): Int =
     "ShardScan \\S+/postings, Docs: ".r.findAllIn(plan).size
 
   private lazy val searcher: Searcher = {
@@ -62,7 +63,7 @@ class MsearchFusedSpec extends AnyFunSuite {
       Bm25(Seq("rare7", "veryrare", "tail3"), 7),
       Cover("common & rare7", 5),
       Match("prefixed:* & even"),
-      Match("!rare7"), // pure negation: full-scan fallback unioned in
+      Match("!rare7"), // pure negation: a full-scan slot of the same read
       Match(""))       // void slot: contributes nothing
     val got = searcher.msearch(specs).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
@@ -117,7 +118,7 @@ class MsearchFusedSpec extends AnyFunSuite {
       Count("prefixed:* & even"),   // prefix expansion inside a count slot
       Count("zzzabsent"),           // zero matches: spine row with cnt 0
       Count(""),                    // void: spine row with cnt 0
-      Count("!rare7"),              // full-scan fallback aggregated in
+      Count("!rare7"),              // full-scan slot: counted in the kernel
       Bm25(Seq("rare7", "veryrare"), 4))
     val df = searcher.msearchPlan(specs)
     val got = df.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
@@ -140,10 +141,10 @@ class MsearchFusedSpec extends AnyFunSuite {
     assert(got(6).map(t => (t._2, t._3)).toSet == soloBm25)
     // the count branch must REUSE the match/bm25 branches' exchange of
     // kernel output, not rescan: one postings read for the whole mixed
-    // batch, plus the full-scan fallback's own read
+    // batch, full-scan slot included, and that read also reads docs
     val plan = finalPlan(df)
     assert(plan.contains("Reused"), plan.take(3000))
-    assert(kernelReads(plan, "postings") == 1 && fullScans(plan) == 1, plan.take(3000))
+    assert(kernelReads(plan, "postings") == 1 && docsReads(plan) == 1, plan.take(3000))
   }
 
   test("CountFields: field-scoped count slots over a multicolumn index") {
@@ -497,7 +498,8 @@ class MsearchFusedSpec extends AnyFunSuite {
     assert(below.contains("HashAggregate") && below.contains("partial_sum"), count)
     // the order-only cover full scan reads docs and postings in the same task
     val full = plan(searcher.topKCover("common & rare7", 5, matchOnly = false))
-    assert(fullScans(full) == 1 && exchanges(full) == 0, full)
+    assert(kernelReads(full, "postings") == 1 && docsReads(full) == 1, full)
+    assert(exchanges(full) == 0, full)
   }
 
   test("k <= 0 is rejected at plan time on both layouts, before any job runs") {

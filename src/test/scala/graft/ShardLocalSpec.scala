@@ -13,8 +13,9 @@ import graft.tokenize.Tokenizer
   * more shards than tasks, and a term present in only one shard. Every
   * query family runs on each layout and must equal brute force over the
   * generated corpus and its compacted twin: primary match, count, BM25 and
-  * cover, the alt layout's addon top-k and range, and full scans (`!t`
-  * and a UNIQ-normalized cover).
+  * cover, the alt layout's addon top-k and range, full scans (`!t`, a
+  * UNIQ-normalized cover and Order2, an order-only cover), and one fused
+  * batch that mixes regular and full-scan slots over one postings read.
   */
 class ShardLocalSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
@@ -96,16 +97,34 @@ class ShardLocalSpec extends AnyFunSuite {
     (0 until nDocs).filter(i => TsEval.matches(c, provider(c, i)))
   }
 
-  private def bruteCover(q: String, k: Int, method: Int): Seq[(Long, Double)] = {
+  private def bruteDistance(c: CompiledQuery, i: Int, method: Int): Double = {
+    val p = provider(c, i)
+    CoverRank.distance(c, c.keys.indices.map(p.positions).toArray,
+      c.keys.indices.map(p.wclasses).toArray, method,
+      docLen = Tokenizer.simpleTokens(text(i)).length,
+      nUniq = Tokenizer.simple(text(i)).length).toDouble
+  }
+
+  /** Cover top-k; `matchOnly = false` ranks every doc, non-matching docs
+    * last (infinite distance, then docId).
+    */
+  private def bruteCover(q: String, k: Int, method: Int,
+                         matchOnly: Boolean = true): Seq[(Long, Double)] = {
     val c = cq(q)
-    bruteMatches(q).map { i =>
-      val p = provider(c, i)
-      val d = CoverRank.distance(c, c.keys.indices.map(p.positions).toArray,
-        c.keys.indices.map(p.wclasses).toArray, method,
-        docLen = Tokenizer.simpleTokens(text(i)).length,
-        nUniq = Tokenizer.simple(text(i)).length).toDouble
-      (i.toLong, d)
+    val matches = bruteMatches(q).toSet
+    val cands = if (matchOnly) matches.toSeq else 0 until nDocs
+    cands.map { i =>
+      (i.toLong, if (matches(i)) bruteDistance(c, i, method) else Double.PositiveInfinity)
     }.sortBy { case (id, d) => (d, id) }.take(k)
+  }
+
+  /** `ORDER BY t <=> q (method), addon <-> c, docId LIMIT k` as (docId,
+    * rank distance), sorted by docId.
+    */
+  private def bruteOrder2(q: String, c: Long, k: Int, method: Int): Seq[(Long, Double)] = {
+    val compiled = cq(q)
+    bruteMatches(q).map(i => (bruteDistance(compiled, i, method), math.abs(addon(i) - c), i.toLong))
+      .sorted.take(k).map { case (d, _, id) => (id, d) }.sorted
   }
 
   private def bruteBm25(terms: Seq[String], k: Int, meta: IndexMeta): Seq[(Long, Double)] = {
@@ -133,6 +152,42 @@ class ShardLocalSpec extends AnyFunSuite {
     "gap & !alpha", "tail3 <-> nowhere", "nowhere")
   private val fullScanQueries = Seq("!alpha", "!solo")
 
+  /** One batch of regular and full-scan slots, keyed by the name of its
+    * solo answer: regular Match/Count/Cover, a pure negation's Match and
+    * Count, a UNIQ cover and a UNIQ Order2.
+    */
+  private val batch: Seq[(String, Searcher.MsearchSpec)] = {
+    import Searcher.MsearchSpec._
+    Seq("match alpha & beta" -> Match("alpha & beta"),
+      "count alpha & beta" -> Count("alpha & beta"),
+      "cover" -> Cover("alpha & (beta | solo)", 9),
+      "match !alpha" -> Match("!alpha"),
+      "count !alpha" -> Count("!alpha"),
+      "cover uniq" -> Cover("gamma | solo", 9, CoverRank.NormUniq),
+      "order2 uniq" -> Order2("alpha | solo", -3000L, "both", 8, CoverRank.NormUniq))
+  }
+
+  /** The batch's answers, keyed "batch <solo name>"; its plan reads the
+    * postings exactly once.
+    */
+  private def batchAnswers(s: Searcher): Map[String, Any] = {
+    val df = s.msearchPlan(batch.map(_._2))
+    val rows = df.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).groupBy(_._1)
+      .withDefaultValue(Array.empty)
+    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    assert("ShardScan \\S+/postings(, Docs: \\S+)? \\[".r.findAllIn(plan).size == 1, plan)
+    batch.zipWithIndex.map { case ((name, spec), qi) =>
+      val slot = rows(qi)
+      s"batch $name" -> (spec match {
+        case _: Searcher.MsearchSpec.Match => slot.map(_._2).toSeq.sorted
+        case _: Searcher.MsearchSpec.Count => slot.map(_._2).sum
+        case _: Searcher.MsearchSpec.Cover =>
+          slot.map(t => (t._2, t._3)).toSeq.sortBy { case (id, d) => (d, id) }
+        case _ => slot.map(t => (t._2, t._3)).toSeq.sorted
+      })
+    }.toMap
+  }
+
   /** Every query family on `s`, as comparable values keyed by query. */
   private def answers(s: Searcher): Map[String, Any] = {
     def ids(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).toSeq.sorted
@@ -145,26 +200,40 @@ class ShardLocalSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq,
       "cover uniq" -> s.topKCover("gamma | solo", 9, method = CoverRank.NormUniq).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq,
+      "cover every doc" -> s.topKCover("alpha & solo", 6, matchOnly = false).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq,
+      "order2 uniq" -> s.topKMulti("alpha | solo", Seq(Searcher.OrderKey.Rank(CoverRank.NormUniq),
+          Searcher.OrderKey.Addon(-3000L, "both")), 8).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq.sorted,
       "addon" -> s.topKAddon("alpha & beta", -3000L, "both", 11).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq,
       "addon left" -> s.topKAddon("solo | gamma", 0L, "left", 7).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq,
+      // the alt layout cannot drive a pure negation: its fallback full-scans
+      // and reads each addon from the doc row
+      "addon !alpha" -> s.topKAddon("!alpha", 2000L, "both", 7).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq,
       "range" -> s.rangeAddon("beta | solo", -5000L, 4000L).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted)
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted) ++ batchAnswers(s)
   }
 
-  private def brute(meta: IndexMeta): Map[String, Any] =
-    (matchQueries ++ fullScanQueries).flatMap { q =>
+  private def brute(meta: IndexMeta): Map[String, Any] = {
+    val solo = (matchQueries ++ fullScanQueries).flatMap { q =>
       val m = bruteMatches(q).map(_.toLong)
       Seq(s"match $q" -> m, s"count $q" -> m.size.toLong)
     }.toMap ++ Map(
       "bm25" -> bruteBm25(Seq("alpha", "solo", "tail3", "nowhere"), 12, meta),
       "cover" -> bruteCover("alpha & (beta | solo)", 9, 0),
       "cover uniq" -> bruteCover("gamma | solo", 9, CoverRank.NormUniq),
+      "cover every doc" -> bruteCover("alpha & solo", 6, 0, matchOnly = false),
+      "order2 uniq" -> bruteOrder2("alpha | solo", -3000L, 8, CoverRank.NormUniq),
       "addon" -> bruteAddon("alpha & beta", -3000L, "both", 11),
       "addon left" -> bruteAddon("solo | gamma", 0L, "left", 7),
+      "addon !alpha" -> bruteAddon("!alpha", 2000L, "both", 7),
       "range" -> bruteMatches("beta | solo").map(i => (i.toLong, addon(i)))
         .filter { case (_, a) => a >= -5000L && a <= 4000L })
+    solo ++ batch.map { case (name, _) => s"batch $name" -> solo(name) }
+  }
 
   private def assertSame(got: Map[String, Any], want: Map[String, Any], what: String): Unit = {
     assert(got.keySet == want.keySet)
@@ -202,11 +271,19 @@ class ShardLocalSpec extends AnyFunSuite {
     for (n <- Seq(1, 3, 9))
       assertSame(byName(s"nShards=$n multi-generation"), byName(s"nShards=$n compacted"),
         s"nShards=$n twin")
+    // each batch slot equals its solo query
+    for ((name, got) <- byName; (slot, _) <- batch)
+      assert(got(s"batch $slot") == got(slot), s"$name batch $slot")
     // the fixture reaches every branch: non-empty answers where expected
     val one = byName("nShards=9 multi-generation")
     for (k <- Seq("match alpha & beta", "match solo | gamma", "match !alpha", "bm25", "cover",
-                  "cover uniq", "addon", "addon left", "range"))
+                  "cover uniq", "cover every doc", "order2 uniq", "addon", "addon left",
+                  "addon !alpha", "range"))
       assert(one(k).asInstanceOf[Seq[_]].nonEmpty, k)
+    // the order-only cover reaches past its one match into the
+    // non-matching docs
+    assert(one("cover every doc").asInstanceOf[Seq[(Long, Double)]].map(_._2)
+      .count(_.isPosInfinity) == 5)
     assert(one("count alpha & solo") == 1L && one("count !solo") == nDocs - 1L)
     assert(one("count nowhere") == 0L && one("count tail3 <-> nowhere") == 0L)
   }
