@@ -108,29 +108,26 @@ object AltKernel extends Serializable {
     }
   }
 
-  /** Shard-local alt-layout cell table: rows grouped by term ONCE, with
-    * each query key's merged/unioned block array memoized — a fused batch
-    * of ordered-scan specs shares one instance per shard, so a term or
-    * prefix expansion appearing in several specs is merged once (the alt
-    * twin of [[SearchKernel.ShardView]]). Cell arrays are immutable; the
-    * direction-stateful cursors are built fresh per spec. Not thread-safe
-    * (one task owns its shard).
+  /** One task's alt-layout cell table over one cached shard record: each
+    * query key's merged/unioned block array is memoized — a fused batch of
+    * ordered-scan specs shares one instance per shard, so a term or prefix
+    * expansion appearing in several specs is merged once (the alt twin of
+    * [[SearchKernel.ShardView]]). Cell arrays are immutable; the
+    * direction-stateful cursors are built fresh per spec. The record is
+    * shared; this table is not thread-safe (one task owns it).
     *
     * Micro-segment runs from incremental appends overlap in addon range;
     * they are merge-sorted and repacked once per (query key, shard) — the
     * query-time analogue of the primary path's UnionCursor.
     */
-  final class ShardCells(rows: Iterator[PostingRow]) {
-    private val byTerm = mutable.HashMap.empty[String, mutable.ArrayBuffer[PostingRow]]
-    rows.foreach(r => byTerm.getOrElseUpdate(r.term, mutable.ArrayBuffer.empty) += r)
+  final class ShardCells(record: ShardRecord, handed: Long => Unit) {
+    private val termRuns = new TermMemo(record, handed)(runsOf)
     private val cellCache = mutable.HashMap.empty[(String, Boolean), Array[PostingBlock]]
 
     def cellFor(k: SearchKernel.KeySpec): Array[PostingBlock] =
       cellCache.getOrElseUpdate((k.term, k.prefix), {
-        val rs =
-          if (k.prefix) byTerm.keysIterator.filter(_.startsWith(k.term)).flatMap(byTerm(_)).toSeq
-          else byTerm.get(k.term).map(_.toSeq).getOrElse(Nil)
-        if (rs.isEmpty) Array.empty[PostingBlock] else mergedUnion(rs)
+        val terms = record.termsOf(k)
+        if (terms.isEmpty) Array.empty[PostingBlock] else mergedUnion(terms.map(termRuns(_)))
       })
 
     /** Group chunk rows into maximal strictly-ascending runs in
@@ -138,7 +135,7 @@ object AltKernel extends Serializable {
       * sorted stream; overlapping micro-segments land in separate runs.
       * Run index order = arrival order, which keep-first dedup relies on.
       */
-    private def runsOf(rs: Seq[PostingRow]): Array[Array[PostingRow]] = {
+    private def runsOf(rs: Array[PostingRow]): Array[Array[PostingRow]] = {
       val sorted = rs.sortBy(r => (r.blocks.head.firstDoc, r.chunk))
       val runs = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[PostingRow]]
       sorted.foreach { r =>
@@ -166,8 +163,7 @@ object AltKernel extends Serializable {
       * and must not inflate tf; run order is (firstDoc, chunk) arrival
       * order), and terms contribute in ascending-term order.
       */
-    private def mergedUnion(rs: Seq[PostingRow]): Array[PostingBlock] = {
-      val runs = rs.groupBy(_.term).toSeq.sortBy(_._1).map(t => runsOf(t._2))
+    private def mergedUnion(runs: Seq[Array[Array[PostingRow]]]): Array[PostingBlock] = {
       if (runs.length == 1 && runs(0).length == 1) return runs(0)(0).flatMap(_.blocks)
       val cursors = mutable.ArrayBuffer.empty[RunCur]
       val termIdx = mutable.ArrayBuffer.empty[Int]

@@ -7,7 +7,8 @@ import graft.core.{PostingBlock, PostingCursor}
 import graft.query._
 
 /** Per-shard merge/score kernels. Pure Scala over compressed posting
-  * blocks; runs in the task that read the shard ([[ShardScan]]).
+  * blocks; runs in the task that holds the shard's cached record
+  * ([[ShardScan]]).
   */
 object SearchKernel extends Serializable {
 
@@ -331,76 +332,60 @@ object SearchKernel extends Serializable {
   /** member count above which prefix unions use the heap cursor */
   val HeapUnionThreshold = 64
 
-  /** Shard-local term table: the posting rows of one shard grouped by term
-    * ONCE, with the per-term run partition and prefix expansions memoized.
-    * A fused msearch batch evaluates MANY specs over the same buffered
-    * shard; building each spec's cursors from a shared view makes per-spec
-    * setup O(|spec's terms|) instead of O(|union rows|) re-hashing per spec
-    * (the batch-size tax the fused shape exists to avoid). Cursors built
-    * from the view are always FRESH — only the immutable grouping/run
-    * structure is shared. Not thread-safe (one task owns its shard).
+  /** One task's view of one cached shard record: each term's run
+    * partition is memoized for the batch, so a fused msearch batch that
+    * evaluates MANY specs over the same shard builds each spec's cursors
+    * from O(|spec's terms|) binary searches. Cursors built from the view
+    * are always FRESH; the record is shared and immutable, the memo
+    * belongs to this task. Not thread-safe (one task owns it).
     */
-  final class ShardView(rows: Iterator[PostingRow]) {
-    private val byTerm = mutable.HashMap.empty[String, mutable.ArrayBuffer[PostingRow]]
-    rows.foreach { r =>
-      byTerm.getOrElseUpdate(r.term, mutable.ArrayBuffer.empty) += r
-    }
+  final class ShardView(record: ShardRecord, handed: Long => Unit) {
+    // runs × chunk-rows-in-run, as block arrays (see [[termCursors]])
+    private val runs = new TermMemo(record, handed)(ShardView.runsOf)
 
-    /** runs × chunk-rows-in-run, as block arrays (see [[termCursors]]) */
-    private val runCache = mutable.HashMap.empty[String, Array[Array[Array[PostingBlock]]]]
-    private val prefixCache = mutable.HashMap.empty[String, Array[String]]
+    def termsOf(k: KeySpec): Range = record.termsOf(k)
 
-    def hasTerm(t: String): Boolean = byTerm.contains(t)
+    /** fresh streaming cursors over term `i`'s runs (one per run) */
+    def termCursors(i: Int): Array[PostingCursor] =
+      runs(i).map(run => new PostingCursor(run.iterator))
+  }
 
-    def termsWithPrefix(p: String): Array[String] =
-      prefixCache.getOrElseUpdate(p, byTerm.keysIterator.filter(_.startsWith(p)).toArray)
-
+  object ShardView {
     // One term's chunk rows normally have disjoint ascending docId ranges
     // (single-build layout) → one streaming cursor. After incremental
     // appends (micro-segments, the ruminsert path: src/ruminsert.c:799-837)
     // ranges overlap → k-way merge of the non-ascending runs
     // (rumMergeRumItems semantics, src/rumdatapage.c:367-408).
-    private def termRuns(t: String): Array[Array[Array[PostingBlock]]] =
-      runCache.getOrElseUpdate(t, {
-        val sorted = byTerm(t).sortBy(_.blocks.head.firstDoc)
-        val runs = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[PostingRow]]
-        sorted.foreach { r =>
-          if (runs.nonEmpty && r.blocks.head.firstDoc > runs.last.last.blocks.last.lastDoc)
-            runs.last += r // extends the run: still strictly ascending
-          else runs += mutable.ArrayBuffer(r) // overlap → separate run to merge
-        }
-        runs.map(_.map(_.blocks).toArray).toArray
-      })
-
-    /** fresh streaming cursors over the term's runs (one per run) */
-    def termCursors(t: String): Array[PostingCursor] =
-      termRuns(t).map(run => new PostingCursor(run.iterator))
+    private def runsOf(rows: Array[PostingRow]): Array[Array[Array[PostingBlock]]] = {
+      val sorted = rows.sortBy(_.blocks.head.firstDoc)
+      val runs = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[PostingRow]]
+      sorted.foreach { r =>
+        if (runs.nonEmpty && r.blocks.head.firstDoc > runs.last.last.blocks.last.lastDoc)
+          runs.last += r // extends the run: still strictly ascending
+        else runs += mutable.ArrayBuffer(r) // overlap → separate run to merge
+      }
+      runs.map(_.map(_.blocks).toArray).toArray
+    }
   }
 
-  /** Build one cursor per query key over a pre-grouped [[ShardView]] — the
+  /** Build one cursor per query key over a [[ShardView]] — the
     * fused-msearch path shares one view across every spec in the batch.
     * Chunk rows of one term are ordered by their first docId (disjoint
     * ranges by construction — the builder splits long terms by docId range).
     */
-  def buildCursors(keys: Array[KeySpec], view: ShardView): Array[KeyCursor] = {
-    def termCursor(t: String): KeyCursor = {
-      val cs = view.termCursors(t)
-      if (cs.length == 1) new SingleCursor(cs(0)) else new UnionCursor(cs)
-    }
+  def buildCursors(keys: Array[KeySpec], view: ShardView): Array[KeyCursor] =
     keys.map { k =>
-      if (!k.prefix) {
-        if (view.hasTerm(k.term)) termCursor(k.term) else EmptyCursor
+      val terms = view.termsOf(k)
+      if (terms.isEmpty) EmptyCursor
+      else if (!k.prefix) {
+        val cs = view.termCursors(terms.head)
+        if (cs.length == 1) new SingleCursor(cs(0)) else new UnionCursor(cs)
       } else {
-        val terms = view.termsWithPrefix(k.term)
-        if (terms.isEmpty) EmptyCursor
-        else {
-          val cs = terms.flatMap(view.termCursors)
-          if (cs.length > HeapUnionThreshold) new HeapUnionCursor(cs)
-          else new UnionCursor(cs)
-        }
+        val cs = terms.toArray.flatMap(view.termCursors)
+        if (cs.length > HeapUnionThreshold) new HeapUnionCursor(cs)
+        else new UnionCursor(cs)
       }
     }
-  }
 
   /** Provider over the current candidate: positions decoded lazily, cached
     * per key per candidate.
@@ -519,7 +504,7 @@ object SearchKernel extends Serializable {
     * scans).
     */
   def fullScanShard(cq: CompiledQuery, keys: Array[KeySpec],
-                    docs: scala.collection.IndexedSeq[DocRow], view: ShardView,
+                    docs: Array[DocRow], view: ShardView,
                     score: Boolean, matchOnly: Boolean, k: Int, method: Int = 0,
                     scoreCq: CompiledQuery = null,
                     scoreMap: Array[Int] = null): Iterator[(Long, Double, Long)] = {

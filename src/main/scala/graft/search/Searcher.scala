@@ -10,14 +10,16 @@ import graft.query._
 /** Query execution over a built index.
   *
   * Spark plan shape (the RUM scan pipeline, re-expressed):
-  *   1. parquet scan of posting rows with `term` predicates pushed down —
-  *      the entry-tree descent (reference: src/rumget.c:536-696
-  *      startScanEntry); partition/row-group pruning stands in for the
-  *      B-tree.
-  *   2. per-shard typed merge kernel, run in place by the task that read
-  *      the shard ([[ShardScan]]: whole shards per task, no Exchange
-  *      below the kernel) — the k-way posting merge + consistency check
-  *      (src/rumget.c:1426-1568 scanGetItemRegular) with prefix expansion
+  *   1. term lookup in the Searcher's [[ShardStore]]: each layout's shards
+  *      are decoded once, by the first query that reads the layout, into
+  *      cached records whose chunk rows are grouped by sorted term; a
+  *      query binary-searches its own keys there — the entry-tree descent
+  *      to buffered posting pages (reference: src/rumget.c:536-696
+  *      startScanEntry) — and opens no parquet file.
+  *   2. per-shard typed merge kernel, run in place by the task that holds
+  *      the shard's record ([[ShardScan]]: whole shards per task, no
+  *      Exchange below the kernel) — the k-way posting merge + consistency
+  *      check (src/rumget.c:1426-1568 scanGetItemRegular) with prefix expansion
   *      as positional union (src/rumget.c:1124-1296 entryGetItem +
   *      rum_ts_join_pos). Only kernel output leaves the task.
   *   3. scores computed inside the kernel from payloads (positions) —
@@ -61,11 +63,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * listing — so the Dataset a public query method returns is a pure
     * function of (method, args). Repeating a query therefore reuses the
     * analyzed/optimized/physical plan (Dataset.queryExecution is computed
-    * once per instance) and any driver-side stats lookup folded into plan
-    * construction (e.g. topKBm25's df/maxTf fetch), instead of paying
-    * Catalyst + a stats job again. This is the fixed per-query driver cost
-    * that does NOT parallelize with added cores (BENCH/BASELINE.md 2→8
-    * analysis); execution itself still runs fresh per action. Bounded by
+    * once per instance) instead of paying Catalyst again. This is the
+    * fixed per-query driver cost that does NOT parallelize with added
+    * cores (BENCH/BASELINE.md 2→8 analysis); execution itself still runs
+    * fresh per action. Bounded by
     * access-ordered LRU at `maxCachedPlans` shapes: a prepared workload
     * that churns shapes keeps its hot set (evicting the coldest plan)
     * instead of degrading to permanent re-planning.
@@ -95,7 +96,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
   /** One dataset's committed files by shard, statted once per Searcher
     * (the snapshot is immutable).
     */
-  private def shardFiles(kind: String): (String, Map[Int, Seq[ShardScan.File]]) = {
+  private def shardFiles(kind: String): (String, Map[Int, Seq[ShardStore.File]]) = {
     val (dir, rel) = graft.build.IndexBuilder.dataFiles(indexDir, meta, kind)
     val conf = spark.sessionState.newHadoopConf()
     val byShard = rel.map { f =>
@@ -104,28 +105,27 @@ final class Searcher(spark: SparkSession, indexDir: String,
       require(shard < meta.nShards, s"$dir/$f: shard $shard of ${meta.nShards}")
       val path = new org.apache.hadoop.fs.Path(s"$dir/$f")
       val st = path.getFileSystem(conf).getFileStatus(path)
-      shard -> ShardScan.File(st.getPath.toString, st.getLen, st.getModificationTime)
+      shard -> ShardStore.File(st.getPath.toString, st.getLen, st.getModificationTime)
     }.groupBy(_._1).map { case (s, fs) => s -> fs.map(_._2).sortBy(_.path) }
     (dir, byShard)
   }
-  private lazy val postingFiles = shardFiles("postings")
-  /** (addon, docId)-ordered posting copy (order_by_attach layout). */
-  private lazy val altFiles = shardFiles("alt")
-  private lazy val docFiles = shardFiles("docs")
 
-  /** `kernel` run shard-locally over its layout: whole shards packed into
-    * min(p, nShards) tasks, p = the shuffle width (the build's
+  /** A layout's [[ShardStore]]: whole shards packed into min(p, nShards)
+    * partitions, p = the shuffle width (the build's
     * `IndexBuilder.shardRouting` rule).
     */
-  private def shardScan(kernel: ShardKernel): DataFrame = {
-    val (dir, files) = if (kernel.layout == "alt") altFiles else postingFiles
-    val docs = if (kernel.readsDocs) Some(docFiles) else None
+  private def openStore(kind: String, docs: Map[Int, Seq[ShardStore.File]]): ShardStore = {
+    val (dir, files) = shardFiles(kind)
     val nPart = math.min(spark.sessionState.conf.numShufflePartitions, meta.nShards)
-    val groups = (0 until nPart).map(i => (i until meta.nShards by nPart).map(s =>
-      ShardScan.Shard(s, files.getOrElse(s, Nil),
-        docs.fold(Seq.empty[ShardScan.File])(_._2.getOrElse(s, Nil)))))
-    ShardScan.frame(spark, kernel, ShardScan.Read(dir, docs.map(_._1), groups))
+    new ShardStore(spark, dir, (0 until nPart).map(i => i until meta.nShards by nPart), files, docs)
   }
+  private lazy val postingStore = openStore("postings", shardFiles("docs")._2)
+  /** (addon, docId)-ordered posting copy (order_by_attach layout). */
+  private lazy val altStore = openStore("alt", Map.empty)
+
+  /** `kernel` run shard-locally over its layout's store. */
+  private def shardScan(kernel: ShardKernel): DataFrame =
+    ShardScan.frame(spark, kernel, if (kernel.layout == "alt") altStore else postingStore)
 
   /** Each branch's rows of one kernel scan, `branches` = the slots of each
     * branch. One live branch reads the scan itself. Several select their
@@ -243,8 +243,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
     if (idx.isEmpty) return meta.numDocs
     val terms = idx.map(cq.keys(_)).filterNot(_.prefix).map(_.term)
     if (terms.isEmpty) return meta.numDocs
-    val dfs = statsDF.where(col("term").isin(terms.toSeq: _*))
-      .select("df").collect().map(_.getLong(0))
+    val dfs = terms.distinct.flatMap(termStatsMap.get).map(_._1)
     val est =
       if (req.nonEmpty) (if (dfs.isEmpty) 0L else dfs.min)
       else dfs.sum
@@ -622,26 +621,18 @@ final class Searcher(spark: SparkSession, indexDir: String,
       oneSlot(Searcher.MsearchSpec.Bm25(terms, k), col("docId"), col("score"))
     }
 
-  /** Per-searcher term-stats memo: (df, maxTf) per key, absent terms cached
-    * as (0, 0). A Searcher is pinned to one immutable snapshot, so stats
-    * never go stale; once a term is seen, no further plan construction pays
-    * a driver-side stats job for it — the fixed per-query driver cost the
-    * ad-hoc serving path must not re-pay per batch.
+  /** Per-term (df, maxTf) of the whole snapshot, collected by the first
+    * query that needs one (one job per Searcher), so no later plan pays a
+    * driver-side stats job. Its size is the vocabulary, smaller than the
+    * shard stores the same Searcher holds.
     */
-  private val termStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Int)]()
+  private lazy val termStatsMap: Map[String, (Long, Int)] =
+    statsDF.select("term", "df", "maxTf").collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getInt(2))).toMap
 
   /** stats for already-keyOf'd terms; absent terms are dropped. */
-  private def statsFor(keys: Seq[String]): Map[String, (Long, Int)] = {
-    val missing = keys.filterNot(termStatsCache.containsKey)
-    if (missing.nonEmpty) {
-      val rows = statsDF.where(col("term").isin(missing: _*))
-        .select("term", "df", "maxTf").collect()
-      val found = rows.map(r => r.getString(0) -> (r.getLong(1), r.getInt(2))).toMap
-      missing.foreach(t => termStatsCache.put(t, found.getOrElse(t, (0L, 0))))
-    }
-    keys.map(t => t -> termStatsCache.get(t)).toMap.filter(_._2._1 > 0L)
-  }
+  private def statsFor(keys: Seq[String]): Map[String, (Long, Int)] =
+    keys.flatMap(t => termStatsMap.get(t).filter(_._1 > 0L).map(t -> _)).toMap
 
   /** Zero-row frame with (qi, cols...) — the empty-msearch schema shared
     * by every batch API's empty-input guard.
@@ -699,14 +690,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
   }
 
   /** FUSED multi-search: evaluate a heterogeneous batch of queries in ONE
-    * shard-local read per layout (the shared-scan msearch a serving tier
-    * runs when individual queries are millisecond-scale). The union of all
-    * specs' term predicates is pushed to the read; each task reads whole
-    * shards ([[ShardScan]]), buffers one shard's rows at a time, and every
-    * spec's kernel (boolean match / WAND BM25 / cover-rank, all with their
-    * usual per-shard pruning) replays them in place — no Exchange below
-    * the kernel, and extra terms from sibling specs are invisible to a
-    * kernel because cursor construction matches exactly its own keys.
+    * shard-local pass per layout (the shared-scan msearch a serving tier
+    * runs when individual queries are millisecond-scale). Each task walks
+    * whole shards of the layout's store ([[ShardScan]]), and every spec's
+    * kernel (boolean match / WAND BM25 / cover-rank, all with their usual
+    * per-shard pruning) looks up exactly its own keys in each shard's
+    * record — no Exchange below the kernel, and sibling specs' terms are
+    * invisible to it.
     * Global per-spec top-k then runs over ONLY the shard-pruned rows of
     * bounded specs (≤ k·nShards rows each): per layout, one bounded slot
     * takes an ordered limit (TakeOrderedAndProject, no shuffle), several
@@ -727,8 +717,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * a heterogeneous batch costs one read per layout it touches. A slot
     * whose candidates are every doc (pure negations and other queries
     * that match the empty doc, UNIQ/LOGUNIQ rank norms) is a full-scan
-    * slot of the same primary read, which then also reads each shard's
-    * docs rows. Void specs contribute no rows; alt-unservable ordered-scan
+    * slot of the same primary pass, which walks each shard's docs rows.
+    * Void specs contribute no rows; alt-unservable ordered-scan
     * specs fall back to their own one-slot Match plans, unioned in.
     */
   def msearch(specs: Seq[Searcher.MsearchSpec]): DataFrame =
@@ -745,8 +735,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * from it; only the public batch schema drops the addon.
     */
   private def slotPlan(specs: Seq[Searcher.MsearchSpec]): DataFrame = {
-    // every bound is checked before any slot plans: a BM25 slot's stats
-    // lookup is a job
+    // every bound is checked before any slot plans: a Searcher's first
+    // BM25 slot collects the term stats in a job
     specs.foreach(Searcher.requireBound)
     val batch = new SlotBatch
     specs.zipWithIndex.foreach { case (spec, qi) => batch.add(qi, spec) }
@@ -933,9 +923,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
         if (fused.isEmpty) (Nil, None)
         else {
           val fs = fused.toArray
-          // ONE read for every slot: the pushed predicate is the union of
-          // the slots' terms, and each slot's kernel matches exactly its
-          // own keys, so sibling slots' terms are invisible to it
+          // ONE pass for every slot: each slot's kernel looks up exactly
+          // its own keys, so sibling slots' terms are invisible to it; the
+          // union of the slots' terms names the pass in the plan
           val terms = fs.map(f =>
             if (f.mode == 2) TermSet(f.terms.toSeq, Nil) else TermSet.of(f.cq)).reduce(_ ++ _)
           val bounded = fs.filter(f => f.mode != 0 && f.mode != 3)
@@ -1031,7 +1021,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * which is what keeps count-heavy serving scaling when individual
     * matches number in the millions. Void queries count 0 (the qi spine
     * guarantees a row per slot); full-scan queries count their matches
-    * among the shard's docs rows in the same read. Returns (qi, cnt).
+    * among the shard's docs rows in the same pass. Returns (qi, cnt).
     */
   def msearchCounts(queryStrs: Seq[String]): DataFrame =
     cached("msearchC" + Searcher.key(queryStrs: _*))(msearchCountsPlan(queryStrs))
@@ -1052,8 +1042,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * for token-less docs ([[graft.build.IndexBuilder.EmptyToken]]; the
     * reference's placeholder-key categories src/rum.h:205-211 and
     * INCLUDE_EMPTY scan mode src/rumscan.c:144-151), NOT a corpus scan:
-    * the plan is a postings scan with one pushed-down key, like any other
-    * single-term match. On a multi-column index pass the field whose
+    * the plan is a postings lookup of one key, like any other single-term
+    * match. On a multi-column index pass the field whose
     * emptiness is being asked about.
     */
   private def emptyKeyRaw(field: Option[String]): String = field match {
@@ -1068,7 +1058,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
   }
 
   /** The placeholder key as a compiled single-leaf query: to the kernel
-    * it is an ordinary pushed-down key (its rows carry an empty position
+    * it is an ordinary key (its rows carry an empty position
     * payload, which decodes to a present-but-empty position list), so
     * Match/Count slots over it ride fused batches like any other query —
     * INCLUDE_EMPTY inside the serving batch (src/rumscan.c:144-151).
@@ -1221,7 +1211,7 @@ object Searcher {
         hi: Double) extends MsearchSpec
     /** docIds whose indexed value is empty/NULL, riding the fused batch —
       * INCLUDE_EMPTY inside the serving batch (the reserved placeholder
-      * key is an ordinary pushed-down key to the kernel,
+      * key is an ordinary key to the kernel,
       * src/rumscan.c:144-151). Pass the field on a multicolumn index.
       */
     final case class MatchEmpty(field: Option[String] = None) extends MsearchSpec

@@ -1,41 +1,30 @@
 package graft.search
 
-import scala.collection.mutable
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{ArrayContains, Attribute, AttributeSet, Literal,
   UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics, UnaryNode}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{FilterExec, LeafExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, FileScanRDD,
-  PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.sources
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.build.{DocRow, PostingRow}
 import graft.query.CompiledQuery
 
-/** Shard-local serving: one task reads whole shards and runs the kernel
-  * over them in place, so no Exchange sits below the kernel.
+/** Shard-local serving: one task runs the kernel over whole shards in
+  * place, so no Exchange sits below the kernel.
   *
-  * The build writes each shard's rows under its own `shard=N/` directory,
-  * so the rows a kernel needs already sit together on disk — RUM's scan
-  * reads a posting list and its payloads in one pass (src/rumget.c:
-  * 536-696 startScanEntry, 1426-1568 scanGetItemRegular). The driver
-  * packs whole shards into min(p, nShards) input partitions (p = the
-  * shuffle width, the rule `IndexBuilder.shardRouting` builds with). A task
-  * reads its shards' files with Spark's parquet reader — the term
-  * predicate pushed down for row-group pruning, then re-checked per row —
-  * and hands the kernel one shard at a time, so a task holds one shard's
-  * rows. A primary read with a full-scan slot also reads the shard's docs
-  * files in the same task, and its full-scan slots walk them.
+  * A layout's shards live in the Searcher's [[ShardStore]]: one cached
+  * partition per group of whole shards, min(p, nShards) groups (p = the
+  * shuffle width, the rule `IndexBuilder.shardRouting` builds with). A
+  * task hands the kernel one [[ShardRecord]] at a time, and each slot
+  * looks up only its own terms in it — RUM's scan reads a key's posting
+  * list and its payloads in one pass (src/rumget.c:536-696
+  * startScanEntry, 1426-1568 scanGetItemRegular). Full-scan slots walk
+  * the record's docs rows. No parquet file is opened once the store is
+  * cached.
   *
   * [[ShardScan]] is the logical leaf, [[ShardScanExec]] its physical exec
   * and [[ShardScanStrategy]] the planner rule; every kernel emits rows of
@@ -58,35 +47,10 @@ private[search] object ShardScan {
   /** One kernel output row, in [[Schema]] order. */
   type Out = (Int, Long, Double, Double, Long, Long)
 
-  /** The shard's directory value, appended to every row read. */
-  private val ShardCol = StructType(Seq(StructField("shard", IntegerType, nullable = false)))
-  private def dataSchema[T <: Product : scala.reflect.runtime.universe.TypeTag]: StructType =
-    StructType(Encoders.product[T].schema.filterNot(_.name == "shard"))
-  private val PostingData = dataSchema[PostingRow]
-  private val DocData = dataSchema[DocRow]
-
-  /** One committed parquet file. */
-  final case class File(path: String, size: Long, mtime: Long)
-
-  /** One shard's files: its layout's postings and, when a slot full-scans,
-    * its docs rows.
-    */
-  final case class Shard(id: Int, postings: Seq[File], docs: Seq[File])
-
-  /** What one scan reads: `groups(i)` = the whole shards of input
-    * partition i, in ascending shard order. `location`/`docsLocation`
-    * name the dataset directories for plan strings.
-    */
-  final case class Read(location: String, docsLocation: Option[String],
-                        groups: Seq[Seq[Shard]]) {
-    def bytes: Long = groups.flatten.flatMap(s => s.postings ++ s.docs).map(_.size).sum
-    def nShards: Int = groups.map(_.size).sum
-  }
-
-  /** A DataFrame over `kernel` run shard-locally on `read`. */
-  def frame(spark: SparkSession, kernel: ShardKernel, read: Read): DataFrame = {
+  /** A DataFrame over `kernel` run shard-locally on `store`. */
+  def frame(spark: SparkSession, kernel: ShardKernel, store: ShardStore): DataFrame = {
     ShardScanStrategy.register(spark)
-    val plan = ShardScan(kernel, read, DataTypeUtils.toAttributes(Schema))
+    val plan = ShardScan(kernel, store, DataTypeUtils.toAttributes(Schema))
     new org.apache.spark.sql.classic.Dataset[Row](
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan,
       Encoders.row(Schema))
@@ -101,110 +65,33 @@ private[search] object ShardScan {
       df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       SlotRows(qis, df.queryExecution.analyzed), Encoders.row(df.schema))
 
-  /** Hands `rows` and `docs` (both in ascending shard order) to `kernel`
-    * one shard at a time: a shard's rows are buffered, its docs sorted by
-    * docId into one indexed sequence every full-scan slot walks, and its
-    * output drained before the next shard is read.
-    */
-  private def perShard(kernel: ShardKernel, rows: Iterator[PostingRow],
-                       docs: Iterator[DocRow]): Iterator[Out] = {
-    val rs = rows.buffered
-    val ds = docs.buffered
-    def drain[T](it: scala.collection.BufferedIterator[T], shard: Int,
-                 shardOf: T => Int): mutable.ArrayBuffer[T] = {
-      val b = mutable.ArrayBuffer.empty[T]
-      while (it.hasNext && shardOf(it.head) == shard) b += it.next()
-      b
-    }
-    new Iterator[Iterator[Out]] {
-      def hasNext: Boolean = rs.hasNext || ds.hasNext
-      def next(): Iterator[Out] = {
-        val shard = math.min(if (rs.hasNext) rs.head.shard else Int.MaxValue,
-          if (ds.hasNext) ds.head.shard else Int.MaxValue)
-        val shardRows = drain[PostingRow](rs, shard, _.shard)
-        val shardDocs = drain[DocRow](ds, shard, _.shard).sortBy(_.docId)
-        kernel.run(shardRows.iterator, shardDocs)
-      }
-    }.flatten
-  }
-
-  /** Runs on the driver: the parquet file RDD over `files` of every shard,
-    * input partition i = `read.groups(i)`.
-    */
-  private def fileRdd(spark: SparkSession, read: Read, files: Shard => Seq[File],
-                      data: StructType, filters: Seq[sources.Filter]): FileScanRDD = {
-    val reader = new ParquetFileFormat().buildReaderWithPartitionValues(
-      spark, data, ShardCol, data, filters,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
-    val parts = read.groups.zipWithIndex.map { case (shards, i) =>
-      FilePartition(i, shards.flatMap(s => files(s).map(f =>
-        PartitionedFile(InternalRow(s.id), org.apache.spark.paths.SparkPath.fromPathString(f.path),
-          0L, f.size, Array.empty[String], f.mtime, f.size))).toArray)
-    }
-    new FileScanRDD(spark, reader, parts, StructType(data ++ ShardCol))
-  }
-
-  private def encoderOf[T <: Product : scala.reflect.runtime.universe.TypeTag](
-      data: StructType): ExpressionEncoder[T] =
-    ExpressionEncoder[T]().resolveAndBind(DataTypeUtils.toAttributes(StructType(data ++ ShardCol)))
-
-  /** The exec's RDD: reads, per-row term check, kernel, output rows. */
-  private[search] def execute(spark: SparkSession, kernel: ShardKernel, read: Read,
-                              numOutputRows: org.apache.spark.sql.execution.metric.SQLMetric)
-      : RDD[InternalRow] = {
-    val terms = kernel.terms
-    val postEnc = encoderOf[PostingRow](PostingData)
-    val docEnc = encoderOf[DocRow](DocData)
-    val postings = fileRdd(spark, read, s => if (terms.isEmpty) Nil else s.postings,
-      PostingData, terms.filter.toSeq)
-    def task(post: Iterator[InternalRow], docs: Iterator[InternalRow]): Iterator[InternalRow] = {
-      val toPosting = postEnc.createDeserializer()
-      val toDoc = docEnc.createDeserializer()
-      // pushed filters prune row groups only: each row's term is checked
-      // here, before it is decoded
-      val rows = post.filter(r => terms.contains(r.getUTF8String(0))).map(toPosting)
+  /** The exec's RDD: the kernel over each cached record, output rows. */
+  private[search] def execute(kernel: ShardKernel, store: ShardStore, numOutputRows: SQLMetric,
+                              postingRows: SQLMetric, shards: SQLMetric): RDD[InternalRow] =
+    store.rdd.mapPartitions { records =>
       val width = Schema.length
       val out = new UnsafeRow(width)
       val bytes = UnsafeRow.calculateBitSetWidthInBytes(width) + 8 * width
       out.pointTo(new Array[Byte](bytes), bytes)
-      perShard(kernel, rows, docs.map(toDoc)).map { t =>
+      records.flatMap { r =>
+        shards += 1
+        kernel.run(r, postingRows += _)
+      }.map { t =>
         numOutputRows += 1
         out.setInt(0, t._1); out.setLong(1, t._2); out.setDouble(2, t._3)
         out.setDouble(3, t._4); out.setLong(4, t._5); out.setLong(5, t._6)
         out
       }
     }
-    if (!kernel.readsDocs) postings.mapPartitions(task(_, Iterator.empty))
-    else postings.zipPartitions(fileRdd(spark, read, _.docs, DocData, Nil))(task)
-  }
 }
 
-/** The terms one kernel pass reads: exact keys plus prefix ranges
-  * [p, p + U+FFFF).
-  */
+/** The terms one kernel pass looks up: exact keys plus prefixes. */
 private[search] final case class TermSet(exact: Seq[String], prefixes: Seq[String]) {
-  def isEmpty: Boolean = exact.isEmpty && prefixes.isEmpty
-
   def ++(o: TermSet): TermSet =
     TermSet((exact ++ o.exact).distinct, (prefixes ++ o.prefixes).distinct)
 
-  /** The parquet pushdown: `In(term, …)` or'ed with the prefix ranges. */
-  def filter: Option[sources.Filter] = {
-    val in = if (exact.isEmpty) Nil else Seq(sources.In("term", exact.toArray[Any]))
-    val ranges = prefixes.map(p => sources.And(sources.GreaterThanOrEqual("term", p),
-      sources.LessThan("term", p + "\uFFFF")))
-    (in ++ ranges).reduceOption[sources.Filter](sources.Or(_, _))
-  }
-
-  // compared as UTF-8 bytes, like the pushed string predicates
-  @transient private lazy val exactU: Set[UTF8String] = exact.map(UTF8String.fromString).toSet
-  @transient private lazy val rangesU: Array[(UTF8String, UTF8String)] =
-    prefixes.map(p => (UTF8String.fromString(p), UTF8String.fromString(p + "\uFFFF"))).toArray
-
-  def contains(t: UTF8String): Boolean =
-    exactU.contains(t) || rangesU.exists { case (lo, hi) =>
-      t.binaryCompare(lo) >= 0 && t.binaryCompare(hi) < 0 }
+  /** for plan strings; a prefix in tsquery form, `p:*` */
+  override def toString: String = (exact ++ prefixes.map(_ + ":*")).mkString("[", ", ", "]")
 }
 
 private[search] object TermSet {
@@ -218,34 +105,32 @@ private[search] sealed trait ShardKernel extends Serializable {
   /** "postings" or "alt" */
   def layout: String
   def terms: TermSet
-  def readsDocs: Boolean = false
-  /** One shard's output; `docs` (read when [[readsDocs]]) ascends by docId. */
-  def run(rows: Iterator[PostingRow],
-          docs: scala.collection.IndexedSeq[DocRow]): Iterator[ShardScan.Out]
+  /** One shard's output; `handed` is told the posting rows of each term
+    * the kernel looks up, once per term.
+    */
+  def run(shard: ShardRecord, handed: Long => Unit): Iterator[ShardScan.Out]
   /** the slots, for plan strings */
   def describe: String
 }
 
 private[search] object ShardKernel {
 
-  /** Every primary-layout slot of a batch. The shard's rows are grouped by
-    * term once; each slot's cursors then touch only its own keys, so
-    * sibling slots' terms are invisible to it. A full-scan slot's
-    * candidates are every doc of the shard (scanGetItemFull,
+  /** Every primary-layout slot of a batch. Each slot's cursors touch only
+    * its own keys' rows of the shard, so sibling slots' terms are invisible
+    * to it. A full-scan slot's candidates are every doc of the shard, from
+    * the record's docs rows (scanGetItemFull,
     * src/rumget.c:2024-2083), the rest draw theirs from the postings; both
     * kinds feed the same match, cover, count and Order2 code.
     */
   final case class Primary(specs: Array[Searcher.FusedSpec], nDocs: Long,
                            avgLen: Double, terms: TermSet) extends ShardKernel {
     def layout: String = "postings"
-    override def readsDocs: Boolean = specs.exists(_.fullScan)
-    def run(rows: Iterator[PostingRow],
-            docs: scala.collection.IndexedSeq[DocRow]): Iterator[ShardScan.Out] = {
-      val view = new SearchKernel.ShardView(rows)
+    def run(shard: ShardRecord, handed: Long => Unit): Iterator[ShardScan.Out] = {
+      val view = new SearchKernel.ShardView(shard, handed)
       // (docId, distance, addon) of the slot's matches; k > 0 with score
       // keeps the shard's k best
       def matches(f: Searcher.FusedSpec, score: Boolean, k: Int) =
-        if (f.fullScan) SearchKernel.fullScanShard(f.cq, f.keys, docs, view, score,
+        if (f.fullScan) SearchKernel.fullScanShard(f.cq, f.keys, shard.docs, view, score,
           f.matchOnly, k, f.method, f.scoreCq, f.scoreMap)
         else SearchKernel.matchShard(f.cq, f.keys, view, score, k, f.method,
           f.scoreCq, f.scoreMap)
@@ -285,9 +170,8 @@ private[search] object ShardKernel {
   final case class Alt(specs: Array[Searcher.AltFusedSpec], terms: TermSet)
       extends ShardKernel {
     def layout: String = "alt"
-    def run(rows: Iterator[PostingRow],
-            docs: scala.collection.IndexedSeq[DocRow]): Iterator[ShardScan.Out] = {
-      val cells = new AltKernel.ShardCells(rows)
+    def run(shard: ShardRecord, handed: Long => Unit): Iterator[ShardScan.Out] = {
+      val cells = new AltKernel.ShardCells(shard, handed)
       specs.iterator.flatMap { f =>
         if (f.mode == 0)
           AltKernel.topKAddonShard(f.cq, f.keys, cells, f.c, f.op, f.k, f.floatUnits)
@@ -313,15 +197,15 @@ private[search] object ShardKernel {
 
 }
 
-/** Logical leaf: `kernel` over `read`, shard-locally. One instance keeps
+/** Logical leaf: `kernel` over `store`, shard-locally. One instance keeps
   * its attributes wherever a plan repeats it, so branches over it share
   * one exchange.
   */
-private[search] final case class ShardScan(kernel: ShardKernel, read: ShardScan.Read,
+private[search] final case class ShardScan(kernel: ShardKernel, store: ShardStore,
                                            output: Seq[Attribute]) extends LeafNode {
-  override def computeStats(): Statistics = Statistics(sizeInBytes = BigInt(read.bytes max 1L))
+  override def computeStats(): Statistics = Statistics(sizeInBytes = BigInt(store.bytes max 1L))
   override def simpleString(maxFields: Int): String =
-    s"ShardScan ${read.location} [${kernel.describe}]"
+    s"ShardScan ${store.location} [${kernel.describe}]"
 }
 
 /** The rows of the child whose slot (`qi`, the first column) is in `qis`.
@@ -339,40 +223,43 @@ private[search] final case class SlotRows(qis: Seq[Int], child: LogicalPlan) ext
   override protected def withNewChildInternal(c: LogicalPlan): SlotRows = copy(child = c)
 }
 
-/** Physical exec of [[ShardScan]]: one task per group of whole shards. */
-private[search] final case class ShardScanExec(kernel: ShardKernel, read: ShardScan.Read,
+/** Physical exec of [[ShardScan]]: one task per group of whole shards.
+  * Besides its output rows it counts the cached shard records its kernel
+  * visited and the posting rows the kernel looked up in them.
+  */
+private[search] final case class ShardScanExec(kernel: ShardKernel, store: ShardStore,
                                                output: Seq[Attribute]) extends LeafExecNode {
   override lazy val metrics = Map(
-    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "postingRows" -> SQLMetrics.createMetric(sparkContext, "posting rows handed to the kernel"),
+    "shards" -> SQLMetrics.createMetric(sparkContext, "shards visited"))
 
   override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(read.groups.length)
+    org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(store.groups.length)
 
   protected override def doExecute(): RDD[InternalRow] =
-    ShardScan.execute(session, kernel, read, longMetric("numOutputRows"))
-
-  private def pushed: String = kernel.terms.filter.toSeq.mkString("[", ", ", "]")
-  private def docsPart: String = read.docsLocation.fold("")(d => s", Docs: $d")
+    ShardScan.execute(kernel, store, longMetric("numOutputRows"), longMetric("postingRows"),
+      longMetric("shards"))
 
   override def simpleString(maxFields: Int): String =
-    s"ShardScan ${read.location}$docsPart [${kernel.describe}], " +
-      s"Shards: ${read.nShards}, Partitions: ${read.groups.length}, PushedFilters: $pushed"
+    s"ShardScan ${store.location} [${kernel.describe}], " +
+      s"Shards: ${store.nShards}, Partitions: ${store.groups.length}, Terms: ${kernel.terms}"
 
   override def verboseStringWithOperatorId(): String =
     s"""
        |$formattedNodeName
        |Output [${output.size}]: ${output.mkString("[", ", ", "]")}
-       |Location: ${read.location}$docsPart
+       |Location: ${store.location}
        |Kernel: [${kernel.describe}]
-       |Shards: ${read.nShards}, Partitions: ${read.groups.length}
-       |PushedFilters: $pushed
+       |Shards: ${store.nShards}, Partitions: ${store.groups.length}
+       |Terms: ${kernel.terms}
        |""".stripMargin
 }
 
 /** Plans [[ShardScan]] and [[SlotRows]]; registered once per session. */
 private[search] object ShardScanStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case ShardScan(kernel, read, output) => ShardScanExec(kernel, read, output) :: Nil
+    case ShardScan(kernel, store, output) => ShardScanExec(kernel, store, output) :: Nil
     case SlotRows(qis, child) =>
       FilterExec(ArrayContains(Literal.create(qis.toArray, ArrayType(IntegerType, false)),
         child.output.head), planLater(child)) :: Nil

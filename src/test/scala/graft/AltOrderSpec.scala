@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.build.IndexBuilder
 import graft.query.{CompiledQuery, TsQueryParser}
-import graft.search.{AltKernel, SearchKernel, Searcher}
+import graft.search.{AltKernel, SearchKernel, Searcher, ShardRecord}
 
 /** Alternative-order layout (order_by_attach, reference
   * src/rumdatapage.c:327-360 + src/rumscan.c:461-554): the alt scan must
@@ -99,7 +99,8 @@ class AltOrderSpec extends AnyFunSuite {
       .as[graft.build.PostingRow].collect()
     val oneShard = altRows.filter(_.shard == 0)
     val res = AltKernel.topKAddonShard(cq, keys,
-      new AltKernel.ShardCells(oneShard.iterator), 17770L, "both", 5, floatUnits = false)
+      new AltKernel.ShardCells(ShardRecord(0, oneShard.iterator, Iterator.empty), _ => ()),
+      17770L, "both", 5, floatUnits = false)
     assert(res.rows.length == 5)
     assert(res.visited <= 30, s"visited=${res.visited} for k=5")
   }
@@ -181,7 +182,8 @@ class AltOrderSpec extends AnyFunSuite {
     val matchesInShard = plainIdx.matchingDocs("every & half")
       .as[Long].collect().count(_ % 4 == 0) // shard = hash(docId) % 4 — approx
     val res = AltKernel.topKAddonShard(cq, keys,
-      new AltKernel.ShardCells(oneShard.iterator), 17770L, "both", 5, floatUnits = false)
+      new AltKernel.ShardCells(ShardRecord(0, oneShard.iterator, Iterator.empty), _ => ()),
+      17770L, "both", 5, floatUnits = false)
     assert(res.rows.length == 5)
     assert(res.visited <= 30, s"visited=${res.visited} for k=5 (matches in shard ≈ $matchesInShard)")
   }

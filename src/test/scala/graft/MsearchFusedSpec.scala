@@ -40,13 +40,17 @@ class MsearchFusedSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
 
   /** Kernel reads of one layout directory ("postings", "postings_alt") in
-    * a plan string, whether or not the read also reads docs rows.
+    * a plan string.
     */
   private def kernelReads(plan: String, layout: String): Int =
-    s"ShardScan \\S+/$layout(, Docs: \\S+)? \\[".r.findAllIn(plan).size
-  /** Postings reads that also read the docs rows (a full-scan slot). */
-  private def docsReads(plan: String): Int =
-    "ShardScan \\S+/postings, Docs: ".r.findAllIn(plan).size
+    s"ShardScan \\S+/$layout \\[".r.findAllIn(plan).size
+  /** Postings reads with a full-scan slot, which walks the docs rows. */
+  private def fullScanReads(plan: String): Int =
+    "ShardScan \\S+/postings \\[[^\\]]*\\(fullscan\\)".r.findAllIn(plan).size
+  /** The terms every kernel read of a plan string looks up. */
+  private def scanTerms(plan: String): Seq[Set[String]] =
+    "Terms: \\[([^\\]]*)\\]".r.findAllMatchIn(plan)
+      .map(_.group(1).split(", ").toSet).toSeq
 
   private lazy val searcher: Searcher = {
     val d = java.nio.file.Files.createTempDirectory("msearchidx").toString
@@ -144,7 +148,7 @@ class MsearchFusedSpec extends AnyFunSuite {
     // batch, full-scan slot included, and that read also reads docs
     val plan = finalPlan(df)
     assert(plan.contains("Reused"), plan.take(3000))
-    assert(kernelReads(plan, "postings") == 1 && docsReads(plan) == 1, plan.take(3000))
+    assert(kernelReads(plan, "postings") == 1 && fullScanReads(plan) == 1, plan.take(3000))
   }
 
   test("CountFields: field-scoped count slots over a multicolumn index") {
@@ -455,7 +459,7 @@ class MsearchFusedSpec extends AnyFunSuite {
       assert(p.contains("TakeOrderedAndProject"), p)
       assert(!p.contains("Window"), p)
     }
-    assert("PushedFilters: \\[[^\\]]*In\\(term, \\[".r.findFirstIn(bm25).isDefined, bm25)
+    assert(scanTerms(bm25) == Seq(Set("rare7", "veryrare", "tail3")), bm25)
     val batch = plan(searcher.msearchPlan(Seq(
       Bm25(Seq("rare7", "veryrare"), 3), Cover("common & rare7", 4))))
     assert(batch.contains("Window"), batch)
@@ -465,7 +469,7 @@ class MsearchFusedSpec extends AnyFunSuite {
     for (p <- Seq(addon, addonF)) {
       assert(p.contains("TakeOrderedAndProject"), p)
       assert(!p.contains("Window"), p)
-      assert("PushedFilters: \\[[^\\]]*In\\(term, \\[".r.findFirstIn(p).isDefined, p)
+      assert(scanTerms(p) == Seq(Set("even", "triple")), p)
     }
     val altBatch = plan(altSearcher.msearchPlan(Seq(
       Addon("even & triple", -700L, "both", 7), Addon("common & rare7", 500L, "left", 5))))
@@ -482,13 +486,17 @@ class MsearchFusedSpec extends AnyFunSuite {
     val matches = plan(searcher.matchingDocs("even & rare7"))
     val count = plan(searcher.msearchCounts(Seq("even & triple")))
     val addon = plan(altSearcher.topKAddon("even & triple", -700L, "both", 7))
-    for ((p, layout) <- Seq(bm25, cover, matches, count).map(_ -> "postings") :+
-         (addon -> "postings_alt")) {
+    for ((p, layout, terms) <- Seq(
+         (bm25, "postings", Set("rare7", "veryrare", "tail3")),
+         (cover, "postings", Set("common", "rare7")),
+         (matches, "postings", Set("even", "rare7")),
+         (count, "postings", Set("even", "triple")),
+         (addon, "postings_alt", Set("even", "triple")))) {
       // the read and the kernel are one node: no parquet scan, shuffle or
-      // grouping operator feeds a kernel
+      // grouping operator feeds a kernel, which looks up only its terms
       assert(kernelReads(p, layout) == 1, p)
       assert(!Seq("Scan parquet", "MapGroups", "CoGroup", "AppendColumns").exists(p.contains), p)
-      assert("PushedFilters: \\[[^\\]]*In\\(term, \\[".r.findFirstIn(p).isDefined, p)
+      assert(scanTerms(p) == Seq(terms), p)
     }
     // one-slot top-k and match plans move nothing; a count ships only the
     // per-task partial aggregate of its per-shard partials
@@ -496,9 +504,9 @@ class MsearchFusedSpec extends AnyFunSuite {
     assert(exchanges(count) == 1, count)
     val below = count.linesIterator.dropWhile(!_.contains("Exchange ")).drop(1).next()
     assert(below.contains("HashAggregate") && below.contains("partial_sum"), count)
-    // the order-only cover full scan reads docs and postings in the same task
+    // the order-only cover full scan walks docs and postings in the same task
     val full = plan(searcher.topKCover("common & rare7", 5, matchOnly = false))
-    assert(kernelReads(full, "postings") == 1 && docsReads(full) == 1, full)
+    assert(kernelReads(full, "postings") == 1 && fullScanReads(full) == 1, full)
     assert(exchanges(full) == 0, full)
   }
 

@@ -205,13 +205,13 @@ class MultiColSpec extends AnyFunSuite {
   test("multicol ranked plan: field-prefixed term predicate pushed to the scan") {
     val df = searcherO.topKCoverMulti("body", "common & gamma", Seq("title" -> "alpha"), 5)
     val plan = df.queryExecution.executedPlan.toString
-    // all three field-prefixed keys reach the parquet scan as pushed
-    // filters — the multicolumn entry-tree descent analogue
-    assert(plan.contains("PushedFilters"), plan.take(2000))
-    Seq(IndexBuilder.fieldKey("body", "common"), IndexBuilder.fieldKey("body", "gamma"),
-        IndexBuilder.fieldKey("title", "alpha")).foreach { k =>
-      assert(plan.contains(k), "missing pushed key " + k.replace(IndexBuilder.FieldSep, "|"))
-    }
+    // the scan's kernel looks up exactly the three field-prefixed keys —
+    // the multicolumn entry-tree descent analogue
+    val terms = "Terms: \\[([^\\]]*)\\]".r.findAllMatchIn(plan).map(_.group(1)).toSeq
+    val keys = Seq(IndexBuilder.fieldKey("body", "common"), IndexBuilder.fieldKey("body", "gamma"),
+      IndexBuilder.fieldKey("title", "alpha"))
+    assert(terms.map(_.split(", ").toSet) == Seq(keys.toSet),
+      plan.take(2000).replace(IndexBuilder.FieldSep, "|"))
   }
 
   test("appendFields: incremental insert into a multi-column index") {

@@ -175,7 +175,9 @@ class ShardLocalSpec extends AnyFunSuite {
     val rows = df.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).groupBy(_._1)
       .withDefaultValue(Array.empty)
     val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    assert("ShardScan \\S+/postings(, Docs: \\S+)? \\[".r.findAllIn(plan).size == 1, plan)
+    assert("ShardScan \\S+/postings \\[".r.findAllIn(plan).size == 1, plan)
+    assert("Terms: \\[([^\\]]*)\\]".r.findAllMatchIn(plan).map(_.group(1).split(", ").toSet)
+      .toSeq == Seq(Set("alpha", "beta", "gamma", "solo")), plan)
     batch.zipWithIndex.map { case ((name, spec), qi) =>
       val slot = rows(qi)
       s"batch $name" -> (spec match {
