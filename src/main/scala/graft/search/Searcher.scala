@@ -27,9 +27,12 @@ import graft.query._
   *   4. per-shard top-k heap → global top-k. Every solo query, ordered
   *      scans included, has ONE serving path, [[msearchPlan]]: a one-slot
   *      plan projected to its own schema (the slot rows carry the payload
-  *      addon up to that projection). Per layout, one bounded (top-k) slot
-  *      ends in TakeOrderedAndProject; several share a row_number window
-  *      per slot that keeps each slot's k best.
+  *      addon up to that projection). A lone bounded (top-k) slot, and a
+  *      global count over a lone Match slot, end in their own scan: the
+  *      driver merges the per-shard heaps or sums the per-shard count
+  *      partials, so the query is one job of one stage ([[ShardScan]]).
+  *      Several bounded slots of one layout share a row_number window per
+  *      slot that keeps each slot's k best.
   */
 final class Searcher(spark: SparkSession, indexDir: String,
                      maxCachedPlans: Int = Searcher.MaxCachedPlans) {
@@ -206,7 +209,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
     runCount("count" + Searcher.key(queryStr), matchingDocs(queryStr))
 
   /** Cached count: Dataset.count() would plan a fresh Aggregate per call,
-    * so the aggregate itself is part of the cached plan.
+    * so the aggregate itself is part of the cached plan. Over a one-slot
+    * Match plan the count is the scan's own merge: the kernel counts each
+    * shard and the driver sums the partials, in one job of one stage.
     */
   private def runCount(key: String, base: => DataFrame): Long =
     cached(key)(base.agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt")))
@@ -699,8 +704,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * invisible to it.
     * Global per-spec top-k then runs over ONLY the shard-pruned rows of
     * bounded specs (≤ k·nShards rows each): per layout, one bounded slot
-    * takes an ordered limit (TakeOrderedAndProject, no shuffle), several
-    * share a row_number window per qi. When bounded, match and count
+    * takes an ordered limit, which a lone slot's scan merges on the
+    * driver (no shuffle, no sort operator); several share a row_number
+    * window per qi. When bounded, match and count
     * branches read one layout, they share ONE exchange of kernel output
     * that Spark executes once, and match specs never pass through a sort.
     * Every solo query, ordered scans included, is a
@@ -1291,7 +1297,9 @@ object Searcher {
   }
 
   /** Global top-k over shard-pruned bounded slot rows, `ks` = (qi, k) per
-    * slot: one slot ends in an ordered limit, which Spark runs as
+    * slot: one slot ends in an ordered limit, which the slot's own scan
+    * merges on the driver when nothing sits between them (the
+    * [[ShardScanStrategy]] top-k merge), else Spark runs it as
     * TakeOrderedAndProject; two or more keep each slot's k best with a
     * row_number window per qi.
     */

@@ -1,11 +1,17 @@
 package graft.search
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ArrayContains, Attribute, AttributeSet, Literal,
-  UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics, UnaryNode}
+import org.apache.spark.sql.catalyst.expressions.{Alias, ArrayContains, Attribute, AttributeSeq,
+  AttributeSet, BindReferences, IntegerLiteral, InterpretedOrdering, InterpretedUnsafeProjection,
+  Literal, NamedExpression, SortOrder, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LeafNode, Limit, LogicalPlan,
+  Project, ReturnAnswer, Sort, Statistics, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition,
+  UnknownPartitioning}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{FilterExec, LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
@@ -29,6 +35,17 @@ import graft.query.CompiledQuery
   * [[ShardScan]] is the logical leaf, [[ShardScanExec]] its physical exec
   * and [[ShardScanStrategy]] the planner rule; every kernel emits rows of
   * [[ShardScan.Schema]].
+  *
+  * A one-slot scan also takes the final step of a solo query, as RUM's
+  * scan answers a count from its bitmap and `ORDER BY … LIMIT k` from its
+  * own ordered items, with no node above it (src/rumget.c:2105-2145
+  * rumgetbitmap, 2218-2301 insertScanItem). A global count over an
+  * unranked Match slot and an ordered limit over a bounded slot plan as
+  * the scan with a [[ShardScan.Merge]]: the tasks ship their per-shard
+  * count partials or top-k heaps (at most k rows per shard), and the
+  * driver sums them or sorts them by the plan's own order and takes k.
+  * Such a query is one job of one stage, with no Exchange, aggregate or
+  * TakeOrderedAndProject in its plan.
   */
 private[search] object ShardScan {
 
@@ -65,10 +82,16 @@ private[search] object ShardScan {
       df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       SlotRows(qis, df.queryExecution.analyzed), Encoders.row(df.schema))
 
-  /** The exec's RDD: the kernel over each cached record, output rows. */
-  private[search] def execute(kernel: ShardKernel, store: ShardStore, numOutputRows: SQLMetric,
-                              postingRows: SQLMetric, shards: SQLMetric): RDD[InternalRow] =
-    store.rdd.mapPartitions { records =>
+  /** The kernel over the cached records of one partition, as output rows,
+    * counting shards, posting rows and output rows. A task function, not a
+    * closure: a named class passes `SparkContext.runJob` without a
+    * ClosureCleaner scan.
+    */
+  private[search] final class KernelRows(kernel: ShardKernel, numOutputRows: SQLMetric,
+                                         postingRows: SQLMetric, shards: SQLMetric)
+      extends ((TaskContext, Iterator[ShardRecord]) => Array[InternalRow]) with Serializable {
+    /** the rows, in one reused mutable row */
+    def iterator(records: Iterator[ShardRecord]): Iterator[InternalRow] = {
       val width = Schema.length
       val out = new UnsafeRow(width)
       val bytes = UnsafeRow.calculateBitSetWidthInBytes(width) + 8 * width
@@ -83,6 +106,50 @@ private[search] object ShardScan {
         out
       }
     }
+
+    /** the rows, copied: a merged slot's per-shard partials or heaps */
+    def apply(ctx: TaskContext, records: Iterator[ShardRecord]): Array[InternalRow] =
+      iterator(records).map(_.copy(): InternalRow).toArray
+  }
+
+  /** The final step of a one-slot scan, run over the kernel rows of every
+    * shard (`in` = the scan's output attributes).
+    */
+  private[search] sealed trait Merge extends Serializable {
+    def output: Seq[Attribute]
+    def apply(rows: Iterator[InternalRow], in: Seq[Attribute]): Array[InternalRow]
+  }
+
+  private[search] object Merge {
+    /** `count(<non-null literal>)`: the sum of a Count slot's per-shard
+      * partials (the docId column).
+      */
+    final case class Counted(output: Seq[Attribute]) extends Merge {
+      def apply(rows: Iterator[InternalRow], in: Seq[Attribute]): Array[InternalRow] = {
+        var n = 0L
+        rows.foreach(r => n += r.getLong(1))
+        Array(InterpretedUnsafeProjection.createProjection(Seq(Literal(n)))(InternalRow.empty))
+      }
+      override def toString: String = "count"
+    }
+
+    /** `ORDER BY order LIMIT k`, then `project`: the k first of every
+      * shard's heap rows. Each slot order ends in docId, so no two rows tie
+      * and the k rows are the ones TakeOrderedAndProject would return.
+      */
+    final case class TopK(k: Int, order: Seq[SortOrder], project: Seq[NamedExpression])
+        extends Merge {
+      def output: Seq[Attribute] = project.map(_.toAttribute)
+      def apply(rows: Iterator[InternalRow], in: Seq[Attribute]): Array[InternalRow] = {
+        val top = rows.toArray.sorted(new InterpretedOrdering(order, in)).take(k)
+        val proj = InterpretedUnsafeProjection.createProjection(
+          BindReferences.bindReferences(project, AttributeSeq(in)))
+        proj.initialize(0)
+        top.map(r => proj(r).copy(): InternalRow)
+      }
+      override def toString: String = s"top $k"
+    }
+  }
 }
 
 /** The terms one kernel pass looks up: exact keys plus prefixes. */
@@ -226,24 +293,54 @@ private[search] final case class SlotRows(qis: Seq[Int], child: LogicalPlan) ext
 /** Physical exec of [[ShardScan]]: one task per group of whole shards.
   * Besides its output rows it counts the cached shard records its kernel
   * visited and the posting rows the kernel looked up in them.
+  *
+  * With a `merge` its output is the merged rows, in one partition:
+  * `executeCollect` runs the kernel in one job over every group and merges
+  * the tasks' rows on the driver; `doExecute`, which feeds an operator
+  * above, computes the same rows in one task.
   */
 private[search] final case class ShardScanExec(kernel: ShardKernel, store: ShardStore,
-                                               output: Seq[Attribute]) extends LeafExecNode {
+                                               scanOutput: Seq[Attribute],
+                                               merge: Option[ShardScan.Merge])
+    extends LeafExecNode {
   override lazy val metrics = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
     "postingRows" -> SQLMetrics.createMetric(sparkContext, "posting rows handed to the kernel"),
     "shards" -> SQLMetrics.createMetric(sparkContext, "shards visited"))
 
-  override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(store.groups.length)
+  override def output: Seq[Attribute] = merge.fold(scanOutput)(_.output)
 
-  protected override def doExecute(): RDD[InternalRow] =
-    ShardScan.execute(kernel, store, longMetric("numOutputRows"), longMetric("postingRows"),
-      longMetric("shards"))
+  override def outputPartitioning: Partitioning =
+    if (merge.isDefined) SinglePartition else UnknownPartitioning(store.groups.length)
+
+  private def kernelRows = new ShardScan.KernelRows(kernel, longMetric("numOutputRows"),
+    longMetric("postingRows"), longMetric("shards"))
+
+  protected override def doExecute(): RDD[InternalRow] = {
+    val rows = kernelRows
+    merge match {
+      case None => store.rdd.mapPartitions(rows.iterator)
+      case Some(m) =>
+        val in = scanOutput
+        store.rdd.coalesce(1).mapPartitions(rs =>
+          m(rows(TaskContext.get(), rs).iterator, in).iterator)
+    }
+  }
+
+  override def executeCollect(): Array[InternalRow] = merge match {
+    case None => super.executeCollect()
+    case Some(m) =>
+      val parts = sparkContext.runJob(store.rdd, kernelRows, store.rdd.partitions.indices)
+      m(parts.iterator.flatten, scanOutput)
+  }
+
+  override def executeTake(n: Int): Array[InternalRow] =
+    if (merge.isDefined) executeCollect().take(n) else super.executeTake(n)
 
   override def simpleString(maxFields: Int): String =
     s"ShardScan ${store.location} [${kernel.describe}], " +
-      s"Shards: ${store.nShards}, Partitions: ${store.groups.length}, Terms: ${kernel.terms}"
+      s"Shards: ${store.nShards}, Partitions: ${store.groups.length}, Terms: ${kernel.terms}" +
+      merge.fold("")(m => s", Merge: $m")
 
   override def verboseStringWithOperatorId(): String =
     s"""
@@ -253,17 +350,66 @@ private[search] final case class ShardScanExec(kernel: ShardKernel, store: Shard
        |Kernel: [${kernel.describe}]
        |Shards: ${store.nShards}, Partitions: ${store.groups.length}
        |Terms: ${kernel.terms}
-       |""".stripMargin
+       |""".stripMargin + merge.fold("")(m => s"Merge: $m\n")
 }
 
-/** Plans [[ShardScan]] and [[SlotRows]]; registered once per session. */
+/** Plans [[ShardScan]] and [[SlotRows]], and the final step of a solo
+  * query over a one-slot scan as that scan's [[ShardScan.Merge]];
+  * registered once per session. It runs before Spark's own strategies, so
+  * an ordered limit it takes never becomes a TakeOrderedAndProject.
+  */
 private[search] object ShardScanStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case ShardScan(kernel, store, output) => ShardScanExec(kernel, store, output) :: Nil
+    case ReturnAnswer(child) => merged(child).toList
+    case ShardScan(kernel, store, output) => ShardScanExec(kernel, store, output, None) :: Nil
     case SlotRows(qis, child) =>
       FilterExec(ArrayContains(Literal.create(qis.toArray, ArrayType(IntegerType, false)),
         child.output.head), planLater(child)) :: Nil
-    case _ => Nil
+    case _ => merged(plan).toList
+  }
+
+  /** A [[ShardScan]] under attribute-only projections. */
+  private object Scan {
+    def unapply(plan: LogicalPlan): Option[ShardScan] = plan match {
+      case s: ShardScan => Some(s)
+      case Project(list, child) if list.forall(_.isInstanceOf[Attribute]) => unapply(child)
+      case _ => None
+    }
+  }
+
+  /** The scan exec that merges `plan` itself, when `plan` is a global
+    * count of a non-null literal over a one-slot unranked Match scan, or
+    * an ordered limit over a one-slot bounded scan that keeps at least k
+    * rows per shard.
+    */
+  private def merged(plan: LogicalPlan): Option[SparkPlan] = plan match {
+    case Aggregate(groups, Seq(a @ Alias(AggregateExpression(Count(Seq(Literal(v, _))), _,
+        false, None, _), _)), Scan(s), _) if groups.isEmpty && v != null =>
+      s.kernel match {
+        case p: ShardKernel.Primary if p.specs.length == 1 && p.specs(0).mode == 0 &&
+            !p.specs(0).rank =>
+          Some(ShardScanExec(p.copy(specs = Array(p.specs(0).copy(mode = 3))), s.store,
+            s.output, Some(ShardScan.Merge.Counted(Seq(a.toAttribute)))))
+        case _ => None
+      }
+    case Limit(IntegerLiteral(k), Project(list, Sort(order, true, Scan(s), _))) =>
+      topK(s, k, order, list)
+    case Limit(IntegerLiteral(k), sort @ Sort(order, true, Scan(s), _)) =>
+      topK(s, k, order, sort.output)
+    case _ => None
+  }
+
+  private def topK(s: ShardScan, k: Int, order: Seq[SortOrder],
+                   project: Seq[NamedExpression]): Option[SparkPlan] = {
+    val bound = s.kernel match {
+      case p: ShardKernel.Primary if p.specs.length == 1 && Set(1, 2, 4)(p.specs(0).mode) =>
+        p.specs(0).k
+      case a: ShardKernel.Alt if a.specs.length == 1 && a.specs(0).mode == 0 => a.specs(0).k
+      case _ => 0
+    }
+    if (bound == 0 || k > bound) None
+    else Some(ShardScanExec(s.kernel, s.store, s.output,
+      Some(ShardScan.Merge.TopK(k, order, project))))
   }
 
   def register(spark: SparkSession): Unit = synchronized {

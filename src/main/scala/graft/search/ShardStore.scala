@@ -49,15 +49,13 @@ private[search] final class ShardStore(spark: SparkSession, val location: String
   // driver reads the RDD
   @transient val rdd: RDD[ShardRecord] = {
     import ShardStore._
-    val postEnc = encoderOf[PostingRow](PostingData)
-    val docEnc = encoderOf[DocRow](DocData)
     val shardsOf = groups
     fileRdd(spark, groups, postings, PostingData)
       .zipPartitions(fileRdd(spark, groups, docs, DocData))((p, d) => Iterator.single((p, d)))
       .mapPartitionsWithIndex { (i, parts) =>
         val (post, doc) = parts.next()
-        val p = post.map(postEnc.createDeserializer()).buffered
-        val d = doc.map(docEnc.createDeserializer()).buffered
+        val p = post.map(PostingEnc.createDeserializer()).buffered
+        val d = doc.map(DocEnc.createDeserializer()).buffered
         shardsOf(i).iterator.map(s =>
           ShardRecord(s, shardRun[PostingRow](p, s, _.shard), shardRun[DocRow](d, s, _.shard)))
       }
@@ -81,6 +79,9 @@ private[search] object ShardStore {
   private def encoderOf[T <: Product : scala.reflect.runtime.universe.TypeTag](
       data: StructType): ExpressionEncoder[T] =
     ExpressionEncoder[T]().resolveAndBind(DataTypeUtils.toAttributes(StructType(data ++ ShardCol)))
+  // built once per JVM, not shipped in every task that decodes a partition
+  private lazy val PostingEnc = encoderOf[PostingRow](PostingData)
+  private lazy val DocEnc = encoderOf[DocRow](DocData)
 
   /** The rows of `it` in `shard`: a partition's files are listed shard by
     * shard, so each shard's rows are one run.

@@ -449,26 +449,29 @@ class MsearchFusedSpec extends AnyFunSuite {
     assert(got(1).map(_._2).toSet == soloR && soloR.nonEmpty)
   }
 
-  test("one bounded slot ends in TakeOrderedAndProject; several share a window") {
+  test("one bounded slot ends in its scan's top-k merge; several share a window") {
     import Searcher.MsearchSpec._
     def plan(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.executedPlan.toString
+    // the whole plan is one scan that merges its shards' heaps on the driver
+    def mergedTopK(p: String, k: Int): Unit = {
+      assert("ShardScan ".r.findAllIn(p).size == 1 && p.startsWith("ShardScan "), p)
+      assert(p.contains(s"Merge: top $k"), p)
+      for (op <- Seq("TakeOrderedAndProject", "Window", "Exchange")) assert(!p.contains(op), p)
+    }
     val bm25 = plan(searcher.topKBm25(Seq("rare7", "veryrare", "tail3"), 7))
     val cover = plan(searcher.topKCover("common & rare7", 5))
-    for (p <- Seq(bm25, cover)) {
-      assert(p.contains("TakeOrderedAndProject"), p)
-      assert(!p.contains("Window"), p)
-    }
+    mergedTopK(bm25, 7)
+    mergedTopK(cover, 5)
     assert(scanTerms(bm25) == Seq(Set("rare7", "veryrare", "tail3")), bm25)
     val batch = plan(searcher.msearchPlan(Seq(
       Bm25(Seq("rare7", "veryrare"), 3), Cover("common & rare7", 4))))
     assert(batch.contains("Window"), batch)
-    // the alt layout's ordered scans share the same tail
+    // the alt layout's ordered scans merge the same way
     val addon = plan(altSearcher.topKAddon("even & triple", -700L, "both", 7))
     val addonF = plan(floatSearcher.topKAddonFloat("even & triple", 3.75, "both", 7))
     for (p <- Seq(addon, addonF)) {
-      assert(p.contains("TakeOrderedAndProject"), p)
-      assert(!p.contains("Window"), p)
+      mergedTopK(p, 7)
       assert(scanTerms(p) == Seq(Set("even", "triple")), p)
     }
     val altBatch = plan(altSearcher.msearchPlan(Seq(
