@@ -815,7 +815,7 @@ object SparkEntry {
     "ft_addon_signed_or" -> ((s, dir) => {
       // same signed index with an OR query and a negative constant — since
       // round 5 the alt fast path serves disjunctions too (positive-key
-      // union driver, RUM's entry-merge shape); fallback parity for the
+      // union driver, RUM's entry-merge shape); primary-layout parity for the
       // identical shapes is pinned by AltOrderSpec's plain-layout twin
       IndexCache.searcherS(s, dir).topKAddon("merge | window", -50L, "both", 10)
         .select(col("docId").as("doc_id"), col("addon").as("n_signed"),

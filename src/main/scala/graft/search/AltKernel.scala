@@ -22,8 +22,9 @@ import graft.query.{CompiledQuery, TsEval}
   * the key-slot codec delta-encodes the SIGNED ascending sequence with
   * wrap-safe gaps ([[graft.core.VarByte.encodeDeltas]]) and every
   * comparison in this kernel is signed. Distances saturate at
-  * Long.MaxValue ([[satSub]]); the non-alt fallback applies the same cap
-  * so both paths tie-break identically beyond the representable range.
+  * Long.MaxValue ([[satDist]]); the primary kernel ranks its addon top-k
+  * by the same function, so both layouts tie-break identically beyond the
+  * representable range.
   */
 object AltKernel extends Serializable {
 
@@ -422,19 +423,28 @@ object AltKernel extends Serializable {
     try Math.subtractExact(a, b)
     catch { case _: ArithmeticException => Long.MaxValue }
 
-  /** Finite-only saturating addon distance for composite order keys (the
-    * fused Order2 slot's second key): "both" = |a-c|, "left"/"right" the
-    * one-sided operators. Returns -1 for a one-sided miss — the caller
-    * excludes the row, matching the engine's finite-only contract
-    * ([[topKAddonShard]] and the decimal fallback both drop such rows).
-    * Saturates at Long.MaxValue like every distance in this kernel.
+  /** Finite-only addon distance `a <op> c` of every addon order key, on
+    * both layouts: "both" = |a-c|, "left"/"right" the one-sided operators,
+    * in exact Long arithmetic saturated at Long.MaxValue. Returns -1 for a
+    * one-sided miss — the caller excludes the row (the engine's
+    * finite-only contract). `floatUnits`: `a` and `c` are
+    * [[graft.build.AddonUnits.floatOrderedBits]] images; one-sided
+    * membership compares the bits (NaN > +Inf > finite) and the distance is
+    * the bit image of the VALUE-space double |a-c| — order-preserving for
+    * a non-negative double, with NaN above +Inf.
     */
-  private[search] def satDist(a: Long, c: Long, op: String): Long = op match {
-    case "both" => if (a >= c) satSub(a, c) else satSub(c, a)
-    case "left" => if (a <= c) satSub(c, a) else -1L
-    case "right" => if (a >= c) satSub(a, c) else -1L
-    case other => throw new IllegalArgumentException(s"op: $other")
-  }
+  private[search] def satDist(a: Long, c: Long, op: String, floatUnits: Boolean = false): Long =
+    op match {
+      case "left" if a > c => -1L
+      case "right" if a < c => -1L
+      case "both" | "left" | "right" =>
+        if (floatUnits)
+          java.lang.Double.doubleToLongBits(Math.abs(
+            graft.build.AddonUnits.floatFromOrderedBits(a) -
+              graft.build.AddonUnits.floatFromOrderedBits(c)))
+        else if (a >= c) satSub(a, c) else satSub(c, a)
+      case other => throw new IllegalArgumentException(s"op: $other")
+    }
 
   /** `WHERE t @@ q ORDER BY addon <op> c LIMIT k` from the alt-order
     * layout: ordered stream(s) from c with early termination once the
@@ -488,21 +498,16 @@ object AltKernel extends Serializable {
 
     // exact saturating Long distances: overflow-safe AND bit-exact at any
     // magnitude (double would lose sub-256 resolution past 2^53); float
-    // units swap in the double-distance bit image (same ordering algebra)
-    val (distUp, distDown): (Long => Long, Long => Long) =
-      if (floatUnits) {
-        val cv = graft.build.AddonUnits.floatFromOrderedBits(c)
-        val f = (a: Long) => java.lang.Double.doubleToLongBits(
-          Math.abs(graft.build.AddonUnits.floatFromOrderedBits(a) - cv))
-        (f, f)
-      } else ((a: Long) => satSub(a, c), (a: Long) => satSub(c, a))
+    // units swap in the double-distance bit image (same ordering algebra).
+    // The scan direction already keeps one-sided misses out.
+    val dist = (a: Long) => satDist(a, c, "both", floatUnits)
     op match {
-      case "right" => run(forward = true, c, Long.MinValue, distUp)
-      case "left" => run(forward = false, c, Long.MaxValue, distDown)
+      case "right" => run(forward = true, c, Long.MinValue, dist)
+      case "left" => run(forward = false, c, Long.MaxValue, dist)
       case "both" =>
-        run(forward = true, c, Long.MinValue, distUp)
+        run(forward = true, c, Long.MinValue, dist)
         if (c != Long.MinValue)
-          run(forward = false, c - 1, Long.MaxValue, distDown)
+          run(forward = false, c - 1, Long.MaxValue, dist)
       case other => throw new IllegalArgumentException(s"op: $other")
     }
     AltResult(heap.drain(), visited)
@@ -513,7 +518,7 @@ object AltKernel extends Serializable {
     * Emits (docId, addon) from the [[ShardCells]] shared by every slot of
     * the batch. LAZY: in-range matches stream straight off the bounded ordered scan —
     * a wide range never materializes its per-shard match set on the task
-    * heap (the facet collapse consumes this stream bucket by bucket).
+    * heap (the facet counter consumes this stream).
     */
   def rangeAddonShard(cq: CompiledQuery, keys: Array[SearchKernel.KeySpec],
                       shardCells: ShardCells, lo: Long,
@@ -545,55 +550,5 @@ object AltKernel extends Serializable {
       def hasNext: Boolean = { fill(); nextRow != null }
       def next(): (Long, Long) = { fill(); val r = nextRow; nextRow = null; r }
     }
-  }
-
-  /** Per-shard facet partials over the bounded ordered scan: bucket =
-    * lo + floor((addon-lo)/width)·width for matches in [lo, hi]. The
-    * candidate stream arrives in addon order, so each bucket's count
-    * closes when the stream crosses its boundary — at most one output
-    * row per (shard, non-empty bucket), no map needed. Exact Long math:
-    * addon-lo ≥ 0 in range, so truncating division IS floor. The
-    * [[ShardCells]] are shared by every slot of the batch.
-    */
-  def facetShard(cq: CompiledQuery, keys: Array[SearchKernel.KeySpec],
-                 shardCells: ShardCells, width: Long, lo: Long,
-                 hi: Long): Iterator[(Long, Long)] = {
-    val out = mutable.ArrayBuffer.empty[(Long, Long)]
-    var curB = 0L
-    var n = 0L
-    rangeAddonShard(cq, keys, shardCells, lo, hi).foreach { case (_, a) =>
-      val b = lo + (a - lo) / width * width
-      if (n > 0 && b != curB) { out += ((curB, n)); n = 0L }
-      curB = b
-      n += 1
-    }
-    if (n > 0) out += ((curB, n))
-    out.iterator
-  }
-
-  /** [[facetShard]] in float VALUE units over an ordered-bits layout:
-    * buckets are lo + floor((v-lo)/width)·width in IEEE double arithmetic
-    * (-0.0 starts normalize to +0.0); each emitted bucket is the start's
-    * RAW IEEE bit image so the partial rows stay (Long, Long) like every
-    * other fused row. Bit order = value order, so the stream still closes
-    * each bucket at its boundary.
-    */
-  def facetShardFloat(cq: CompiledQuery, keys: Array[SearchKernel.KeySpec],
-                      shardCells: ShardCells, width: Double, lo: Double,
-                      loBits: Long, hiBits: Long): Iterator[(Long, Long)] = {
-    val out = mutable.ArrayBuffer.empty[(Long, Long)]
-    var curB = 0L
-    var n = 0L
-    rangeAddonShard(cq, keys, shardCells, loBits, hiBits).foreach {
-      case (_, bits) =>
-        val v = graft.build.AddonUnits.floatFromOrderedBits(bits)
-        val b = java.lang.Double.doubleToRawLongBits(
-          lo + math.floor((v - lo) / width) * width + 0.0)
-        if (n > 0 && b != curB) { out += ((curB, n)); n = 0L }
-        curB = b
-        n += 1
-    }
-    if (n > 0) out += ((curB, n))
-    out.iterator
   }
 }

@@ -466,35 +466,88 @@ object SearchKernel extends Serializable {
       scoreCq = scoreCq, scoreMap = scoreMap)
   }
 
-  /** Per-shard composite top-k for the fused Order2 slot:
-    * `WHERE q ORDER BY rank(method), addon <op> c, docId LIMIT k`
-    * lexicographic (the reference sorts the whole distances[norderbys]
-    * vector then TID, src/rumget.c:2218-2301 / src/rumsort.c:3977-4022).
-    * `matches` is the slot's unbounded ranked match stream
-    * ([[matchShard]] or [[fullScanShard]] with k = 0): their own heaps
-    * order by (rank, docId) alone — NOT a prefix of the composite key when
-    * an addon key follows — so pruning happens here on the FULL (rank,
-    * addonDist, docId) tuple: no shard can drop a row a later tie-break
-    * would promote. One-sided addon misses are excluded (the engine's
-    * finite-only contract). Emits (docId, rankDist, addonDist), unordered —
-    * the global composite top-k re-sorts the ≤ k survivors per shard.
+  /** Per-shard composite top-k: `WHERE q ORDER BY key1, key2, ..., docId
+    * LIMIT k` lexicographic (the reference sorts the whole
+    * distances[norderbys] vector then TID, src/rumget.c:2218-2301
+    * insertScanItem / src/rumsort.c:3977-4022) — the Order2, addon top-k
+    * and [[Searcher.topKMulti]] slots of the primary layout. `matches` is
+    * the slot's unbounded match stream ([[matchShard]] or [[fullScanShard]]
+    * with k = 0, ranked when a key is the rank): their own heaps order by
+    * (rank, docId) alone — NOT a prefix of the composite key when an addon
+    * key comes first or follows — so pruning happens here on the FULL
+    * composite: no shard can drop a row a later tie-break would promote.
+    * One-sided addon misses are excluded (the engine's finite-only
+    * contract). Emits the ≤ k survivors as (docId, rank, addon), unordered;
+    * the global step re-ranks them by the same keys.
     */
-  def order2Shard(matches: Iterator[(Long, Double, Long)], c: Long, op: String,
-                  k: Int): Iterator[(Long, Double, Long)] = {
-    val ord = Ordering.Tuple3(Ordering.Double.TotalOrdering, Ordering.Long, Ordering.Long)
-    // max-heap on the composite key: head = current worst of the k best
-    val pq = mutable.PriorityQueue.empty[(Double, Long, Long)](ord)
+  def compositeShard(matches: Iterator[(Long, Double, Long)], keys: Array[Searcher.SortKey],
+                     k: Int): Iterator[(Long, Double, Long)] = {
+    val n = keys.length
+    // a composite: each key's value — a rank as its order-preserving bit
+    // image, an addon distance by AltKernel.satDist — then docId
+    val ord: Ordering[Array[Long]] = (x, y) => {
+      var c = 0
+      var i = 0
+      while (c == 0 && i <= n) { c = java.lang.Long.compare(x(i), y(i)); i += 1 }
+      c
+    }
+    // max-heap on the composite: head = current worst of the k best
+    val pq = mutable.PriorityQueue.empty[(Array[Long], (Long, Double, Long))](
+      Ordering.by[(Array[Long], (Long, Double, Long)), Array[Long]](_._1)(ord))
     while (matches.hasNext) {
-      val (id, rank, addon) = matches.next()
-      val d2 = AltKernel.satDist(addon, c, op)
-      if (d2 >= 0L) {
-        val cand = (rank, d2, id)
-        if (pq.size < k) pq.enqueue(cand)
-        else if (ord.lt(cand, pq.head)) { pq.dequeue(); pq.enqueue(cand) }
+      val m = matches.next()
+      val comp = new Array[Long](n + 1)
+      var miss = false
+      var i = 0
+      while (i < n && !miss) {
+        val key = keys(i)
+        if (key.rank) comp(i) = graft.build.AddonUnits.floatOrderedBits(m._2)
+        else {
+          comp(i) = key.dist(m._3)
+          miss = comp(i) < 0L
+        }
+        i += 1
+      }
+      comp(n) = m._1
+      if (!miss) {
+        if (pq.size < k) pq.enqueue((comp, m))
+        else if (ord.lt(comp, pq.head._1)) { pq.dequeue(); pq.enqueue((comp, m)) }
       }
     }
-    pq.iterator.map { case (r, d2, id) => (id, r, d2) }
+    pq.iterator.map(_._2)
   }
+
+  /** Per-shard facet partials: (bucket, count) over `addons`, bucket =
+    * `bucket(addon)` ([[facetBucket]]) — at most one row per non-empty
+    * bucket leaves the shard. Order-independent, so the alt layout's
+    * addon-ordered range stream and the primary layout's docId-ordered
+    * match stream count alike.
+    */
+  def bucketCounts(addons: Iterator[Long], bucket: Long => Long): Iterator[(Long, Long)] = {
+    val counts = mutable.LongMap.empty[Long]
+    addons.foreach { a =>
+      val b = bucket(a)
+      counts(b) = counts.getOrElse(b, 0L) + 1L
+    }
+    counts.iterator
+  }
+
+  /** A facet slot's bucket start for an addon in its range: lo +
+    * floor((addon-lo)/width)·width in exact Long math (addon-lo ≥ 0 in
+    * range, so truncating division IS floor). `floatUnits`: `width` and
+    * `lo` are [[graft.build.AddonUnits.floatOrderedBits]] images and the
+    * bucket is computed in IEEE double arithmetic over the decoded value,
+    * emitted as the start's RAW IEEE bits; a -0.0 start normalizes to +0.0.
+    */
+  def facetBucket(width: Long, lo: Long, floatUnits: Boolean): Long => Long =
+    if (!floatUnits) a => lo + (a - lo) / width * width
+    else {
+      import graft.build.AddonUnits.floatFromOrderedBits
+      val w = floatFromOrderedBits(width)
+      val l = floatFromOrderedBits(lo)
+      a => java.lang.Double.doubleToRawLongBits(
+        l + math.floor((floatFromOrderedBits(a) - l) / w) * w + 0.0)
+    }
 
   /** Full-corpus scan driver (scanGetItemFull, src/rumget.c:2024-2083):
     * candidates = every doc of the shard (`docs`, ascending docId), with

@@ -257,23 +257,21 @@ final class Searcher(spark: SparkSession, indexDir: String,
 
   /** Matching docs with their attached-column value (docId, addon) — the
     * addon rides in the posting payload so no corpus join happens
-    * (RUM addon ops, README.md:158-196). Feed this to Column expressions
-    * for distance ordering / range predicates on the attached column.
+    * (RUM addon ops, README.md:158-196): a one-slot Match plan projected
+    * to (docId, addon).
     */
   def matchingWithAddon(queryStr: String): DataFrame =
-    cached("addon" + Searcher.key(queryStr))(matchingWithAddonC(compile(queryStr)))
-
-  /** The one-slot Match plan of a compiled query as (docId, addon). */
-  private def matchingWithAddonC(cq: CompiledQuery): DataFrame =
-    matchSlot(cq, rank = false, method = 0).select("docId", "addon")
+    cached("addon" + Searcher.key(queryStr)) {
+      oneSlot(Searcher.MsearchSpec.Match(queryStr), col("docId"), col("addon"))
+    }
 
   /** True when the alt-order layout can serve this query: layout present
     * and candidates index-drivable — conjunctive queries leapfrog their
     * required keys; disjunctive queries (no required key, e.g. `a | b`)
     * merge all positive keys' ordered streams, RUM's entry-merge shape
     * (src/rumget.c:1272-1369, :2303-2327). Prefix keys included on both
-    * paths — AltKernel position-unions the expansion. Only full-scan
-    * queries (pure negation / empty-doc matchers) fall back.
+    * paths — AltKernel position-unions the expansion. Full-scan queries
+    * (pure negation / empty-doc matchers) run in the primary kernel.
     */
   private def altServes(cq: CompiledQuery): Boolean =
     meta.altOrder && !SearchKernel.needsFullScan(cq)
@@ -285,7 +283,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * tie-break. One-sided misses are not returned.
     * Addons and `c` may be ANY signed long (negative scalars, epoch-
     * spanning timestamps — reference sql/int4.sql:7-19); distances beyond
-    * Long.MaxValue saturate identically on both execution paths.
+    * Long.MaxValue saturate ([[AltKernel.satDist]], on both layouts).
     */
   def topKAddon(queryStr: String, c: Long, op: String, k: Int): DataFrame =
     cached("topKA" + Searcher.key(queryStr, c.toString, op, k.toString)) {
@@ -313,12 +311,12 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * f <op> c LIMIT k` with distance = |f - c| as an exact double, over an
     * index whose attach column was encoded with
     * [[graft.build.AddonUnits.floatOrderedBits]] (the reference's float
-    * distance opclasses, btree_rum.c:249-323). The alt fast path streams
-    * in bit order (= value order per side) and ranks on the double
-    * distance's own bit image — early termination preserved; the fallback
-    * decodes and ranks the same double. NaN addons sort last on both
-    * paths (Spark orders double NaN greatest; the kernel's canonical-NaN
-    * bit image is above +Inf's). Output (docId, value, distance).
+    * distance opclasses, btree_rum.c:249-323). Both layouts rank on the
+    * double distance's own bit image ([[AltKernel.satDist]] in float
+    * units); the alt layout streams in bit order (= value order per side),
+    * so early termination is preserved. NaN addons sort last (the
+    * canonical-NaN bit image is above +Inf's). Output (docId, value,
+    * distance).
     */
   def topKAddonFloat(queryStr: String, c: Double, op: String, k: Int): DataFrame =
     cached("topKAF" + Searcher.key(queryStr,
@@ -327,31 +325,6 @@ final class Searcher(spark: SparkSession, indexDir: String,
         Searcher.orderedBitsToDouble(col("addon")).as("value"),
         col("score").as("distance"))
     }
-
-  /** Float addon top-k of an alt-unservable query as (docId, addon,
-    * distance). One-sided predicates compare BITS (well-defined for NaN,
-    * matching the kernel: NaN > +Inf > finite); the distance is in
-    * decoded VALUE space.
-    */
-  private def topKAddonFloatC(cq: CompiledQuery, c: Double, op: String,
-                              k: Int): DataFrame = {
-    val cBits = graft.build.AddonUnits.floatOrderedBits(c)
-    val v = Searcher.orderedBitsToDouble(col("addon"))
-    val keep = op match {
-      case "both" => lit(true)
-      case "left" => col("addon") <= cBits
-      case "right" => col("addon") >= cBits
-    }
-    val dist = op match {
-      case "both" => abs(v - lit(c))
-      case "left" => lit(c) - v
-      case "right" => v - lit(c)
-    }
-    matchingWithAddonC(cq).where(keep)
-      .withColumn("distance", dist)
-      .orderBy(col("distance").asc, col("docId").asc)
-      .limit(k)
-  }
 
   /** Float-typed range filter in VALUE units over a
     * [[graft.build.AddonUnits.floatOrderedBits]]-encoded attach:
@@ -366,18 +339,6 @@ final class Searcher(spark: SparkSession, indexDir: String,
         Searcher.orderedBitsToDouble(col("addon")).as("value"))
     }
 
-  /** Addon top-k of an alt-unservable query as (docId, addon, distance):
-    * the exact [[Searcher.addonDistance]] over its match+addon plan,
-    * one-sided misses dropped like the alt kernel's finite-only stream.
-    */
-  private def topKAddonC(cq: CompiledQuery, c: Long, op: String, k: Int): DataFrame =
-    matchingWithAddonC(cq)
-      .withColumn("distance", Searcher.addonDistance(c, op))
-      .where(col("distance").isNotNull)
-      .orderBy(col("distance").asc, col("docId").asc)
-      .limit(k)
-      .withColumn("distance", col("distance").cast("double"))
-
   /** Multi-key ordered scan: `WHERE t @@ q ORDER BY key1, key2, ... LIMIT k`
     * with LEXICOGRAPHIC (dist1, dist2, ..., docId) ordering — the reference
     * sorts by the whole distances[norderbys] vector then TID
@@ -385,46 +346,33 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * comparetup_rum), e.g. `ORDER BY t <=> q, d <=> c LIMIT k` in ONE index
     * scan. Order keys: [[Searcher.OrderKey.Rank]] = cover-density distance
     * of the match query (`t <=> q`), [[Searcher.OrderKey.Addon]] = attached-
-    * column distance (`addon <op> c`). A one-slot Match plan emits every
-    * match with its rank distance and addon in one pass; per-key distance
-    * columns are derived and the composite top-k runs as
-    * TakeOrderedAndProject — per-partition k-pruning on the FULL composite
-    * key, so no shard can drop a row that a later tie-break would promote.
-    * Addon keys follow the engine's finite-only contract (one-sided misses
-    * are excluded, like [[topKAddon]]).
+    * column distance (`addon <op> c`). A one-slot composite top-k plan:
+    * the kernel keeps each shard's k best on the FULL composite key (rank
+    * and addon distances of each match, then docId), so no shard can drop
+    * a row that a later tie-break would promote, and the global step
+    * re-ranks the ≤ k·nShards survivors by the same keys. Addon keys follow
+    * the engine's finite-only contract (one-sided misses are excluded,
+    * like [[topKAddon]]).
     * Output: (docId, d0, d1, ...) distances as doubles in key order.
     */
   def topKMulti(queryStr: String, orderKeys: Seq[Searcher.OrderKey], k: Int): DataFrame =
     cached("topKMul" + Searcher.key(
       queryStr +: orderKeys.map(_.toString) :+ k.toString: _*)) {
-      topKMultiC(compile(queryStr), orderKeys, k)
+      import Searcher.{OrderKey, SortKey}
+      require(orderKeys.nonEmpty, "at least one order key")
+      Searcher.requireK(k)
+      val methods = orderKeys.collect { case OrderKey.Rank(m) => m }
+      require(methods.distinct.size <= 1,
+        "all Rank keys must share one normalization method")
+      val keys = orderKeys.map {
+        case OrderKey.Rank(_) => SortKey.Rank
+        case OrderKey.Addon(c, op) => Searcher.requireOp(op); SortKey(rank = false, c, op)
+      }
+      val batch = new SlotBatch
+      batch.addComposite(0, compile(queryStr), keys.toArray, k, methods.headOption.getOrElse(0))
+      batch.plan().select(col("docId") +: keys.zipWithIndex.map { case (key, i) =>
+        Searcher.keyCol(key).cast("double").as(s"d$i") }: _*)
     }
-
-  private def topKMultiC(cq: CompiledQuery, orderKeys: Seq[Searcher.OrderKey],
-                         k: Int): DataFrame = {
-    import Searcher.OrderKey
-    require(orderKeys.nonEmpty, "at least one order key")
-    Searcher.requireK(k)
-    val methods = orderKeys.collect { case OrderKey.Rank(m) => m }
-    require(methods.distinct.size <= 1,
-      "all Rank keys must share one normalization method")
-    // the Match slot is unbounded: a per-shard heap on (rank, docId) is NOT
-    // a prefix of the composite order when addon keys follow — pruning
-    // belongs to the composite TakeOrderedAndProject below
-    val base = matchSlot(cq, rank = methods.nonEmpty,
-      method = methods.headOption.getOrElse(0))
-    val distCols = orderKeys.zipWithIndex.map {
-      case (OrderKey.Rank(_), i) => col("score").as(s"d$i")
-      case (OrderKey.Addon(c, op), i) => Searcher.addonDistance(c, op).as(s"d$i")
-    }
-    val named = base.select(col("docId") +: distCols: _*)
-    val finite = orderKeys.indices.map(i => col(s"d$i").isNotNull).reduce(_ && _)
-    named.where(finite)
-      .orderBy(orderKeys.indices.map(i => col(s"d$i").asc) :+ col("docId").asc: _*)
-      .limit(k)
-      .select(col("docId") +:
-        orderKeys.indices.map(i => col(s"d$i").cast("double").as(s"d$i")): _*)
-  }
 
   /** match AND lo <= addon <= hi — served from the alt-order layout as a
     * bounded ordered stream when available (cost tracks the in-range match
@@ -446,13 +394,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
   /** Facet histogram over the attached column (the date-histogram /
     * numeric-facet serving shape): `WHERE t @@ q AND lo <= addon <= hi
     * GROUP BY bucket`, bucket = lo + floor((addon-lo)/width)·width.
-    * Served from the alt-order layout as a BOUNDED ordered scan whose
-    * kernel collapses each shard to at most one row per bucket — the rows
-    * shipped are buckets × shards regardless of match count, the same
-    * partial-shipping shape as fused counts. The fallback groups the
-    * match+addon stream (addons ride the posting payload, no corpus
-    * join), which Spark partial-aggregates map-side. Only non-empty
-    * buckets return (SQL GROUP BY semantics). Returns (bucket, cnt).
+    * The kernel collapses each shard's in-range matches to at most one
+    * row per bucket — the rows shipped are buckets × shards regardless of
+    * match count, the same partial-shipping shape as fused counts. The
+    * alt-order layout serves it as a BOUNDED ordered scan; otherwise the
+    * primary kernel counts the slot's match stream (addons ride the
+    * posting payload, no corpus join). Only non-empty buckets return (SQL
+    * GROUP BY semantics). Returns (bucket, cnt).
     */
   def countByAddonBucket(queryStr: String, width: Long, lo: Long,
                          hi: Long): DataFrame =
@@ -477,14 +425,6 @@ final class Searcher(spark: SparkSession, indexDir: String,
   private def facetSlot(spec: Searcher.MsearchSpec, bucket: Column): DataFrame =
     oneSlot(spec, bucket.as("bucket"), col("score").cast("long").as("cnt"))
 
-  /** Facet of an alt-unservable query: groups the match+addon stream. */
-  private def countByAddonBucketC(cq: CompiledQuery, width: Long, lo: Long,
-                                  hi: Long): DataFrame =
-    matchingWithAddonC(cq)
-      .where(col("addon") >= lo && col("addon") <= hi)
-      .groupBy(Searcher.bucketCol(col("addon"), width, lo).as("bucket"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt"))
-
   /** [[countByAddonBucket]] in float VALUE units over a
     * [[graft.build.AddonUnits.floatOrderedBits]]-encoded attach: matches
     * with value in [lo, hi] count into buckets
@@ -492,8 +432,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * (deterministic and engine-identical, so a SQL oracle reproduces the
     * buckets bit-for-bit). Bounds must be finite; NaN addons never
     * participate (their bit image sits above +Inf's, outside the encoded
-    * bound), and a -0.0 bucket start normalizes to +0.0 on both paths.
-    * Returns (bucket: double, cnt: long).
+    * bound), and a -0.0 bucket start normalizes to +0.0. Both layouts
+    * bucket with the same per-shard counter. Returns (bucket: double,
+    * cnt: long).
     */
   def countByAddonBucketFloat(queryStr: String, width: Double, lo: Double,
                               hi: Double): DataFrame =
@@ -505,24 +446,6 @@ final class Searcher(spark: SparkSession, indexDir: String,
       facetSlot(Searcher.MsearchSpec.FacetFloat(queryStr, width, lo, hi),
         Searcher.longBitsToDouble(col("docId")))
     }
-
-  /** Float facet of an alt-unservable query: groups the match+addon
-    * stream in value space.
-    */
-  private def countByAddonBucketFloatC(cq: CompiledQuery, width: Double,
-                                       lo: Double, hi: Double): DataFrame = {
-    val loBits = graft.build.AddonUnits.floatOrderedBits(lo)
-    val hiBits = graft.build.AddonUnits.floatOrderedBits(hi)
-    val v = Searcher.orderedBitsToDouble(col("addon"))
-    // Spark floor(double) yields Long; the product k·width is IEEE-equal
-    // to the kernel's math.floor path while k < 2^53 (requireFacetFloat)
-    val bucket = lit(lo) + floor((v - lit(lo)) / lit(width)) * lit(width) +
-      lit(0.0)
-    matchingWithAddonC(cq)
-      .where(col("addon") >= loBits && col("addon") <= hiBits)
-      .groupBy(bucket.as("bucket"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt"))
-  }
 
   /** Ranked search: WHERE t @@ q ORDER BY t <=> q LIMIT k — the
     * rum.sql golden shape; distance = cover-density (CoverRank), ties by
@@ -683,17 +606,6 @@ final class Searcher(spark: SparkSession, indexDir: String,
   def topKBm25Batch(queries: Seq[(Seq[String], Int)]): DataFrame =
     msearch(queries.map { case (ts, k) => Searcher.MsearchSpec.Bm25(ts, k) })
 
-  /** Batched cover-density ranked retrieval: the twin of
-    * [[topKBm25Batch]] for the reference's flagship `<=>` ordering.
-    * Returns (qi, docId, distance).
-    */
-  def topKCoverBatch(queries: Seq[(String, Int)]): DataFrame = {
-    val specs = queries.map { case (q, k) => Searcher.MsearchSpec.Cover(q, k) }
-    cached("coverB" + specs.map(Searcher.specKey).mkString("")) {
-      msearchPlan(specs).select(col("qi"), col("docId"), col("score").as("distance"))
-    }
-  }
-
   /** FUSED multi-search: evaluate a heterogeneous batch of queries in ONE
     * shard-local pass per layout (the shared-scan msearch a serving tier
     * runs when individual queries are millisecond-scale). Each task walks
@@ -709,23 +621,22 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * window per qi. When bounded, match and count
     * branches read one layout, they share ONE exchange of kernel output
     * that Spark executes once, and match specs never pass through a sort.
-    * Every solo query, ordered scans included, is a
-    * one-slot batch of this plan ([[topKMulti]] orders the rows of a
-    * one-slot Match plan). Per-batch driver cost is one plan over one
-    * subtree instead of N — the serial component that would otherwise
+    * Every solo query, ordered scans and [[topKMulti]] included, is a
+    * one-slot batch of this plan. Per-batch driver cost is one plan over
+    * one subtree instead of N — the serial component that would otherwise
     * bound msearch throughput at any cluster size.
     * Returns (qi, docId, score): score = 0.0 for Match and AddonRange,
     * BM25 score for Bm25 (top-k, higher better), cover distance for Cover
     * (top-k, lower better), exact saturating addon distance for Addon
     * (top-k, lower better), exact double value-units distance for
-    * AddonFloat. Ordered-scan slots (Addon/AddonRange and their float
-    * value-units twins) run over the alt-order layout's OWN shared read —
-    * a heterogeneous batch costs one read per layout it touches. A slot
-    * whose candidates are every doc (pure negations and other queries
-    * that match the empty doc, UNIQ/LOGUNIQ rank norms) is a full-scan
-    * slot of the same primary pass, which walks each shard's docs rows.
-    * Void specs contribute no rows; alt-unservable ordered-scan
-    * specs fall back to their own one-slot Match plans, unioned in.
+    * AddonFloat. Ordered-scan slots (Addon/AddonRange/Facet and their
+    * float value-units twins) run over the alt-order layout's OWN shared
+    * read when it can drive their candidates, else as slots of the primary
+    * pass over their match streams — a heterogeneous batch reads each
+    * layout at most once. A slot whose candidates are every doc (pure
+    * negations and other queries that match the empty doc, UNIQ/LOGUNIQ
+    * rank norms) is a full-scan slot of the same primary pass, which
+    * walks each shard's docs rows. Void specs contribute no rows.
     */
   def msearch(specs: Seq[Searcher.MsearchSpec]): DataFrame =
     cached("msearch" + specs.map(Searcher.specKey).mkString(""))(msearchPlan(specs))
@@ -741,9 +652,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * from it; only the public batch schema drops the addon.
     */
   private def slotPlan(specs: Seq[Searcher.MsearchSpec]): DataFrame = {
-    // every bound is checked before any slot plans: a Searcher's first
+    // every spec is checked before any slot plans: a Searcher's first
     // BM25 slot collects the term stats in a job
-    specs.foreach(Searcher.requireBound)
+    specs.foreach(Searcher.requireSpec)
     val batch = new SlotBatch
     specs.zipWithIndex.foreach { case (spec, qi) => batch.add(qi, spec) }
     batch.plan()
@@ -753,118 +664,53 @@ final class Searcher(spark: SparkSession, indexDir: String,
   private def oneSlot(spec: Searcher.MsearchSpec, cols: Column*): DataFrame =
     slotPlan(Seq(spec)).select(cols: _*)
 
-  /** The one-slot Match plan of a compiled query, (qi, docId, score,
-    * addon): score = the cover distance under `method` when `rank`, else
-    * 0.0.
-    */
-  private def matchSlot(cq: CompiledQuery, rank: Boolean, method: Int): DataFrame = {
-    val batch = new SlotBatch
-    batch.addMatch(0, cq, rank, method)
-    batch.plan()
-  }
-
-  /** The compiled slots of one plan: kernel slots per layout, plus the
-    * fallback plans of alt-unservable ordered-scan slots.
-    */
+  /** The compiled slots of one plan, per layout. */
   private final class SlotBatch {
     private val fused = scala.collection.mutable.ArrayBuffer.empty[Searcher.FusedSpec]
-    private val altFused = scala.collection.mutable.ArrayBuffer.empty[Searcher.AltFusedSpec]
-    private val fallback = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private val altFused = scala.collection.mutable.ArrayBuffer.empty[Searcher.FusedSpec]
     // count slots: every qi here gets a spine row (even void/zero-match)
     private val countQis = scala.collection.mutable.ArrayBuffer.empty[Int]
 
-    /** A fallback plan's rows in the slot schema. */
-    private def addFallback(qi: Int, df: DataFrame, docId: Column, score: Column,
-                            addon: Column = lit(0L)): Unit =
-      fallback += df.select(lit(qi).as("qi"), docId.as("docId"), score.as("score"),
-        addon.as("addon"))
-
-    /** A primary-layout slot over `cq`, unless a void query leaves it
-      * nothing to match. Its candidates are every doc of the shard when the
-      * postings alone cannot drive them, or when a UNIQ/LOGUNIQ rank norm
-      * needs the doc's distinct-lexeme count from the docs rows.
+    /** A primary-layout slot, unless a void query leaves it nothing to
+      * match. Its candidates are every doc of the shard when the postings
+      * alone cannot drive them, or when a UNIQ/LOGUNIQ rank norm needs the
+      * doc's distinct-lexeme count from the docs rows.
       */
-    private def addPrimary(qi: Int, mode: Int, cq: CompiledQuery, k: Int = 0,
-                           rank: Boolean = false, method: Int = 0,
-                           scoreCq: CompiledQuery = null, scoreMap: Array[Int] = null,
-                           c: Long = 0L, op: String = "", matchOnly: Boolean = true): Unit =
-      if (!matchOnly || !SearchKernel.isVoid(cq)) {
-        val uniq = rank && (method & (CoverRank.NormUniq | CoverRank.NormLogUniq)) != 0
-        fused += Searcher.FusedSpec(qi, mode, cq, SearchKernel.keySpecs(cq), null, null, null,
-          k, scoreCq, scoreMap, method, c, op, rank,
-          fullScan = !matchOnly || uniq || SearchKernel.needsFullScan(cq), matchOnly)
+    private def addPrimary(f: Searcher.FusedSpec): Unit =
+      if (!f.matchOnly || !SearchKernel.isVoid(f.cq)) {
+        val uniq = f.rank && (f.method & (CoverRank.NormUniq | CoverRank.NormLogUniq)) != 0
+        fused += f.copy(fullScan = !f.matchOnly || uniq || SearchKernel.needsFullScan(f.cq))
       }
 
-    def addMatch(qi: Int, cq: CompiledQuery, rank: Boolean, method: Int): Unit =
-      addPrimary(qi, 0, cq, rank = rank, method = method)
+    /** An ordered-scan slot (addon top-k, addon range, facet): the alt
+      * kernel serves it when the alt layout can drive its candidates, else
+      * the primary kernel runs the same mode over the slot's match stream.
+      */
+    private def addOrdered(f: Searcher.FusedSpec): Unit =
+      if (altServes(f.cq)) altFused += f else addPrimary(f)
+
+    def addMatch(qi: Int, cq: CompiledQuery): Unit = addPrimary(Searcher.FusedSpec(qi, 0, cq))
     def addCover(qi: Int, cq: CompiledQuery, k: Int, method: Int, scoreCq: CompiledQuery,
                  scoreMap: Array[Int], matchOnly: Boolean = true): Unit =
-      addPrimary(qi, 1, cq, k, rank = true, method, scoreCq, scoreMap, matchOnly = matchOnly)
-    private def addOrder2(qi: Int, cq: CompiledQuery, c: Long, op: String, k: Int,
-                          method: Int): Unit = {
-      require(Set("both", "left", "right").contains(op), s"op: $op")
-      addPrimary(qi, 4, cq, k, rank = true, method, c = c, op = op)
-    }
+      addPrimary(Searcher.FusedSpec(qi, 1, cq, k, scoreCq = scoreCq, scoreMap = scoreMap,
+        method = method, rank = true, matchOnly = matchOnly))
+    /** A composite top-k slot ordered by `keys`, then docId. */
+    def addComposite(qi: Int, cq: CompiledQuery, keys: Array[Searcher.SortKey], k: Int,
+                     method: Int): Unit =
+      addPrimary(Searcher.FusedSpec(qi, 4, cq, k, method = method, rank = keys.exists(_.rank),
+        order = keys))
     private def addCount(qi: Int, cq: CompiledQuery): Unit = {
       countQis += qi // a void query counts 0 via the spine
-      addPrimary(qi, 3, cq)
+      addPrimary(Searcher.FusedSpec(qi, 3, cq))
     }
-    private def addAddon(qi: Int, cq: CompiledQuery, c: Long, op: String, k: Int): Unit = {
-      require(Set("both", "left", "right").contains(op), s"op: $op")
-      if (SearchKernel.isVoid(cq)) ()
-      else if (altServes(cq))
-        altFused += Searcher.AltFusedSpec(qi, 0, cq, SearchKernel.keySpecs(cq),
-          c, op, k, 0L, 0L)
-      else
-        addFallback(qi, topKAddonC(cq, c, op, k), col("docId"), col("distance"),
-          col("addon"))
-    }
-    private def addAddonFloat(qi: Int, cq: CompiledQuery, c: Double, op: String,
-                              k: Int): Unit = {
-      require(Set("both", "left", "right").contains(op), s"op: $op")
-      if (SearchKernel.isVoid(cq)) ()
-      else if (altServes(cq))
-        altFused += Searcher.AltFusedSpec(qi, 0, cq, SearchKernel.keySpecs(cq),
-          graft.build.AddonUnits.floatOrderedBits(c), op, k, 0L, 0L,
-          floatUnits = true)
-      else
-        addFallback(qi, topKAddonFloatC(cq, c, op, k), col("docId"), col("distance"),
-          col("addon"))
-    }
-    private def addRange(qi: Int, cq: CompiledQuery, lo: Long, hi: Long): Unit = {
-      if (SearchKernel.isVoid(cq)) ()
-      else if (altServes(cq))
-        altFused += Searcher.AltFusedSpec(qi, 1, cq, SearchKernel.keySpecs(cq),
-          0L, "", 0, lo, hi)
-      else
-        addFallback(qi,
-          matchingWithAddonC(cq).where(col("addon") >= lo && col("addon") <= hi),
-          col("docId"), lit(0.0), col("addon"))
-    }
-    private def addFacet(qi: Int, cq: CompiledQuery, w: Long, lo: Long,
-                         hi: Long): Unit = {
-      Searcher.requireFacet(w, lo, hi)
-      if (SearchKernel.isVoid(cq)) () // facet of nothing = no buckets
-      else if (altServes(cq))
-        altFused += Searcher.AltFusedSpec(qi, 2, cq, SearchKernel.keySpecs(cq),
-          w, "", 0, lo, hi)
-      else // fallback plan carries its own final agg; union it in directly
-        addFallback(qi, countByAddonBucketC(cq, w, lo, hi), col("bucket"),
-          col("cnt").cast("double"))
-    }
-    private def addFacetFloat(qi: Int, cq: CompiledQuery, w: Double, lo: Double,
-                              hi: Double): Unit = {
-      Searcher.requireFacetFloat(w, lo, hi)
-      if (SearchKernel.isVoid(cq)) ()
-      else if (altServes(cq)) // c slot carries the width's ordered bits
-        altFused += Searcher.AltFusedSpec(qi, 2, cq, SearchKernel.keySpecs(cq),
-          graft.build.AddonUnits.floatOrderedBits(w), "", 0,
-          graft.build.AddonUnits.floatOrderedBits(lo),
-          graft.build.AddonUnits.floatOrderedBits(hi), floatUnits = true)
-      else
-        addFallback(qi, countByAddonBucketFloatC(cq, w, lo, hi),
-          Searcher.doubleToRawLongBits(col("bucket")), col("cnt").cast("double"))
-    }
+    private def addAddon(qi: Int, cq: CompiledQuery, key: Searcher.SortKey, k: Int): Unit =
+      addOrdered(Searcher.FusedSpec(qi, 4, cq, k, order = Array(key)))
+    private def addRange(qi: Int, cq: CompiledQuery, lo: Long, hi: Long): Unit =
+      addOrdered(Searcher.FusedSpec(qi, 5, cq, lo = lo, hi = hi))
+    private def addFacet(qi: Int, cq: CompiledQuery, width: Long, lo: Long, hi: Long,
+                         floatUnits: Boolean): Unit =
+      addOrdered(Searcher.FusedSpec(qi, 6, cq, width = width, lo = lo, hi = hi,
+        floatUnits = floatUnits))
     private def addBm25(qi: Int, keys: Seq[String], k: Int): Unit = {
       val distinct = keys.distinct
       val stats = statsFor(distinct)
@@ -874,22 +720,26 @@ final class Searcher(spark: SparkSession, indexDir: String,
         val ubArr = present.indices.map(i =>
           graft.query.Bm25.maxTermScore(stats(present(i))._2, dfArr(i),
             meta.avgLen, meta.numDocs)).toArray
-        fused += Searcher.FusedSpec(qi, 2, null, null, present, dfArr, ubArr, k)
+        fused += Searcher.FusedSpec(qi, 2, k = k, terms = present, dfs = dfArr, ubs = ubArr)
       }
     }
 
     def add(qi: Int, spec: Searcher.MsearchSpec): Unit = {
       import Searcher.MsearchSpec._
+      import Searcher.SortKey
+      import graft.build.AddonUnits.floatOrderedBits
       spec match {
-        case Match(q) => addMatch(qi, compile(q), rank = false, method = 0)
+        case Match(q) => addMatch(qi, compile(q))
         case Cover(q, k, method) => addCover(qi, compile(q), k, method, null, null)
-        case Order2(q, c, op, k, method) => addOrder2(qi, compile(q), c, op, k, method)
+        case Order2(q, c, op, k, method) =>
+          addComposite(qi, compile(q), Array(SortKey.Rank, SortKey(rank = false, c, op)), k,
+            method)
         case Count(q) => addCount(qi, compile(q))
         case CountFields(fq) => addCount(qi, compileMulti(fq))
         case Bm25(terms, k) => addBm25(qi, terms.map(keyOf), k)
         // field-scoped variants over a multi-column index: the same fused
         // pass — field-prefixed keys are just keys to the kernel
-        case MatchFields(fq) => addMatch(qi, compileMulti(fq), rank = false, method = 0)
+        case MatchFields(fq) => addMatch(qi, compileMulti(fq))
         case CoverFields(rf, rq, filters, k, method) =>
           val (fullCq, scoreCq, scoreMap) = compileCoverMulti(rf, rq, filters)
           addCover(qi, fullCq, k, method, scoreCq, scoreMap)
@@ -898,68 +748,90 @@ final class Searcher(spark: SparkSession, indexDir: String,
             s"unknown field '$field' (have ${meta.fields})")
           addBm25(qi,
             terms.map(t => keyOf(graft.build.IndexBuilder.fieldKey(field, t))), k)
-        // ordered-scan slots ride the batch over the alt-order layout's
-        // OWN shared scan (one per layout per batch), or their fallback
-        // plans when the layout can't serve them
-        case Addon(q, c, op, k) => addAddon(qi, compile(q), c, op, k)
+        // ordered-scan slots: the alt-order layout's OWN shared scan when it
+        // can serve them, else slots of the primary pass
+        case Addon(q, c, op, k) => addAddon(qi, compile(q), SortKey(rank = false, c, op), k)
         case AddonRange(q, lo, hi) => addRange(qi, compile(q), lo, hi)
-        case AddonFields(fq, c, op, k) => addAddon(qi, compileMulti(fq), c, op, k)
+        case AddonFields(fq, c, op, k) =>
+          addAddon(qi, compileMulti(fq), SortKey(rank = false, c, op), k)
         case AddonRangeFields(fq, lo, hi) => addRange(qi, compileMulti(fq), lo, hi)
-        // float value-units slots: the range desugars to encoded bounds
-        // (bit order = value order); the top-k carries floatUnits through
-        // to the kernel's distance closure
-        case AddonFloat(q, c, op, k) => addAddonFloat(qi, compile(q), c, op, k)
-        case AddonRangeFloat(q, lo, hi) => addRange(qi, compile(q),
-          graft.build.AddonUnits.floatOrderedBits(lo),
-          graft.build.AddonUnits.floatOrderedBits(hi))
-        case Facet(q, w, lo, hi) => addFacet(qi, compile(q), w, lo, hi)
+        // float value-units slots: bounds and constants as their ordered
+        // bits (bit order = value order); floatUnits carries through to the
+        // kernel's distance and bucket functions
+        case AddonFloat(q, c, op, k) =>
+          addAddon(qi, compile(q), SortKey(rank = false, floatOrderedBits(c), op, floatUnits = true),
+            k)
+        case AddonRangeFloat(q, lo, hi) =>
+          addRange(qi, compile(q), floatOrderedBits(lo), floatOrderedBits(hi))
+        case Facet(q, w, lo, hi) => addFacet(qi, compile(q), w, lo, hi, floatUnits = false)
         case FacetFields(fq, w, lo, hi) =>
-          addFacet(qi, compileMulti(fq), w, lo, hi)
-        case FacetFloat(q, w, lo, hi) => addFacetFloat(qi, compile(q), w, lo, hi)
+          addFacet(qi, compileMulti(fq), w, lo, hi, floatUnits = false)
+        case FacetFloat(q, w, lo, hi) => addFacet(qi, compile(q), floatOrderedBits(w),
+          floatOrderedBits(lo), floatOrderedBits(hi), floatUnits = true)
         // the placeholder key is an ordinary key to the kernel: these
         // slots ride the shared scan like any single-term query
-        case MatchEmpty(f) => addMatch(qi, emptyCompiled(f), rank = false, method = 0)
+        case MatchEmpty(f) => addMatch(qi, emptyCompiled(f))
         case CountEmpty(f) => addCount(qi, emptyCompiled(f))
       }
     }
 
+    /** One layout's kernel pass over `fs` (empty: no read), split into
+      * (bounded top-k rows and match/range rows, count partials, facet
+      * partials). Its branches share ONE exchange of kernel output.
+      */
+    private def layoutParts(fs: Array[Searcher.FusedSpec],
+                            kernel: TermSet => ShardKernel)
+        : (Seq[DataFrame], Option[DataFrame], Option[DataFrame]) =
+      if (fs.isEmpty) (Nil, None, None)
+      else {
+        // each slot's kernel looks up exactly its own keys, so sibling
+        // slots' terms are invisible to it; the union of the slots' terms
+        // names the pass in the plan
+        val terms = fs.map(f =>
+          if (f.mode == 2) TermSet(f.terms.toSeq, Nil) else TermSet.of(f.cq)).reduce(_ ++ _)
+        val bounded = fs.filter(f => f.mode == 1 || f.mode == 2 || f.mode == 4)
+        val unbounded = fs.filter(f => f.mode == 0 || f.mode == 5)
+        val counts = fs.filter(_.mode == 3)
+        val facets = fs.filter(_.mode == 6)
+        val Seq(boundedRows, unboundedRows, countRows, facetRows) = branchRows(
+          shardScan(kernel(terms)),
+          Seq(bounded, unbounded, counts, facets).map(_.map(_.qi).toSeq))
+        // bounded specs: per-shard heaps already pruned to ≤ k·nShards rows
+        // each, so the global top-k touches only those; match specs stream
+        // through their own branch, never sorted. Only composite slots read
+        // their addon (a lone one ranks by it, addon top-k returns it), so
+        // cover and BM25 rows leave it out of the top-k
+        val boundedPart =
+          if (bounded.isEmpty) None
+          else {
+            val composite = bounded.exists(_.mode == 4)
+            Some(Searcher.topKTail(if (composite) boundedRows else boundedRows.drop("addon"),
+              bounded.map(f => (f.qi, f.k)).toSeq, Searcher.topKOrder(bounded.toSeq),
+              Seq(col("qi"), col("docId"), col("score"),
+                if (composite) col("addon") else lit(0L).as("addon"))))
+          }
+        val unboundedPart =
+          if (unbounded.isEmpty) None
+          else Some(unboundedRows.select("qi", "docId", "score", "addon"))
+        val countPart =
+          if (counts.isEmpty) None
+          else Some(countRows.select(col("qi"), col("docId").as("partial")))
+        val facetPart =
+          if (facets.isEmpty) None
+          else Some(facetRows.select("qi", "docId", "sort2"))
+        ((boundedPart ++ unboundedPart).toSeq, countPart, facetPart)
+      }
+
     /** The batch's plan: (qi, docId, score, addon). */
     def plan(): DataFrame = {
-      val (fusedParts, countKernelPart): (Seq[DataFrame], Option[DataFrame]) =
-        if (fused.isEmpty) (Nil, None)
-        else {
-          val fs = fused.toArray
-          // ONE pass for every slot: each slot's kernel looks up exactly
-          // its own keys, so sibling slots' terms are invisible to it; the
-          // union of the slots' terms names the pass in the plan
-          val terms = fs.map(f =>
-            if (f.mode == 2) TermSet(f.terms.toSeq, Nil) else TermSet.of(f.cq)).reduce(_ ++ _)
-          val bounded = fs.filter(f => f.mode != 0 && f.mode != 3)
-          val unbounded = fs.filter(_.mode == 0)
-          val counts = fs.filter(_.mode == 3)
-          val Seq(boundedRows, unboundedRows, countRows) = branchRows(
-            shardScan(ShardKernel.Primary(fs, meta.numDocs, meta.avgLen, terms)),
-            Seq(bounded, unbounded, counts).map(_.map(_.qi).toSeq))
-          // bounded specs: per-shard heaps already pruned to ≤ k·nShards rows
-          // each, so the global top-k touches only those; match specs stream
-          // through their own branch, never sorted. No caller reads a
-          // bounded slot's addon, so it stays out of the top-k's rows
-          val boundedPart =
-            if (bounded.isEmpty) None
-            else Some(Searcher.topKTail(boundedRows.drop("addon"),
-              bounded.map(f => (f.qi, f.k)).toSeq,
-              Seq(col("sort").asc, col("sort2").asc, col("docId").asc),
-              Seq(col("qi"), col("docId"), col("score"), lit(0L).as("addon"))))
-          val unboundedPart =
-            if (unbounded.isEmpty) None
-            else Some(unboundedRows.select("qi", "docId", "score", "addon"))
-          // count slots: per-shard partials, aggregated below with the
-          // spine
-          val countPart =
-            if (counts.isEmpty) None
-            else Some(countRows.select(col("qi"), col("docId").as("partial")))
-          ((boundedPart ++ unboundedPart).toSeq, countPart)
-        }
+      val (rows, countKernelPart, facetPart) = layoutParts(fused.toArray,
+        ShardKernel.Primary(fused.toArray, meta.numDocs, meta.avgLen, _))
+      // ordered-scan slots the alt layout serves: ONE alt-layout read for
+      // the whole batch, mirroring the primary pass; per-shard ShardCells
+      // merges each term's runs once across every slot that touches it
+      val (altRows, _, altFacetPart) = layoutParts(altFused.toArray,
+        ShardKernel.Alt(altFused.toArray, _))
+      // count slots: the per-shard partials, summed with the spine
       val countsPart: Option[DataFrame] =
         if (countQis.isEmpty) None
         else {
@@ -969,51 +841,14 @@ final class Searcher(spark: SparkSession, indexDir: String,
             .select(col("qi"), col("cnt").as("docId"),
               col("cnt").cast("double").as("score"), lit(0L).as("addon")))
         }
-      // ordered-scan slots: ONE alt-layout read for the whole batch,
-      // mirroring the primary pass; per-shard ShardCells merges each term's
-      // runs once across every slot that touches it
-      val altParts: Seq[DataFrame] =
-        if (altFused.isEmpty) Nil
-        else {
-          val afs = altFused.toArray
-          val bounded = afs.filter(_.mode == 0)
-          val unbounded = afs.filter(_.mode == 1)
-          val facets = afs.filter(_.mode == 2)
-          val Seq(boundedRows, unboundedRows, facetRows) = branchRows(
-            shardScan(ShardKernel.Alt(afs, afs.map(f => TermSet.of(f.cq)).reduce(_ ++ _))),
-            Seq(bounded, unbounded, facets).map(_.map(_.qi).toSeq))
-          val boundedPart =
-            if (bounded.isEmpty) None
-            else {
-              // ordering/limit on the exact long distance (sort2); float-
-              // units slots rank on the double distance's bit image
-              // (order-preserving) and decode only the surviving rows back
-              // to the exact double
-              val floatQis = bounded.filter(_.floatUnits).map(_.qi).toSeq
-              val score =
-                if (floatQis.isEmpty) col("sort2").cast("double")
-                else when(col("qi").isInCollection(floatQis),
-                    Searcher.longBitsToDouble(col("sort2")))
-                  .otherwise(col("sort2").cast("double"))
-              Some(Searcher.topKTail(boundedRows, bounded.map(f => (f.qi, f.k)).toSeq,
-                Seq(col("sort2").asc, col("docId").asc),
-                Seq(col("qi"), col("docId"), score.as("score"), col("addon"))))
-            }
-          val unboundedPart =
-            if (unbounded.isEmpty) None
-            else Some(unboundedRows
-              .select(col("qi"), col("docId"), lit(0.0).as("score"), col("addon")))
-          // facet slots: final sum over the per-shard bucket partials (rows
-          // shipped = buckets × shards per slot, never the matches)
-          val facetPart =
-            if (facets.isEmpty) None
-            else Some(facetRows
-              .groupBy("qi", "docId").agg(sum("sort2").as("cnt"))
-              .select(col("qi"), col("docId"),
-                col("cnt").cast("double").as("score"), lit(0L).as("addon")))
-          (boundedPart ++ unboundedPart ++ facetPart).toSeq
-        }
-      (fusedParts ++ countsPart.toSeq ++ altParts ++ fallback.toSeq)
+      // facet slots of both layouts: one final sum over the per-shard
+      // bucket partials (rows shipped = buckets × shards per slot, never
+      // the matches)
+      val facetsPart = (facetPart ++ altFacetPart).reduceOption(_ union _).map(
+        _.groupBy("qi", "docId").agg(sum("sort2").as("cnt"))
+          .select(col("qi"), col("docId"), col("cnt").cast("double").as("score"),
+            lit(0L).as("addon")))
+      (rows ++ countsPart ++ altRows ++ facetsPart)
         .reduceOption(_ union _)
         .getOrElse(emptyBatch("docId" -> "long", "score" -> "double", "addon" -> "long"))
     }
@@ -1162,8 +997,8 @@ object Searcher {
       extends MsearchSpec
     /** addon ordered top-k: `WHERE q ORDER BY addon <op> c LIMIT k`
       * (score = exact saturating distance as double, lower better); served
-      * from the alt-order layout when it can, else the slot's solo
-      * fallback plan rides the batch
+      * from the alt-order layout when it can, else a composite top-k slot
+      * of the primary pass
       */
     final case class Addon(query: String, c: Long, op: String, k: Int)
       extends MsearchSpec
@@ -1179,9 +1014,9 @@ object Searcher {
     /** [[Addon]] in float VALUE units over a
       * [[graft.build.AddonUnits.floatOrderedBits]]-encoded attach: score =
       * `|value - c|` as an exact double — the fused twin of
-      * [[Searcher.topKAddonFloat]]. Rides the same alt-layout shared scan,
-      * ranking the double distance's own bit image (early termination
-      * preserved); NaN addons sort last.
+      * [[Searcher.topKAddonFloat]]. Served like [[Addon]], ranking the
+      * double distance's own bit image (on the alt layout, early
+      * termination preserved); NaN addons sort last.
       */
     final case class AddonFloat(query: String, c: Double, op: String, k: Int)
       extends MsearchSpec
@@ -1196,9 +1031,10 @@ object Searcher {
       * [[Searcher.countByAddonBucket]] shape): per-shard bucket PARTIALS
       * are all that ship — ≤ buckets × shards rows per slot regardless of
       * match count. Result rows are (qi, docId = bucket start,
-      * score = count as double); only non-empty buckets emit.
-      * Alt-unservable queries aggregate their fallback plan into the
-      * batch union.
+      * score = count as double); only non-empty buckets emit. The alt
+      * layout's bounded scan or the primary pass's match stream feeds the
+      * same per-shard bucket counter, and one sum over both layouts'
+      * partials finishes every facet slot of the batch.
       */
     final case class Facet(query: String, width: Long, lo: Long, hi: Long)
       extends MsearchSpec
@@ -1209,9 +1045,8 @@ object Searcher {
       * [[graft.build.AddonUnits.floatOrderedBits]]-encoded attach (the
       * fused twin of [[Searcher.countByAddonBucketFloat]]): result rows
       * are (qi, docId = the bucket start's RAW IEEE bits — decode with
-      * `java.lang.Double.longBitsToDouble` — , score = count). Rides the
-      * batch's shared alt scan; alt-unservable queries aggregate their
-      * fallback plan with the same bit-image bucket column.
+      * `java.lang.Double.longBitsToDouble` — , score = count). Served by
+      * the same layouts and counter as [[Facet]].
       */
     final case class FacetFloat(query: String, width: Double, lo: Double,
         hi: Double) extends MsearchSpec
@@ -1245,55 +1080,33 @@ object Searcher {
     require((hi - lo) / width < 1e15, s"too many buckets: [$lo, $hi] / $width")
   }
 
-  /** Bucket start for an addon known to sit in [lo, hi]: lo +
-    * floor((addon-lo)/width)·width in EXACT Long arithmetic — addon-lo is
-    * non-negative in range, so truncation = floor, expressed as
-    * offset - (offset mod width) to stay in integer math (a double
-    * division would lose exactness past 2^53).
-    */
-  private[search] def bucketCol(addon: Column, width: Long, lo: Long): Column = {
-    val off = addon - lit(lo)
-    lit(lo) + (off - pmod(off, lit(width)))
-  }
-
   /** Rejects a non-positive top-k bound at plan time, before any job. */
   private[search] def requireK(k: Int): Unit = require(k > 0, s"k must be positive: $k")
 
-  /** [[requireK]] for a bounded spec's k. */
-  private[search] def requireBound(sp: MsearchSpec): Unit = {
+  /** Rejects an addon distance operator other than both/left/right. */
+  private[search] def requireOp(op: String): Unit =
+    require(Set("both", "left", "right").contains(op), s"op: $op")
+
+  /** Rejects a spec's invalid parameters — a bounded spec's k, an ordered
+    * spec's op, a facet's width and range — at plan time. A batch checks
+    * every spec before any slot plans, so a rejected batch runs no job.
+    */
+  private[search] def requireSpec(sp: MsearchSpec): Unit = {
     import MsearchSpec._
     sp match {
       case Bm25(_, k) => requireK(k)
       case Bm25Fields(_, _, k) => requireK(k)
       case Cover(_, k, _) => requireK(k)
       case CoverFields(_, _, _, k, _) => requireK(k)
-      case Order2(_, _, _, k, _) => requireK(k)
-      case Addon(_, _, _, k) => requireK(k)
-      case AddonFields(_, _, _, k) => requireK(k)
-      case AddonFloat(_, _, _, k) => requireK(k)
+      case Order2(_, _, op, k, _) => requireOp(op); requireK(k)
+      case Addon(_, _, op, k) => requireOp(op); requireK(k)
+      case AddonFields(_, _, op, k) => requireOp(op); requireK(k)
+      case AddonFloat(_, _, op, k) => requireOp(op); requireK(k)
+      case Facet(_, w, lo, hi) => requireFacet(w, lo, hi)
+      case FacetFields(_, w, lo, hi) => requireFacet(w, lo, hi)
+      case FacetFloat(_, w, lo, hi) => requireFacetFloat(w, lo, hi)
       case _ => ()
     }
-  }
-
-  /** Exact addon distance `addon <op> c` as decimal(20,0): long
-    * subtraction overflows for extreme constants, double loses sub-256
-    * resolution past 2^53. Saturated at Long.MaxValue like the alt
-    * kernel's satSub, so both paths tie-break identically beyond the
-    * representable range. One-sided misses are null; callers drop them
-    * (the finite-only contract).
-    */
-  private[search] def addonDistance(c: Long, op: String): Column = {
-    val a = col("addon").cast("decimal(20,0)")
-    val cc = lit(c).cast("decimal(20,0)")
-    val raw = op match {
-      case "both" => abs(a - cc)
-      case "left" => when(col("addon") <= c, cc - a).otherwise(lit(null))
-      case "right" => when(col("addon") >= c, a - cc).otherwise(lit(null))
-      case other => throw new IllegalArgumentException(s"op: $other")
-    }
-    // least() ignores nulls — keep the one-sided-miss null sentinel
-    when(raw.isNull, lit(null))
-      .otherwise(least(raw, lit(Long.MaxValue).cast("decimal(20,0)")))
   }
 
   /** Global top-k over shard-pruned bounded slot rows, `ks` = (qi, k) per
@@ -1314,29 +1127,61 @@ object Searcher {
         .select(out: _*)
     }
 
-  /** Compiled alt-layout fused-batch slot (ordered scans). mode 0 =
-    * addon top-k, 1 = addon range, 2 = facet bucket partials (`c` carries
-    * the bucket width).
+  /** The global top-k order of bounded slot rows. A lone composite slot
+    * re-ranks its survivors by its own keys; otherwise every slot orders
+    * by the kernel's (sort, sort2) image of its key, then docId — exact for
+    * cover, BM25 and the batch composites (Order2: rank, then addon
+    * distance; Addon: addon distance).
     */
-  private[search] final case class AltFusedSpec(
-      qi: Int, mode: Int, cq: CompiledQuery, keys: Array[SearchKernel.KeySpec],
-      c: Long, op: String, k: Int, lo: Long, hi: Long,
-      floatUnits: Boolean = false)
+  private[search] def topKOrder(bounded: Seq[FusedSpec]): Seq[Column] = bounded match {
+    case Seq(f) if f.mode == 4 => f.order.map(keyCol(_).asc).toSeq :+ col("docId").asc
+    case _ => Seq(col("sort").asc, col("sort2").asc, col("docId").asc)
+  }
 
-  /** Compiled fused-batch slot (task-closure payload: no session refs).
-    * mode 0 = match, 1 = cover top-k, 2 = BM25 WAND top-k, 3 = count
-    * (per-shard partial), 4 = Order2 composite top-k (c/op = the addon
-    * key). `rank`: modes 0 and 1 score their matches by cover distance.
-    * `fullScan`: the candidates are every doc of the shard, from its docs
-    * rows; `matchOnly = false` (order-only cover) also keeps the docs that
-    * do not match.
+  /** A composite key over a composite slot's rows: the rank distance
+    * (`score`), or the addon distance by [[AltKernel.satDist]].
+    */
+  private[search] def keyCol(key: SortKey): Column =
+    if (key.rank) col("score") else udf((a: Long) => key.dist(a)).apply(col("addon"))
+
+  /** One key of a composite top-k slot's order: the match's rank distance
+    * (`rank`), else its addon distance `addon <op> c` by
+    * [[AltKernel.satDist]] — an exact saturating long, or with
+    * `floatUnits` the bit image of the VALUE-space double distance.
+    */
+  private[search] final case class SortKey(rank: Boolean, c: Long = 0L, op: String = "",
+                                           floatUnits: Boolean = false) {
+    /** the addon distance of `a`; -1 = a one-sided miss */
+    def dist(a: Long): Long = AltKernel.satDist(a, c, op, floatUnits)
+    /** an addon distance as the slot's double score */
+    def score(d: Long): Double =
+      if (floatUnits) java.lang.Double.longBitsToDouble(d) else d.toDouble
+  }
+  private[search] object SortKey {
+    val Rank: SortKey = SortKey(rank = true)
+  }
+
+  /** Compiled fused-batch slot (task-closure payload: no session refs),
+    * served by the primary kernel or — ordered-scan modes 4 to 6, when the
+    * alt layout can drive the query — by the alt kernel.
+    * mode 0 = match, 1 = cover top-k, 2 = BM25 WAND top-k (`terms`, `dfs`,
+    * `ubs`), 3 = count (per-shard partial), 4 = composite top-k by `order`
+    * then docId (Order2, addon top-k, [[Searcher.topKMulti]]), 5 = addon
+    * range [lo, hi], 6 = facet bucket partials (`width`, `lo`, `hi`;
+    * `floatUnits`: ordered-bits bounds, VALUE-space buckets). `rank`: the
+    * slot scores its matches by cover distance. `fullScan`: the candidates
+    * are every doc of the shard, from its docs rows; `matchOnly = false`
+    * (order-only cover) also keeps the docs that do not match.
     */
   private[search] final case class FusedSpec(
-      qi: Int, mode: Int, cq: CompiledQuery, keys: Array[SearchKernel.KeySpec],
-      terms: Array[String], dfs: Array[Long], ubs: Array[Double], k: Int,
+      qi: Int, mode: Int, cq: CompiledQuery = null, k: Int = 0,
+      terms: Array[String] = null, dfs: Array[Long] = null, ubs: Array[Double] = null,
       scoreCq: CompiledQuery = null, scoreMap: Array[Int] = null,
-      method: Int = 0, c: Long = 0L, op: String = "", rank: Boolean = false,
-      fullScan: Boolean = false, matchOnly: Boolean = true)
+      method: Int = 0, rank: Boolean = false, order: Array[SortKey] = null,
+      lo: Long = 0L, hi: Long = 0L, width: Long = 0L, floatUnits: Boolean = false,
+      fullScan: Boolean = false, matchOnly: Boolean = true) {
+    val keys: Array[SearchKernel.KeySpec] = if (cq == null) null else SearchKernel.keySpecs(cq)
+  }
 
   /** [[graft.build.AddonUnits.floatOrderedBits]] image → its double. */
   private val orderedBitsToDouble =
@@ -1344,9 +1189,6 @@ object Searcher {
   /** raw IEEE-754 bits → double */
   private val longBitsToDouble =
     udf((bits: Long) => java.lang.Double.longBitsToDouble(bits))
-  /** double → raw IEEE-754 bits */
-  private val doubleToRawLongBits =
-    udf((v: Double) => java.lang.Double.doubleToRawLongBits(v))
 
   /** One ORDER BY key of a [[Searcher.topKMulti]] scan. */
   sealed trait OrderKey

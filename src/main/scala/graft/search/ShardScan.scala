@@ -171,13 +171,16 @@ private[search] object TermSet {
 private[search] sealed trait ShardKernel extends Serializable {
   /** "postings" or "alt" */
   def layout: String
+  def specs: Array[Searcher.FusedSpec]
   def terms: TermSet
   /** One shard's output; `handed` is told the posting rows of each term
     * the kernel looks up, once per term.
     */
   def run(shard: ShardRecord, handed: Long => Unit): Iterator[ShardScan.Out]
   /** the slots, for plan strings */
-  def describe: String
+  def describe: String = specs.map(f =>
+    Seq("match", "cover", "bm25", "count", "composite", "range", "facet")(f.mode) + "#" + f.qi +
+      (if (f.fullScan) "(fullscan)" else "")).mkString(", ")
 }
 
 private[search] object ShardKernel {
@@ -187,7 +190,10 @@ private[search] object ShardKernel {
     * to it. A full-scan slot's candidates are every doc of the shard, from
     * the record's docs rows (scanGetItemFull,
     * src/rumget.c:2024-2083), the rest draw theirs from the postings; both
-    * kinds feed the same match, cover, count and Order2 code.
+    * kinds feed the same match, cover, count, composite top-k, range and
+    * facet code. The ordered-scan modes run over the slot's match stream,
+    * whose rows carry each match's addon — RUM orders by the addon inside
+    * the index scan (src/rumget.c:2218-2301 insertScanItem).
     */
   final case class Primary(specs: Array[Searcher.FusedSpec], nDocs: Long,
                            avgLen: Double, terms: TermSet) extends ShardKernel {
@@ -201,6 +207,9 @@ private[search] object ShardKernel {
           f.matchOnly, k, f.method, f.scoreCq, f.scoreMap)
         else SearchKernel.matchShard(f.cq, f.keys, view, score, k, f.method,
           f.scoreCq, f.scoreMap)
+      // the addons of the slot's matches in [lo, hi]
+      def inRange(f: Searcher.FusedSpec) =
+        matches(f, score = false, k = 0).filter(t => t._3 >= f.lo && t._3 <= f.hi)
       specs.iterator.flatMap { f =>
         f.mode match {
           // match (k = 0: every match) and cover top-k; the row carries
@@ -217,50 +226,59 @@ private[search] object ShardKernel {
             val m = matches(f, score = false, k = 0)
             while (m.hasNext) { m.next(); n += 1 }
             Iterator.single((f.qi, n, 0.0, 0.0, 0L, 0L))
-          // composite (rank, addonDist, docId): per-shard heap pruned on
-          // the FULL tuple; sort2 carries the EXACT long addon distance so
-          // the global top-k tie-breaks losslessly
-          case _ => SearchKernel.order2Shard(matches(f, score = true, k = 0), f.c, f.op, f.k)
-            .map { case (id, r, d2) => (f.qi, id, r, r, d2, 0L) }
+          // composite top-k: per-shard heap pruned on the FULL key
+          case 4 => SearchKernel.compositeShard(matches(f, score = f.rank, k = 0), f.order, f.k)
+            .map { case (id, r, a) => compositeRow(f, id, r, a) }
+          case 5 => inRange(f).map(t => (f.qi, t._1, 0.0, 0.0, 0L, t._3))
+          case _ => facetRows(f, inRange(f).map(_._3))
         }
       }
     }
-    def describe: String = specs.map(f =>
-      Seq("match", "cover", "bm25", "count", "order2")(f.mode) + "#" + f.qi +
-        (if (f.fullScan) "(fullscan)" else "")).mkString(", ")
   }
 
-  /** Every alt-layout (ordered-scan) slot of a batch; `sort2` carries the
-    * exact long distance (top-k), 0 (range) or the bucket count (facet).
-    * Each term's runs merge once per shard across every slot that reads it.
+  /** Every alt-layout (ordered-scan) slot of a batch: composite top-k over
+    * one addon key, addon range and facet partials, each from the bounded
+    * addon-ordered stream. Each term's runs merge once per shard across
+    * every slot that reads it.
     */
-  final case class Alt(specs: Array[Searcher.AltFusedSpec], terms: TermSet)
+  final case class Alt(specs: Array[Searcher.FusedSpec], terms: TermSet)
       extends ShardKernel {
     def layout: String = "alt"
     def run(shard: ShardRecord, handed: Long => Unit): Iterator[ShardScan.Out] = {
       val cells = new AltKernel.ShardCells(shard, handed)
+      def inRange(f: Searcher.FusedSpec) =
+        AltKernel.rangeAddonShard(f.cq, f.keys, cells, f.lo, f.hi)
       specs.iterator.flatMap { f =>
-        if (f.mode == 0)
-          AltKernel.topKAddonShard(f.cq, f.keys, cells, f.c, f.op, f.k, f.floatUnits)
-            .rows.iterator.map(t => (f.qi, t._1, 0.0, 0.0, t._2, t._3))
-        else if (f.mode == 1)
-          AltKernel.rangeAddonShard(f.cq, f.keys, cells, f.lo, f.hi)
-            .map { case (d, a) => (f.qi, d, 0.0, 0.0, 0L, a) }
-        // mode 2: per-shard facet partials (c = bucket width; float slots
-        // bucket in VALUE space and emit the start's bit image)
-        else if (!f.floatUnits)
-          AltKernel.facetShard(f.cq, f.keys, cells, f.c, f.lo, f.hi)
-            .map { case (b, n) => (f.qi, b, 0.0, 0.0, n, 0L) }
-        else
-          AltKernel.facetShardFloat(f.cq, f.keys, cells,
-              graft.build.AddonUnits.floatFromOrderedBits(f.c),
-              graft.build.AddonUnits.floatFromOrderedBits(f.lo), f.lo, f.hi)
-            .map { case (b, n) => (f.qi, b, 0.0, 0.0, n, 0L) }
+        f.mode match {
+          case 4 =>
+            val key = f.order(0)
+            AltKernel.topKAddonShard(f.cq, f.keys, cells, key.c, key.op, f.k, key.floatUnits)
+              .rows.iterator.map(t => compositeRow(f, t._1, 0.0, t._3))
+          case 5 => inRange(f).map { case (d, a) => (f.qi, d, 0.0, 0.0, 0L, a) }
+          case _ => facetRows(f, inRange(f).map(_._2))
+        }
       }
     }
-    def describe: String = specs.map(f =>
-      Seq("addon", "range", "facet")(f.mode) + "#" + f.qi).mkString(", ")
   }
+
+  /** A composite top-k slot's row: `sort` = the rank, `sort2` = the first
+    * addon key's exact distance ([[AltKernel.satDist]]) — the batch
+    * window's order of Order2 and addon top-k slots; score = the rank when
+    * the slot ranks, else that distance.
+    */
+  private def compositeRow(f: Searcher.FusedSpec, id: Long, rank: Double,
+                           addon: Long): ShardScan.Out = {
+    val key = f.order.find(!_.rank)
+    val d = key.fold(0L)(_.dist(addon))
+    (f.qi, id, if (f.rank) rank else key.get.score(d), rank, d, addon)
+  }
+
+  /** A facet slot's per-shard bucket partials over its in-range addons:
+    * (qi, bucket, count in `sort2`).
+    */
+  private def facetRows(f: Searcher.FusedSpec, addons: Iterator[Long]): Iterator[ShardScan.Out] =
+    SearchKernel.bucketCounts(addons, SearchKernel.facetBucket(f.width, f.lo, f.floatUnits))
+      .map { case (b, n) => (f.qi, b, 0.0, 0.0, n, 0L) }
 
 }
 
@@ -401,10 +419,8 @@ private[search] object ShardScanStrategy extends SparkStrategy {
 
   private def topK(s: ShardScan, k: Int, order: Seq[SortOrder],
                    project: Seq[NamedExpression]): Option[SparkPlan] = {
-    val bound = s.kernel match {
-      case p: ShardKernel.Primary if p.specs.length == 1 && Set(1, 2, 4)(p.specs(0).mode) =>
-        p.specs(0).k
-      case a: ShardKernel.Alt if a.specs.length == 1 && a.specs(0).mode == 0 => a.specs(0).k
+    val bound = s.kernel.specs match {
+      case Array(f) if f.mode == 1 || f.mode == 2 || f.mode == 4 => f.k
       case _ => 0
     }
     if (bound == 0 || k > bound) None

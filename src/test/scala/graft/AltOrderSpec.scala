@@ -254,12 +254,28 @@ class AltOrderSpec extends AnyFunSuite {
       IndexBuilder.Params(nShards = 2, attach = Some("d")))
     val sA = new Searcher(spark, dA)
     val sP = new Searcher(spark, dP)
+    // both layouts rank by one distance function, so the reference is
+    // brute force: exact BigInt distances saturated at Long.MaxValue,
+    // one-sided misses dropped, ties by docId
+    val matches = ext.collect().filter(_.getString(1) == "every half")
+      .map(r => (r.getLong(0), r.getLong(2))).toSeq
     for (op <- Seq("both", "left", "right");
          c <- Seq(Long.MinValue, Long.MinValue + 1, -3L, 0L, 4L,
            Long.MaxValue - 1, Long.MaxValue)) {
+      val brute = matches.flatMap { case (id, a) =>
+        val d = BigInt(a) - BigInt(c)
+        val dist = op match {
+          case "both" => Some(d.abs)
+          case "left" => if (d <= 0) Some(-d) else None
+          case "right" => if (d >= 0) Some(d) else None
+        }
+        dist.map(x => (id, a, x.min(BigInt(Long.MaxValue))))
+      }.sortBy { case (id, _, d) => (d, id) }.take(5)
+        .map { case (id, a, d) => (id, a, d.toLong.toDouble) }
       val a = rows(sA.topKAddon("every & half", c, op, 5))
       val p = rows(sP.topKAddon("every & half", c, op, 5))
-      assert(a == p, s"op=$op c=$c: alt=$a plain=$p")
+      assert(a == brute, s"op=$op c=$c: alt=$a brute=$brute")
+      assert(p == brute, s"op=$op c=$c: plain=$p brute=$brute")
     }
   }
 

@@ -2,8 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.build.IndexBuilder
+import graft.build.{AddonUnits, IndexBuilder}
+import graft.query.{Bm25 => Bm25Score, CompiledQuery, TsEval, TsQueryParser}
 import graft.search.Searcher
+import graft.tokenize.Tokenizer
 
 /** Fused multi-search (one shard-local read per layout for a
   * heterogeneous query batch): every slot must return exactly its solo
@@ -51,6 +53,67 @@ class MsearchFusedSpec extends AnyFunSuite {
   private def scanTerms(plan: String): Seq[Set[String]] =
     "Terms: \\[([^\\]]*)\\]".r.findAllMatchIn(plan)
       .map(_.group(1).split(", ").toSet).toSeq
+
+  /** Brute-force matches of a tsquery (exact terms only) among the first
+    * `n` generated docs.
+    */
+  private def bruteIds(q: String, n: Int): Seq[Long] = {
+    val cq = CompiledQuery.compile(TsQueryParser.parse(q))
+    (0 until n).filter { i =>
+      val occs = Tokenizer.simple(text(i)).map(o => o.term -> o).toMap
+      TsEval.matches(cq, new TsEval.Provider {
+        def positions(k: Int): Array[Int] = occs.get(cq.keys(k).term).map(_.positions).orNull
+        def wclasses(k: Int): Array[Byte] = occs.get(cq.keys(k).term).map(_.wclasses).orNull
+      })
+    }.map(_.toLong)
+  }
+
+  /** `ORDER BY addon <op> c, docId LIMIT k` over (docId, addon) pairs in
+    * exact BigInt arithmetic saturated at Long.MaxValue, one-sided misses
+    * dropped: (docId, distance).
+    */
+  private def bruteAddon(rows: Seq[(Long, Long)], c: Long, op: String,
+                         k: Int): Seq[(Long, Double)] =
+    rows.flatMap { case (id, a) =>
+      val d = BigInt(a) - BigInt(c)
+      (op match {
+        case "both" => Some(d.abs)
+        case "left" => if (d <= 0) Some(-d) else None
+        case "right" => if (d >= 0) Some(d) else None
+      }).map(x => (id, x.min(BigInt(Long.MaxValue))))
+    }.sortBy { case (id, d) => (d, id) }.take(k).map { case (id, d) => (id, d.toLong.toDouble) }
+
+  /** Facet buckets lo + floor((a-lo)/w)·w of the addons in [lo, hi]. */
+  private def bruteFacet(addons: Seq[Long], w: Long, lo: Long, hi: Long): Set[(Long, Double)] =
+    addons.filter(a => a >= lo && a <= hi).groupBy(a => lo + (a - lo) / w * w)
+      .map { case (b, xs) => (b, xs.size.toDouble) }.toSet
+
+  /** Spark jobs started while `body` ran: the listener bus delivers in
+    * order, so every job before a marker job has been seen once the marker
+    * has.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.put(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup("jobs-marker", "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      var n = 0
+      var g = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (g != null && g != "jobs-marker") {
+        n += 1; g = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(g == "jobs-marker", "marker job not seen")
+      n
+    } finally sc.removeSparkListener(listener)
+  }
 
   private lazy val searcher: Searcher = {
     val d = java.nio.file.Files.createTempDirectory("msearchidx").toString
@@ -203,7 +266,7 @@ class MsearchFusedSpec extends AnyFunSuite {
 
   // ---- ordered-scan slots (alt-order layout) in the fused batch ----
 
-  private lazy val altSearcher: Searcher = {
+  private lazy val altDir: String = {
     val d = java.nio.file.Files.createTempDirectory("msearchalt").toString
     // signed addons, scrambled + tied like AltOrderSpec's fixture
     val docs = (0 until 2000).map(i =>
@@ -212,8 +275,9 @@ class MsearchFusedSpec extends AnyFunSuite {
     IndexBuilder.build(spark, docs, "doc_id", "text", d,
       IndexBuilder.Params(nShards = 4, blockSize = 64, attach = Some("d"),
         altOrder = true))
-    new Searcher(spark, d)
+    d
   }
+  private lazy val altSearcher: Searcher = new Searcher(spark, altDir)
 
   test("Addon and AddonRange slots equal their solo queries (incl. fallback)") {
     import Searcher.MsearchSpec._
@@ -270,7 +334,7 @@ class MsearchFusedSpec extends AnyFunSuite {
       Facet("even & triple", 500L, -3000L, 3000L),
       Count("even & triple"),
       Facet("even | rare7", 1000L, -2500L, 2500L), // OR: union-driven alt slot
-      Facet("!rare7", 1000L, -3000L, 3000L),       // full-scan: fallback plan
+      Facet("!rare7", 1000L, -3000L, 3000L),       // full-scan: a primary-pass slot
       Facet("zzzabsent", 100L, 0L, 1000L))         // zero matches: no buckets
     val got = altSearcher.msearch(specs).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).groupBy(_._1)
@@ -297,16 +361,19 @@ class MsearchFusedSpec extends AnyFunSuite {
     assert(kernelReads(plan, "postings_alt") == 1, plan.take(3000))
   }
 
+  // signed float values with ties, ±0.0 and a NaN island
+  private val floatDocs: Seq[(Long, String, Double)] = (0 until 2000).map { i =>
+    val v =
+      if (i % 501 == 0) Double.NaN
+      else (((i * 7919) % 2000) / 3).toDouble * 1.25 - 400.0
+    (i.toLong, text(i), v)
+  }
+
   private lazy val floatSearcher: Searcher = {
     val d = java.nio.file.Files.createTempDirectory("msearchflt").toString
     // signed float values with ties, ±0.0 and a NaN island, indexed as
     // order-preserving IEEE bits
-    val docs = (0 until 2000).map { i =>
-      val v =
-        if (i % 501 == 0) Double.NaN
-        else (((i * 7919) % 2000) / 3).toDouble * 1.25 - 400.0
-      (i.toLong, text(i), v)
-    }.toDF("doc_id", "text", "f")
+    val docs = floatDocs.toDF("doc_id", "text", "f")
       .withColumn("fbits", graft.build.AddonUnits.floatOrderedBits(
         org.apache.spark.sql.functions.col("f")))
       .drop("f")
@@ -358,7 +425,7 @@ class MsearchFusedSpec extends AnyFunSuite {
       FacetFloat("even & triple", 62.5, -300.0, 300.0),
       AddonFloat("even & triple", 3.75, "both", 5),   // shares the alt scan
       FacetFloat("even | rare7", 125.0, -400.0, 0.0), // OR: union-driven slot
-      FacetFloat("!even", 100.0, -400.0, 400.0))      // full-scan: fallback
+      FacetFloat("!even", 100.0, -400.0, 400.0))      // full-scan: a primary-pass slot
     val got = floatSearcher.msearch(specs).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1)
@@ -380,6 +447,137 @@ class MsearchFusedSpec extends AnyFunSuite {
     assert(got(0).map(_._3.toLong).sum == inRange)
   }
 
+  private lazy val plainFloatSearcher: Searcher = {
+    val d = java.nio.file.Files.createTempDirectory("msearchpf").toString
+    IndexBuilder.build(spark, floatDocs.toDF("doc_id", "text", "f")
+        .withColumn("fbits", AddonUnits.floatOrderedBits(org.apache.spark.sql.functions.col("f")))
+        .drop("f"), "doc_id", "text", d,
+      IndexBuilder.Params(nShards = 4, blockSize = 64, attach = Some("fbits")))
+    new Searcher(spark, d)
+  }
+
+  test("every ordered-scan slot on a non-alt index rides the one postings read") {
+    import Searcher.MsearchSpec._
+    val s = plainFloatSearcher
+    val q = "even & triple"
+    def bits(v: Double): Long = AddonUnits.floatOrderedBits(v)
+    val (rLo, rHi, fHi) = (-100.0, 150.0, 300.0)
+    val fW = bits(fHi) / 5 + 1
+    val specs = Seq(
+      Match("even & rare7"),
+      Bm25(Seq("rare7", "veryrare", "tail3"), 7),
+      Addon(q, bits(-12.5), "both", 6),              // bits-space long distance
+      AddonFloat(q, 3.75, "both", 7),
+      AddonFloat("common & rare7", -1.0, "right", 5),
+      AddonRange(q, bits(rLo), bits(rHi)),
+      AddonRangeFloat("common & rare7", rLo, rHi),
+      Facet(q, fW, 0L, bits(fHi)),
+      FacetFloat(q, 62.5, -300.0, 300.0))
+    val df = s.msearchPlan(specs)
+    val got = df.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).groupBy(_._1)
+      .map { case (qi, rs) => qi -> rs.map(t => (t._2, t._3)).toSeq }.withDefaultValue(Nil)
+    // one kernel read for the whole batch, over the primary layout
+    val plan = finalPlan(df)
+    assert("ShardScan ".r.findAllIn(plan).size == 1, plan)
+    assert(kernelReads(plan, "postings") == 1, plan)
+
+    val values = floatDocs.map { case (i, _, v) => i.toLong -> v }.toMap
+    def pairs(q: String) = bruteIds(q, floatDocs.size).map(i => (i, bits(values(i))))
+    // Match
+    assert(got(0).map(_._1).toSet == bruteIds("even & rare7", floatDocs.size).toSet)
+    assert(got(0).map(_._1).toSet == s.matchingDocs("even & rare7").collect().map(_.getLong(0)).toSet)
+    // Bm25: exact against solo, ids and scores (1e-9) against brute force
+    val soloBm25 = s.topKBm25(Seq("rare7", "veryrare", "tail3"), 7).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq.sortBy(_._1)
+    assert(got(1).sortBy(_._1) == soloBm25)
+    val tfs = floatDocs.map { case (i, t, _) => i -> Tokenizer.simple(t).map(o => o.term -> o.tf).toMap }
+    val terms = Seq("rare7", "veryrare", "tail3")
+    val bruteBm25 = tfs.map { case (i, tf) =>
+      val len = Tokenizer.simpleTokens(text(i.toInt)).length.toLong
+      (i.toLong, terms.map(t => Bm25Score.termScore(tf.getOrElse(t, 0),
+        tfs.count(_._2.contains(t)).toLong, len, s.meta.avgLen, s.meta.numDocs)).sum)
+    }.filter(_._2 > 0).sortBy { case (id, sc) => (-sc, id) }.take(7)
+    assert(soloBm25.map(_._1).toSet == bruteBm25.map(_._1).toSet)
+    assert(bruteBm25.forall { case (id, sc) =>
+      math.abs(soloBm25.find(_._1 == id).get._2 - sc) < 1e-9 })
+    // Addon in bits space
+    val addon = bruteAddon(pairs(q), bits(-12.5), "both", 6)
+    assert(got(2).toSet == addon.toSet)
+    assert(s.topKAddon(q, bits(-12.5), "both", 6).collect()
+      .map(r => (r.getLong(0), r.getDouble(2))).toSeq == addon)
+    // AddonFloat: VALUE-space distances, one-sided by bit order, ties by docId
+    def bruteFloat(q: String, c: Double, op: String, k: Int): Seq[(Long, Double)] =
+      bruteIds(q, floatDocs.size).map(i => (i, values(i)))
+        .filter { case (_, v) =>
+          op == "both" || (if (op == "left") bits(v) <= bits(c) else bits(v) >= bits(c)) }
+        .map { case (i, v) => (i, math.abs(v - c)) }
+        .sortBy { case (i, d) => (d.isNaN, if (d.isNaN) 0.0 else d, i) }.take(k)
+    for ((qi, fq, c, op, k) <- Seq((3, q, 3.75, "both", 7), (4, "common & rare7", -1.0, "right", 5))) {
+      val want = bruteFloat(fq, c, op, k)
+      assert(want.nonEmpty && want.forall(!_._2.isNaN))
+      assert(got(qi).toSet == want.toSet, s"slot $qi")
+      assert(s.topKAddonFloat(fq, c, op, k).collect()
+        .map(r => (r.getLong(0), r.getDouble(2))).toSeq == want, s"solo $qi")
+    }
+    // AddonRange over bits, AddonRangeFloat over values
+    val range = pairs(q).filter { case (_, b) => b >= bits(rLo) && b <= bits(rHi) }.map(_._1)
+    assert(range.nonEmpty && got(5).map(_._1).toSet == range.toSet && got(5).forall(_._2 == 0.0))
+    assert(s.rangeAddon(q, bits(rLo), bits(rHi)).collect().map(_.getLong(0)).toSet == range.toSet)
+    val rangeF = pairs("common & rare7")
+      .filter { case (_, b) => b >= bits(rLo) && b <= bits(rHi) }.map(_._1)
+    assert(rangeF.nonEmpty && got(6).map(_._1).toSet == rangeF.toSet)
+    assert(s.rangeAddonFloat("common & rare7", rLo, rHi).collect().map(_.getLong(0)).toSet ==
+      rangeF.toSet)
+    // Facet over bits, FacetFloat over values (bucket starts as raw bits)
+    val facet = bruteFacet(pairs(q).map(_._2), fW, 0L, bits(fHi))
+    assert(facet.nonEmpty && got(7).toSet == facet)
+    assert(s.countByAddonBucket(q, fW, 0L, bits(fHi)).collect()
+      .map(r => (r.getLong(0), r.getLong(1).toDouble)).toSet == facet)
+    val facetF = pairs(q).map(p => values(p._1))
+      .filter(v => bits(v) >= bits(-300.0) && bits(v) <= bits(300.0))
+      .groupBy(v => -300.0 + math.floor((v + 300.0) / 62.5) * 62.5 + 0.0)
+      .map { case (b, xs) => (b, xs.size.toDouble) }.toSet
+    assert(facetF.nonEmpty &&
+      got(8).map(t => (java.lang.Double.longBitsToDouble(t._1), t._2)).toSet == facetF)
+    assert(s.countByAddonBucketFloat(q, 62.5, -300.0, 300.0).collect()
+      .map(r => (r.getDouble(0), r.getLong(1).toDouble)).toSet == facetF)
+  }
+
+  test("full-scan ordered slots on an alt index ride the primary read") {
+    import Searcher.MsearchSpec._
+    val specs = Seq(
+      Match("even & rare7"),
+      Addon("!even", 0L, "both", 6),              // full scan: primary pass
+      Facet("!rare7", 1000L, -3000L, 3000L),      // full scan: primary pass
+      AddonRange("!triple", -500L, 500L),         // full scan: primary pass
+      Addon("even & triple", -700L, "both", 7))   // the alt layout's own read
+    val df = altSearcher.msearchPlan(specs)
+    val got = df.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).groupBy(_._1)
+      .map { case (qi, rs) => qi -> rs.map(t => (t._2, t._3)).toSeq }
+    val plan = finalPlan(df)
+    assert(kernelReads(plan, "postings") == 1, plan)
+    assert(kernelReads(plan, "postings_alt") == 1, plan)
+    assert("ShardScan ".r.findAllIn(plan).size == 2, plan)
+    // brute force over the alt fixture's signed addons
+    def addonOf(i: Long): Long = (((i * 7919) % 2000) / 3) * 10L - 3000L
+    def pairs(q: String) = bruteIds(q, 2000).map(i => (i, addonOf(i)))
+    assert(got(0).map(_._1).toSet == bruteIds("even & rare7", 2000).toSet)
+    for ((qi, q, c, k) <- Seq((1, "!even", 0L, 6), (4, "even & triple", -700L, 7))) {
+      val want = bruteAddon(pairs(q), c, "both", k)
+      assert(got(qi).toSet == want.toSet, s"slot $qi")
+      assert(altSearcher.topKAddon(q, c, "both", k).collect()
+        .map(r => (r.getLong(0), r.getDouble(2))).toSeq == want, s"solo $qi")
+    }
+    val facet = bruteFacet(pairs("!rare7").map(_._2), 1000L, -3000L, 3000L)
+    assert(got(2).toSet == facet)
+    assert(altSearcher.countByAddonBucket("!rare7", 1000L, -3000L, 3000L).collect()
+      .map(r => (r.getLong(0), r.getLong(1).toDouble)).toSet == facet)
+    val range = pairs("!triple").filter { case (_, a) => a >= -500L && a <= 500L }.map(_._1)
+    assert(range.nonEmpty && got(3).map(_._1).toSet == range.toSet)
+    assert(altSearcher.rangeAddon("!triple", -500L, 500L).collect().map(_.getLong(0)).toSet ==
+      range.toSet)
+  }
+
   test("Order2 slots (rank, addon, docId composite) equal solo topKMulti") {
     import Searcher.{MsearchSpec, OrderKey}
     import MsearchSpec._
@@ -388,10 +586,10 @@ class MsearchFusedSpec extends AnyFunSuite {
     val specs = Seq(
       Order2("even & triple", -700L, "both", 7),
       Order2("common & rare7", 500L, "left", 5),   // one-sided: misses drop
-      Order2("!even", 0L, "both", 5),              // full-scan fallback rides
+      Order2("!even", 0L, "both", 5),              // full-scan slot rides
       Match("even & rare7"),                       // plain slot in same batch
       Order2("common & triple", 0L, "both", 9,
-        method = graft.query.CoverRank.NormUniq))  // UNIQ: heap fallback rides
+        method = graft.query.CoverRank.NormUniq))  // UNIQ: full-scan slot rides
     val got = altSearcher.msearch(specs).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1)
@@ -516,55 +714,47 @@ class MsearchFusedSpec extends AnyFunSuite {
   test("k <= 0 is rejected at plan time on both layouts, before any job runs") {
     import Searcher.MsearchSpec._
     import Searcher.OrderKey
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.put(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    // jobs started while `body` ran: the listener bus delivers in order, so
-    // every job before the marker job has been seen once the marker has
-    def jobsDuring(body: => Unit): Int = {
-      started.clear()
-      body
-      sc.setJobGroup("k-marker", "marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      var n = 0
-      var g = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      while (g != null && g != "k-marker") {
-        n += 1; g = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      }
-      assert(g == "k-marker", "marker job not seen")
-      n
-    }
     val layouts = Seq("plain" -> searcher, "altOrder" -> altSearcher)
     layouts.foreach(_._2.meta)
-    sc.addSparkListener(listener)
-    try {
-      for ((name, s) <- layouts; k <- Seq(0, -1)) {
-        val calls: Seq[(String, () => Any)] = Seq(
-          "topKAddon" -> (() => s.topKAddon("even & triple", -700L, "both", k)),
-          "topKAddonFloat" -> (() => s.topKAddonFloat("even & triple", 1.5, "left", k)),
-          "topKMulti" -> (() => s.topKMulti("even & triple",
-            Seq(OrderKey.Rank(), OrderKey.Addon(0L, "both")), k)),
-          "topKBm25" -> (() => s.topKBm25(Seq("rare7", "veryrare"), k)),
-          "topKCover" -> (() => s.topKCover("common & rare7", k)),
-          "topKCover order-only" ->
-            (() => s.topKCover("common & rare7", k, matchOnly = false)),
-          "msearch" -> (() => s.msearch(Seq(Match("even"), Bm25(Seq("rare7"), 3),
-            Cover("common & rare7", k)))),
-          "Addon slot" -> (() => s.msearch(Seq(Addon("even", 0L, "right", k)))),
-          "AddonFloat slot" -> (() => s.msearch(Seq(AddonFloat("even", 0.5, "both", k)))),
-          "Order2 slot" -> (() => s.msearch(Seq(Order2("even & triple", 0L, "both", k)))),
-          "Bm25 slot" -> (() => s.msearch(Seq(Bm25(Seq("rare7", "tail3"), k)))),
-          "void Cover slot" -> (() => s.msearch(Seq(Cover("", k)))))
-        for ((what, call) <- calls) {
-          val jobs = jobsDuring(intercept[IllegalArgumentException](call()))
-          assert(jobs == 0, s"$name $what k=$k")
-        }
+    for ((name, s) <- layouts; k <- Seq(0, -1)) {
+      val calls: Seq[(String, () => Any)] = Seq(
+        "topKAddon" -> (() => s.topKAddon("even & triple", -700L, "both", k)),
+        "topKAddonFloat" -> (() => s.topKAddonFloat("even & triple", 1.5, "left", k)),
+        "topKMulti" -> (() => s.topKMulti("even & triple",
+          Seq(OrderKey.Rank(), OrderKey.Addon(0L, "both")), k)),
+        "topKBm25" -> (() => s.topKBm25(Seq("rare7", "veryrare"), k)),
+        "topKCover" -> (() => s.topKCover("common & rare7", k)),
+        "topKCover order-only" ->
+          (() => s.topKCover("common & rare7", k, matchOnly = false)),
+        "msearch" -> (() => s.msearch(Seq(Match("even"), Bm25(Seq("rare7"), 3),
+          Cover("common & rare7", k)))),
+        "Addon slot" -> (() => s.msearch(Seq(Addon("even", 0L, "right", k)))),
+        "AddonFloat slot" -> (() => s.msearch(Seq(AddonFloat("even", 0.5, "both", k)))),
+        "Order2 slot" -> (() => s.msearch(Seq(Order2("even & triple", 0L, "both", k)))),
+        "Bm25 slot" -> (() => s.msearch(Seq(Bm25(Seq("rare7", "tail3"), k)))),
+        "void Cover slot" -> (() => s.msearch(Seq(Cover("", k)))))
+      for ((what, call) <- calls) {
+        val jobs = jobsDuring(intercept[IllegalArgumentException](call()))
+        assert(jobs == 0, s"$name $what k=$k")
       }
-    } finally sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a rejected batch runs no job, even when an earlier slot would start one") {
+    import Searcher.MsearchSpec._
+    // a fresh Searcher's first BM25 slot collects the term stats in a job;
+    // each batch fails on a later slot's op or facet parameters
+    val batches = Seq(
+      Seq(Bm25(Seq("rare7"), 3), Facet("rare7", 0L, 0L, 10L)),
+      Seq(Bm25(Seq("rare7"), 3), FacetFields(Seq("f" -> "rare7"), 10L, 10L, 0L)),
+      Seq(Bm25(Seq("rare7"), 3), FacetFloat("rare7", 1.0, 0.0, Double.NaN)),
+      Seq(Bm25(Seq("rare7"), 3), Addon("rare7", 0L, "sideways", 3)),
+      Seq(Bm25(Seq("rare7"), 3), AddonFloat("rare7", 0.0, "up", 3)),
+      Seq(Bm25(Seq("rare7"), 3), Order2("rare7", 0L, "near", 3)))
+    for (batch <- batches) {
+      val fresh = new Searcher(spark, altDir)
+      assert(jobsDuring(intercept[IllegalArgumentException](fresh.msearch(batch))) == 0, batch)
+    }
   }
 
   test("fused kernel executes once: shared exchange reused across branches") {

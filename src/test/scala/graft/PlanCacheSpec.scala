@@ -85,10 +85,10 @@ class PlanCacheSpec extends AnyFunSuite {
     }
   }
 
-  test("topKCoverBatch: tagged union matches per-query results") {
+  test("msearch Cover specs: tagged union matches per-query results") {
     val s = new Searcher(spark, idxDir)
     val batch = Seq(("alpha & merge", 4), ("sort | merge", 3))
-    val got = s.topKCoverBatch(batch).collect()
+    val got = s.msearch(batch.map { case (q, k) => Searcher.MsearchSpec.Cover(q, k) }).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).sortBy(_._1)).toMap
     batch.zipWithIndex.foreach { case ((q, k), i) =>
@@ -96,7 +96,7 @@ class PlanCacheSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
       assert(got(i).toSeq === solo.toSeq, s"query $i")
     }
-    assert(s.topKCoverBatch(Seq.empty).collect().isEmpty)
+    assert(s.msearch(Seq.empty).collect().isEmpty)
   }
 
   test("empty msearch batches return empty results, not a crash") {
